@@ -15,11 +15,12 @@ parses.
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
-from polars_express_spark.catalog import DataLake
+from polars_express_spark.catalog import DataLake, file_version
 from polars_express_spark.sinks import to_json_rows_flagged
 
 
@@ -145,6 +146,10 @@ def run_regression(lake: DataLake, data_id: str, x_col: str, y_col: str) -> Regr
 import re as _re
 
 _SQL_IDENT = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+# Temp views are session-global: a view and the file version recorded
+# for it in DataLake.sql_views are replaced together under this lock, so
+# the record always names the files the view lists.
+_SQL_VIEWS_LOCK = threading.Lock()
 # Mutating / side-effecting PLAN NODE CLASS names a parsed tree must not
 # contain. Spark's grammar allows CTE-prefixed DML ("WITH t AS (...)
 # INSERT ..."), so a first-token SELECT/WITH check alone is bypassable —
@@ -288,10 +293,10 @@ def _check_read_only(plan, allowed_views: set[str]) -> None:
 def run_sql(lake: DataLake, query: str, limit: int | None = None) -> list[dict]:
     """Ad-hoc SQL over the lake (engine-native surface beyond the
     reference's three routes): every dataset whose id is a valid SQL
-    identifier is registered as a temp view (once per lake instance),
-    the query runs through Catalyst, and rows come back through the
-    capped JSON sink (same driver-materialization bound as every other
-    endpoint).
+    identifier is registered as a temp view (again whenever its files
+    change), the query runs through Catalyst, and rows come back through
+    the capped JSON sink (same driver-materialization bound as every
+    other endpoint).
 
     Read-only AND lake-scoped by construction, enforced BEFORE
     execution: a first-token SELECT/WITH + single-statement check
@@ -308,29 +313,35 @@ def run_sql(lake: DataLake, query: str, limit: int | None = None) -> list[dict]:
     if not q or q.split(None, 1)[0].upper() not in ("SELECT", "WITH"):
         raise BadRequest("only SELECT/WITH queries are accepted")
     spark = lake.spark
-    registered = getattr(lake, "_sql_registered", None)
-    if registered is None:
-        registered = lake._sql_registered = set()
+    resolved: set[str] = set()
     for data_id in lake.list_datasets():
-        # once per (lake, dataset): views are lazy plans over the path,
-        # so data overwrites are seen automatically; catalog.save()
-        # discards the entry so a schema change re-registers too
-        if data_id not in registered and _SQL_IDENT.match(data_id):
+        if not _SQL_IDENT.match(data_id):
+            continue
+        path = lake.dataset_path(data_id)
+        version = file_version(path) if path else None
+        if version is None:
+            continue  # removed since the listing
+        if lake.sql_views.get(data_id) != version:
+            # a view holds the file listing made when it was built, so it
+            # is rebuilt whenever the dataset's files have changed since
             try:
-                lake.load(data_id).createOrReplaceTempView(data_id)
+                df = lake.load(data_id)
             except Exception:  # noqa: BLE001
                 # a dataset MID-OVERWRITE by a concurrent writer can be
                 # momentarily unloadable (schema inference over a
-                # half-written dir) — skip it; it re-registers on the
-                # next request, and a query naming it now gets a clean
-                # analysis-error 400 instead of a crashed handler
+                # half-written dir) — skip it; a query naming it now
+                # gets a clean unknown-table 400 instead of a crashed
+                # handler, and the next request tries again
                 continue
-            registered.add(data_id)
+            with _SQL_VIEWS_LOCK:
+                df.createOrReplaceTempView(data_id)
+                lake.sql_views[data_id] = version
+        resolved.add(data_id)
     try:
         plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(q)
     except Exception as e:
         raise BadRequest(f"SQL error: {e}") from e
-    _check_read_only(plan, registered)
+    _check_read_only(plan, resolved)
     try:
         # execution stays inside the guard too: a view over a since-
         # deleted path fails at collect time, and the caller should see

@@ -10,6 +10,13 @@ Here generalized Spark-first:
 - Loads are LAZY (spark.read builds a scan node; nothing is parsed until
   an action) — deliberately NOT the reference's eager whole-file parse
   per request (src/main.rs:44-52), which defeats pushdown (SURVEY.md §4.3).
+- Schemas are inferred once per FILE VERSION, not per load: every
+  schema-inferring read goes through `read_path`, which keeps the
+  inferred schema keyed by the path's stat signature (`file_version`)
+  and hands it back through ``spark.read.schema`` while the files are
+  unchanged. Metadata a metastore would hold, never cached data; any
+  rewrite (overwrite, restore, compact, append, a file dropped in by
+  hand) changes the signature, so no writer has to invalidate it.
 - At 100 TB an id maps to a partitioned parquet directory; the API is
   identical because spark.read.parquet takes files or directories.
 """
@@ -17,6 +24,8 @@ Here generalized Spark-first:
 from __future__ import annotations
 
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +43,83 @@ TPCH_TABLES = (
     "documents",
     "embeddings",
 )
+
+# Session confs that change the schema Spark infers for a file: part of
+# the schema-cache key. Checked and left out because they change values
+# or failures but not inferred types: session.timeZone, caseSensitive,
+# files.ignoreCorruptFiles, parquet.int96RebaseModeInRead,
+# parquet.datetimeRebaseModeInRead, orc.impl.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.orc.mergeSchema",
+    "spark.sql.timestampType",
+    "spark.sql.legacy.timeParserPolicy",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+# path → (key, schema): one entry per path, replaced when the key (file
+# version, format, options, confs) changes — bounded by the number of
+# paths read, so no size limit or eviction
+_schemas: dict[str, tuple[tuple, T.StructType]] = {}
+_schemas_lock = threading.Lock()
+
+
+def file_version(path: str) -> tuple | None:
+    """Stat signature of a dataset path: inode, ctime, mtime and size of
+    the path and, for a directory, of each top-level entry. Every
+    rewrite the lake makes (publish by rename, restore, compact, append)
+    and every file dropped in by hand changes it. Not seen: a file added
+    two or more levels down (a nested partition tree) whose parent
+    directories all already existed. None when the path is missing or
+    vanishes mid-scan (a concurrent publish)."""
+
+    def sig(st: os.stat_result) -> tuple:
+        return st.st_ino, st.st_ctime_ns, st.st_mtime_ns, st.st_size
+
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return sig(st)
+        with os.scandir(path) as it:
+            entries = sorted((e.name, *sig(e.stat())) for e in it)
+    except OSError:
+        return None
+    return sig(st), tuple(entries)
+
+
+def read_path(spark: SparkSession, fmt: str, path: str, schema=None, **options) -> DataFrame:
+    """Lazy ``spark.read`` of ``path`` in ``fmt`` with reader ``options``,
+    inferring the schema at most once per file version.
+
+    The first read of a version infers as Spark always does (a footer
+    job for parquet/ORC, a full parse for CSV/JSON) and stores the
+    result; later reads of the same version pass it to
+    ``spark.read.schema`` and run no job. A caller-supplied ``schema``
+    and ``mergeSchema`` reads bypass the cache. Thread-safe: the HTTP
+    server calls it from every handler thread."""
+    reader = spark.read.format(fmt).options(**options)
+    if schema is not None:
+        return reader.schema(schema).load(path)
+    version = None if options.get("mergeSchema") else file_version(path)
+    if version is None:
+        return reader.load(path)
+    key = (
+        version,
+        fmt,
+        tuple(sorted(options.items())),
+        tuple(spark.conf.get(c) for c in _SCHEMA_CONFS),
+    )
+    with _schemas_lock:
+        hit = _schemas.get(path)
+    if hit is not None and hit[0] == key:
+        return reader.schema(hit[1]).load(path)
+    df = reader.load(path)
+    with _schemas_lock:
+        _schemas[path] = (key, df.schema)
+    return df
 
 
 class DataLake:
@@ -55,6 +141,9 @@ class DataLake:
         self.spark = spark
         self.base_dir = base_dir
         self.keep_snapshots = keep_snapshots
+        # data_id → file_version its /sql temp view was built over
+        # (api.run_sql rebuilds a view when its dataset's version moves)
+        self.sql_views: dict[str, tuple] = {}
 
     def dataset_path(self, data_id: str) -> str | None:
         """Resolve id to an existing file/dir, trying formats in order.
@@ -109,33 +198,32 @@ class DataLake:
 
         CSVs use header inference like the reference
         (CsvReadOptions::with_has_header, src/main.rs:48-51) unless a
-        schema is declared; parquet/json carry their own schemas.
+        schema is declared; parquet/json/orc carry their own schemas (a
+        declared schema skips inference for any format). The schema is
+        inferred once per file version (`read_path`): a repeat load of
+        unchanged files runs no Spark job, and any rewrite of the
+        dataset is seen on the next load.
         merge_schema=True unions the footers of every part file (schema
         EVOLUTION: parts appended after a column was added still read as
         one frame, old parts null-extended) — off by default because it
-        reads every footer up front, which matters at 100 TB file counts.
+        reads every footer up front, which matters at 100 TB file counts;
+        it always re-reads the footers.
         """
         path = self.dataset_path(data_id)
         if path is None:
             raise FileNotFoundError(f"dataset not found: {data_id!r} under {self.base_dir}")
-        if path.endswith(".csv"):
-            reader = self.spark.read.option("header", True)
-            if schema is not None:
-                reader = reader.schema(schema)
-            else:
-                reader = reader.option("inferSchema", True)
-            return reader.csv(path)
-        if path.endswith(".json"):
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            return reader.json(path)
-        if path.endswith(".orc"):
-            return self.spark.read.orc(path)
-        reader = self.spark.read
+        return self._scan(path, schema, merge_schema)
+
+    def _scan(self, path: str, schema=None, merge_schema: bool = False) -> DataFrame:
+        """Lazy scan of a live or snapshot path in the format its
+        extension names (no extension: a parquet directory)."""
+        fmt = os.path.splitext(path.split(self.SNAP_MARK)[0])[1][1:]
+        if fmt not in ("csv", "json", "orc"):
+            fmt = "parquet"
+        options = {"header": True, "inferSchema": schema is None} if fmt == "csv" else {}
         if merge_schema:
-            reader = reader.option("mergeSchema", True)
-        return reader.parquet(path)
+            options["mergeSchema"] = True
+        return read_path(self.spark, fmt, path, schema, **options)
 
     def compact(self, data_id: str, target_rows_per_file: int = 1_000_000) -> int:
         """Small-file compaction (lake maintenance): rewrite a parquet
@@ -152,7 +240,7 @@ class DataLake:
         path = self.dataset_path(data_id)
         if path is None or not (path.endswith(".parquet") or os.path.isdir(path)):
             raise FileNotFoundError(f"no parquet dataset {data_id!r} to compact")
-        df = self.spark.read.parquet(path)
+        df = read_path(self.spark, "parquet", path)
         n_rows = df.count()  # parquet count() is metadata-only
         n_files = max(1, -(-n_rows // target_rows_per_file))
         tmp_id = f"{data_id}.__compact_tmp"
@@ -346,17 +434,7 @@ class DataLake:
             raise FileNotFoundError(
                 f"no snapshot {version} of {data_id!r}; have {sorted(snaps)}"
             )
-        path = snaps[version]
-        fmt = path.split(self.SNAP_MARK)[0].rpartition(".")[2]
-        if fmt == "csv":
-            return self.spark.read.option("header", True).option(
-                "inferSchema", True
-            ).csv(path)
-        if fmt == "json":
-            return self.spark.read.json(path)
-        if fmt == "orc":
-            return self.spark.read.orc(path)
-        return self.spark.read.parquet(path)
+        return self._scan(snaps[version])
 
     def restore(self, data_id: str, version: int) -> str:
         """Rollback: republish snapshot ``version`` as the live dataset
@@ -403,9 +481,6 @@ class DataLake:
         from polars_express_spark.queries._memo import FRAMES
 
         FRAMES.release(self.base_dir)
-        # the /sql temp-view registry caches one registration per
-        # dataset; a write may change the schema, so force re-register
-        getattr(self, "_sql_registered", set()).clear()
 
     def save_bucketed(
         self,
@@ -460,7 +535,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     normalization dispatches on the type the scan actually produced.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_path(spark, "parquet", os.path.join(sf_dir, f"{name}.parquet"))
     for col in _NORMALIZE_TS_COLS.get(name, ()):
         dt = df.schema[col].dataType
         if isinstance(dt, T.LongType):

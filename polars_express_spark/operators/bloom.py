@@ -48,9 +48,12 @@ def _positions(col: Column, num_bits: int, num_hashes: int) -> list[Column]:
     # xxhash64 per fact row AT THE SCAN, and KM shows the two-hash
     # scheme keeps the Bloom fp asymptotics (r19, guide §1.2 per-task
     # work). Probe and build share this function, so the
-    # no-false-negative identity is untouched. h2 is forced odd: m is
-    # word-aligned (multiple of 64, hence even), so an odd stride is
-    # coprime with m and the k positions stay distinct per key. Both
+    # no-false-negative identity is untouched. h2 is forced odd so the k
+    # positions stay distinct per key: p_i = p_j needs m | (i−j)·h2, and
+    # with h2 odd the factor 2^6 of m (word-aligned: a multiple of 64)
+    # must divide i−j, impossible for 0 < |i−j| < 64, so any k ≤ 64
+    # works. The stride need NOT be coprime with m (m = 4160 = 64·65,
+    # h2 = 65 shares 65), which is why the bound is on k, not m. Both
     # hashes are reduced mod m BEFORE the stride arithmetic so nothing
     # approaches long overflow (the session runs ANSI, where silent
     # wrap-around is a raise): i·h2 + h1 < (k+1)·m.
@@ -141,6 +144,13 @@ def bloom_pruned_join(
     shuffle volume by the dim filter's selectivity. The dim side is
     counted once to size the bitmap (it is the SMALL side by contract,
     as in every runtime-filter plan).
+
+    The dim side is PERSISTED (it is read three times: the sizing
+    count, the bitmap build and the join) and is never unpersisted
+    here, because the returned frame still reads it: its storage stays
+    until the caller runs ``spark.catalog.clearCache()`` (or unpersists
+    ``dim``'s cached plan). A long-lived session calling this in a loop
+    must do so, as the query registry's callers do.
 
     Only inner and left_semi are accepted: pruning the fact side is
     semantics-preserving exactly when unmatched fact rows would be

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from polars_express_spark.catalog import read_path
+
 # Declared fallback schema for streaming reads when the source directory
 # is still empty at stream start (start-stream-first-then-drop-files is
 # the documented kafka-stand-in usage): the current driver testdata's
@@ -40,16 +42,17 @@ def stream_events(spark: SparkSession, path: str) -> DataFrame:
     becomes a micro-batch (the local stand-in for kafka).
 
     Streaming sources require a declared schema; take it from a static
-    footer read of the same path (one metadata-only job, no data scan)
-    so the ts physical form — TIMESTAMP(NANOS)-as-long in older driver
-    testdata, TIMESTAMP_NTZ(µs) in current — is normalized to session-tz
-    TIMESTAMP exactly like catalog.load_table, keeping the streaming and
-    batch sides of the golden equality tests on identical inputs. An
-    empty/not-yet-created source falls back to the declared
-    EVENTS_RAW_SCHEMA so the stream can start before data arrives."""
+    footer read of the same path (catalog.read_path: one metadata-only
+    job per file version) so the ts physical form — TIMESTAMP(NANOS)-as-
+    long in older driver testdata, TIMESTAMP_NTZ(µs) in current — is
+    normalized to session-tz TIMESTAMP exactly like catalog.load_table,
+    keeping the streaming and batch sides of the golden equality tests
+    on identical inputs. An empty/not-yet-created source falls back to
+    the declared EVENTS_RAW_SCHEMA so the stream can start before data
+    arrives."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        schema = spark.read.parquet(path).schema
+        schema = read_path(spark, "parquet", path).schema
     except Exception:  # no files yet — start on the declared schema
         schema = EVENTS_RAW_SCHEMA
     raw = spark.readStream.schema(schema).parquet(path)

@@ -346,8 +346,8 @@ def test_concurrent_requests_during_overwrite(spark, tmp_path):
         probs.append(failures.get())
     assert not probs, probs
     # no stale-view window: the first post-mutation query sees the final
-    # dataset (the overwrite cleared the one-registration-per-dataset
-    # cache, so the view re-registers over the new files)
+    # dataset (its file version moved, so run_sql rebuilds the view over
+    # the new files)
     status, body = _post_any(f"{base}/sql", {"query": "SELECT count(*) AS n FROM metrics"})
     assert status == 200 and body == [{"n": sizes[-1]}]
     srv.shutdown()
