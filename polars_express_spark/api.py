@@ -92,10 +92,8 @@ def get_sorted_delays_flagged(
     if not delay_cols:
         raise BadRequest(f"dataset {data_id!r} has no delay columns")
     order = [F.col(c).desc() if descending else F.col(c).asc() for c in delay_cols]
-    out = df.orderBy(*order)
-    if limit is not None:
-        out = out.limit(limit)
-    return to_json_rows_flagged(out, limit=limit)
+    # the sink pushes the limit (min(limit, MAX_SINK_ROWS)) into the plan
+    return to_json_rows_flagged(df.orderBy(*order), limit=limit)
 
 
 @dataclass

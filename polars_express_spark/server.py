@@ -37,7 +37,8 @@ whole tables) needs to detect the cap.
 Error mapping: BadRequest → 400 like the reference; unknown dataset →
 404 (the reference surfaces its load failure as a 500, src/main.rs:114 —
 404 is the deliberate, documented improvement since DataLake can check
-existence cheaply); malformed JSON → 400.
+existence cheaply); malformed JSON or Content-Length → 400; a body over
+MAX_BODY_BYTES → 413, answered without reading the body.
 """
 
 from __future__ import annotations
@@ -52,6 +53,16 @@ from polars_express_spark.catalog import DataLake
 from polars_express_spark.ui import INDEX_HTML
 
 _DATA_ROUTE = re.compile(r"^/data/([^/]+)/(preview|delays|regression)$")
+# Largest POST body a handler reads; both POST bodies are a few fields.
+MAX_BODY_BYTES = 1 << 20
+
+
+class _HttpError(Exception):
+    """An error response for the client: status code and message."""
+
+    def __init__(self, code: int, message: str):
+        super().__init__(message)
+        self.code = code
 
 
 def _make_handler(lake: DataLake):
@@ -73,6 +84,21 @@ def _make_handler(lake: DataLake):
                 self.send_header(k, v)
             self.end_headers()
             self.wfile.write(body)
+
+        def _json_body(self):
+            """The request body parsed as JSON ({} when empty). Raises
+            _HttpError: 400 for a Content-Length that is not a
+            non-negative integer or a body that is not JSON, 413 for a
+            length over MAX_BODY_BYTES (the body is then left unread)."""
+            length = (self.headers.get("Content-Length") or "0").strip()
+            if not (length.isascii() and length.isdigit()):
+                raise _HttpError(400, "malformed Content-Length")
+            if int(length) > MAX_BODY_BYTES:
+                raise _HttpError(413, f"body over {MAX_BODY_BYTES} bytes")
+            try:
+                return json.loads(self.rfile.read(int(length)) or b"{}")
+            except ValueError:  # JSONDecodeError or bytes that are not UTF-8
+                raise _HttpError(400, "malformed JSON body") from None
 
         def _dispatch(self, data_id: str, endpoint: str, params: dict, body: dict | None):
             """Returns (payload, extra-headers)."""
@@ -105,11 +131,7 @@ def _make_handler(lake: DataLake):
             if url.path == "/sql":
                 if method != "POST":
                     return self._send(405, {"error": "method not allowed"})
-                n = int(self.headers.get("Content-Length") or 0)
-                try:
-                    body = json.loads(self.rfile.read(n) or b"{}")
-                except json.JSONDecodeError:
-                    return self._send(400, {"error": "malformed JSON body"})
+                body = self._json_body()
                 if not isinstance(body, dict) or "query" not in body:
                     return self._send(400, {"error": "query required"})
                 try:
@@ -130,13 +152,7 @@ def _make_handler(lake: DataLake):
             expected = "POST" if endpoint == "regression" else "GET"
             if method != expected:
                 return self._send(405, {"error": "method not allowed"})
-            body = None
-            if method == "POST":
-                n = int(self.headers.get("Content-Length") or 0)
-                try:
-                    body = json.loads(self.rfile.read(n) or b"{}")
-                except json.JSONDecodeError:
-                    return self._send(400, {"error": "malformed JSON body"})
+            body = self._json_body() if method == "POST" else None
             try:
                 result, headers = self._dispatch(data_id, endpoint, parse_qs(url.query), body)
             except api.BadRequest as e:
@@ -154,6 +170,8 @@ def _make_handler(lake: DataLake):
             # surface here as a clean 500 instead
             try:
                 self._handle(method)
+            except _HttpError as e:
+                self._send(e.code, {"error": str(e)})
             except BrokenPipeError:
                 pass  # client went away; nothing to send
             except Exception:  # noqa: BLE001

@@ -3,15 +3,17 @@ semantics (SURVEY.md §5.2.4; reference src/main.rs:309-335)."""
 
 from __future__ import annotations
 
+import http.client
 import json
 import threading
 import urllib.error
 import urllib.request
+from urllib.parse import urlparse
 
 import pytest
 
 from polars_express_spark.catalog import DataLake
-from polars_express_spark.server import make_server
+from polars_express_spark.server import MAX_BODY_BYTES, make_server
 
 TRAINS_CSV = """train_id,departure_delay,arrival_delay
 ICE1,5.0,7.5
@@ -154,6 +156,44 @@ def _post_any(url, payload):
         return _post(url, payload)
     except urllib.error.HTTPError as e:
         return e.code, json.loads(e.read())
+
+
+def _raw_post(base_url, path, content_length):
+    """POST whose Content-Length header is sent as given and whose body
+    is never sent: (status, parsed body). The timeout turns a handler
+    that waits for the body into a failure instead of a hang."""
+    url = urlparse(base_url)
+    conn = http.client.HTTPConnection(url.hostname, url.port, timeout=10)
+    try:
+        conn.putrequest("POST", path)
+        conn.putheader("Content-Length", content_length)
+        conn.endheaders()
+        r = conn.getresponse()
+        return r.status, json.loads(r.read())
+    finally:
+        conn.close()
+
+
+POST_PATHS = ["/sql", "/data/trains/regression"]
+
+
+@pytest.mark.parametrize("path", POST_PATHS)
+def test_negative_content_length_400(base_url, path):
+    status, err = _raw_post(base_url, path, "-1")
+    assert status == 400 and "Content-Length" in err["error"]
+
+
+@pytest.mark.parametrize("path", POST_PATHS)
+def test_non_integer_content_length_400(base_url, path):
+    for length in ("abc", "1.5", "1_0"):
+        status, err = _raw_post(base_url, path, length)
+        assert status == 400 and "Content-Length" in err["error"], length
+
+
+@pytest.mark.parametrize("path", POST_PATHS)
+def test_oversized_body_413_without_reading_it(base_url, path):
+    status, err = _raw_post(base_url, path, str(MAX_BODY_BYTES + 1))
+    assert status == 413 and "error" in err
 
 
 def test_sql_endpoint(base_url):
