@@ -18,12 +18,12 @@ bytes). The metadata map must carry ``avro.schema`` (JSON); the
 optional ``avro.codec`` may be ``null`` (default), ``deflate`` — RAW
 RFC-1951 deflate, no zlib header, no checksum — inflated through the
 capped-inflate bomb guard (the zip/WARC precedent; a bomb rejects,
-never allocates), or (r17) ``snappy`` — the dependency-free raw-Snappy
-decoder of functions/snappy.py, each block followed per spec by the
+never allocates), or ``snappy`` — raw Snappy through functions/
+snappy.py (libsnappy), each block followed per spec by the
 4-byte big-endian CRC32 of the UNCOMPRESSED data, verified (so snappy
-blocks, unlike deflate, detect every flip), or (r18) ``zstandard``
-— one RFC 8878 frame per block via functions/zstd.py (frames carrying
-the checksum flag detect every flip). Other codecs (xz,
+blocks, unlike deflate, detect every flip), or ``zstandard``
+— one RFC 8878 frame per block via functions/zstd.py (libzstd; frames
+carrying the checksum flag detect every flip). Other codecs (xz,
 bzip2) stay out of envelope.
 
 Record-body decode is schema-driven; the schema JSON lives IN the
@@ -731,11 +731,10 @@ def parse_avro(payload: bytes):
                     or d.unused_data):
                 return None
         elif codec == "snappy":
-            # r17 (lifting the standing gate via the dependency-free
-            # raw-Snappy decoder): per the Avro spec each snappy block
-            # is FOLLOWED by the 4-byte big-endian CRC32 of the
-            # UNCOMPRESSED data — so unlike deflate, snappy-codec
-            # blocks get real flip DETECTION
+            # per the Avro spec each snappy block is FOLLOWED by the
+            # 4-byte big-endian CRC32 of the UNCOMPRESSED data — so
+            # unlike deflate, snappy-codec blocks get real flip
+            # DETECTION
             from polars_express_spark.functions.snappy import (
                 decompress_snappy,
             )
@@ -750,9 +749,9 @@ def parse_avro(payload: bytes):
             if zlib.crc32(data) != int.from_bytes(raw[-4:], "big"):
                 return None
         elif codec == "zstandard":
-            # r18 (lifting the standing gate via functions/zstd.py):
             # per the Avro spec each block is one zstd frame, no extra
-            # CRC — frames with the checksum flag self-verify
+            # CRC — frames with the checksum flag self-verify (libzstd
+            # checks it)
             from polars_express_spark.functions.zstd import decode_zstd
 
             data = decode_zstd(raw, _MAX_INFLATE - total_inflated)

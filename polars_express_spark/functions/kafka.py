@@ -26,9 +26,10 @@ inflate), 2 snappy in the xerial snappy-java stream framing
 (b"\\x82SNAPPY\\x00" magic, two u32be version ints, then u32be-length-
 prefixed raw-Snappy chunks — the framing every JVM Kafka producer
 writes), 3 lz4 (the standard LZ4 FRAME — v2 batches use the correct
-frame header checksum), 4 zstd (r18 — the RFC 8878 decoder of
-functions/zstd.py, multi-frame streams accepted). Codecs ride
-functions/snappy.py, functions/lz4.py, functions/zstd.py.
+frame header checksum), 4 zstd (multi-frame streams accepted). Codecs
+ride functions/snappy.py, functions/lz4.py, functions/zstd.py, which
+parse the codec headers in Python and decode through pyarrow's
+libsnappy, liblz4 and libzstd.
 
 r18 also parses the LEGACY message sets (magic 0 and 1 — archived
 pre-0.11 topics in long-lived lakes): flat [offset i64be |
@@ -173,7 +174,7 @@ def _decompress_records(codec: int, raw: bytes):
 
         r = parse_lz4_frame(raw, _MAX_INFLATE)
         return None if r is None else r[0]
-    if codec == 4:  # zstd (r18 — functions/zstd.py lifts the gate)
+    if codec == 4:  # zstd
         from polars_express_spark.functions.zstd import decode_zstd
 
         return decode_zstd(raw, _MAX_INFLATE)

@@ -1,37 +1,49 @@
-"""LZ4 block + frame codec and xxHash32, dependency-free (SURVEY.md
-§2.10, r17).
+"""LZ4 frames and blocks: frame headers parsed in Python, decoding by
+liblz4 (pyarrow's bundled codec), plus writer twins and xxHash32.
 
-LZ4 is the other compression modern data infrastructure actually
-runs — Kafka message sets, Hadoop's Lz4Codec, and bare ``.lz4`` files
-— and both of its public layouts are pure struct math
-(lz4_Block_format.md / lz4_Frame_format.md in the lz4/lz4 repository):
-
-BLOCK format — a sequence of [token | literal-length extension |
-literals | u16le match offset | match-length extension]:
-    token high nibble = literal length (15 → 255-run extension bytes)
-    token low nibble  = match length - 4 (15 → extension bytes)
-    the LAST sequence has literals only (no offset/match follows);
-    offset 0 is malformed; matches may overlap forward (runs).
-End-of-block restrictions (the spec's parsing-safety rules — the last
-sequence is literals-only) are enforced structurally: a block that
-ends mid-sequence is malformed.
+LZ4 is the other compression data infrastructure runs: Kafka message
+sets, Hadoop's Lz4Codec and bare ``.lz4`` files. Its two public
+layouts are in lz4_Frame_format.md / lz4_Block_format.md of the
+lz4/lz4 repository:
 
 FRAME format — magic 0x184D2204 (u32le), FLG/BD descriptor bytes
 (version 01, flags for block independence / block checksums / content
-size / content checksum; reserved bits must be 0), an optional u64le
-content size, and HC = (xxh32(descriptor) >> 8) & 0xFF; then data
-blocks (u31le size with the high bit set meaning UNCOMPRESSED, each
-optionally followed by its xxh32 block checksum), the 0x00000000
-EndMark, and an optional xxh32 of the whole UNCOMPRESSED content.
-Checksums are xxHash32 (seed 0), itself ~30 lines of public 32-bit
-arithmetic, implemented here and pinned against the reference
-vectors. Integrity: frames WITH checksums detect every flip
-(PNG-tier); bare blocks carry none (tar-tier) — callers add their
-own, exactly the Snappy asymmetry.
+size / content checksum / DictID; reserved bits must be 0), an
+optional u64le content size, and HC = (xxh32(descriptor) >> 8) & 0xFF;
+then data blocks (u31le size with the high bit set meaning
+UNCOMPRESSED, each optionally followed by its xxh32 block checksum),
+the 0x00000000 EndMark, and an optional xxh32 of the whole
+UNCOMPRESSED content.
 
-encode_lz4_block / encode_lz4_frame are the independent writer twins
-(literals plus offset-1 run matches — any valid sequence mix is
-spec-conformant; decode∘encode = id is the contract).
+BLOCK format — a sequence of [token | literal-length extension |
+literals | u16le match offset | match-length extension], the last
+sequence literals only; the format carries no length and no checksum.
+
+What Python checks: the frame magic, a DictID frame (out of
+envelope), a declared content size over ``max_output`` (before any
+decoding), and the block size words adding up to exactly where the
+frame ends (truncation and trailing bytes, a second frame included,
+reject). What liblz4 checks: the version and reserved bits, the BD
+block maximum, the header checksum, every present block and content
+checksum, the declared content size against the output, linked-block
+match windows, and every block's sequences (a match before the start,
+a truncated sequence, a block not ending on the format's 5 trailing
+literals). Output is read in chunks and capped at ``max_output``.
+liblz4 does NOT reject a match with offset 0, which the format calls
+invalid: such a match leaves whatever the output buffer held, so only
+a content checksum (or the caller's own CRC) detects it.
+
+A bare block decodes by wrapping it in a constant frame header (block
+independent, 4 MiB block maximum, no checksums) and an EndMark, so
+liblz4 reports its real length: a block with more than 4 MiB of
+output is out of envelope. Integrity: frames WITH checksums detect
+every flip; bare blocks carry none, so callers add their own, as with
+Snappy.
+
+encode_lz4_block / encode_lz4_frame are the writer twins (literals
+plus offset-1 run matches, any valid sequence mix being
+spec-conformant; decode∘encode = id is the contract). xxh32 serves
+them and Kafka's KIP-57 header-checksum rewrite.
 
 Reference parity anchor: extends the reference's CSV-only ingest
 (reference src/main.rs:41-52) like the other §2.10 ingestion tiers.
@@ -40,6 +52,8 @@ Reference parity anchor: extends the reference's CSV-only ingest
 from __future__ import annotations
 
 import struct
+
+from polars_express_spark.functions.libcodec import stream_decompress
 
 _MAX_OUTPUT = 1 << 26  # the family-wide bomb cap
 
@@ -94,72 +108,19 @@ def xxh32(data: bytes, seed: int = 0) -> int:
     return h
 
 
-def decompress_lz4_block(
-    payload: bytes, max_output: int = _MAX_OUTPUT, prefix: bytes = b""
-):
-    """REAL LZ4 block decompression: returns the uncompressed bytes or
-    None on a truncated sequence, offset 0, a match reaching before
-    the start, or output past ``max_output`` (checked as it grows —
-    the block format declares no length, so the cap is the guard).
-    ``prefix`` is the dictionary window for block-LINKED frames (the
-    lz4 CLI default): matches may reach back into it, exactly the
-    frame spec's cross-block window (offsets are u16 so 64 KiB of
-    prefix always suffices). ``max_output`` bounds the NEW bytes
-    produced, not the prefix."""
+def decompress_lz4_block(payload: bytes, max_output: int = _MAX_OUTPUT):
+    """LZ4 block decompression: returns the uncompressed bytes or None
+    on a malformed block (see the module docstring), an empty block
+    (even empty content needs one literals-only token), a block or
+    output over the 4 MiB frame maximum, or output past
+    ``max_output``."""
     if not isinstance(payload, (bytes, bytearray, memoryview)):
         return None
-    payload = bytes(payload)
-    prefix = bytes(prefix)
-    plen = len(prefix)
-    out = bytearray()
-    pos = 0
-    n = len(payload)
-    if n == 0:
-        return None  # even empty content needs one literals-only token
-    while True:
-        if pos >= n:
-            return None  # a block ends inside the last sequence
-        token = payload[pos]
-        pos += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                if pos >= n:
-                    return None
-                b = payload[pos]
-                pos += 1
-                lit += b
-                if b != 255:
-                    break
-        if pos + lit > n or len(out) + lit > max_output:
-            return None
-        out += payload[pos : pos + lit]
-        pos += lit
-        if pos == n:
-            return bytes(out)  # the last sequence: literals only
-        if pos + 2 > n:
-            return None
-        (off,) = struct.unpack_from("<H", payload, pos)
-        pos += 2
-        mlen = (token & 0xF) + 4
-        if (token & 0xF) == 15:
-            while True:
-                if pos >= n:
-                    return None
-                b = payload[pos]
-                pos += 1
-                mlen += b
-                if b != 255:
-                    break
-        if off == 0 or off > len(out) + plen or len(out) + mlen > max_output:
-            return None
-        start = len(out) - off
-        if start >= 0 and off >= mlen:
-            out += out[start : start + mlen]
-        else:
-            for i in range(mlen):  # overlap / prefix: forward replication
-                at = start + i
-                out.append(out[at] if at >= 0 else prefix[plen + at])
+    if not 0 < len(payload) <= _BLOCK_MAX:
+        return None
+    frame = (_BLOCK_FRAME_HEAD + struct.pack("<I", len(payload))
+             + bytes(payload) + _END_MARK)
+    return stream_decompress(frame, "lz4", max_output)
 
 
 def encode_lz4_block(data: bytes, runs: bool = True) -> bytes:
@@ -207,21 +168,24 @@ def encode_lz4_block(data: bytes, runs: bool = True) -> bytes:
 
 
 _FRAME_MAGIC = 0x184D2204
+_END_MARK = struct.pack("<I", 0)
+_BLOCK_MAX = 1 << 22  # BD code 7: the largest block a frame allows
+# FLG 0x60 (version 01, independent blocks, no checksums, no content
+# size) and BD 0x70 (4 MiB block maximum): the frame a bare block is
+# decoded in
+_BLOCK_DESC = bytes([0x60, 0x70])
+_BLOCK_FRAME_HEAD = (struct.pack("<I", _FRAME_MAGIC) + _BLOCK_DESC
+                     + bytes([(xxh32(_BLOCK_DESC) >> 8) & 0xFF]))
 
 
 def parse_lz4_frame(payload: bytes, max_output: int = _MAX_OUTPUT):
-    """REAL LZ4 frame parse: returns (content bytes, {"block_indep":
+    """LZ4 frame decode: returns (content bytes, {"block_indep":
     bool, "block_checksums": bool, "content_size": int|None,
-    "content_checksum": bool}) or None. The magic, version-01 FLG with
-    zero reserved bits, the header-checksum byte (xxh32 >> 8 of the
-    descriptor), every present block checksum, the EndMark, the
-    declared content size, and the content checksum are ALL verified;
-    every block (stored size word AND decompressed size) is bound by
-    the BD descriptor's declared maximum; uncompressed blocks (high
-    bit of the size word) pass through; block-LINKED frames (FLG
-    independence bit clear — the lz4 CLI default) thread the last
-    64 KiB of output into the next block as the match window; DictID
-    frames and legacy frames are out of envelope."""
+    "content_checksum": bool}) or None. The payload must be exactly
+    one frame; see the module docstring for what is checked where.
+    Block-LINKED frames (FLG independence bit clear, the lz4 CLI
+    default) decode with the previous blocks as the match window;
+    DictID frames and legacy frames are out of envelope."""
     if not isinstance(payload, (bytes, bytearray, memoryview)):
         return None
     payload = bytes(payload)
@@ -229,20 +193,12 @@ def parse_lz4_frame(payload: bytes, max_output: int = _MAX_OUTPUT):
     if n < 7 or struct.unpack_from("<I", payload, 0)[0] != _FRAME_MAGIC:
         return None
     flg = payload[4]
-    bd = payload[5]
-    if flg >> 6 != 0b01:
-        return None  # version must be 01
-    if flg & 0b00000011:
-        return None  # reserved bit + DictID (out of envelope)
+    if flg & 0x01:
+        return None  # DictID: external dictionaries are out of envelope
     indep = bool(flg & 0x20)
     blk_cs = bool(flg & 0x10)
     has_size = bool(flg & 0x08)
     content_cs = bool(flg & 0x04)
-    if bd & 0b10001111 or (bd >> 4) not in (4, 5, 6, 7):
-        return None  # BD reserved bits; block max size 64KB..4MB
-    # the descriptor's declared maximum binds every block (spec frame
-    # grammar): both the stored size word and the decompressed size
-    bd_max = 1 << (8 + 2 * (bd >> 4))
     pos = 6
     content_size = None
     if has_size:
@@ -251,59 +207,22 @@ def parse_lz4_frame(payload: bytes, max_output: int = _MAX_OUTPUT):
         (content_size,) = struct.unpack_from("<Q", payload, pos)
         pos += 8
         if content_size > max_output:
-            return None  # bomb guard before allocation
-    if pos >= n:
-        return None
-    hc = payload[pos]
-    pos += 1
-    if (xxh32(payload[4:pos - 1]) >> 8) & 0xFF != hc:
-        return None  # header checksum
-    out = bytearray()
-    while True:
+            return None  # bomb guard before any decoding
+    pos += 1  # HC, verified by liblz4
+    while True:  # walk the block size words to the EndMark
         if pos + 4 > n:
             return None
         (word,) = struct.unpack_from("<I", payload, pos)
         pos += 4
         if word == 0:
-            break  # EndMark
-        raw_flag = bool(word & 0x80000000)
-        size = word & 0x7FFFFFFF
-        if size > n - pos or size > bd_max:
-            return None  # past payload, or over the declared maximum
-        blk = payload[pos : pos + size]
-        pos += size
-        if blk_cs:
-            if pos + 4 > n:
-                return None
-            (cs,) = struct.unpack_from("<I", payload, pos)
-            pos += 4
-            if xxh32(blk) != cs:
-                return None  # per-block corruption DETECTED
-        if raw_flag:
-            if len(out) + size > max_output:
-                return None
-            out += blk
-        else:
-            dec = decompress_lz4_block(
-                blk,
-                min(bd_max, max_output - len(out)),
-                prefix=b"" if indep else bytes(out[-65536:]),
-            )
-            if dec is None:
-                return None
-            out += dec
-    if content_cs:
-        if pos + 4 > n:
-            return None
-        (cs,) = struct.unpack_from("<I", payload, pos)
-        pos += 4
-        if xxh32(bytes(out)) != cs:
-            return None
-    if pos != n:
-        return None  # trailing bytes after the frame
-    if content_size is not None and content_size != len(out):
+            break
+        pos += (word & 0x7FFFFFFF) + (4 if blk_cs else 0)
+    if pos + (4 if content_cs else 0) != n:
+        return None  # truncated, or bytes after the frame
+    content = stream_decompress(payload, "lz4", max_output)
+    if content is None:
         return None
-    return bytes(out), {
+    return content, {
         "block_indep": indep,
         "block_checksums": blk_cs,
         "content_size": content_size,
@@ -374,7 +293,6 @@ def lz4_content_batches(batches):
     """Batch-iterator core of read_lz4_content (module-level so query
     synth stages can compose with it inside ONE mapInPandas pass —
     one Python-runner handshake, no JVM round trip of the payload)."""
-    from collections.abc import Iterator
     import numpy as np
     import pandas as pd
 
@@ -405,12 +323,12 @@ def lz4_content_batches(batches):
 
 
 def read_lz4_content(df):
-    """LZ4 frame extraction operator (r17): one ``.lz4`` payload row →
+    """LZ4 frame extraction operator: one ``.lz4`` payload row →
     one row with exact content stats plus the frame's verified
     integrity posture (block-checksum flag, declared content size or
-    -1). Malformed frames raise — every xxh32 layer (header byte,
-    per-block, whole-content) has already been enforced by
-    parse_lz4_frame. Arrow-batched mapInPandas; frame bytes never
+    -1). Malformed frames raise — parse_lz4_frame has already had
+    liblz4 enforce every xxh32 layer (header byte, per-block,
+    whole-content). Arrow-batched mapInPandas; frame bytes never
     leave the executor."""
     return df.select("doc_id", "payload").mapInPandas(
         lz4_content_batches, schema=LZ4_SCHEMA

@@ -30,10 +30,12 @@ convention. All inflation runs through the shared capped bomb guard.
 Both layouts take any of the SIX public Hadoop codecs (r18): the
 zlib DefaultCodec; GzipCodec, BZip2Codec, and ZStandardCodec (stream
 codecs — the stdlib decoders' CRC trailers verified for the first
-two, the RFC 8878 decoder of functions/zstd.py for the third); and
-SnappyCodec / Lz4Codec — Hadoop's BlockCompressorStream framing
-(u32be uncompressed block size, then u32be-length-prefixed raw codec
-chunks) over functions/snappy.py / functions/lz4.py.
+two, libzstd via functions/zstd.py for the third); and SnappyCodec /
+Lz4Codec — Hadoop's BlockCompressorStream framing (u32be uncompressed
+block size, then u32be-length-prefixed raw codec chunks) over
+functions/snappy.py / functions/lz4.py (libsnappy / liblz4; an LZ4
+chunk may produce at most 4 MiB, and Hadoop's writer splits at its
+256 KiB buffer).
 
 Key/value payloads are Writable-serialized; this module unwraps the
 two classes a byte-level pipeline owns — BytesWritable (u32be inner
@@ -291,7 +293,7 @@ def _inflate_capped(raw: bytes, cap: int):
 
 def _block_stream_decode(raw: bytes, cap: int, chunk_decode):
     """Hadoop BlockCompressorStream framing (the SnappyCodec and
-    Lz4Codec layout, r17): repeat [u32be uncompressed block size, then
+    Lz4Codec layout): repeat [u32be uncompressed block size, then
     u32be compressed-chunk length + one complete codec chunk per
     entry until the block size is produced]. A zero-length input
     stream is the codec's empty output. Returns the bytes or None on
@@ -365,7 +367,7 @@ def _codec_inflate(codec: str, raw: bytes, cap: int):
         return _bz2_inflate_capped(raw, cap)
     if codec == _ZSTD_CODEC:
         # Hadoop's ZStandardCodec is a stream codec like Gzip: the
-        # buffer is a raw zstd stream (r18 — functions/zstd.py)
+        # buffer is a raw zstd stream
         from polars_express_spark.functions.zstd import decode_zstd
 
         return decode_zstd(raw, cap)

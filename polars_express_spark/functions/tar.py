@@ -145,7 +145,7 @@ def parse_tar(payload: bytes):
     regular-file members, or None. Every header checksum is verified;
     the archive must end with two zero blocks (truncation is
     corruption). Accepts gzip- (.tar.gz), bzip2- (.tar.bz2, r16), and
-    xz-wrapped (.tar.xz, r16) and zstd-wrapped (.tar.zst, r18 — the
+    xz-wrapped (.tar.xz) and zstd-wrapped (.tar.zst — the
     wrapper modern dataset shards actually ship in) streams via capped
     decompressors — gzip/bzip2/xz carry their own checksums and our
     .tar.zst writer arms the xxh64 frame checksum, so compressed-shard
@@ -178,10 +178,10 @@ def parse_tar(payload: bytes):
         if payload is None:
             return None
     elif payload[:4] == b"\x28\xb5\x2f\xfd":
-        # .tar.zst (r18): a zstd stream (multi-frame + skippables OK)
-        # through the RFC 8878 decoder's shared cap; checksummed
-        # frames detect flips, checksum-free ones detect most
-        # structurally (functions/zstd.py)
+        # .tar.zst: a zstd stream (multi-frame + skippables OK)
+        # decoded by libzstd under the shared cap (functions/zstd.py);
+        # checksummed frames detect flips, checksum-free ones detect
+        # most structurally
         from polars_express_spark.functions.zstd import decode_zstd
 
         payload = decode_zstd(payload, _MAX_DECOMP)

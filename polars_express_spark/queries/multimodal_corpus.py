@@ -74,7 +74,9 @@ def _codec_parallel(df):
     """Hash-repartition the tiny formula rows on doc_id before the
     Arrow codec stages of the round-trip queries: the documents scan is
     a single parquet split at test SFs, so without this exchange the
-    pure-Python codec work runs on ONE core (measured at sf0.1:
+    per-document codec work (the Python media codecs, the Python
+    container framing and writers around the library-decoded
+    zstd/LZ4/Snappy) runs on ONE core (measured at sf0.1:
     q_multimodal_jpeg 8.3s serial). The exchange moves only
     (doc_id, 16 ints) rows — the standard 100 TB shape for Python-codec
     stages: shuffle the cheap rows, parallelize the expensive decode."""
@@ -4348,7 +4350,7 @@ def q_avro_record(spark, sf_dir):
     ubiquitous optional-field shape, their null/value branches rotated
     by record formulas and pinned by the is_null column — ALL THREE
     codecs rotating by doc_id%3 (null / raw-deflate / SNAPPY through
-    the r17 dependency-free raw-Snappy decoder, whose spec-mandated
+    functions/snappy.py's libsnappy decode, whose spec-mandated
     per-block CRC32 of the uncompressed data is verified), TWO records
     per block so the framing rotates. read_avro_fields
     re-parses the container (metadata-map schema resolution, per-field
@@ -4552,7 +4554,7 @@ def q_avro_nested(spark, sf_dir):
     doc's stride-29 base with a +5r rotation, and a NULLABLE UNION
     OVER AN ARRAY — union<null,array<long>> — whose null branch
     rotates by (doc+rec)%3. All FOUR codecs rotate by doc%4,
-    including zstandard through the r18 RFC 8878 decoder; one record
+    including zstandard through libzstd (functions/zstd.py); one record
     per block so block framing tracks rec_no. read_avro_fields
     explodes complex values into leaf rows under wire-order path
     names ('tags[0]', 'm.k1', 'geo.lat') with container rows pinning
@@ -4987,9 +4989,9 @@ def q_seqfile_extract(spark, sf_dir):
     lesson, size 18 + (n_chars + 9r)%160, record 1 a zero-length
     value), and the compression rotating over all THIRTEEN layout×codec
     forms by doc_id%13 (r17 block + five codecs; r18 adds
-    ZStandardCodec in both layouts via the RFC 8878 decoder — ALL SIX
+    ZStandardCodec in both layouts via libzstd — ALL SIX
     public Hadoop codecs: Default/Gzip/BZip2/ZStandard as stream
-    codecs, Snappy/Lz4 via the dependency-free raw decoders under
+    codecs, Snappy/Lz4 via libsnappy/liblz4 raw blocks under
     Hadoop's BlockCompressorStream framing): 'none'
     and the 'record' codecs carry a sync escape every 2 records
     so the mid-stream 0xFFFFFFFF marker path is hashed; the 'block'
@@ -5339,9 +5341,9 @@ def q_cbor_extract(spark, sf_dir):
 def q_kafka_extract(spark, sf_dir):
     """Kafka RecordBatch v2 log segments under the driver hash (r17,
     codec set grown r18 — the streaming-era ingestion capstone,
-    functions/kafka.py: the in-tree codec stack makes all FIVE batch
+    functions/kafka.py: the codec modules make all FIVE batch
     compressions decodable — none, gzip, xerial-framed snappy, the
-    LZ4 frame, and (r18) zstd via the RFC 8878 decoder — rotated by
+    LZ4 frame, and zstd via libzstd — rotated by
     (doc//8)%5 so every codec is hashed every round). Per
     document a real segment of 1 + doc%2 batches is muxed
     executor-side, each batch carrying 1 + (doc+b)%3 records with a
@@ -5716,23 +5718,23 @@ def q_kafka_legacy(spark, sf_dir):
     """,
 )
 def q_lz4_extract(spark, sf_dir):
-    """LZ4 frame decompression under the driver hash (r17 — the codec
-    modern infrastructure actually runs, functions/lz4.py: the public
-    block format decoded sequence by sequence, the frame format with
-    xxHash32 implemented in-tree and pinned against the reference
-    vectors). Per document a real ``.lz4`` frame is muxed
+    """LZ4 frame decompression under the driver hash (the codec
+    modern infrastructure actually runs, functions/lz4.py: frames
+    written by the in-tree writer twin with its xxHash32, headers
+    walked in Python and decoded by liblz4 through pyarrow). Per
+    document a real ``.lz4`` frame is muxed
     executor-side over 40 + (n_chars*3)%400 stride-59 formula bytes at
     block size 64 — every frame MULTI-BLOCK, so the block loop and the
     EndMark are exercised — with per-block xxh32 checksums on even
     docs, the content-size field omitted on doc%3==2, stored
     (uncompressed-bit) blocks on doc%3==1 and compressed run-match
     blocks otherwise, and the whole-content xxh32 ALWAYS on (one
-    hash-function bug and nothing parses). read_lz4_content re-walks
-    the frame — header-checksum byte, block framing, every checksum
-    layer — and ships exact content stats plus the verified posture
-    flags; the oracle replays the byte arithmetic in SQL. Scale shape:
+    hash-function bug and nothing parses). read_lz4_content walks
+    the frame's block framing and has liblz4 verify the
+    header-checksum byte and every checksum layer, then ships exact
+    content stats plus the verified posture flags; the oracle replays the byte arithmetic in SQL. Scale shape:
     one scan, one doc_id exchange (_codec_parallel), ONE fused Arrow
-    pass (r18); quarter population doc%8 in {4,5}, disjoint from the other
+    pass; quarter population doc%8 in {4,5}, disjoint from the other
     serialization slices, with the %2/%3 strategies surviving (their
     residues over {4,5,12,13,20,21,...} cover every case)."""
     from typing import Iterator
@@ -5831,11 +5833,10 @@ def q_lz4_extract(spark, sf_dir):
     """,
 )
 def q_zstd_extract(spark, sf_dir):
-    """Zstandard shard decompression under the driver hash (r18 — the
+    """Zstandard shard decompression under the driver hash (the
     compression modern LLM corpora actually ship in, functions/
-    zstd.py: RFC 8878 FSE + Huffman + sequences implemented
-    dependency-free and cross-verified bit-exact against libzstd in
-    the property suite). Per document the content is stride-67
+    zstd.py: RFC 8878 frame headers walked in Python, the frames
+    decoded by libzstd through pyarrow). Per document the content is stride-67
     formula bytes cycled from ONE 64-byte base whose last byte is
     forced to 0x0A — every 64th byte a newline, the ``.jsonl.zst``
     shard shape, with n_lines pinning the record count — length
@@ -5847,13 +5848,14 @@ def q_zstd_extract(spark, sf_dir):
     (doc//4)%4 — genuine FSE-compressed sequences and Huffman
     literals under the driver hash; 3 = a multi-frame stream (two
     checksummed frames split at ln//2 with an RFC 8878 skippable
-    frame between). read_zstd_content re-decodes every frame —
-    entropy framing must consume exactly, declared sizes and
-    checksums verified — and ships exact content stats plus the
+    frame between). read_zstd_content walks every frame header and
+    has libzstd decode them — declared sizes and checksums
+    verified — and ships exact content stats plus the
     stream's posture (frame count, all-checksummed flag, declared
     size or -1); the oracle replays the byte arithmetic in SQL.
     Scale shape: one scan, one doc_id exchange (_codec_parallel),
-    ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas); quarter population doc%8>=6 with the %4
+    ONE fused Arrow pass (synth+decode composed in a single
+    MapInPandas); quarter population doc%8>=6 with the %4
     wire-form rotation surviving (residues {6,7,14,15,...} cover
     every case)."""
     from typing import Iterator

@@ -324,10 +324,9 @@ _PRIORITY = [
     # slots 45-50 — NEW or CHANGED this round (changed queries carry
     # driver evidence that no longer matches the code, so they take
     # tail slots exactly like never-checked queries — the endorsed
-    # precedent): q_zstd_extract (NEW — the dependency-free RFC 8878
-    # Zstandard decoder: FSE + Huffman + sequences with all three
-    # literals/seq modes, repeat offsets, the frame xxh64-low32
-    # checksum honored, cross-verified against pyarrow's libzstd),
+    # precedent): q_zstd_extract (NEW — Zstandard shards: frame
+    # headers walked in Python, frames decoded by pyarrow's libzstd
+    # with the xxh64-low32 checksum honored),
     # q_avro_nested (NEW — Avro complex types: arrays, maps, enums,
     # fixed, and nested records decoded from the container's own
     # schema JSON), q_kafka_extract (CHANGED — codec rotation grows

@@ -2742,8 +2742,8 @@ def test_tfrecord_roundtrip_and_crc(sizes, seed):
 )
 @settings(max_examples=60, deadline=None)
 def test_snappy_roundtrip_and_strictness(blobs, run_len, runs, seed):
-    """r17 — the dependency-free raw-Snappy codec (functions/snappy.py,
-    lifting the standing Avro-snappy gate): decompress_snappy ∘
+    """The raw-Snappy codec (functions/snappy.py: preamble checks in
+    Python, libsnappy decode): decompress_snappy ∘
     encode_snappy = id over arbitrary bytes including long byte runs
     (compressed via overlapping offset-1 copies — the LZ77 run idiom —
     when ``runs`` is on), with hand-built spec elements pinning all
@@ -2915,13 +2915,13 @@ def test_kafka_segment_roundtrip(codec, nb, sizes, ts_deltas, seed):
 def test_lz4_roundtrip_and_frame_integrity(blobs, run_len, block_size,
                                            blk_cs, has_size, content_cs,
                                            stored, seed):
-    """r17 — the dependency-free LZ4 codec (functions/lz4.py):
-    decompress_lz4_block ∘ encode_lz4_block = id over arbitrary bytes
-    incl. long runs (offset-1 overlap matches honoring the spec's
-    end-of-block literals rules), and parse_lz4_frame ∘
+    """The LZ4 codec (functions/lz4.py: frame headers in Python,
+    liblz4 decode): decompress_lz4_block ∘ encode_lz4_block = id over
+    arbitrary bytes incl. long runs (offset-1 overlap matches honoring
+    the spec's end-of-block literals rules), and parse_lz4_frame ∘
     encode_lz4_frame = id across block sizes × every descriptor flag
-    combination, with xxHash32 implemented in-tree and pinned against
-    the public reference vectors. Integrity: when BOTH checksum layers
+    combination, with the writers' xxHash32 pinned against the public
+    reference vectors. Integrity: when BOTH checksum layers
     are armed, EVERY bit flip anywhere in the frame is DETECTED
     (PNG-tier); strictness pins offset-0/short/truncation/reserved-bit
     rejections and the bomb cap."""
@@ -3005,13 +3005,12 @@ def test_lz4_roundtrip_and_frame_integrity(blobs, run_len, block_size,
 @settings(max_examples=60, deadline=None)
 def test_zstd_decode_against_libzstd(kind, n, level, single, cs, ck,
                                      seed):
-    """r18 — the dependency-free RFC 8878 Zstandard decoder
-    (functions/zstd.py): frames produced by LIBZSTD ITSELF (pyarrow's
-    bundled codec, levels 1-19) decode bit-exactly across entropy
+    """The Zstandard path (functions/zstd.py: frame headers walked in
+    Python, libzstd decode): frames produced by LIBZSTD ITSELF
+    (pyarrow's bundled codec, levels 1-19) round-trip across entropy
     profiles — random, English-ish, low-entropy, runs, zipf,
-    repeated-record — exercising FSE-compressed sequence tables,
-    Huffman literals (1- and 4-stream), repeat modes, treeless
-    blocks, repeat offsets, and multi-block windows; our store/RLE
+    repeated-record — through the header walk (FSE and Huffman
+    compressed blocks, multi-block windows); our store/RLE
     writer twin round-trips under every header-flag combination;
     checksummed frames DETECT every flip; multi-frame streams with
     skippable frames concatenate; truncation and garbage never
@@ -3120,19 +3119,18 @@ def test_zstd_xxh64_matches_spark_jvm(spark):
 
 
 def test_lz4_linked_frames_and_bd_max():
-    """r18 — the two r17 ADVICE items (lz4.py): (a) block-LINKED
-    frames (FLG independence bit clear, the lz4 CLI default) now
-    decode with the prior output threaded in as the match window —
-    pinned by a hand-built two-block frame whose second block is a
-    single match reaching ENTIRELY into block 1 (and the same bytes
+    """(a) block-LINKED frames (FLG independence bit clear, the lz4
+    CLI default) decode with the prior output as the match window —
+    pinned by a hand-built two-block frame whose second block opens
+    with a match reaching ENTIRELY into block 1 (and the same bytes
     with the independence bit set are rejected, since the match then
-    reaches before the block start); (b) the BD descriptor's declared
-    maximum now binds every block — a 64 KiB-code frame carrying a
-    65537-byte stored block is rejected."""
+    reaches before the block start); a block that ends on a match
+    instead of the format's 5 trailing literals is rejected; (b) the
+    BD descriptor's declared maximum binds every block — a 64 KiB-code
+    frame carrying a 65537-byte stored block is rejected."""
     import struct
 
     from polars_express_spark.functions.lz4 import (
-        decompress_lz4_block,
         encode_lz4_frame,
         parse_lz4_frame,
         xxh32,
@@ -3148,22 +3146,22 @@ def test_lz4_linked_frames_and_bd_max():
         return bytes(out)
 
     # block 1: 16 literals; block 2: one match (len 8, offset 16) that
-    # reaches entirely into block 1's output, then the empty last
+    # reaches entirely into block 1's output, then the 5-literal last
     # sequence — only decodable with the linked window
     b1 = bytes([0xF0, 0x01]) + b"abcdefghijklmnop"  # lit=15+1
-    b2 = bytes([0x04, 0x10, 0x00, 0x00])
+    b2 = bytes([0x04, 0x10, 0x00, 0x50]) + b"vwxyz"
     linked = frame_with(0x40, [(len(b1), b1), (len(b2), b2)])
     got = parse_lz4_frame(linked)
-    assert got is not None and got[0] == b"abcdefghijklmnopabcdefgh"
+    assert got is not None and got[0] == b"abcdefghijklmnopabcdefghvwxyz"
     assert got[1]["block_indep"] is False
     indep = frame_with(0x60, [(len(b1), b1), (len(b2), b2)])
     assert parse_lz4_frame(indep) is None  # cross-block match rejected
-
-    # prefix window also feeds overlapping copies (match longer than
-    # offset, spilling from prefix into the growing output)
-    assert decompress_lz4_block(
-        bytes([0x08, 0x02, 0x00, 0x00]), prefix=b"xy"
-    ) == b"xyxyxyxyxyxy"
+    # the same match followed by an EMPTY last sequence breaks the
+    # end-of-block rule (the last 5 bytes are literals)
+    b2_short = bytes([0x04, 0x10, 0x00, 0x00])
+    assert parse_lz4_frame(
+        frame_with(0x40, [(len(b1), b1), (len(b2_short), b2_short)])
+    ) is None
 
     # (b) stored block over the declared 64 KiB maximum → None
     big = b"z" * 65537
@@ -3179,6 +3177,118 @@ def test_lz4_linked_frames_and_bd_max():
                                           linked=True))
     assert rt is not None and rt[0] == data
     assert rt[1]["block_indep"] is False
+
+
+def test_block_stream_length_traps():
+    """The Hadoop BlockCompressorStream (SnappyCodec, Lz4Codec) states
+    each block's uncompressed size; a chunk that decodes SHORT of it
+    must fail the block, not be padded up to it. pyarrow's one-shot
+    ``Codec.decompress(decompressed_size=n)`` returns ``n`` bytes when
+    liblz4's lz4_raw or libsnappy produce fewer (zero padding), so the
+    block decoders must report the length the library really
+    produced. A raw-Snappy preamble that overstates its elements is
+    rejected on its own."""
+    import struct
+
+    from polars_express_spark.functions.lz4 import encode_lz4_block
+    from polars_express_spark.functions.seqfile import (
+        _LZ4_CODEC,
+        _SNAPPY_CODEC,
+        _codec_inflate,
+        _codec_deflate,
+    )
+    from polars_express_spark.functions.snappy import (
+        decompress_snappy,
+        encode_snappy,
+    )
+
+    data = b"block stream payload, twice over " * 40
+    n = len(data)
+    cap = 1 << 20
+    for codec, chunk in ((_LZ4_CODEC, encode_lz4_block(data)),
+                         (_SNAPPY_CODEC, encode_snappy(data))):
+        good = struct.pack(">II", n, len(chunk)) + chunk
+        assert good == _codec_deflate(codec, data)
+        assert _codec_inflate(codec, good, cap) == data
+        # the header claims 5 more bytes than the one chunk produces
+        lying = struct.pack(">II", n + 5, len(chunk)) + chunk
+        assert _codec_inflate(codec, lying, cap) is None
+
+    # a raw-Snappy preamble that says n + 5 over elements producing n
+    elements = encode_snappy(data)[2:]  # n < 2**14: a 2-byte preamble
+    assert decompress_snappy(bytes([n & 0x7F | 0x80, n >> 7]) + elements) \
+        == data
+    over = n + 5
+    assert decompress_snappy(
+        bytes([over & 0x7F | 0x80, over >> 7]) + elements
+    ) is None
+
+
+def test_codec_bomb_caps_before_and_during_decode(monkeypatch):
+    """The bomb cap through the library path, with a small
+    ``max_output``: a zstd frame that declares no size and inflates
+    past the cap returns None (the capped read stops it); a zstd
+    window or declared size over the cap, and an LZ4 declared content
+    size over the cap, are rejected by the header walk BEFORE pyarrow
+    is called; a zstd stream holding only a skippable frame is
+    rejected by the walk (libzstd alone decodes it to b"")."""
+    import struct
+
+    from polars_express_spark.functions import libcodec, lz4, zstd
+
+    cap = 4096
+    calls = []
+
+    def counting(buf, codec, max_output):
+        calls.append(codec)
+        return libcodec.stream_decompress(buf, codec, max_output)
+
+    monkeypatch.setattr(zstd, "stream_decompress", counting)
+    monkeypatch.setattr(lz4, "stream_decompress", counting)
+
+    # no declared size, 1 KiB window, 10,000 bytes of RLE blocks
+    runs = zstd.encode_zstd(b"A" * 10_000, block_size=1024,
+                            content_size=False, checksum=False)
+    assert zstd.parse_zstd_frame(runs)[1]["content_size"] is None
+    assert zstd.parse_zstd_frame(runs, max_output=cap) is None
+    assert zstd.decode_zstd(runs, max_output=cap) is None
+    assert calls == ["zstd"] * 3
+    assert zstd.decode_zstd(runs, max_output=10_000) == b"A" * 10_000
+
+    calls.clear()
+    declared = zstd.encode_zstd(b"B" * (cap + 1), single_segment=True)
+    windowed = zstd.encode_zstd(b"C" * 100, block_size=65536,
+                                content_size=False)  # 64 KiB window
+    assert zstd.parse_zstd_frame(declared, max_output=cap) is None
+    assert zstd.parse_zstd_frame(windowed, max_output=cap) is None
+    assert zstd.decode_zstd(declared, max_output=cap) is None
+    frame = lz4.encode_lz4_frame(b"D" * (cap + 1), content_size=True)
+    assert lz4.parse_lz4_frame(frame, max_output=cap) is None
+    assert calls == []
+    assert zstd.parse_zstd_frame(windowed)[0] == b"C" * 100
+    assert lz4.parse_lz4_frame(frame)[0] == b"D" * (cap + 1)
+
+    skip = struct.pack("<II", 0x184D2A50, 4) + b"meta"
+    assert libcodec.stream_decompress(skip, "zstd", cap) == b""
+    assert zstd.parse_zstd_stream(skip) is None
+    assert zstd.decode_zstd(skip + skip) is None
+
+
+def test_lz4_block_envelope_is_the_4mib_frame_maximum():
+    """A bare LZ4 block decodes inside a frame whose BD code declares
+    the 4 MiB block maximum, so a block producing more than 4 MiB is
+    out of envelope (None), while exactly 4 MiB decodes. Hadoop's
+    Lz4Codec writes chunks from a 256 KiB buffer, well inside it."""
+    import pyarrow as pa
+
+    from polars_express_spark.functions.lz4 import decompress_lz4_block
+
+    limit = 1 << 22
+    for size, ok in ((limit, True), (limit + 1, False)):
+        data = b"q" * size
+        blk = bytes(pa.Codec("lz4_raw").compress(data, asbytes=True))
+        got = decompress_lz4_block(blk)
+        assert (got == data) if ok else (got is None)
 
 
 @given(
