@@ -81,7 +81,6 @@ def q_range_join(spark, sf_dir):
     return (
         joined.groupBy("iv_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"), dsum("value", "sum_val"))
-        .orderBy("iv_id")
     )
 
 
@@ -155,7 +154,6 @@ def q_tfidf(spark, sf_dir):
             F.col("tf").cast("bigint").alias("tf"),
             F.col("df").cast("bigint").alias("df"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -207,7 +205,7 @@ def q_chunk_overlap(spark, sf_dir):
         .cast("bigint")
         .alias("chunk_len"),
         F.element_at("toks", F.col("start_tok") + 1).alias("first_tok"),
-    ).orderBy("doc_id", "chunk_id")
+    )
 
 
 @query(
@@ -255,7 +253,7 @@ def q_pack_bins(spark, sf_dir):
     return pack_next_fit(
         with_counts, id_col="doc_id", tok_col="n_tok",
         capacity=_PACK_C, block_size=_PACK_B,
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -314,7 +312,6 @@ def q_scd2_merge(spark, sf_dir):
             "version",
             "is_current",
         )
-        .orderBy("c_custkey", "version")
     )
 
 
@@ -430,7 +427,6 @@ def q_histogram(spark, sf_dir):
         li.crossJoin(F.broadcast(b))
         .groupBy(bin_.alias("bin"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .orderBy("bin")
     )
 
 
@@ -477,7 +473,6 @@ def q_rare_tokens(spark, sf_dir):
             F.min("c").cast("bigint").alias("min_c"),
             (F.sum(rare).cast("double") / F.count(F.lit(1))).alias("rare_frac"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -521,7 +516,6 @@ def q_train_split(spark, sf_dir):
             bound_ok.alias("bound_ok"),
             (F.col("n_all") == F.col("n_corpus")).alias("cover_ok"),
         )
-        .orderBy("split")
     )
 
 
@@ -564,7 +558,6 @@ def q_weighted_sample(spark, sf_dir):
     return (
         wexp.join(kept, F.col("lang").eqNullSafe(F.col("__k_lang")), "left")
         .select("lang", "exp_kept", kept_ok.alias("kept_ok"))
-        .orderBy("lang")
     )
 
 
@@ -602,4 +595,4 @@ def q_grouped_topk(spark, sf_dir):
         k=3,
         tie_cols=["o_orderkey"],
         descending=True,
-    ).orderBy("o_orderpriority", F.col("o_totalprice").desc(), "o_orderkey")
+    )

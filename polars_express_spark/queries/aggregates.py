@@ -194,7 +194,7 @@ def q08_tpch_q1(spark, sf_dir):
         (F.col("sum_base_price") / F.col("n")).alias("avg_price"),
         (F.col("sum_disc") / F.col("n")).alias("avg_disc"),
         F.col("n").alias("count_order"),
-    ).orderBy("l_returnflag", "l_linestatus")
+    )
 
 
 @query(
@@ -217,7 +217,6 @@ def q09_count_distinct(spark, sf_dir):
             F.countDistinct("o_custkey").alias("uniq_custs"),
             F.count(F.lit(1)).alias("cnt"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -403,8 +402,7 @@ def q22c_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS (§2.4, completing the rollup/cube family
     with the general form): detail, per-flag subtotal, and grand total
     in one pass; grouping_id disambiguates subtotal NULLs from data
-    NULLs on both engines, so the hash is total under the explicit
-    NULLS FIRST order."""
+    NULLs on both engines."""
     li = load_table(spark, sf_dir, "lineitem")
     li.select("l_returnflag", "l_linestatus", "l_quantity").createOrReplaceTempView(
         "__gs_lineitem"
@@ -417,7 +415,6 @@ def q22c_grouping_sets(spark, sf_dir):
                CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) AS sum_qty
         FROM __gs_lineitem
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
         """
     )
 
@@ -448,7 +445,6 @@ def q10b_grouped_median(spark, sf_dir):
             F.percentile("l_quantity", F.lit(0.25)).alias("p25_qty"),
             F.percentile("l_quantity", F.lit(0.75)).alias("p75_qty"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -510,7 +506,7 @@ def q10c_higher_moments(spark, sf_dir):
         n.cast("bigint").alias("cnt"),
         (m3 / F.pow(m2, F.lit(1.5))).alias("skewness"),
         (m4 / F.pow(m2, F.lit(2.0)) - F.lit(3)).alias("excess_kurtosis"),
-    ).orderBy("l_returnflag")
+    )
 
 
 @query(
@@ -672,7 +668,6 @@ def q_outlier_mad(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.sum(out).cast("bigint").alias("n_outliers"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -728,4 +723,4 @@ def q04b_grouped_regression(spark, sf_dir):
         slope.alias("slope"),
         ((sy - slope * sx) / n).alias("intercept"),
         ((cov_n * cov_n) / (var_x * var_y)).alias("r2"),
-    ).orderBy("l_returnflag")
+    )

@@ -128,7 +128,6 @@ def q_retention(spark, sf_dir):
         )
         .groupBy("cohort_week", "week_offset")
         .agg(F.countDistinct("user_id").cast("bigint").alias("n_active"))
-        .orderBy("cohort_week", "week_offset")
     )
 
 
@@ -184,7 +183,6 @@ def q_text_search(spark, sf_dir):
         .agg(F.countDistinct("t").alias("__hits"))
         .where(F.col("__hits") == 2)
         .select("doc_id")
-        .orderBy("doc_id")
     )
 
 
@@ -278,7 +276,7 @@ def q_bpe_pairs(spark, sf_dir):
         .where(F.col("rn") <= 10)
         .select("pair", F.col("c").cast("bigint").alias("cnt"))
     )
-    return top.orderBy("pair")
+    return top
 
 
 @query(
@@ -320,7 +318,6 @@ def q_lang_centroid(spark, sf_dir):
                 / F.count(F.lit(1))
             ).alias("mean_x")
         )
-        .orderBy("lang", "j")
     )
 
 
@@ -399,7 +396,6 @@ def q_bigram_lm(spark, sf_dir):
             F.col("pair_cnt").cast("bigint").alias("pair_cnt"),
             F.col("n").cast("bigint").alias("w1_cnt"),
         )
-        .orderBy("w1")
     )
 
 
@@ -441,7 +437,6 @@ def q_gap_detect(spark, sf_dir):
             .alias("n_long_gaps"),
             F.max("gap_us").cast("bigint").alias("max_gap_us"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -484,7 +479,6 @@ def q_skew_profile(spark, sf_dir):
             F.max("c").cast("bigint").alias("hot_key_rows"),
             (F.max("c").cast("double") / F.sum("c")).alias("hot_key_share"),
         )
-        .orderBy("key_col")
     )
 
 
@@ -576,7 +570,6 @@ def q_transitions(spark, sf_dir):
         .where(F.col("prev_type").isNotNull())
         .groupBy("prev_type", "next_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_transitions"))
-        .orderBy("prev_type", "next_type")
     )
 
 
@@ -630,7 +623,6 @@ def q_rfm(spark, sf_dir):
     return (
         scored.groupBy("r", "f", "m")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_customers"))
-        .orderBy("r", "f", "m")
     )
 
 
@@ -677,7 +669,6 @@ def q_streaks(spark, sf_dir):
             F.max("len").cast("bigint").alias("longest_streak"),
             F.count(F.lit(1)).cast("bigint").alias("n_streaks"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -725,7 +716,6 @@ def q_attribution(spark, sf_dir):
         e.where(F.col("event_type") == "purchase")
         .groupBy("channel")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_purchases"))
-        .orderBy("channel")
     )
 
 
@@ -779,7 +769,6 @@ def q_paa(spark, sf_dir):
                 "seg_mean"
             ),
         )
-        .orderBy("user_id", "seg")
     )
 
 
@@ -872,7 +861,6 @@ def q_interpolate(spark, sf_dir):
             F.col("nv").alias("next_v"),
             (F.col("pv") + (F.col("nv") - F.col("pv")) * frac).alias("interp"),
         )
-        .orderBy("user_id", "event_id")
     )
 
 
@@ -1109,7 +1097,6 @@ def q_bm25_rank(spark, sf_dir):
         .crossJoin(F.broadcast(stats))
         .groupBy("doc_id")
         .agg(F.sum(idf * (F.col("tf") * F.lit(2.2)) / norm).alias("bm25"))
-        .orderBy("doc_id")
     )
 
 
@@ -1219,7 +1206,6 @@ def q_dup_spans(spark, sf_dir):
             (F.max("run_len") + F.lit(4)).cast("bigint").alias("max_span_words"),
             F.sum("run_len").cast("bigint").alias("n_dup_shingles"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1314,5 +1300,4 @@ def q_perplexity(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
             F.exp(F.sum("nll").cast("double") / F.count(F.lit(1))).alias("ppl"),
         )
-        .orderBy("doc_id")
     )

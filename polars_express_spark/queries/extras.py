@@ -95,7 +95,7 @@ def q_pivot(spark, sf_dir):
         .agg(F.sum(F.col("l_quantity").cast("decimal(25,6)")).cast("double"))
         .withColumnsRenamed({"O": "qty_O", "F": "qty_F"})
     )
-    return counts.join(qtys, "l_returnflag").orderBy("l_returnflag")
+    return counts.join(qtys, "l_returnflag")
 
 
 @query(
@@ -122,7 +122,6 @@ def q_unpivot(spark, sf_dir):
         .withColumn(
             "attr", F.when(F.col("attr") == "p_size_d", "p_size").otherwise(F.col("attr"))
         )
-        .orderBy("p_partkey", "attr")
     )
 
 
@@ -143,7 +142,6 @@ def q_from_json(spark, sf_dir):
         .select(F.col("j.k").alias("k_int"))
         .groupBy("k_int")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("k_int")
     )
 
 
@@ -171,7 +169,7 @@ def q_map_fns(spark, sf_dir):
         F.element_at(m, "k").alias("k_val"),
         F.concat_ws(",", F.map_keys(m)).alias("keys_csv"),
         F.size(F.map_keys(m)).alias("n_keys"),
-    ).orderBy("event_id")
+    )
 
 
 @query(

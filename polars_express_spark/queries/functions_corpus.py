@@ -52,7 +52,7 @@ def q25_strings(spark, sf_dir):
         F.startswith(F.col("p_type"), F.lit("ECO")).alias("is_eco"),
         F.endswith(F.col("p_name"), F.lit("t")).alias("ends_t"),
         F.replace(F.col("p_name"), F.lit(" "), F.lit("_")).alias("snake"),
-    ).orderBy("p_partkey")
+    )
 
 
 @query(
@@ -77,7 +77,6 @@ def q26_regex(spark, sf_dir):
             F.regexp_extract("c_name", r"(\d+)$", 1).alias("cust_num"),
             F.regexp_replace("c_name", "0+", "0").alias("squeezed"),
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -105,7 +104,7 @@ def q27_dates(spark, sf_dir):
         F.date_trunc("month", F.col("o_orderdate")).alias("month_start"),
         F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("date")).alias("days_since"),
         F.date_add(F.col("o_orderdate"), 30).alias("ship_by"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -187,7 +186,6 @@ def q29_arrays(spark, sf_dir):
             .alias("sum_first4"),
             F.sum("v").cast("double").alias("sum_all"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -208,7 +206,6 @@ def q30_json(spark, sf_dir):
         e.select(F.get_json_object("props", "$.k").alias("k_str"), "value")
         .groupBy("k_str")
         .agg(F.count(F.lit(1)).alias("cnt"), dsum("value", "sum_val"))
-        .orderBy("k_str")
     )
 
 

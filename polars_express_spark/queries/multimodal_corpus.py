@@ -109,31 +109,6 @@ def _fused(df, schema, *stages):
     return df.mapInPandas(run, schema=schema)
 
 
-def _fused_ordered(df, schema, order_cols, *stages):
-    """_fused + persist() + the presentation orderBy (r18 optimization
-    round, guide §1.4/§5).
-
-    A global orderBy is a range exchange whose bounds SAMPLING
-    re-executes its whole child — measured: a noop write of
-    mapInPandas(...).orderBy(...) runs every Python task TWICE (64 vs
-    32 invocations on a 32-partition frame), so each codec query paid
-    its synth+decode pass and its Python-runner handshake twice, once
-    for the sample job and once for the real sort. Persisting the
-    fused pass's OUTPUT — the kilobyte stats rows, never the archive
-    payloads — makes the sample job materialize the pass once and the
-    real sort read the cache (measured on q_tar_extract, interleaved
-    mins: 2.02s -> 1.85s; means 2.14 -> 1.88). Alternatives measured
-    and rejected: range-partitioning the INPUT formula rows moves the
-    sampling below the Python tier but re-executes the scan+formula
-    subtree, which costs MORE than the Python pass it saves (2.30s vs
-    1.46s unsorted on the same query). The cache is a per-invocation
-    intermediate computed from the parquet inputs (bench.py clears the
-    catalog cache after every query; nothing persists across runs),
-    and the plan stays transparent: explain shows the full fused
-    subtree inside the InMemoryRelation."""
-    return _fused(df, schema, *stages).persist().orderBy(*order_cols)
-
-
 def _formula(col, fn):
     """Python-side twin of the JVM codepoint-formula projections (r18
     optimization round, guide §1.2/§4.2).
@@ -216,9 +191,7 @@ def _frame_keyed(batches):
 )
 def q_multimodal_meta(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    # persist the kilobyte metadata rows so the orderBy's bounds-sample
-    # job reads the cache instead of re-running the Python pass
-    return decode_media(attach_payload(d)).persist().orderBy("doc_id")
+    return decode_media(attach_payload(d))
 
 
 @query(
@@ -251,7 +224,6 @@ def q_multimodal_frames(spark, sf_dir):
             F.count(F.lit(1)).alias("n_frames"),
             F.sum(F.length("frame")).alias("total_bytes"),
         )
-        .orderBy("frame_no")
     )
 
 
@@ -309,8 +281,8 @@ def q_multimodal_audio(spark, sf_dir):
                 payloads.append(buf.getvalue())
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
-        d, AUDIO_META_SCHEMA, ["doc_id"], synth, audio_meta_batches
+    return _fused(
+        d, AUDIO_META_SCHEMA, synth, audio_meta_batches
     )
 
 
@@ -393,9 +365,8 @@ def q_multimodal_pixels(spark, sf_dir):
             ]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), encode, pixel_stats_batches,
     )
 
@@ -465,9 +436,8 @@ def q_multimodal_bmp(spark, sf_dir):
             ]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), encode, pixel_stats_batches,
     )
 
@@ -546,9 +516,8 @@ def q_multimodal_mulaw(spark, sf_dir):
             ]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        ["doc_id"],
         _formula("bs", bases), synth, audio_sample_batches,
     )
 
@@ -627,9 +596,8 @@ def q_multimodal_jpeg(spark, sf_dir):
             ]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), encode, pixel_stats_batches,
     )
 
@@ -707,9 +675,8 @@ def q_multimodal_gif(spark, sf_dir):
             ]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), encode, pixel_stats_batches,
     )
 
@@ -787,9 +754,8 @@ def q_multimodal_alaw(spark, sf_dir):
             ]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        ["doc_id"],
         _formula("bs", bases), synth, audio_sample_batches,
     )
 
@@ -892,9 +858,8 @@ def q_multimodal_netpbm(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), encode, pixel_stats_batches,
     )
 
@@ -1002,9 +967,8 @@ def q_multimodal_au(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        ["doc_id"],
         _formula("bs", bases), synth, audio_sample_batches,
     )
 
@@ -1123,12 +1087,12 @@ def q_multimodal_video(spark, sf_dir):
         _formula("fs", bases),
         synth, frame_sample_batches(n_frames=3, real_decode=True),
         _frame_keyed, pixel_stats_batches,
-    ).persist()  # the orderBy sample job then reads the cache
+    )
     return stats.selectExpr(
         "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
         "CAST(doc_id % 4 AS INT) AS frame_no",
         "width", "height", "channels", "mean_val", "min_val", "max_val",
-    ).orderBy("doc_id", "frame_no")
+    )
 
 
 @query(
@@ -1241,12 +1205,12 @@ def q_multimodal_gif_anim(spark, sf_dir):
         _formula("fs", bases),
         synth, frame_sample_batches(n_frames=3, real_decode=True),
         _frame_keyed, pixel_stats_batches,
-    ).persist()  # the orderBy sample job then reads the cache
+    )
     return stats.selectExpr(
         "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
         "CAST(doc_id % 4 AS INT) AS frame_no",
         "width", "height", "channels", "mean_val", "min_val", "max_val",
-    ).orderBy("doc_id", "frame_no")
+    )
 
 
 @query(
@@ -1334,9 +1298,8 @@ def q_multimodal_wavext(spark, sf_dir):
                     payloads.append(encode_wav_extensible(data, 7, 8))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        ["doc_id"],
         _formula("bs", bases), synth, audio_sample_batches,
     )
 
@@ -1432,12 +1395,12 @@ def q_multimodal_mp4(spark, sf_dir):
         _formula("fs", bases),
         synth, frame_sample_batches(n_frames=3, real_decode=True),
         _frame_keyed, pixel_stats_batches,
-    ).persist()  # the orderBy sample job then reads the cache
+    )
     return stats.selectExpr(
         "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
         "CAST(doc_id % 4 AS INT) AS frame_no",
         "width", "height", "channels", "mean_val", "min_val", "max_val",
-    ).orderBy("doc_id", "frame_no")
+    )
 
 
 @query(
@@ -1538,9 +1501,8 @@ def q_multimodal_avi_audio(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        ["doc_id"],
         _formula("bs", bases), synth, audio_sample_batches,
     )
 
@@ -1618,9 +1580,8 @@ def q_multimodal_png_subbyte(spark, sf_dir):
             ]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), encode, pixel_stats_batches,
     )
 
@@ -1704,9 +1665,8 @@ def q_multimodal_qoi(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), encode, pixel_stats_batches,
     )
 
@@ -1789,9 +1749,8 @@ def q_multimodal_tiff(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), encode, pixel_stats_batches,
     )
 
@@ -1909,12 +1868,12 @@ def q_multimodal_y4m(spark, sf_dir):
         _formula("fs", bases),
         synth, frame_sample_batches(n_frames=3, real_decode=True),
         _frame_keyed, pixel_stats_batches,
-    ).persist()  # the orderBy sample job then reads the cache
+    )
     return stats.selectExpr(
         "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
         "CAST(doc_id % 4 AS INT) AS frame_no",
         "width", "height", "channels", "mean_val", "min_val", "max_val",
-    ).orderBy("doc_id", "frame_no")
+    )
 
 
 @query(
@@ -2012,9 +1971,8 @@ def q_multimodal_flac(spark, sf_dir):
                     )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        ["doc_id"],
         _formula("bs", bases), synth, audio_sample_batches,
     )
 
@@ -2122,9 +2080,8 @@ def q_multimodal_aiff(spark, sf_dir):
                     payloads.append(encode_aiff(pcm, 48000, 24))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        ["doc_id"],
         _formula("bs", bases), synth, audio_sample_batches,
     )
 
@@ -2216,9 +2173,8 @@ def q_multimodal_tga(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), encode, pixel_stats_batches,
     )
 
@@ -2344,11 +2300,10 @@ def q_multimodal_ico(spark, sf_dir):
                  "channels": "int32", "min_val": "int32", "max_val": "int32"}
             )
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px),
         "doc_id bigint, entry_no int, width int, height int,"
         " channels int, mean_val double, min_val int, max_val int",
-        ["doc_id", "entry_no"],
         _formula("es", bases), synth, stats,
     )
 
@@ -2447,9 +2402,8 @@ def q_multimodal_webp(spark, sf_dir):
                 ))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), encode, pixel_stats_batches,
     )
 
@@ -2586,12 +2540,12 @@ def q_multimodal_webp_anim(spark, sf_dir):
         _formula("fs", bases),
         synth, frame_sample_batches(n_frames=3, real_decode=True),
         _frame_keyed, pixel_stats_batches,
-    ).persist()  # the orderBy sample job then reads the cache
+    )
     return stats.selectExpr(
         "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
         "CAST(doc_id % 4 AS INT) AS frame_no",
         "width", "height", "channels", "mean_val", "min_val", "max_val",
-    ).orderBy("doc_id", "frame_no")
+    )
 
 
 @query(
@@ -2687,9 +2641,8 @@ def q_multimodal_msadpcm(spark, sf_dir):
                     ))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        ["doc_id"],
         _formula("vs", bases), synth, audio_sample_batches,
     )
 
@@ -2832,9 +2785,8 @@ def q_multimodal_ogg(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), OGG_STATS_SCHEMA,
-        ["doc_id"],
         _formula("bs", bases), synth, ogg_stats_batches,
     )
 
@@ -2946,9 +2898,8 @@ def q_multimodal_ogg_flac(spark, sf_dir):
                     )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        ["doc_id"],
         _formula("bs", bases), synth, audio_sample_batches,
     )
 
@@ -3052,12 +3003,12 @@ def q_multimodal_mkv(spark, sf_dir):
         _formula("fs", bases),
         synth, frame_sample_batches(n_frames=3, real_decode=True),
         _frame_keyed, pixel_stats_batches,
-    ).persist()  # the orderBy sample job then reads the cache
+    )
     return stats.selectExpr(
         "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
         "CAST(doc_id % 4 AS INT) AS frame_no",
         "width", "height", "channels", "mean_val", "min_val", "max_val",
-    ).orderBy("doc_id", "frame_no")
+    )
 
 
 @query(
@@ -3199,9 +3150,8 @@ def q_multimodal_mkv_audio(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        ["doc_id"],
         _formula("bs", bases), synth, audio_sample_batches,
     )
 
@@ -3324,9 +3274,8 @@ def q_warc_extract(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), WARC_RECORDS_SCHEMA,
-        ["doc_id", "rec_no"],
         _formula("fs", bases), synth, warc_record_batches,
     )
 
@@ -3451,9 +3400,8 @@ def q_multimodal_mp3(spark, sf_dir):
                 ))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), MP3_META_SCHEMA,
-        ["doc_id"],
         synth, mp3_meta_batches,
     )
 
@@ -3561,9 +3509,7 @@ def q_zip_extract(spark, sf_dir):
     return _fused(
         _codec_parallel(bs), ZIP_ENTRIES_SCHEMA,
         _formula("fs", bases), synth, zip_entry_batches,
-    ).persist().drop("comp_size").orderBy(
-        "doc_id", "entry_no"
-    )
+    ).drop("comp_size")
 
 
 @query(
@@ -3683,8 +3629,8 @@ def q_tar_extract(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
-        _codec_parallel(bs), TAR_ENTRIES_SCHEMA, ["doc_id", "entry_no"],
+    return _fused(
+        _codec_parallel(bs), TAR_ENTRIES_SCHEMA,
         _formula("fs", bases), synth, tar_entry_batches,
     )
 
@@ -3790,9 +3736,8 @@ def q_tfrecord_extract(spark, sf_dir):
                 payloads.append(encode_tfrecord(recs))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), TFRECORD_SCHEMA,
-        ["doc_id", "rec_no"],
         _formula("fs", bases), synth, tfrecord_record_batches,
     )
 
@@ -3949,9 +3894,8 @@ def q_tfexample_extract(spark, sf_dir):
                 payloads.append(encode_tfrecord(recs))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), TFEXAMPLE_SCHEMA,
-        ["doc_id", "rec_no", "fname"],
         _formula("fs", bases), synth, tfexample_record_batches,
     )
 
@@ -4107,11 +4051,8 @@ def q_tfseq_extract(spark, sf_dir):
                 payloads.append(encode_tfrecord(recs))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), TFSEQ_SCHEMA,
-        [
-        "doc_id", "rec_no", "fname", "step"
-    ],
         _formula("fs", bases), synth, tfseq_record_batches,
     )
 
@@ -4254,9 +4195,8 @@ def q_avro_extract(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), AVRO_SCHEMA,
-        ["doc_id", "rec_no"],
         _formula("fs", bases), synth, avro_record_batches,
     )
 
@@ -4440,7 +4380,7 @@ def q_avro_record(spark, sf_dir):
 
     av = _fused(
         _codec_parallel(bs), AVRO_FIELDS_SCHEMA, _formula("fs", bases), synth, avro_field_batches
-    ).persist()  # the orderBy sample job then reads the cache
+    )
     # the operator's honest contract is NULL in the columns a type
     # doesn't own; the hashed query coalesces to sentinels (0 / 0.0 /
     # '' / -1) because a NULL int materializes as float64-with-NaN on
@@ -4454,7 +4394,7 @@ def q_avro_record(spark, sf_dir):
         F.coalesce("v_str", F.lit("")).alias("v_str"),
         F.coalesce("v_len", F.lit(-1)).alias("v_len"),
         F.coalesce("v_sum", F.lit(-1)).alias("v_sum"),
-    ).orderBy("doc_id", "rec_no", "fname")
+    )
 
 
 @query(
@@ -4635,7 +4575,7 @@ def q_avro_nested(spark, sf_dir):
     return _fused(
         _codec_parallel(bs), AVRO_FIELDS_SCHEMA,
         _formula("fs", bases), synth, avro_field_batches,
-    ).persist().select(
+    ).select(
         "doc_id", "rec_no", "block_no", "codec", "fname", "ftype",
         "is_null",
         F.coalesce("v_int", F.lit(0)).alias("v_int"),
@@ -4643,7 +4583,7 @@ def q_avro_nested(spark, sf_dir):
         F.coalesce("v_str", F.lit("")).alias("v_str"),
         F.coalesce("v_len", F.lit(-1)).alias("v_len"),
         F.coalesce("v_sum", F.lit(-1)).alias("v_sum"),
-    ).orderBy("doc_id", "rec_no", "fname")
+    )
 
 
 @query(
@@ -4791,13 +4731,12 @@ def q_multimodal_ogg_theora(spark, sf_dir):
                  "pixel_fmt": "int32", "n_pages": "int32"}
             )
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs),
         "doc_id bigint, pic_w int, pic_h int, fps_num int,"
         " fps_den int, qual int, kfgshift int, pixel_fmt int,"
         " n_pages int, granule bigint, n_packets bigint,"
         " data_bytes bigint, data_sum bigint",
-        ["doc_id"],
         _formula("fs", bases), synth, stats,
     )
 
@@ -4914,12 +4853,11 @@ def q_multimodal_icns(spark, sf_dir):
                  "max_val": "int32"}
             )
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px),
         "doc_id bigint, elem_no int, ostype string, width int,"
         " height int, channels int, mean_val double, min_val int,"
         " max_val int",
-        ["doc_id", "elem_no"],
         _formula("es", bases), synth, stats,
     )
 
@@ -5089,9 +5027,8 @@ def q_seqfile_extract(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), SEQFILE_SCHEMA,
-        ["doc_id", "rec_no"],
         _formula("fs", bases), synth, seqfile_record_batches,
     )
 
@@ -5242,9 +5179,8 @@ def q_cbor_extract(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), CBOR_SCHEMA,
-        ["doc_id", "rec_no"],
         _formula("fs", bases), synth, cbor_record_batches,
     )
 
@@ -5436,9 +5372,8 @@ def q_kafka_extract(spark, sf_dir):
                 ))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), KAFKA_SCHEMA,
-        ["doc_id", "batch_no", "rec_no"],
         _formula("fs", bases), synth, kafka_record_batches,
     )
 
@@ -5529,14 +5464,14 @@ def q_jsonl_zst(spark, sf_dir):
 
     lines = _fused(
         _codec_parallel(bs), JSONL_SCHEMA, synth, jsonl_zst_batches
-    ).persist()  # the orderBy sample job then reads the cache
+    )
     j = F.from_json("line", "id BIGINT, tok BIGINT, tag STRING")
     return lines.select(
         "doc_id", "line_no",
         j.getField("id").alias("id_val"),
         j.getField("tok").alias("tok_ct"),
         j.getField("tag").alias("tag"),
-    ).orderBy("doc_id", "line_no")
+    )
 
 
 @query(
@@ -5685,9 +5620,8 @@ def q_kafka_legacy(spark, sf_dir):
                 ))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), KAFKA_SCHEMA,
-        ["doc_id", "batch_no", "rec_no"],
         _formula("fs", bases), synth, kafka_record_batches,
     )
 
@@ -5785,9 +5719,8 @@ def q_lz4_extract(spark, sf_dir):
                 ))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), LZ4_SCHEMA,
-        ["doc_id"],
         _formula("fs", bases), synth, lz4_content_batches,
     )
 
@@ -5930,9 +5863,8 @@ def q_zstd_extract(spark, sf_dir):
                 payloads.append(blob)
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), ZSTD_SCHEMA,
-        ["doc_id"],
         _formula("fs", bases), synth, zstd_content_batches,
     )
 
@@ -6096,9 +6028,8 @@ def q_msgpack_extract(spark, sf_dir):
                 payloads.append(encode_msgpack(items))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(bs), MSGPACK_SCHEMA,
-        ["doc_id", "rec_no"],
         _formula("fs", bases), synth, msgpack_record_batches,
     )
 
@@ -6204,8 +6135,7 @@ def q_multimodal_exif(spark, sf_dir):
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused_ordered(
+    return _fused(
         _codec_parallel(px), EXIF_SCHEMA,
-        ["doc_id"],
         _formula("p", bases), synth, exif_meta_batches,
     )

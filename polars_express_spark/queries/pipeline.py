@@ -51,7 +51,6 @@ def q34_exact_dedup(spark, sf_dir):
         .where(F.col("rn") == 1)
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("lang")
     )
 
 
@@ -135,7 +134,7 @@ def q_lang_id(spark, sf_dir):
         .when((F.col("s_fr") > F.col("s_en")) & (F.col("s_fr") > F.col("s_de")), F.lit("fr"))
         .otherwise(F.lit("en"))
         .alias("pred_lang"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -170,7 +169,7 @@ def q_quality_score(spark, sf_dir):
             / F.length("text")
         ).alias("alpha_ratio"),
         (stop_hits.cast("double") / n_tokens).alias("stop_ratio"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -194,7 +193,7 @@ def q_token_count(spark, sf_dir):
         F.size(
             F.regexp_extract_all("text", F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), 0)
         ).alias("bpe_tokens"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -224,7 +223,6 @@ def q_fingerprint(spark, sf_dir):
         .groupBy("fingerprint")
         .agg(F.min("doc_id").alias("keep_doc"), F.count(F.lit(1)).alias("n_docs"))
         .select("keep_doc", "n_docs")
-        .orderBy("keep_doc")
     )
 
 
@@ -303,7 +301,6 @@ def _verify_jaccard(cand, sh_arr, threshold=0.2):
             (i.cast("double") / (F.size("sa") + F.size("sb") - i)).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
-        .orderBy("a_id", "b_id")
     )
 
 
@@ -473,9 +470,9 @@ def minhash_lsh_pairs(spark, sf_dir):
     Signatures are computed PER ROW — each minhash is
     array_min(transform(sh, s → xxhash64(s, seed))) over the doc's
     shingle array — so the whole signature+banding stage is shuffle-free
-    codegen; the only shuffles are the (band, bucket) candidate join and
-    the final sort. (The old formulation shuffled every exploded shingle
-    through a 16-aggregate groupBy first.)
+    codegen; the only shuffle is the (band, bucket) candidate join. (The
+    old formulation shuffled every exploded shingle through a
+    16-aggregate groupBy first.)
     """
     sh_arr = _shingle_arrays_shared(spark, sf_dir)
     sigs = sh_arr.where(F.size("sh") > 0).select(
@@ -640,7 +637,7 @@ def simhash_fingerprints(d, n_bits: int = 16):
             F.lit(0).cast("long")
         )
         fp = bit if fp is None else fp + bit
-    return votes.select("doc_id", fp.alias("simhash")).orderBy("doc_id")
+    return votes.select("doc_id", fp.alias("simhash"))
 
 
 def simhash_fingerprints_fold(d, n_bits: int = 16):
@@ -680,7 +677,7 @@ def simhash_fingerprints_fold(d, n_bits: int = 16):
             F.element_at("v", b + 1) > 0, F.lit(2**b).cast("long")
         ).otherwise(F.lit(0).cast("long"))
         fp = bit if fp is None else fp + bit
-    return voted.select("doc_id", fp.alias("simhash")).orderBy("doc_id")
+    return voted.select("doc_id", fp.alias("simhash"))
 
 
 # --------------------------------------------------------------- scrubbing
@@ -714,7 +711,7 @@ def q_redact_pii(spark, sf_dir):
         F.regexp_replace(
             F.regexp_replace("text", _URL_RE, "<URL>"), _EMAIL_RE, "<EMAIL>"
         ).alias("redacted"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -749,7 +746,6 @@ def q_lev_verify(spark, sf_dir):
         pairs.join(a, "a_id")
         .join(b, "b_id")
         .select("a_id", "b_id", "jaccard", F.levenshtein("pa", "pb").alias("lev100"))
-        .orderBy("a_id", "b_id")
     )
 
 
@@ -780,21 +776,19 @@ def q_repetition(spark, sf_dir):
     all of a document's 2-grams live in one row's array, so the top
     count is a per-row expression — sort the array, fold a longest-run
     scan over it (aggregate HOF, struct state). Purely map-side: at
-    100 TB nothing ever shuffles except the presentation sort, vs
-    shuffling the entire 2-gram stream on (doc_id, gram). Measured ~25%
+    100 TB nothing ever shuffles, vs shuffling the entire 2-gram stream
+    on (doc_id, gram). Measured ~25%
     faster at sf0.1 even at these tiny array sizes; equivalence against
     the explode→groupBy form is pinned by the unchanged DuckDB oracle.
 
-    r18 optimization round: documents.parquet is a single split at test
-    SFs (594 KB, one row group — physically unsplittable, so a smaller
-    openCostInBytes was measured to only ADD empty-task overhead), which
-    serialized the whole interpreted HOF fold on ONE core AND let the
-    presentation orderBy's bounds sample re-execute it (no exchange
-    between scan and sort child). One hash repartition on doc_id fixes
-    both — the fold runs 32-way and the sample job re-reads the shuffle
-    instead of re-folding (guide §2.5 'repartition immediately after the
-    read' for unsplittable inputs): measured 1.54s → 0.92s at sf0.1. At scale the scan splits naturally and the exchange moves
-    only (doc_id, text) rows it would shuffle for the sort anyway."""
+    documents.parquet is a single split at test SFs (594 KB, one row
+    group — physically unsplittable, so a smaller openCostInBytes was
+    measured to only ADD empty-task overhead), which would serialize the
+    whole interpreted HOF fold on ONE core. One hash repartition on
+    doc_id runs the fold across shuffle.partitions tasks ('repartition
+    immediately after the read' for unsplittable inputs). At scale the
+    scan splits naturally and the exchange moves only (doc_id, text)
+    rows."""
     d = load_table(spark, sf_dir, "documents").repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id"
     )
@@ -834,7 +828,6 @@ def q_repetition(spark, sf_dir):
             "total",
             (F.col("top_cnt").cast("double") / F.col("total")).alias("rep_ratio"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -877,7 +870,6 @@ def q_stratified_sample(spark, sf_dir):
     return (
         totals.join(kept, F.col("lang").eqNullSafe(F.col("__k_lang")), "left")
         .select("lang", "n_total", kept_ok.alias("kept_ok"))
-        .orderBy("lang")
     )
 
 
@@ -1043,7 +1035,7 @@ def q_neardup_clusters(spark, sf_dir):
     pipeline run serves jaccard, lev-verify, clustering, and canonical
     dedup). Oracle: DuckDB recursive-CTE reachability — min reachable
     node = component id, the same fixpoint the propagation computes."""
-    return connected_components(_jaccard_pairs_shared(spark, sf_dir)).orderBy("doc_id")
+    return connected_components(_jaccard_pairs_shared(spark, sf_dir))
 
 
 @query(
@@ -1076,7 +1068,7 @@ def q_dedup_canonical(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     cc = connected_components(_jaccard_pairs_shared(spark, sf_dir))
     dropped = cc.where(F.col("cluster_id") != F.col("doc_id")).select("doc_id")
-    return docs.join(dropped, "doc_id", "left_anti").orderBy("doc_id")
+    return docs.join(dropped, "doc_id", "left_anti")
 
 
 @query(
@@ -1123,7 +1115,6 @@ def q_decontaminate(spark, sf_dir):
     return (
         totals.join(clean_counts, "lang", "left")
         .select("lang", "n_total", F.coalesce("n_clean", F.lit(0)).alias("n_clean"))
-        .orderBy("lang")
     )
 
 
@@ -1283,7 +1274,6 @@ def q_domain_mix(spark, sf_dir):
     return (
         fr.join(kept, F.col("lang").eqNullSafe(F.col("__k_lang")), "left")
         .select("lang", "n_total", kept_ok.alias("kept_ok"))
-        .orderBy("lang")
     )
 
 
@@ -1340,7 +1330,7 @@ def q_pagerank(spark, sf_dir):
         iters=_PAGERANK_ITERS,
         damping=_PAGERANK_DAMPING,
     )
-    return ranks.select(F.col("node").alias("doc_id"), "rank").orderBy("doc_id")
+    return ranks.select(F.col("node").alias("doc_id"), "rank")
 
 
 @query(
@@ -1423,7 +1413,7 @@ def q_kcore(spark, sf_dir):
 
     return kcore(
         _jaccard_pairs_shared(spark, sf_dir), k=_KCORE_K, max_rounds=_KCORE_ROUNDS
-    ).orderBy("node")
+    )
 
 
 @query(
@@ -1524,7 +1514,6 @@ def q_e2e_curation(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_tokens").cast("bigint").alias("n_tokens"),
         )
-        .orderBy("lang", "split")
     )
 
 
@@ -1579,7 +1568,6 @@ def q_pseudonymize(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.countDistinct("token").cast("bigint").alias("n_tokens"),
         )
-        .orderBy("region")
     )
 
 
@@ -1662,7 +1650,6 @@ def q_lpa_communities(spark, sf_dir):
             F.min("node").alias("min_member"),
         )
         .select(F.col("label").alias("community"), "n_members", "min_member")
-        .orderBy("community")
     )
 
 
@@ -1772,4 +1759,4 @@ def q_url_canonical(spark, sf_dir):
         scheme, F.lit("://"), host, portp, path,
         F.when(q == "", F.lit("")).otherwise(F.concat(F.lit("?"), q)),
     )
-    return raw.select("doc_id", "url", canonical.alias("canonical")).orderBy("doc_id")
+    return raw.select("doc_id", "url", canonical.alias("canonical"))

@@ -7,6 +7,14 @@ hash-compares (row count + schema + order-insensitive value hash).
 
 Determinism rules (SURVEY.md §7.5):
 - every limit is preceded by a total order on a unique key;
+- result order is not part of a query's contract: every check compares
+  rows order-insensitively, so a query sorts only (a) to feed a limit,
+  take, first, head or top-k; (b) when a later step reads the row
+  order (zipWithIndex, monotonically_increasing_id, a Python loop over
+  collected rows, an order-dependent stage); (c) when the sort is the
+  operator the query exists to test (q02_sort_slice); or (d) for
+  q13_multi_join, which ``__spark_entry__.entry`` hands to an outside
+  harness;
 - float AGGREGATES over many rows go through exact decimal sums
   (see _util.dsum) so partition-order FP non-associativity can never
   flip the 6-decimal hash;
@@ -356,20 +364,28 @@ _PRIORITY = [
 def all_queries() -> dict[str, QueryFn]:
     """Name → ``(spark, sf_dir) -> DataFrame`` for every registered query.
 
-    CALLER CONTRACT (r19, ADVICE r18): many query callables persist
-    per-invocation intermediates (``.persist()`` under a presentation
-    orderBy, cached projections feeding multi-pass statistics) and
-    return a DataFrame built on that cache WITHOUT unpersisting — the
-    cache must outlive the returned plan's execution. A long-lived
-    caller (server loop, notebook, repeated driver) must therefore
-    issue ``spark.catalog.clearCache()`` after consuming each result,
-    exactly as bench.py's per-query ``finally`` does; otherwise
+    CALLER CONTRACT: three persist sites cache a per-invocation
+    intermediate and return a DataFrame built on that cache WITHOUT
+    unpersisting, because the cache must outlive the returned plan's
+    execution:
+
+    - ``operators/bloom.py`` ``bloom_pruned_join`` persists its dim
+      side (q_bloom_prune);
+    - ``queries/aggregates.py`` ``q_outlier_mad`` persists its
+      two-column projection for the three dependent passes;
+    - ``queries/pipeline.py`` ``ngram_jaccard_pairs`` caches its
+      shingle arrays when the caller passes no shared frame.
+
+    A long-lived caller (server loop, notebook, repeated driver) must
+    therefore issue ``spark.catalog.clearCache()`` after consuming each
+    result, exactly as bench.py's per-query ``finally`` does; otherwise
     MEMORY_AND_DISK entries accumulate across invocations. The bounded
     FrameMemo (``_memo.FRAMES``) intermediates are exempt: they are
     LRU-evicted localCheckpoints sized by ``FrameMemo.capacity`` and
     survive clearCache by design. tests/test_memo.py pins that the
     contract holds (repeated invocation + clearCache leaves the
-    persistent-RDD set bounded)."""
+    persistent-RDD set bounded) and that the codec queries persist
+    nothing."""
     # import for side effects: each module registers its queries
     from polars_express_spark.queries import (  # noqa: F401
         aggregates,

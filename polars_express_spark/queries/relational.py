@@ -75,7 +75,6 @@ def q05_filter_project(spark, sf_dir):
             & F.col("l_discount").between(0.05, 0.07)
         )
         .select("l_orderkey", "l_linenumber", "l_extendedprice", "l_shipdate")
-        .orderBy("l_orderkey", "l_linenumber")
     )
 
 
@@ -130,7 +129,6 @@ def q07_conditional(spark, sf_dir):
         )
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("bucket")
     )
 
 
@@ -214,7 +212,6 @@ def q14_left_join(spark, sf_dir):
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("order_cnt"))
-        .orderBy("c_custkey")
     )
 
 
@@ -236,7 +233,6 @@ def q14b_right_join(spark, sf_dir):
         o.join(c, o.o_custkey == c.c_custkey, "right")
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("order_cnt"))
-        .orderBy("c_custkey")
     )
 
 
@@ -270,7 +266,6 @@ def q14c_full_join(spark, sf_dir):
             F.countDistinct("c_name").alias("n_cust"),
             F.count("o_orderkey").alias("n_orders"),
         )
-        .orderBy("custkey")
     )
 
 
@@ -288,7 +283,7 @@ def q15_semi_join(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey").orderBy("c_custkey")
+        c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey")
     )
 
 
@@ -305,7 +300,7 @@ def q15_anti_join(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey").orderBy("c_custkey")
+        c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey")
     )
 
 
@@ -321,7 +316,7 @@ def q16_cross_join(spark, sf_dir):
     build, Cargo.toml:8). Both sides are tiny dims → broadcast NLJ."""
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
-    return r.crossJoin(F.broadcast(n)).select("r_name", "n_name").orderBy("r_name", "n_name")
+    return r.crossJoin(F.broadcast(n)).select("r_name", "n_name")
 
 
 @query(
@@ -344,5 +339,4 @@ def q17_non_equi_join(spark, sf_dir):
     return (
         joined.groupBy("p_brand")
         .agg(F.count(F.lit(1)).alias("cnt"), dsum("l_quantity", "sum_qty"))
-        .orderBy("p_brand")
     )

@@ -62,7 +62,6 @@ def q_bloom_prune(spark, sf_dir):
             dsum("l_extendedprice", "sum_price"),
             dsum("o_totalprice", "sum_order_total"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -111,7 +110,7 @@ def q_cms_tokens(spark, sf_dir):
         F.col("t").alias("token"),
         F.col("c").cast("bigint").alias("exact_count"),
         (F.col("est") >= F.col("c")).alias("no_underestimate"),
-    ).orderBy("token")
+    )
 
 
 @query(
@@ -157,7 +156,7 @@ def q_gapfill(spark, sf_dir):
         e, key="user_id", ts="ts", value="value",
         step_seconds=_GAP_STEP_S, tie_col="event_id",
     )
-    return out.orderBy("user_id", "slot_ts")
+    return out
 
 
 def _sql_zkey() -> str:
@@ -277,7 +276,6 @@ def q_merge_on_read(spark, sf_dir):
     return (
         merge_on_read(base, log, key="k", seq="seq", val="v")
         .select(F.col("k").alias("c_custkey"), F.col("v").alias("acctbal"))
-        .orderBy("c_custkey")
     )
 
 
@@ -322,7 +320,6 @@ def q_interval_overlap(spark, sf_dir):
     return (
         j.groupBy("iv_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
-        .orderBy("iv_id")
     )
 
 
@@ -383,7 +380,6 @@ def q_snapshot_diff(spark, sf_dir):
     return (
         snapshot_diff(old, new, key="k", val="v")
         .select(F.col("k").alias("c_custkey"), "change", "old_val", "new_val")
-        .orderBy("c_custkey")
     )
 
 
@@ -469,7 +465,6 @@ def q_profile(spark, sf_dir):
     return (
         prof.select(F.explode(F.array(*rows)).alias("m"))
         .select("m.*")
-        .orderBy("col_name")
     )
 
 
@@ -505,7 +500,6 @@ def q_group_sample(spark, sf_dir):
     return (
         totals.join(kept, F.col("lang").eqNullSafe(F.col("__k_lang")), "left")
         .select("lang", F.coalesce("n_sampled", F.lit(0)).alias("n_sampled"), "n_total")
-        .orderBy("lang")
     )
 
 
@@ -558,7 +552,7 @@ def q_incr_agg(spark, sf_dir):
         "n_rows",
         F.col("sum_qty").cast("double").alias("sum_qty"),
         F.col("sum_price").cast("double").alias("sum_price"),
-    ).orderBy("l_returnflag")
+    )
 
 
 @query(
@@ -618,7 +612,6 @@ def q_hll_union(spark, sf_dir):
             est_ok.alias("est_ok"),
             union_ok.alias("union_ok"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -665,7 +658,6 @@ def q_radius_join(spark, sf_dir):
     return (
         j.where(F.col("a_user") < F.col("b_user"))
         .select("a_user", "b_user", "dist2")
-        .orderBy("a_user", "b_user")
     )
 
 
@@ -706,7 +698,7 @@ def q_weighted_median(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     return weighted_quantile(
         li, group="l_returnflag", value="l_extendedprice", weight="l_quantity"
-    ).orderBy("l_returnflag")
+    )
 
 
 @query(
@@ -743,4 +735,4 @@ def q_skyline(spark, sf_dir):
         # agree exactly with DuckDB's naive epoch_us
         F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("recency"),
     )
-    return skyline2d(o, "price", "recency").orderBy("x")
+    return skyline2d(o, "price", "recency")

@@ -125,7 +125,6 @@ def _cosine_topk_plan(spark, sf_dir):
         scored.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= TOP_K)
         .select("probe_id", "neighbor_id", "rnk", "cosine")
-        .orderBy("probe_id", "rnk")
     )
 
 
@@ -232,16 +231,9 @@ def q_embed_neardup(spark, sf_dir):
                 {"a_id": pdf["a_id"], "b_id": pdf["b_id"], "cosine": cos}
             )
 
-    return (
-        joined.mapInPandas(batch_cosine, schema="a_id long, b_id long, cosine double")
-        .where(F.col("cosine") >= 0.5)
-        # r18: persist the kilobyte survivor rows so the orderBy's
-        # range-bounds sample job reads the cache instead of re-running
-        # the einsum pass (orderBy sampling re-executes its child; the
-        # child here is the Python stage over the pair join)
-        .persist()
-        .orderBy("a_id", "b_id")
-    )
+    return joined.mapInPandas(
+        batch_cosine, schema="a_id long, b_id long, cosine double"
+    ).where(F.col("cosine") >= 0.5)
 
 
 # One materialized intermediate per (session, sf_dir, params): the ANN
@@ -466,7 +458,6 @@ def ann_ivf_topk(spark, sf_dir, n_cells: int = 64, probe_cells: int = 16):
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= TOP_K)
-        .orderBy("probe_id", "rnk")
     )
 
 
@@ -580,7 +571,6 @@ def ann_lsh_topk(spark, sf_dir, n_tables: int = 8, planes_per_table: int = 6):
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= TOP_K)
-        .orderBy("probe_id", "rnk")
     )
 
 
@@ -752,7 +742,6 @@ def ann_pq_topk(spark, sf_dir, m: int = 8, k_codes: int = 16, shortlist: int = 6
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= TOP_K)
-        .orderBy("probe_id", "rnk")
     )
 
 
@@ -850,7 +839,6 @@ def ann_ivfpq_topk(
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= TOP_K)
-        .orderBy("probe_id", "rnk")
     )
 
 
@@ -1007,7 +995,6 @@ def q_semdedup(spark, sf_dir):
             "bucket",
             F.col("__drop").isNull().alias("kept"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -1132,5 +1119,4 @@ def q_quantize_int8(spark, sf_dir):
                 F.when((F.col("code") == 0) | (F.col("code") == 255), 1).otherwise(0)
             ).cast("bigint").alias("n_at_bounds"),
         )
-        .orderBy("pos")
     )

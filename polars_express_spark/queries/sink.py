@@ -85,7 +85,7 @@ def q38_write_roundtrip(spark, sf_dir):
     ]
     pq = lake.load("nation_rt").select(*cols)
     js = lake.load("nation_rt_json").select(*cols)
-    return pq.intersect(js).orderBy("n_nationkey")
+    return pq.intersect(js)
 
 
 _SQL_SURFACE_STMT = """
@@ -158,7 +158,7 @@ def q_asof_join(spark, sf_dir):
     errors = e.where(F.col("event_type") == "error").select("event_id", "user_id", "ts")
     clicks = e.where(F.col("event_type") == "click").select("user_id", "ts", "value")
     joined = asof_join_backward(errors, clicks, on="ts", by="user_id", value_cols=["value"])
-    return joined.select("event_id", "user_id", "ts", F.col("asof_value")).orderBy("event_id")
+    return joined.select("event_id", "user_id", "ts", F.col("asof_value"))
 
 
 @query(
@@ -187,7 +187,7 @@ def q_asof_forward(spark, sf_dir):
     errors = e.where(F.col("event_type") == "error").select("event_id", "user_id", "ts")
     clicks = e.where(F.col("event_type") == "click").select("user_id", "ts", "value")
     joined = asof_join_forward(errors, clicks, on="ts", by="user_id", value_cols=["value"])
-    return joined.select("event_id", "user_id", "ts", F.col("asof_value")).orderBy("event_id")
+    return joined.select("event_id", "user_id", "ts", F.col("asof_value"))
 
 
 @query(
@@ -219,4 +219,4 @@ def q_asof_nearest(spark, sf_dir):
     errors = e.where(F.col("event_type") == "error").select("event_id", "user_id", "ts")
     clicks = e.where(F.col("event_type") == "click").select("user_id", "ts", "value")
     joined = asof_join_nearest(errors, clicks, on="ts", by="user_id", value_cols=["value"])
-    return joined.select("event_id", "user_id", "ts", F.col("asof_value")).orderBy("event_id")
+    return joined.select("event_id", "user_id", "ts", F.col("asof_value"))

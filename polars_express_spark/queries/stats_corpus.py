@@ -260,7 +260,7 @@ def q_chi2(spark, sf_dir):
     )
     return x.select(
         "l_returnflag", "l_linestatus", "obs", "expected", "contrib", total.alias("chi2")
-    ).orderBy("l_returnflag", "l_linestatus")
+    )
 
 
 @query(
@@ -358,7 +358,6 @@ def q_market_basket(spark, sf_dir):
                 / (F.col("c1") * F.col("c2")).cast("double")
             ).alias("lift"),
         )
-        .orderBy(F.col("pair_cnt").desc(), "p1", "p2")
     )
 
 
@@ -397,7 +396,7 @@ def q_benford(spark, sf_dir):
         F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit").cast("double")).alias(
             "benford_expected"
         ),
-    ).orderBy("digit")
+    )
 
 
 @query(
@@ -576,7 +575,6 @@ def q_ewma(spark, sf_dir):
             "n_events",
             (num.cast("double") / den.cast("double")).alias("ewma"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -635,7 +633,7 @@ def q_token_entropy(spark, sf_dir):
             F.log(F.col("n_tokens").cast("double"))
             - F.col("s").cast("double") / F.col("n_tokens").cast("double")
         ).alias("entropy"),
-    ).orderBy("doc_id")
+    )
 
 
 _ZIPF_TOP = 200
@@ -764,7 +762,6 @@ def q_winsorize(spark, sf_dir):
             o, "o_totalprice", 0.05, 0.95, group=["o_orderpriority"]
         )
         .select("o_orderpriority", "n", "lo", "hi", "win_mean")
-        .orderBy("o_orderpriority")
     )
 
 

@@ -33,7 +33,6 @@ def q32_tumbling_window(spark, sf_dir):
         e.groupBy(F.window("ts", "10 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"), dsum("value", "sum_val"))
         .select(F.col("w.start").alias("win_start"), "cnt", "sum_val")
-        .orderBy("win_start")
     )
 
 
@@ -58,7 +57,6 @@ def q33_sliding_window(spark, sf_dir):
         e.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"), dsum("value", "sum_val"))
         .select(F.col("w.start").alias("win_start"), "cnt", "sum_val")
-        .orderBy("win_start")
     )
 
 
@@ -114,7 +112,6 @@ def q_session_stats(spark, sf_dir):
             dsum("value", "total_value"),
         )
         .select("user_id", "session_start", "session_end", "n_events", "total_value")
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -141,5 +138,4 @@ def q32b_tumbling_distinct(spark, sf_dir):
             F.countDistinct("event_type").cast("bigint").alias("n_types"),
         )
         .select(F.col("w.start").alias("win_start"), "n_users", "n_types")
-        .orderBy("win_start")
     )

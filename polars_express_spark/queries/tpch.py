@@ -140,7 +140,6 @@ def q_tpch_q5(spark, sf_dir):
     return (
         j.groupBy("n_name")
         .agg(dsum(F.col("rev"), "revenue"))
-        .orderBy(F.col("revenue").desc(), "n_name")
     )
 
 
@@ -245,7 +244,6 @@ def q_tpch_q13(spark, sf_dir):
     return (
         co.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
     )
 
 
@@ -426,7 +424,6 @@ def q_tpch_q7(spark, sf_dir):
     return (
         j.groupBy("supp_nation", "cust_nation", "l_year")
         .agg(dsum(F.col("rev"), "revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -520,7 +517,7 @@ def q_tpch_q8(spark, sf_dir):
     )
     return g.select(
         "o_year", "n_items", (F.col("nat_rev") / F.col("tot_rev")).alias("mkt_share")
-    ).orderBy("o_year")
+    )
 
 
 @query(
@@ -575,7 +572,6 @@ def q_tpch_q15(spark, sf_dir):
     return (
         s.join(F.broadcast(top), F.col("s_suppkey") == F.col("l_suppkey"))
         .select("s_suppkey", "s_name", "total_rev")
-        .orderBy("s_suppkey")
     )
 
 
@@ -698,7 +694,6 @@ def q_tpch_q22(spark, sf_dir):
         eligible.join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(F.count(F.lit(1)).alias("n_custs"), dsum(F.col("c_acctbal"), "total_bal"))
-        .orderBy("n_name")
     )
 
 
@@ -777,7 +772,6 @@ def q_tpch_q4(spark, sf_dir):
     return (
         late.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -830,7 +824,6 @@ def q_tpch_q12(spark, sf_dir):
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(high, 0).otherwise(1)).alias("low_line_count"),
         )
-        .orderBy("l_linestatus")
     )
 
 
@@ -1135,7 +1128,6 @@ def q_tpch_q9(spark, sf_dir):
     return (
         j.groupBy("nation", "o_year")
         .agg(dsum(F.col("amount"), "sum_profit"))
-        .orderBy("nation", F.col("o_year").desc())
     )
 
 
@@ -1208,7 +1200,6 @@ def q_tpch_q11(spark, sf_dir):
         byp.crossJoin(F.broadcast(tot))
         .where(F.col("val") * F.lit(1000) > F.col("t"))
         .select("l_partkey", F.col("val").cast("double").alias("value"))
-        .orderBy(F.col("value").desc(), "l_partkey")
     )
 
 
@@ -1276,7 +1267,6 @@ def q_tpch_q16(spark, sf_dir):
         .join(p, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
     )
 
 
@@ -1369,5 +1359,4 @@ def q_tpch_q20(spark, sf_dir):
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(chosen, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select("s_name")
-        .orderBy("s_name")
     )

@@ -113,7 +113,6 @@ def q_tokenize_ids(spark, sf_dir):
             F.size("ids").cast("bigint").alias("n_enc"),
             F.size(F.filter("ids", lambda x: x == 0)).cast("bigint").alias("n_oov"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -181,7 +180,7 @@ def q_classifier_score(spark, sf_dir):
     )
     return scored.select(
         "doc_id", "score", "n_hits", (F.col("score") > 0.0).alias("keep")
-    ).orderBy("doc_id")
+    )
 
 
 _HIER_ROUNDS = 5  # 2^5 = 32 doubling steps ≥ max chain length of any
@@ -254,7 +253,7 @@ def q_hierarchy(spark, sf_dir):
     (pointer doubling, O(log depth) rounds) and the recursive-CTE
     oracle is the O(depth) naive walk it beats."""
     part = load_table(spark, sf_dir, "part").select("p_partkey")
-    return resolve_roots(part, "p_partkey").orderBy("p_partkey")
+    return resolve_roots(part, "p_partkey")
 
 
 # Deterministic multilingual suffixes (the synthetic corpus is ASCII, so
@@ -333,7 +332,7 @@ def q_unicode_norm(spark, sf_dir):
         normalize,
         schema="doc_id long, raw_len long, norm_len long, changed boolean,"
         " normalized string",
-    ).orderBy("doc_id")
+    )
 
 
 _BPE_ROUNDS = 3
@@ -426,7 +425,7 @@ def q_bpe_train(spark, sf_dir):
     return spark.createDataFrame(
         [(rnd, a, b, pc, int(n_syms[rnd])) for rnd, a, b, pc in merges],
         "round int, a string, b string, pair_count bigint, vocab_symbols_after bigint",
-    ).orderBy("round")
+    )
 
 
 # learned state per (app, sf_dir): k merge rows + each round's merged
@@ -547,7 +546,6 @@ def q_bpe_encode(spark, sf_dir):
             F.sum("n_char").cast("bigint").alias("n_char_syms"),
             F.sum("n_bpe").cast("bigint").alias("n_bpe_syms"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -745,5 +743,4 @@ def q_lm_score(spark, sf_dir):
             F.count("p").cast("bigint").alias("n_known"),
             F.coalesce(F.min("p"), F.lit(0.0)).alias("min_known_prob"),
         )
-        .orderBy("doc_id")
     )

@@ -55,6 +55,5 @@ def q_udtf_links(spark, sf_dir):
         """
         SELECT n_nationkey, l.link AS link
         FROM pxs_nation_html, LATERAL extract_links(h) l
-        ORDER BY n_nationkey, link
         """
     )

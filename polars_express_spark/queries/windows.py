@@ -281,7 +281,7 @@ def q21b_range_frame(spark, sf_dir):
         "user_id",
         F.count(F.lit(1)).over(w).cast("bigint").alias("cnt_1h"),
         F.sum(F.col("value").cast("decimal(25,6)")).over(w).cast("double").alias("sum_1h"),
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -325,7 +325,7 @@ def q18c_window_dist(spark, sf_dir):
         F.percent_rank().over(w).alias("pr"),
         F.cume_dist().over(w).alias("cd"),
         F.nth_value("o_orderkey", 2).over(wf).alias("second_key"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -356,4 +356,4 @@ def q20b_share_of_total(spark, sf_dir):
     return o.select(
         "o_orderkey",
         (F.col("o_totalprice").cast("double") / denom).alias("share"),
-    ).orderBy("o_orderkey")
+    )

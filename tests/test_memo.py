@@ -154,24 +154,30 @@ def test_lake_save_releases_dataset_memos(spark, tmp_path):
 
 
 def test_repeated_query_invocation_with_clearcache_stays_bounded(spark):
-    """The registry caller contract (all_queries docstring, ADVICE r18):
-    queries that persist per-invocation intermediates rely on the
-    caller issuing clearCache after each result — under that contract a
-    long-lived loop must not accumulate persisted storage. Drive three
-    of the persisting queries (orderBy-over-persist, multi-pass cached
-    projection, persisted dim side) repeatedly and pin that the
-    persistent-RDD count is flat between rounds rather than growing
+    """The registry caller contract (all_queries docstring): the three
+    per-invocation persist sites rely on the caller issuing clearCache
+    after each result — under that contract a long-lived loop must not
+    accumulate persisted storage. Drive each site repeatedly (the cached
+    shingle arrays of ngram_jaccard_pairs without a shared frame, the
+    multi-pass cached projection, the persisted dim side) and pin that
+    the persistent-RDD count is flat between rounds rather than growing
     with the invocation count."""
+    from polars_express_spark.catalog import load_table
     from polars_express_spark.queries._memo import FRAMES
+    from polars_express_spark.queries.pipeline import ngram_jaccard_pairs
     from polars_express_spark.queries.registry import all_queries
 
     qs = all_queries()
-    names = ["q_multimodal_meta", "q_outlier_mad", "q_bloom_prune"]
     sf = "/root/testdata/sf0.001"
+    runs = [
+        lambda: ngram_jaccard_pairs(load_table(spark, sf, "documents")),
+        lambda: qs["q_outlier_mad"](spark, sf),
+        lambda: qs["q_bloom_prune"](spark, sf),
+    ]
 
     def round_trip():
-        for n in names:
-            qs[n](spark, sf).write.format("noop").mode("overwrite").save()
+        for run in runs:
+            run().write.format("noop").mode("overwrite").save()
             spark.catalog.clearCache()
         return _n_persisted_rdds(spark)
 
@@ -185,3 +191,24 @@ def test_repeated_query_invocation_with_clearcache_stays_bounded(spark):
     # flat across rounds: whatever survives one round (memoized
     # checkpoints) must not grow with further invocations
     assert counts[1] == counts[2], counts
+
+
+def test_codec_queries_need_no_clearcache(spark):
+    """The Python-pass queries (every multimodal corpus query and
+    q_embed_neardup) persist nothing per invocation: running each twice
+    with no clearCache in between leaves the cache empty and the
+    persistent-RDD set where it was, so these queries are outside the
+    registry's clearCache caller contract."""
+    from polars_express_spark.queries.registry import all_queries
+    from tests.conftest import SF_DIR
+
+    qs = all_queries()
+    names = [n for n, fn in qs.items() if fn.__module__.endswith(".multimodal_corpus")]
+    assert len(names) >= 50, names
+    spark.catalog.clearCache()
+    base = _n_persisted_rdds(spark)
+    for name in [*names, "q_embed_neardup"]:
+        for _ in range(2):
+            qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            assert _n_persisted_rdds(spark) <= base, name
+            assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name

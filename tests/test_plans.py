@@ -127,12 +127,12 @@ def test_pack_bins_is_one_grouped_map_shuffle(spark):
     """Sequence packing must be ONE hash shuffle on the block key into
     an Arrow grouped-map (FlatMapGroupsInPandas) — the per-block scan
     never widens beyond its block, and no second aggregation pass
-    exists. (The only other Exchange is the final presentation sort.)"""
+    exists."""
     p = plan_of("q_pack_bins", spark)
     assert "FlatMapGroupsInPandas" in p
     # count tree nodes, not the per-node detail sections that repeat
     # the operator name below the tree
-    assert p.count("+- Exchange") <= 2
+    assert p.count("+- Exchange") <= 1
 
 
 def test_decontaminate_benchmark_side_broadcasts(spark):
@@ -284,12 +284,11 @@ def test_semdedup_block_join_only(spark):
 
 
 def test_unicode_norm_single_map_stage(spark):
-    """NFC normalization is one zero-shuffle Arrow map over the scan —
-    the only exchange allowed is the presentation sort."""
+    """NFC normalization is one zero-shuffle Arrow map over the scan."""
     p = plan_of("q_unicode_norm", spark)
     tree = p.split("\n\n")[0]
     assert "MapInPandas" in p
-    assert tree.count("+- Exchange") <= 1
+    assert tree.count("+- Exchange") == 0
 
 
 def test_e2e_curation_broadcasts_probe_sides(spark):
@@ -710,6 +709,29 @@ def test_registry_wide_no_cartesian_and_declared_bnlj_only(spark):
     assert not offenders_bnlj, f"undeclared BNLJ in: {offenders_bnlj}"
 
 
+def _assert_one_fused_pass_over_doc_id_exchange(p: str) -> None:
+    """Operator order of a formatted plan's tree section (parent printed
+    first) must be exactly MapInPandas / hash-Exchange on doc_id / Scan
+    parquet, with no Sort and no cached relation anywhere."""
+    assert "CartesianProduct" not in p
+    assert "InMemoryRelation" not in p and "InMemoryTableScan" not in p, p
+    assert "rangepartitioning" not in p, p
+    assert p.count("hashpartitioning(") == 1, p
+    assert "hashpartitioning(doc_id" in p, p
+    seq, sorts = [], []
+    for line in p.splitlines():
+        t = line.strip(" +-:*")
+        if t.startswith("(1) Scan"):  # details section begins
+            break
+        for op in ("Exchange", "MapInPandas", "Scan parquet"):
+            if t.startswith(op):
+                seq.append(op)
+        if t.startswith("Sort"):
+            sorts.append(t)
+    assert not sorts, p
+    assert seq == ["MapInPandas", "Exchange", "Scan parquet"], seq
+
+
 @pytest.mark.parametrize(
     "name",
     ["q_multimodal_pixels", "q_multimodal_bmp", "q_multimodal_gif",
@@ -729,39 +751,20 @@ def test_registry_wide_no_cartesian_and_declared_bnlj_only(spark):
      "q_jsonl_zst"],
 )
 def test_codec_roundtrip_plan_shape(spark, name):
-    """r13 — pin the codec-query scale shape that was previously only
-    argued in docstrings: ONE parquet scan, ONE hash exchange of the
-    kilobyte formula rows on doc_id BEFORE the Python tier (the
-    _codec_parallel fix — without it the single-split documents scan
-    serializes the pure-Python codec on one core), the encode and
-    decode stages fused into a SINGLE MapInPandas pass (r18
-    optimization: each extra MapInPandas node is a separate Python
-    runner costing a ~0.4-0.5s per-pass handshake at local[32] plus a
-    JVM round trip of the payload bytes — _fused composes the same
-    stage functions into one node), and only the final order-by range
-    exchange above. A refactor that drops the repartition or splits
-    the codec pipeline back into chained Python nodes fails here, not
-    in a bench regression three rounds later."""
-    p = plan_of(name, spark)
-    assert "CartesianProduct" not in p
-    assert "hashpartitioning(doc_id" in p
-    # operator order from the tree section (parent printed first):
-    # Sort / range-Exchange / MapInPandas(encode+decode fused)
-    # / hash-Exchange / ... / Scan parquet
-    seq = []
-    for line in p.splitlines():
-        t = line.strip(" +-:*")
-        for op in ("Exchange", "MapInPandas", "Scan parquet"):
-            if t.startswith(op):
-                seq.append(op)
-        if t.startswith("(1) Scan"):  # details section begins
-            break
-    assert seq.count("Scan parquet") == 1, seq
-    assert seq.count("MapInPandas") == 1, seq
-    assert seq.count("Exchange") == 2, seq
-    i = seq.index("MapInPandas")
-    assert seq.index("Exchange") < i, f"no exchange above the stage: {seq}"
-    assert seq[i + 1] == "Exchange", f"codec stage not fed by the doc_id exchange: {seq}"
+    """Pin the codec-query scale shape: ONE parquet scan, ONE hash
+    exchange of the kilobyte formula rows on doc_id directly under the
+    Python tier (the _codec_parallel fix — without it the single-split
+    documents scan serializes the Python codec on one core), and the
+    encode and decode stages fused into a SINGLE MapInPandas pass
+    (each extra MapInPandas node is a separate Python runner with its
+    own per-pass handshake plus a JVM round trip of the payload bytes —
+    _fused composes the same stage functions into one node). Nothing
+    sits above the pass: no Sort or range exchange (result order is not
+    part of a query's contract) and no InMemoryRelation (nothing is
+    persisted per invocation). A refactor that drops the repartition,
+    splits the codec pipeline back into chained Python nodes or puts a
+    presentation sort back fails here, not in a bench regression."""
+    _assert_one_fused_pass_over_doc_id_exchange(plan_of(name, spark))
 
 
 @pytest.mark.parametrize(
@@ -770,28 +773,13 @@ def test_codec_roundtrip_plan_shape(spark, name):
      "q_multimodal_y4m", "q_multimodal_webp_anim", "q_multimodal_mkv"],
 )
 def test_video_roundtrip_plan_shape(spark, name):
-    """r14 — the frame-sampling round trips run a three-stage Python
-    pipeline (mux → demux+decode → stats) with the same scale contract
-    as the other codec queries: ONE parquet scan, ONE hash exchange of
-    the kilobyte formula rows on doc_id BEFORE the Python tier, all
-    three stages fused into a SINGLE MapInPandas pass (r18: one Python
-    runner handshake instead of three, and the muxed container plus the
-    sampled frames never round-trip through the JVM), and only the
-    final order-by range exchange above."""
-    p = plan_of(name, spark)
-    assert "CartesianProduct" not in p
-    assert "hashpartitioning(doc_id" in p
-    seq = []
-    for line in p.splitlines():
-        t = line.strip(" +-:*")
-        for op in ("Exchange", "MapInPandas", "Scan parquet"):
-            if t.startswith(op):
-                seq.append(op)
-        if t.startswith("(1) Scan"):
-            break
-    assert seq.count("Scan parquet") == 1, seq
-    assert seq.count("MapInPandas") == 1, seq
-    assert seq.count("Exchange") == 2, seq
-    i = seq.index("MapInPandas")
-    assert seq.index("Exchange") < i, f"no exchange above the stage: {seq}"
-    assert seq[i + 1] == "Exchange", f"stage not fed by the doc_id exchange: {seq}"
+    """The frame-sampling round trips run a three-stage Python pipeline
+    (mux → demux+decode → stats) with the same scale contract as the
+    other codec queries: ONE parquet scan, ONE hash exchange of the
+    kilobyte formula rows on doc_id directly under the Python tier, all
+    three stages fused into a SINGLE MapInPandas pass (one Python runner
+    handshake instead of three, and the muxed container plus the
+    sampled frames never round-trip through the JVM), and above it only
+    the JVM projection that splits the frame key — no Sort, no range
+    exchange, no InMemoryRelation."""
+    _assert_one_fused_pass_over_doc_id_exchange(plan_of(name, spark))
