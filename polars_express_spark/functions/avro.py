@@ -368,7 +368,7 @@ def _schema_descr(schema_json: bytes):
     return _record_descr(s, 0, {})
 
 
-def _read_datum(data: bytes, pos: int, ftype: str):
+def _read_datum(data: bytes, pos: int, ftype: str, budget=None):
     """Decode one primitive datum at ``pos`` per the Avro binary
     encoding: returns (value, end_pos) or None. All seven in-envelope
     primitives are self-delimiting — zigzag varints (long/int, the int
@@ -387,9 +387,17 @@ def _read_datum(data: bytes, pos: int, ftype: str):
     as exactly ``size`` raw bytes, nested records field by field,
     and ('union', ...) as branch index then branch datum. Data
     nesting is bounded by the schema's own depth (<= 4), so no depth
-    bomb is decodable."""
+    bomb is decodable.
+
+    Array items of a zero-width type (see _min_datum_width) pack any
+    count into no bytes, so their count is charged to ``budget`` — a
+    one-element list of items still allowed, shared by every nested
+    call — rather than checked against the bytes left; a lying count
+    can then never allocate past _MAX_INFLATE items in one decode."""
     import struct
 
+    if budget is None:
+        budget = [_MAX_INFLATE]
     if isinstance(ftype, tuple):
         kind = ftype[0]
         if kind == "union":
@@ -403,7 +411,7 @@ def _read_datum(data: bytes, pos: int, ftype: str):
             branch = branches[idx]
             if branch == "null":
                 return AVRO_NULL, pos
-            r = _read_datum(data, pos, branch)
+            r = _read_datum(data, pos, branch, budget)
             if r is None:
                 return None
             v, pos = r
@@ -417,6 +425,7 @@ def _read_datum(data: bytes, pos: int, ftype: str):
             inner = ftype[1]
             out_l: list = []
             out_m: dict = {}
+            zero_width = kind == "array" and _min_datum_width(inner) == 0
             while True:
                 r = _read_long(data, pos)
                 if r is None:
@@ -433,7 +442,11 @@ def _read_datum(data: bytes, pos: int, ftype: str):
                     declared, pos = r
                     if declared < 0 or declared > len(data) - pos:
                         return None
-                if count > len(data) - pos:
+                if zero_width:
+                    if count > budget[0]:
+                        return None
+                    budget[0] -= count
+                elif count > len(data) - pos:
                     return None  # every item needs >= 1 byte
                 block_start = pos
                 for _ in range(count):
@@ -448,12 +461,12 @@ def _read_datum(data: bytes, pos: int, ftype: str):
                             return None
                         if key in out_m:
                             return None  # strict: duplicate map keys
-                        r = _read_datum(data, pos, inner)
+                        r = _read_datum(data, pos, inner, budget)
                         if r is None:
                             return None
                         out_m[key], pos = r
                     else:
-                        r = _read_datum(data, pos, inner)
+                        r = _read_datum(data, pos, inner, budget)
                         if r is None:
                             return None
                         v, pos = r
@@ -476,7 +489,7 @@ def _read_datum(data: bytes, pos: int, ftype: str):
         if kind == "record":
             rec = {}
             for fname, fdescr in ftype[1]:
-                r = _read_datum(data, pos, fdescr)
+                r = _read_datum(data, pos, fdescr, budget)
                 if r is None:
                     return None
                 rec[fname], pos = r
@@ -492,7 +505,7 @@ def _read_datum(data: bytes, pos: int, ftype: str):
             return None
         if branches[idx] == "null":
             return AVRO_NULL, pos
-        return _read_datum(data, pos, branches[idx])
+        return _read_datum(data, pos, branches[idx], budget)
     if ftype in ("bytes", "string"):
         r = _read_sized(data, pos)
         if r is None:
@@ -778,11 +791,13 @@ def parse_avro(payload: bytes):
             total_inflated += count
         q = 0
         block: list = []
+        # zero-width array items draw on the same shared budget
+        budget = [_MAX_INFLATE - total_inflated]
         for _ in range(count):
             if fields is not None:
                 rec = {}
                 for fname, ftype in fields:
-                    r = _read_datum(data, q, ftype)
+                    r = _read_datum(data, q, ftype, budget)
                     if r is None:
                         return None
                     rec[fname], q = r
@@ -798,6 +813,7 @@ def parse_avro(payload: bytes):
                 except UnicodeDecodeError:
                     return None
             block.append(datum)
+        total_inflated = _MAX_INFLATE - budget[0]
         if q != len(data):
             return None  # block must consume exactly its declared bytes
         if payload[pos : pos + 16] != sync:
