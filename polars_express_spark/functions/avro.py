@@ -393,7 +393,12 @@ def _read_datum(data: bytes, pos: int, ftype: str, budget=None):
     count into no bytes, so their count is charged to ``budget`` — a
     one-element list of items still allowed, shared by every nested
     call — rather than checked against the bytes left; a lying count
-    can then never allocate past _MAX_INFLATE items in one decode."""
+    can then never allocate past _MAX_INFLATE items in one decode.
+    Such a block decodes one item and repeats it, so its cost is one
+    list extension rather than one decode per item; the items of a
+    zero-width record array are therefore one shared dict. Decoded
+    values are read-only: avro_record_batches and avro_field_batches
+    only read them."""
     import struct
 
     if budget is None:
@@ -446,6 +451,13 @@ def _read_datum(data: bytes, pos: int, ftype: str, budget=None):
                     if count > budget[0]:
                         return None
                     budget[0] -= count
+                    # every item decodes to the same value from no bytes:
+                    # decode one, repeat it, and skip the per-item loop
+                    r = _read_datum(data, pos, inner, budget)
+                    if r is None or r[1] != pos:
+                        return None
+                    out_l.extend([r[0]] * count)
+                    count = 0
                 elif count > len(data) - pos:
                     return None  # every item needs >= 1 byte
                 block_start = pos

@@ -1,13 +1,32 @@
-"""Multimodal metadata query (SURVEY.md §2.10 Tier G).
+"""Multimodal corpus queries (SURVEY.md §2.10 Tier G).
 
-The DuckDB oracle replays the deterministic fake-decode arithmetic in
-SQL over the same payload bytes — so what's actually being differentially
-tested is the real plumbing: binary encode, Arrow batch transfer, the
-mapInPandas schema contract, and the join back.
+Every query here but q_multimodal_meta and q_multimodal_frames is a
+write→read round trip built by `_roundtrip`: per document, a writer
+derives a real wire-format payload (an image, an audio file, a video
+container, an archive, a record shard, a compressed stream) from the
+document's fields, and the library's reader decodes it back in the same
+Python pass. Each DuckDB oracle replays the writer's formulas in SQL
+straight from the documents table, never touching the wire format, so
+a hash match proves that the reader inverts the writer over real bytes
+and that the Arrow batch plumbing carries them intact.
+
+Writers sample the text with the oracles' code-point formula
+ascii(substr(text, (i * stride + phase) % length(text) + 1, 1)) % 256
+(`_samples`); each query owns a distinct stride, so no two queries'
+payloads can be confused.
 """
 
 from __future__ import annotations
 
+import io
+import json
+import struct
+import wave
+from itertools import accumulate
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from polars_express_spark.catalog import load_table
@@ -16,166 +35,313 @@ from polars_express_spark.functions.avro import (
     AVRO_SCHEMA,
     avro_field_batches,
     avro_record_batches,
+    encode_avro,
 )
-from polars_express_spark.functions.cbor import CBOR_SCHEMA, cbor_record_batches
-from polars_express_spark.functions.exif import EXIF_SCHEMA, exif_meta_batches
-from polars_express_spark.functions.kafka import KAFKA_SCHEMA, kafka_record_batches
-from polars_express_spark.functions.lz4 import LZ4_SCHEMA, lz4_content_batches
-from polars_express_spark.functions.mp3 import MP3_META_SCHEMA, mp3_meta_batches
+from polars_express_spark.functions.cbor import (
+    CBOR_SCHEMA,
+    CborDateTime,
+    CborEpochTime,
+    cbor_record_batches,
+    encode_cbor,
+    encode_cbor_indefinite,
+)
+from polars_express_spark.functions.exif import (
+    EXIF_SCHEMA,
+    encode_exif_app1,
+    exif_meta_batches,
+    splice_exif_app1,
+)
+from polars_express_spark.functions.flac import encode_flac, encode_flac_parts
+from polars_express_spark.functions.jpeg import encode_jpeg
+from polars_express_spark.functions.kafka import (
+    KAFKA_SCHEMA,
+    encode_kafka_legacy_set,
+    encode_kafka_segment,
+    kafka_record_batches,
+)
+from polars_express_spark.functions.lz4 import (
+    LZ4_SCHEMA,
+    encode_lz4_frame,
+    lz4_content_batches,
+)
+from polars_express_spark.functions.mkv import encode_mkv
+from polars_express_spark.functions.mp3 import (
+    MP3_META_SCHEMA,
+    encode_id3v2,
+    encode_mp3_frames,
+    mp3_meta_batches,
+)
 from polars_express_spark.functions.msgpack import (
     MSGPACK_SCHEMA,
+    MsgpackTimestamp,
+    encode_msgpack,
     msgpack_record_batches,
 )
 from polars_express_spark.functions.multimodal import (
+    AUDIO_META_SCHEMA,
     AUDIO_SAMPLE_STATS_SCHEMA,
     OGG_STATS_SCHEMA,
     PIXEL_STATS_SCHEMA,
     attach_payload,
+    audio_meta_batches,
     audio_sample_batches,
     decode_media,
+    encode_aiff,
+    encode_au,
+    encode_avi,
+    encode_bmp,
+    encode_gif,
+    encode_gif_anim,
+    encode_icns,
+    encode_ico,
+    encode_mp4,
+    encode_netpbm,
+    encode_ogg,
+    encode_ogg_flac,
+    encode_png,
+    encode_qoi,
+    encode_tga,
+    encode_tiff,
+    encode_wav_alaw,
+    encode_wav_extensible,
+    encode_wav_msadpcm,
+    encode_wav_mulaw,
+    encode_y4m,
     frame_sample_batches,
+    make_opus_head,
+    make_theora_id,
+    make_vorbis_id,
     ogg_stats_batches,
+    parse_icns,
+    parse_ico,
+    parse_ogg_theora_info,
     pixel_stats_batches,
     sample_frames,
 )
 from polars_express_spark.functions.protowire import (
     TFEXAMPLE_SCHEMA,
     TFSEQ_SCHEMA,
+    encode_tf_example,
+    encode_tf_sequence_example,
     tfexample_record_batches,
     tfseq_record_batches,
 )
 from polars_express_spark.functions.seqfile import (
     SEQFILE_SCHEMA,
+    encode_seqfile,
     seqfile_record_batches,
 )
-from polars_express_spark.functions.tar import TAR_ENTRIES_SCHEMA, tar_entry_batches
+from polars_express_spark.functions.tar import (
+    TAR_ENTRIES_SCHEMA,
+    encode_tar,
+    tar_entry_batches,
+)
 from polars_express_spark.functions.tfrecord import (
     TFRECORD_SCHEMA,
+    encode_tfrecord,
     tfrecord_record_batches,
 )
 from polars_express_spark.functions.warc import (
     WARC_RECORDS_SCHEMA,
+    encode_warc,
     warc_record_batches,
 )
+from polars_express_spark.functions.webp import encode_webp, encode_webp_anim
 from polars_express_spark.functions.ziparc import (
     ZIP_ENTRIES_SCHEMA,
+    encode_zip,
     zip_entry_batches,
 )
 from polars_express_spark.functions.zstd import (
     JSONL_SCHEMA,
     ZSTD_SCHEMA,
+    encode_zstd,
     jsonl_zst_batches,
     zstd_content_batches,
 )
 from polars_express_spark.queries.registry import query
 
+_HAS_TEXT = "text IS NOT NULL AND length(text) > 0"
+
 
 def _codec_parallel(df):
-    """Hash-repartition the tiny formula rows on doc_id before the
-    Arrow codec stages of the round-trip queries: the documents scan is
-    a single parquet split at test SFs, so without this exchange the
-    per-document codec work (the Python media codecs, the Python
-    container framing and writers around the library-decoded
-    zstd/LZ4/Snappy) runs on ONE core (measured at sf0.1:
-    q_multimodal_jpeg 8.3s serial). The exchange moves only
-    (doc_id, 16 ints) rows — the standard 100 TB shape for Python-codec
-    stages: shuffle the cheap rows, parallelize the expensive decode."""
+    """Hash-repartition rows on doc_id into spark.sql.shuffle.partitions
+    parts (see `_roundtrip` for why)."""
     spark = df.sparkSession
     return df.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id"
     )
 
 
-def _fused(df, schema, *stages):
-    """Compose batch-iterator stages (synth → decode[ → stats]) into ONE
-    mapInPandas pass (r18 optimization round, guide §4): each chained
-    MapInPandas node is a separate Python-runner pass whose per-task
-    handshake costs ~0.4-0.5s wall-clock at local[32] REGARDLESS of rows
-    (measured r14, re-measured r18: identity passes read 0.50/0.94/1.36s
-    for 1/2/3 chained nodes), and the archive payload crosses the
-    JVM↔Python boundary once per extra node. Running the same stage
-    functions as a single generator pipeline inside one node keeps the
-    exact per-batch semantics (each stage still sees whole pandas
-    batches) while paying ONE handshake and shipping the intermediate
-    payload zero times. Same 100 TB shape, strictly fewer boundary
-    crossings — the doc_id exchange ahead of the pass still carries all
-    the parallelism."""
+def _codepoints(text):
+    """The text's Unicode code points as int64, decoded once per row
+    through UTF-32 (null text reads as empty). Element k is what both
+    engines' ascii(substr(text, k + 1, 1)) returns, astral-plane
+    characters included."""
+    return np.frombuffer((text or "").encode("utf-32-le"), "<u4").astype(
+        np.int64
+    )
+
+
+def _samples(cp, n, stride, phase=0):
+    """The oracles' ascii(substr(text, (i * stride + phase) %
+    length(text) + 1, 1)) % 256 for i = 0..n-1, as uint8."""
+    return (cp[(np.arange(n) * stride + phase) % len(cp)] % 256).astype("u1")
+
+
+def _cycle(base, ln, add=0):
+    """ln bytes (base[i % len(base)] + add) % 256: a 64-sample base
+    cycled to length, as the oracles replay it with (g.i % 64)."""
+    return np.resize((base.astype(np.int64) + add) % 256, ln).astype(
+        "u1"
+    ).tobytes()
+
+
+def _blocks(v, side):
+    """A side*8 square grayscale raster of constant 8x8 blocks, one per
+    sample of v: the exact tier of the lossy JPEG writer (the only
+    nonzero coefficient is an integer DC, so decode returns v)."""
+    return v.reshape(side, side).repeat(8, axis=0).repeat(8, axis=1)
+
+
+def _roundtrip(spark, sf_dir, schema, write, *decode, where=_HAS_TEXT):
+    """The write→read round trip of every codec query below: one scan of
+    the documents rows matching `where` (None reads them all), ONE hash
+    exchange of (doc_id, n_chars, text) on doc_id, then ONE fused
+    mapInPandas pass that decodes each row's text to code points,
+    calls write(doc_id, n_chars, code_points) -> payload bytes per row
+    and runs the payload batches through the `decode` stages, whose
+    output matches `schema`.
+
+    The exchange is what parallelises the pass: at the test scale
+    factors the documents scan is a single parquet split, so without
+    it the per-document codec work (the Python media codecs, container
+    framing and writers) runs on one core. It moves only the small
+    document rows, never a payload. Fusing the writer and the reader
+    stages into one pass (each stage still sees whole pandas batches)
+    pays one Python-runner handshake per task instead of one per
+    stage, and the payload never crosses back to the JVM."""
+    d = load_table(spark, sf_dir, "documents")
+    if where is not None:
+        d = d.where(where)
+    rows = d.select("doc_id", "n_chars", "text")
+
+    def synth(batches):
+        for pdf in batches:
+            payloads = [
+                write(int(i), int(n), _codepoints(t))
+                for i, n, t in zip(pdf["doc_id"], pdf["n_chars"], pdf["text"])
+            ]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
     def run(batches):
-        it = batches
-        for stage in stages:
-            it = stage(it)
-        yield from it
+        for stage in (synth, *decode):
+            batches = stage(batches)
+        yield from batches
 
-    return df.mapInPandas(run, schema=schema)
+    return _codec_parallel(rows).mapInPandas(run, schema=schema)
 
 
-def _formula(col, fn):
-    """Python-side twin of the JVM codepoint-formula projections (r18
-    optimization round, guide §1.2/§4.2).
-
-    The corpus queries derive their payload bytes as
-    ascii(substring(text, f(i, doc) % length(text) + 1, 1)) % M — but
-    Spark's substring walks the UTF8String from the start on every
-    call (O(position)), so a 64-byte base costs ~64·len/2 char steps
-    per document and the formula projection alone measured 0.8-1.0s of
-    a ~2s query at sf0.1 (scan without it: 0.14s; split(text,'') +
-    element_at was tried and measured 4x WORSE — the per-char string
-    array allocation dominates). Decoding text to a codepoint array
-    ONCE per row (numpy over the UTF-32 encoding — vectorized, O(len))
-    and indexing it per formula is byte-identical — verified over
-    every position of every sf0.1 document against the JVM ascii
-    (substring(...)) chain — and moves the cost to the already-fused
-    Python pass: q_multimodal_au measured 2.00s -> 1.17s.
-
-    fn(cp, doc_id, n_chars) -> the column value; cp is the int64
-    codepoint array of text. The stage drops text and appends `col`,
-    so downstream synth stages are unchanged. The doc_id exchange now
-    carries text instead of the base arrays — comparable bytes (text
-    is the source either way), one less WholeStageCodegen term."""
-    import numpy as np
-    import pandas as pd  # noqa: F401  (stage contract)
+def _rows(read, schema):
+    """Reader stage: the row tuples read(doc_id, payload) returns for
+    each document, named and int-typed by the DDL `schema`."""
+    cols = [c.split() for c in schema.split(",")]
+    names = [c[0] for c in cols]
+    ints = {c[0]: "int32" for c in cols if c[1] == "int"}
 
     def stage(batches):
-        from itertools import repeat
-
         for pdf in batches:
-            # n is only defined when the frame carries n_chars; pass
-            # None otherwise so a base that uses n fails fast instead
-            # of silently computing on doc_ids (ADVICE r18)
-            ncol = (
-                pdf["n_chars"] if "n_chars" in pdf.columns else repeat(None)
-            )
-            vals = [
-                fn(
-                    np.frombuffer(t.encode("utf-32-le"), "<u4").astype(
-                        np.int64
-                    ),
-                    int(i),
-                    None if n is None else int(n),
-                )
-                for t, i, n in zip(pdf["text"], pdf["doc_id"], ncol)
+            rows = [
+                row
+                for i, p in zip(pdf["doc_id"], pdf["payload"])
+                for row in read(i, bytes(p))
             ]
-            out = pdf.drop(columns=["text"])
-            # object dtype: elements are numpy arrays (or lists of
-            # them); the column never crosses Arrow — it only flows to
-            # the next stage of the same fused Python pass
-            out[col] = pd.Series(vals, index=out.index, dtype=object)
-            yield out
+            yield pd.DataFrame(rows, columns=names).astype(ints)
 
     return stage
 
 
-def _frame_keyed(batches):
-    """In-pass twin of the video queries' JVM re-key projection
-    (doc_id*4 + frame_no → doc_id, frame → payload) so the demux and
-    stats stages fuse into the same Python pass; the final selectExpr
-    splits the key back JVM-side exactly as before."""
-    import pandas as pd
+def _icon_elements(parse, what):
+    """read() for the icon containers: one pixel-stats row per element
+    parse() returns, numbered in container order."""
+    def read(doc_id, payload):
+        parsed = parse(payload)
+        if parsed is None:
+            raise ValueError(f"doc {doc_id}: corrupt {what} container")
+        return [
+            (doc_id, e, *head, float(a.mean()), int(a.min()), int(a.max()))
+            for e, (*head, a) in enumerate(parsed)
+        ]
 
+    return read
+
+
+def _frame_keyed(batches):
+    """Re-key the sampled frames (doc_id*4 + frame_no → doc_id, frame →
+    payload) so the pixel-stats stage runs in the same Python pass."""
     for b in batches:
         yield pd.DataFrame(
             {"doc_id": b["doc_id"] * 4 + b["frame_no"], "payload": b["frame"]}
         )
+
+
+def _frames_roundtrip(spark, sf_dir, write, where):
+    """`_roundtrip` for the three-frame video containers: demux and
+    pixel-decode each frame (frame_sample_batches(real_decode=True)),
+    compute its stats keyed doc_id*4 + frame_no in the same pass, and
+    split the key back into (doc_id, frame_no) in the JVM projection
+    above it."""
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA, write,
+        frame_sample_batches(n_frames=3, real_decode=True),
+        _frame_keyed, pixel_stats_batches, where=where,
+    ).selectExpr(
+        "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
+        "CAST(doc_id % 4 AS INT) AS frame_no",
+        "width", "height", "channels", "mean_val", "min_val", "max_val",
+    )
+
+
+def _mjpeg_frames(cp, stride):
+    """Three baseline JPEGs of four constant 8x8 blocks, frame f sampling
+    the text at `stride` with phase f."""
+    return [encode_jpeg(_blocks(_samples(cp, 4, stride, f), 2))
+            for f in range(3)]
+
+
+def _pcm16(cp, stride, order="<"):
+    """32 signed 16-bit samples: the 64 formula bytes paired in the given
+    byte order."""
+    return _samples(cp, 64, stride).view(order + "i2").astype(np.int64)
+
+
+_GRAY = np.repeat(np.arange(256, dtype="u1"), 3).reshape(256, 3)
+
+# FLAC encode strategy by doc_id % 4 (mono for 0-1, stereo pairs for 2-3)
+_FLAC_MODES = (("fixed",), ("verbatim",), ("fixed", "mid_side"),
+               ("lpc", "left_side"))
+
+
+def _flac_input(i, cp, stride):
+    """The (pcm, *mode) arguments of the FLAC writers for document i."""
+    pcm = _pcm16(cp, stride)
+    return (pcm if i % 4 < 2 else pcm.reshape(-1, 2)), _FLAC_MODES[i % 4]
+
+
+def _sentinels(df):
+    """The Avro long-format rows with the columns a field's type does not
+    own coalesced to 0 / 0.0 / '' / -1: a NULL int reads as
+    float64-with-NaN on the DuckDB-pandas side and would split a
+    dtype-sensitive hash."""
+    return df.select(
+        "doc_id", "rec_no", "block_no", "codec", "fname", "ftype",
+        "is_null",
+        F.coalesce("v_int", F.lit(0)).alias("v_int"),
+        F.coalesce("v_dbl", F.lit(0.0)).alias("v_dbl"),
+        F.coalesce("v_str", F.lit("")).alias("v_str"),
+        F.coalesce("v_len", F.lit(-1)).alias("v_len"),
+        F.coalesce("v_sum", F.lit(-1)).alias("v_sum"),
+    )
 
 
 @query(
@@ -241,48 +407,27 @@ def q_multimodal_frames(spark, sf_dir):
     """,
 )
 def q_multimodal_audio(spark, sf_dir):
-    """Audio container round trip (§2.10 multimodal): per document,
-    synthesize a REAL WAV file with the stdlib `wave` writer (channel
-    count / sample rate / length derived from doc fields), then recover
-    the metadata with the pure-struct RIFF parser (decode_audio). The
-    writer and the parser are independent implementations of the
-    container format, and the oracle replays the parameter arithmetic
-    from the documents table — so a hash match proves the parser
-    recovers EXACTLY what the canonical writer encoded, through the
-    full binary-column + Arrow-batch plumbing. 16-bit PCM silence
-    payloads; byte_len = the canonical 44-byte header + frames."""
-    import io
-    import wave
+    """WAV container round trip over EVERY document (no text filter): the
+    stdlib `wave` writer encodes 16-bit PCM silence with 1 + doc_id%2
+    channels at 8000·(1 + doc_id%3) Hz and 50 + n_chars%100 frames, and
+    the pure-struct RIFF parser (audio_meta_batches) recovers the
+    metadata. Writer and parser are independent implementations of the
+    container format, and the oracle replays the parameter arithmetic,
+    so a hash match proves the parser recovers exactly what the
+    canonical writer encoded; byte_len = the 44-byte header + frames."""
+    def write(i, n, cp):
+        ch = 1 + i % 2
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(ch)
+            w.setsampwidth(2)
+            w.setframerate(8000 * (1 + i % 3))
+            w.writeframes(b"\x00" * ((50 + n % 100) * ch * 2))
+        return buf.getvalue()
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        AUDIO_META_SCHEMA,
-        audio_meta_batches,
-    )
-
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        (1 + F.col("doc_id") % 2).cast("int").alias("ch"),
-        (8000 * (1 + F.col("doc_id") % 3)).cast("int").alias("rate"),
-        (50 + F.col("n_chars") % 100).cast("int").alias("n"),
-    )
-
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for ch, rate, n in zip(pdf["ch"], pdf["rate"], pdf["n"]):
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(int(ch))
-                    w.setsampwidth(2)
-                    w.setframerate(int(rate))
-                    w.writeframes(b"\x00" * (int(n) * int(ch) * 2))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        d, AUDIO_META_SCHEMA, synth, audio_meta_batches
+    return _roundtrip(
+        spark, sf_dir, AUDIO_META_SCHEMA, write, audio_meta_batches,
+        where=None,
     )
 
 
@@ -307,67 +452,22 @@ def q_multimodal_audio(spark, sf_dir):
     """,
 )
 def q_multimodal_pixels(spark, sf_dir):
-    """REAL PNG encode→decode round-trip under the driver hash (r11 —
-    the entropy-coded pixel tier made driver-visible): a deterministic
-    4×4 grayscale raster is derived from each document's text with a
-    pure-SQL formula (code point of the (i mod len)-th character,
-    mod 256 — computed JVM-side, identically replayable in DuckDB),
-    encoded executor-side as a VALID PNG (encode_png: zlib IDAT,
-    filter-0 scanlines, CRCs), then decoded back through the real
-    parse_png path (inflate, filter reconstruction, CRC checks) by
-    decode_pixel_stats. The oracle computes the stats DIRECTLY from
-    the formula, never touching PNG — so a hash match proves the
-    encode and decode are exact inverses over real compressed bytes,
-    not just that two copies of the same arithmetic agree. Cross-engine
-    footing (r12, ADVICE): the formula is code-point-safe as written —
-    measured on THIS Spark (4.1), ascii() returns the full Unicode code
-    point even for supplementary-plane characters (ascii('U+1F600') =
-    128512, identical to DuckDB), and length()/substring() are
-    code-point-based on both engines, so the %256 pixel values agree
-    for any text including astral-plane characters; pinned by
-    tests/test_pipeline_ops.py::test_pixel_formula_codepoint_parity,
-    which would catch a Spark regression to UTF-16-code-unit semantics
-    before the driver hash does. Scale
-    shape: one scan, then ONE doc_id exchange of the tiny formula rows
-    (_codec_parallel — r12: the single-split scan otherwise serializes
-    the codec stage on one core); both UDF stages are Arrow-batched
-    mapInPandas (the declared Python tier for codec work — decode
-    executor-side, ship scalar features)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_png,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[np.arange(16) % len(cp)] % 256
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = [
-                encode_png(np.array(p, dtype="u1").reshape(4, 4))
-                for p in pdf["p"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("p", bases), encode, pixel_stats_batches,
+    """PNG encode→decode round trip: a 4×4 grayscale raster of stride-1
+    code-point samples is encoded as a VALID PNG (encode_png: zlib
+    IDAT, filter-0 scanlines, CRCs) and decoded back through parse_png
+    (inflate, filter reconstruction, CRC checks) by the pixel-stats
+    stage. The oracle computes the stats directly from the formula,
+    never touching PNG, so a hash match proves encode and decode are
+    exact inverses over real compressed bytes. The formula is
+    code-point-safe on both engines (ascii() of an astral character
+    returns its full code point, and length()/substr() count code
+    points); tests/test_pipeline_ops.py::
+    test_pixel_formula_codepoint_parity pins Spark, DuckDB and
+    `_codepoints` against each other."""
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA,
+        lambda i, n, cp: encode_png(_samples(cp, 16, 1).reshape(4, 4)),
+        pixel_stats_batches,
     )
 
 
@@ -392,53 +492,16 @@ def q_multimodal_pixels(spark, sf_dir):
     """,
 )
 def q_multimodal_bmp(spark, sf_dir):
-    """REAL BMP encode→decode round-trip under the driver hash (r12 —
-    VERDICT r11 next-step #2, the q_multimodal_pixels pattern): a
-    deterministic 4×4 RGB raster (48 samples) is derived from each
-    document's text with the same pure-SQL code-point formula, encoded
-    executor-side as a VALID 24-bit BI_RGB BMP (encode_bmp: bottom-up
-    rows, 4-byte stride padding, BGR byte order), then decoded back
-    through parse_bmp by decode_pixel_stats. The oracle computes the
-    stats DIRECTLY from the formula, never touching BMP — a hash match
-    proves the writer and parser are exact inverses across the row
-    flip, padding, and channel swizzle. Scale shape: one documents
-    scan, one doc_id exchange for codec parallelism (_codec_parallel);
-    both codec stages are Arrow-batched mapInPandas."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_bmp,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[np.arange(48) % len(cp)] % 256
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = [
-                encode_bmp(np.array(p, dtype="u1").reshape(4, 4, 3))
-                for p in pdf["p"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("p", bases), encode, pixel_stats_batches,
+    """BMP round trip: a 4×4 RGB raster (48 stride-1 samples) is encoded
+    as a VALID 24-bit BI_RGB BMP (encode_bmp: bottom-up rows, 4-byte
+    stride padding, BGR byte order) and decoded back through parse_bmp.
+    The oracle computes the stats directly from the formula, so a hash
+    match proves the writer and parser are exact inverses across the
+    row flip, padding and channel swizzle."""
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA,
+        lambda i, n, cp: encode_bmp(_samples(cp, 48, 1).reshape(4, 4, 3)),
+        pixel_stats_batches,
     )
 
 
@@ -471,54 +534,19 @@ def q_multimodal_bmp(spark, sf_dir):
     """,
 )
 def q_multimodal_mulaw(spark, sf_dir):
-    """REAL audio-codec decode under the driver hash (r12 — the audio
-    twin of the image round-trips): 64 G.711 mu-law bytes are derived
-    from each document's text (stride-7 code-point sampling), wrapped
-    executor-side in a VALID RIFF/WAVE container (format tag 7,
-    encode_wav_mulaw), then decoded back through the real path —
-    container chunk walk, format-tag dispatch, vectorized mu-law
-    expansion (mulaw_decode, byte-for-byte equal to stdlib
-    audioop.ulaw2lin on all 256 codes, pinned in tests) — by
-    decode_audio_samples, which ships only exact PCM stats. The oracle
-    replays the SAME G.711 expansion as pure SQL arithmetic
-    (complement, mantissa*8+132 shifted by the segment, re-biased), so
-    a hash match proves the numpy decoder implements exactly the
-    published formula — the codec itself is differentially tested, not
-    just the container. Scale shape: one scan, one doc_id exchange for
-    codec parallelism (_codec_parallel); Arrow-batched mapInPandas."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_audio_samples,
-        encode_wav_mulaw,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    bs = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 7) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_wav_mulaw(bytes(bytearray(int(x) for x in row)))
-                for row in pdf["bs"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        _formula("bs", bases), synth, audio_sample_batches,
+    """G.711 mu-law decode: 64 stride-7 formula bytes are wrapped in a
+    VALID RIFF/WAVE container (format tag 7, encode_wav_mulaw) and
+    decoded back through the container chunk walk, format-tag dispatch
+    and the vectorized mu-law expansion (mulaw_decode, equal to stdlib
+    audioop.ulaw2lin on all 256 codes, pinned in tests), which ships
+    exact PCM stats. The oracle replays the G.711 expansion as SQL
+    arithmetic (complement, mantissa·8+132 shifted by the segment,
+    re-biased), so the codec itself is differentially tested, not just
+    the container."""
+    return _roundtrip(
+        spark, sf_dir, AUDIO_SAMPLE_STATS_SCHEMA,
+        lambda i, n, cp: encode_wav_mulaw(_samples(cp, 64, 7).tobytes()),
+        audio_sample_batches,
     )
 
 
@@ -543,62 +571,19 @@ def q_multimodal_mulaw(spark, sf_dir):
     """,
 )
 def q_multimodal_jpeg(spark, sf_dir):
-    """REAL baseline-JPEG encode→decode round-trip under the driver
-    hash (r12 — VERDICT r11 next-step #6, resolved by implementing
-    SOF0 rather than writing the permanent-gate note): 16 values are
-    derived from each document's text (stride-5 code-point sampling,
-    hash-independent of the PNG/GIF twins), expanded to a 32×32
-    grayscale raster of 16 constant 8×8 blocks, encoded executor-side
-    as a VALID baseline JPEG (encode_jpeg: canonical Huffman DHT/DQT/
-    SOF0/SOS segments, byte stuffing, all-ones quant), then decoded
-    back through the full parse_jpeg path — Huffman decode, DC
-    prediction, dequant, IDCT, level shift — by decode_pixel_stats.
-    Constant blocks make the lossy format EXACT here: the only nonzero
-    coefficient is DC = 8·(v−128), an integer, so quantization is the
-    identity and the IDCT recovers v within float epsilon (proof in
-    functions/jpeg.py). The oracle computes the stats directly from
-    the formula, never touching JPEG. Scale shape: one scan, one
-    doc_id exchange for codec parallelism (_codec_parallel — measured
-    8.3s→sub-second at sf0.1: the single-split scan otherwise ran the
-    pure-Python Huffman on one core); Arrow-batched mapInPandas."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.jpeg import encode_jpeg
-    from polars_express_spark.functions.multimodal import decode_pixel_stats
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(16) * 5) % len(cp)] % 256
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = [
-                encode_jpeg(
-                    np.array(p, dtype="u1")
-                    .reshape(4, 4)
-                    .repeat(8, axis=0)
-                    .repeat(8, axis=1)
-                )
-                for p in pdf["p"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("p", bases), encode, pixel_stats_batches,
+    """Baseline-JPEG round trip: 16 stride-5 samples expand to a 32×32
+    grayscale raster of 16 constant 8×8 blocks, encoded as a VALID
+    baseline JPEG (encode_jpeg: canonical Huffman DHT/DQT/SOF0/SOS
+    segments, byte stuffing, all-ones quant) and decoded back through
+    the full parse_jpeg path (Huffman decode, DC prediction, dequant,
+    IDCT, level shift). Constant blocks make the lossy format exact:
+    the only nonzero coefficient is DC = 8·(v−128), so quantization is
+    the identity and the IDCT recovers v (proof in functions/jpeg.py).
+    The oracle computes the stats directly from the formula."""
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA,
+        lambda i, n, cp: encode_jpeg(_blocks(_samples(cp, 16, 5), 4)),
+        pixel_stats_batches,
     )
 
 
@@ -623,61 +608,20 @@ def q_multimodal_jpeg(spark, sf_dir):
     """,
 )
 def q_multimodal_gif(spark, sf_dir):
-    """REAL GIF LZW encode→decode round-trip under the driver hash
-    (r12 — VERDICT r11 next-step #3): a 4×4 grayscale index raster is
-    derived from each document's text (stride-3 code-point sampling, so
-    this query's hash is independent of q_multimodal_pixels'), encoded
-    executor-side as a VALID GIF89a over a 256-entry grayscale palette
-    — REAL LZW compression, and every odd doc_id is written INTERLACED
-    so the four-pass row shuffle is driver-checked too — then decoded
-    back through parse_gif (pure-Python LZW, palette lookup,
-    deinterlace) by decode_pixel_stats. Gray v looks up palette entry
-    (v,v,v), so mean/min/max over the decoded RGB samples equal the
-    index-level stats the oracle computes straight from the formula —
-    a hash match proves compressor and decompressor are exact inverses
-    over real variable-width LZW bitstreams. Scale shape: one scan,
-    one doc_id exchange for codec parallelism (_codec_parallel);
-    Arrow-batched mapInPandas."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_gif,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(16) * 3) % len(cp)] % 256
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        gray = np.repeat(np.arange(256, dtype="u1"), 3).reshape(256, 3)
-        for pdf in batches:
-            payloads = [
-                encode_gif(
-                    np.array(p, dtype="u1").reshape(4, 4),
-                    gray,
-                    interlaced=bool(doc_id % 2),
-                )
-                for doc_id, p in zip(pdf["doc_id"], pdf["p"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("p", bases), encode, pixel_stats_batches,
+    """GIF LZW round trip: a 4×4 index raster of stride-3 samples is
+    encoded as a VALID GIF89a over a 256-entry grayscale palette — real
+    LZW compression, odd doc_ids written INTERLACED so the four-pass
+    row shuffle is checked too — and decoded back through parse_gif
+    (LZW, palette lookup, deinterlace). Gray v maps to palette entry
+    (v,v,v), so the RGB stats equal the index-level stats the oracle
+    computes from the formula: a hash match proves compressor and
+    decompressor are exact inverses over variable-width LZW."""
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA,
+        lambda i, n, cp: encode_gif(
+            _samples(cp, 16, 3).reshape(4, 4), _GRAY, interlaced=bool(i % 2)
+        ),
+        pixel_stats_batches,
     )
 
 
@@ -708,55 +652,18 @@ def q_multimodal_gif(spark, sf_dir):
     """,
 )
 def q_multimodal_alaw(spark, sf_dir):
-    """The SECOND G.711 half under the driver hash (r13 — VERDICT r12
-    next-step #6, on the q_multimodal_mulaw pattern): 64 A-law bytes
-    are derived from each document's text (stride-9 code-point
-    sampling — each codec query gets a distinct stride so their
-    payloads can never be confused), wrapped executor-side in a VALID
-    RIFF/WAVE container (format tag 6, encode_wav_alaw), then decoded
-    back through the real path — container chunk walk, format-tag
-    dispatch, vectorized A-law expansion (alaw_decode, byte-for-byte
-    equal to stdlib audioop.alaw2lin on all 256 codes, pinned in
-    tests) — by decode_audio_samples. The oracle replays the CCITT
-    A-law expansion as pure SQL arithmetic (XOR 0x55, then
-    mantissa·16+8 for segment 0 or (mantissa·16+264)·2^(seg−1) with
-    the sign from the top bit), so a hash match differentially tests
-    the codec itself, not just the container. Scale shape: one scan,
-    one doc_id exchange for codec parallelism (_codec_parallel),
-    one fused Arrow-batched mapInPandas pass."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_audio_samples,
-        encode_wav_alaw,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    bs = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 9) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_wav_alaw(bytes(bytearray(int(x) for x in row)))
-                for row in pdf["bs"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        _formula("bs", bases), synth, audio_sample_batches,
+    """G.711 A-law decode: 64 stride-9 formula bytes wrapped in a VALID
+    RIFF/WAVE container (format tag 6, encode_wav_alaw) and decoded back
+    through the chunk walk and the vectorized A-law expansion
+    (alaw_decode, equal to stdlib audioop.alaw2lin on all 256 codes,
+    pinned in tests). The oracle replays the CCITT expansion in SQL
+    (XOR 0x55, then mantissa·16+8 for segment 0 or
+    (mantissa·16+264)·2^(seg−1), sign from the top bit), so the codec
+    itself is differentially tested."""
+    return _roundtrip(
+        spark, sf_dir, AUDIO_SAMPLE_STATS_SCHEMA,
+        lambda i, n, cp: encode_wav_alaw(_samples(cp, 64, 9).tobytes()),
+        audio_sample_batches,
     )
 
 
@@ -792,75 +699,27 @@ def q_multimodal_alaw(spark, sf_dir):
     """,
 )
 def q_multimodal_netpbm(spark, sf_dir):
-    """The FULL Netpbm family under the driver hash (r14 — VERDICT r13
-    next-step #4, making r13's P1-P7+PAM decode driver-visible):
-    doc_id mod 7 picks the format, so every magic is hashed every
-    round — plain bitmap P1 and packed P4 (0/1 rasters, RAW samples
-    where 1 = black per the PBM spec), plain-ASCII P2 and P3
-    (tokenized sample lines), binary P5 at maxval 1000 (exercising the
+    """The full Netpbm family: doc_id mod 7 picks the format, so every
+    magic is hashed — plain P1 and packed P4 bitmaps (0/1 rasters, 1 =
+    black), plain-ASCII P2 and P3, binary P5 at maxval 1000 (the
     big-endian 16-bit sample path), binary P6 RGB, and PAM P7 at
-    DEPTH 2 (gray+alpha — the depth only PAM can carry). A 4×4 raster
-    of formula samples is derived from each document's text (stride-11
-    code-point sampling — each codec query owns a distinct stride),
-    encoded executor-side by encode_netpbm (an independent writer:
-    header text + numpy buffers), then decoded back through
-    parse_netpbm by decode_pixel_stats. The oracle computes the stats
-    directly from the formula, never touching Netpbm — a hash match
-    proves decode∘encode = id across all seven header grammars, bit
-    packing, and the 16-bit byte order. Scale shape: one scan, one
-    doc_id exchange (_codec_parallel), Arrow-batched mapInPandas."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_netpbm,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    px = d.select(
-        "doc_id",
-        F.expr("CAST(doc_id % 7 AS INT)").alias("m"),
-        F.expr(
-            "CASE WHEN doc_id % 7 IN (2, 5) THEN 3"
-            " WHEN doc_id % 7 = 6 THEN 2 ELSE 1 END"
-        ).alias("nch"),
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
+    DEPTH 2 (gray+alpha). A 4×4 raster of stride-11 samples is written
+    by encode_netpbm (header text + numpy buffers) and decoded back
+    through parse_netpbm. The oracle computes the stats from the
+    formula, so a hash match proves decode∘encode = id across all seven
+    header grammars, bit packing and the 16-bit byte order."""
+    def write(i, n, cp):
         m = i % 7
-        k = 3 if m in (2, 5) else (2 if m == 6 else 1)
-        b = cp[(np.arange(16 * k) * 11) % len(cp)] % 256
+        nch = 3 if m in (2, 5) else (2 if m == 6 else 1)
+        b = _samples(cp, 16 * nch, 11).astype(np.int64).reshape(4, 4, nch)
         if m in (0, 3):
-            return b % 2
+            return encode_netpbm(b % 2, f"P{m + 1}", maxval=1)
         if m == 4:
-            return (b * 4) % 1001
-        return b
+            return encode_netpbm(b * 4 % 1001, "P5", maxval=1000)
+        return encode_netpbm(b, f"P{m + 1}")
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        fmts = ("P1", "P2", "P3", "P4", "P5", "P6", "P7")
-        for pdf in batches:
-            payloads = []
-            for m, nch, p in zip(pdf["m"], pdf["nch"], pdf["p"]):
-                m, nch = int(m), int(nch)
-                maxval = 1 if m in (0, 3) else (1000 if m == 4 else 255)
-                arr = np.array(p, dtype=">u2" if maxval > 255 else "u1")
-                payloads.append(
-                    encode_netpbm(arr.reshape(4, 4, nch), fmts[m], maxval=maxval)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("p", bases), encode, pixel_stats_batches,
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA, write, pixel_stats_batches
     )
 
 
@@ -908,68 +767,26 @@ def q_multimodal_netpbm(spark, sf_dir):
     """,
 )
 def q_multimodal_au(spark, sf_dir):
-    """The Sun Au container under the driver hash (r14 — VERDICT r13
-    next-step #3, making r13's second audio container driver-visible):
-    64 formula bytes are derived from each document's text (stride-15
-    code-point sampling) and wrapped executor-side in a VALID Au file
-    (encode_au, an independent big-endian writer) whose encoding is
-    picked by doc_id mod 4 — so ALL FOUR decodable Au encodings are
-    hashed every round: G.711 mu-law (1), A-law (27), 8-bit SIGNED
-    linear (2 — the Au convention, opposite of WAV's unsigned PCM8),
-    and 16-bit big-endian linear (3, where the same 64 bytes become 32
-    samples). Odd doc_ids pad the header with a 4-byte annotation
-    block (readers must honor the declared header size) and doc_id % 3
-    = 0 writes the spec's 0xFFFFFFFF unknown-length sentinel, so both
-    parser edge paths stay driver-checked. Decode runs through the
-    real path — parse_au_header, encoding dispatch, the same
-    vectorized G.711 expansions as the WAV tier — via
-    decode_audio_samples. The oracle replays mu-law/A-law as the CCITT
-    SQL arithmetic (the q_multimodal_mulaw/alaw formulas), signed-PCM8
-    as a re-bias, and PCM16BE by pairing adjacent formula bytes with a
-    window lead() — the codec AND the container byte order are
-    differentially tested. Scale shape: one scan, one doc_id exchange
-    (_codec_parallel), Arrow-batched mapInPandas."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_audio_samples,
-        encode_au,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    bs = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 15) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        enc_map = (1, 27, 2, 3)
-        for pdf in batches:
-            payloads = []
-            for doc_id, row in zip(pdf["doc_id"], pdf["bs"]):
-                doc_id = int(doc_id)
-                payloads.append(
-                    encode_au(
-                        bytes(bytearray(int(x) for x in row)),
-                        enc_map[doc_id % 4],
-                        annotation=b"\x00" * 4 if doc_id % 2 else b"",
-                        unknown_size=(doc_id % 3 == 0),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        _formula("bs", bases), synth, audio_sample_batches,
+    """Sun Au container: 64 stride-15 formula bytes are wrapped in a
+    VALID Au file (encode_au, big-endian) whose encoding doc_id mod 4
+    picks, so all four decodable encodings are hashed: G.711 mu-law
+    (1), A-law (27), 8-bit SIGNED linear (2, opposite of WAV's
+    unsigned PCM8) and 16-bit big-endian linear (3, 32 samples). Odd
+    doc_ids pad the header with a 4-byte annotation (readers must honor
+    the declared header size) and doc_id % 3 = 0 writes the
+    0xFFFFFFFF unknown-length sentinel. The oracle replays mu-law and
+    A-law as CCITT arithmetic, PCM8 as a re-bias and PCM16BE by pairing
+    adjacent bytes with a window lead(), so codec and byte order are
+    both differentially tested."""
+    return _roundtrip(
+        spark, sf_dir, AUDIO_SAMPLE_STATS_SCHEMA,
+        lambda i, n, cp: encode_au(
+            _samples(cp, 64, 15).tobytes(),
+            (1, 27, 2, 3)[i % 4],
+            annotation=b"\x00" * 4 if i % 2 else b"",
+            unknown_size=i % 3 == 0,
+        ),
+        audio_sample_batches,
     )
 
 
@@ -1002,96 +819,30 @@ def q_multimodal_au(spark, sf_dir):
     """,
 )
 def q_multimodal_video(spark, sf_dir):
-    """REAL video pixel decode under the driver hash (r14 — VERDICT
-    r13 next-steps #2 and #5 combined): per document, THREE video
-    frames are derived from the text (stride-17 code-point sampling,
-    frame f offsetting the stride phase by f) and muxed executor-side
-    into a VALID RIFF/AVI container (encode_avi) whose codec is picked
-    by doc_id parity — even docs carry MJPEG (each '00dc' chunk a
-    standalone baseline JPEG of four constant 8×8 blocks, the
-    exactness tier q_multimodal_jpeg established — 16 blocks measured
-    ~3.8s at sf0.1, ~2× the codec-tier band, and the extra blocks re-
-    exercise nothing parse_jpeg's own query doesn't already hash),
-    odd docs carry uncompressed
-    BI_RGB DIB frames (bottom-up BGR rasters whose only header is the
-    stream's strf). sample_frames(real_decode=True) then demuxes the
-    container, decodes each sampled frame to pixels (parse_jpeg for
-    MJPEG; a 14-byte 'BM' prefix + strf + frame bytes through
-    parse_bmp for DIB), and re-encodes valid PNGs; decode_pixel_stats
-    (keyed by doc_id·4+frame_no, split back after) hashes the exact
-    per-frame stats. The oracle computes them straight from the
-    formula — a hash match proves demux, per-codec frame decode, the
-    PNG re-encode, and the row-exploding frame sampler are exact end
-    to end. Scale shape: one scan, one doc_id exchange
-    (_codec_parallel), then ONE fused Arrow pass (r18: mux → demux+
-    decode → stats composed in a single MapInPandas)."""
-    from typing import Iterator
+    """Video pixel decode: THREE frames per document (stride-17 samples,
+    frame f offsetting the phase by f) are muxed into a VALID RIFF/AVI
+    container (encode_avi) whose codec doc_id parity picks — even docs
+    carry MJPEG (each '00dc' chunk a baseline JPEG of four constant 8×8
+    blocks, the q_multimodal_jpeg exactness tier), odd docs
+    uncompressed BI_RGB DIB frames (bottom-up BGR rasters whose only
+    header is the stream's strf). The reader demuxes the container,
+    decodes each frame to pixels (parse_jpeg for MJPEG; a 'BM' prefix +
+    strf + frame bytes through parse_bmp for DIB) and re-encodes PNGs
+    whose stats the oracle computes from the formula, so demux,
+    per-codec frame decode, the PNG re-encode and the row-exploding
+    frame sampler are exact end to end. Population: doc_id % 8 < 2,
+    both codec parities kept."""
+    def write(i, n, cp):
+        if i % 2 == 0:
+            return encode_avi(_mjpeg_frames(cp, 17), 16, 16, b"MJPG")
+        frames = [
+            _samples(cp, 48, 17, f).reshape(4, 4, 3)[::-1, :, ::-1].tobytes()
+            for f in range(3)
+        ]
+        return encode_avi(frames, 4, 4, b"DIB ")
 
-    import pandas as pd
-
-    from polars_express_spark.functions.jpeg import encode_jpeg
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_avi,
-        sample_frames,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # quarter of the corpus, both codec parities kept (doc%8=0 ->
-        # MJPEG, doc%8=1 -> DIB): the three-Arrow-stage video tier costs
-        # ~2x a flat codec query per doc, and the r14 idle bench still
-        # read 2.58s at half population — population is what the band buys
-        & (F.col("doc_id") % 8 < 2)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        w = 4 if i % 2 == 0 else 48
-        return [cp[((np.arange(w) * 17 + f) % len(cp))] % 256 for f in range(3)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, fs in zip(pdf["doc_id"], pdf["fs"]):
-                if int(doc_id) % 2 == 0:
-                    frames = [
-                        encode_jpeg(
-                            np.array(p, dtype="u1")
-                            .reshape(2, 2)
-                            .repeat(8, axis=0)
-                            .repeat(8, axis=1)
-                        )
-                        for p in fs
-                    ]
-                    payloads.append(encode_avi(frames, 16, 16, b"MJPG"))
-                else:
-                    frames = [
-                        np.array(p, dtype="u1")
-                        .reshape(4, 4, 3)[::-1, :, ::-1]
-                        .tobytes()
-                        for p in fs
-                    ]
-                    payloads.append(encode_avi(frames, 4, 4, b"DIB "))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    stats = _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("fs", bases),
-        synth, frame_sample_batches(n_frames=3, real_decode=True),
-        _frame_keyed, pixel_stats_batches,
-    )
-    return stats.selectExpr(
-        "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
-        "CAST(doc_id % 4 AS INT) AS frame_no",
-        "width", "height", "channels", "mean_val", "min_val", "max_val",
+    return _frames_roundtrip(
+        spark, sf_dir, write, _HAS_TEXT + " AND doc_id % 8 < 2"
     )
 
 
@@ -1131,85 +882,30 @@ def q_multimodal_video(spark, sf_dir):
     """,
 )
 def q_multimodal_gif_anim(spark, sf_dir):
-    """The GIF89a animation COMPOSITOR under the driver hash (r14 —
-    making r13's disposal-model compositing driver-visible): per
-    document, a 3-frame animation is muxed executor-side by
-    encode_gif_anim over a 256-gray palette — frame 0 covers the full
-    4×4 canvas (stride-19 formula samples), frames 1 and 2 are partial
-    2×2 sub-rects at fixed offsets (top-left, bottom-right; stride
-    phase f) that OVERWRITE part of the composited canvas while the
-    rest shows through from the prior frame, each behind its own
-    Graphic Control Extension with disposal 1. sample_frames
-    (real_decode=True) routes the stream through parse_gif_frames —
-    per-frame LZW decode, GCE parsing, spec compositing — and ships
-    each canvas snapshot as a PNG; decode_pixel_stats (keyed
-    doc_id·4+frame_no, split back after) hashes the exact per-canvas
-    stats. Gray v looks up palette entry (v,v,v), so the RGB canvas
-    stats equal the index-level stats the oracle computes straight
-    from the show-through arithmetic (a positional CASE per canvas
-    cell) — a hash match proves mux, demux, and the partial-frame
-    compositor are exact. The adversarial disposal/transparency space
-    is covered by the hypothesis property against an in-test spec
-    compositor; this query pins the driver-visible slice. Scale shape:
-    one scan, one doc_id exchange (_codec_parallel), ONE fused
-    Arrow pass (r18)."""
-    from typing import Iterator
+    """The GIF89a animation compositor: a 3-frame animation over a
+    256-gray palette (encode_gif_anim) — frame 0 covers the 4×4 canvas
+    (stride-19 samples), frames 1 and 2 are 2×2 sub-rects at the
+    top-left and bottom-right (stride phase f) that overwrite part of
+    the canvas while the rest shows through, each behind a Graphic
+    Control Extension with disposal 1. The reader runs parse_gif_frames
+    (per-frame LZW, GCE parsing, spec compositing) and ships each
+    canvas snapshot as a PNG. Gray v maps to (v,v,v), so the canvas
+    stats equal the index-level stats the oracle computes from the
+    show-through arithmetic (a positional CASE per cell). The
+    adversarial disposal/transparency space is covered by the
+    hypothesis property against an in-test compositor; this query pins
+    the oracle-checked slice. Population: doc_id % 4 = 0 (every
+    document takes the same disposal paths)."""
+    def write(i, n, cp):
+        f1, f2 = (_samples(cp, 4, 19, f).reshape(2, 2) for f in (1, 2))
+        return encode_gif_anim(
+            [(0, 0, _samples(cp, 16, 19).reshape(4, 4)), (0, 0, f1),
+             (2, 2, f2)],
+            _GRAY, 4, 4,
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_gif_anim,
-        sample_frames,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # quarter of the corpus: the compositor tier has no
-        # doc_id-residue variant classes (every doc exercises the same
-        # disposal paths), and its 3 frames x 3 Arrow passes made it
-        # the slowest bench query at full population (3.37s idle, r14;
-        # the ~2.3s three-pass harness floor is documented in bench.py)
-        & (F.col("doc_id") % 4 == 0)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(16 if f == 0 else 4) * 19 + f) % len(cp))] % 256
-                for f in range(3)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        gray = np.repeat(np.arange(256, dtype="u1"), 3).reshape(256, 3)
-        for pdf in batches:
-            payloads = []
-            for fs in pdf["fs"]:
-                f0 = np.array(fs[0], dtype="u1").reshape(4, 4)
-                f1 = np.array(fs[1], dtype="u1").reshape(2, 2)
-                f2 = np.array(fs[2], dtype="u1").reshape(2, 2)
-                payloads.append(
-                    encode_gif_anim(
-                        [(0, 0, f0), (0, 0, f1), (2, 2, f2)], gray, 4, 4
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    stats = _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("fs", bases),
-        synth, frame_sample_batches(n_frames=3, real_decode=True),
-        _frame_keyed, pixel_stats_batches,
-    )
-    return stats.selectExpr(
-        "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
-        "CAST(doc_id % 4 AS INT) AS frame_no",
-        "width", "height", "channels", "mean_val", "min_val", "max_val",
+    return _frames_roundtrip(
+        spark, sf_dir, write, _HAS_TEXT + " AND doc_id % 4 = 0"
     )
 
 
@@ -1250,57 +946,20 @@ def q_multimodal_gif_anim(spark, sf_dir):
     """,
 )
 def q_multimodal_wavext(spark, sf_dir):
-    """WAVE_FORMAT_EXTENSIBLE under the driver hash (r14 — making
-    r13's GUID resolution driver-visible): 64 formula bytes per
-    document (stride-21 code-point sampling) are wrapped executor-side
-    in a VALID extensible WAV (encode_wav_extensible: format tag
-    0xFFFE, cbSize-22 fmt extension, the real format in the SubFormat
-    GUID over the fixed Microsoft base tail — what most modern writers
-    emit). doc_id parity picks the sub-format: even docs carry 16-bit
-    PCM (the 64 bytes read as 32 little-endian samples), odd docs
-    G.711 mu-law (64 samples). decode_audio_samples must resolve the
-    real tag FROM THE GUID to decode either — a hash match proves the
-    extensible header walk, the base-GUID check, and the resolved
-    codec end to end. The oracle replays the little-endian byte
-    pairing with a window lead() and the CCITT mu-law expansion as SQL
-    arithmetic. Scale shape: one scan, one doc_id exchange
-    (_codec_parallel), Arrow-batched mapInPandas."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_audio_samples,
-        encode_wav_extensible,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    bs = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 21) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, row in zip(pdf["doc_id"], pdf["bs"]):
-                data = bytes(bytearray(int(x) for x in row))
-                if int(doc_id) % 2 == 0:
-                    payloads.append(encode_wav_extensible(data, 1, 16))
-                else:
-                    payloads.append(encode_wav_extensible(data, 7, 8))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        _formula("bs", bases), synth, audio_sample_batches,
+    """WAVE_FORMAT_EXTENSIBLE: 64 stride-21 formula bytes are wrapped in a
+    VALID extensible WAV (encode_wav_extensible: format tag 0xFFFE,
+    cbSize-22 extension, the real format in the SubFormat GUID over the
+    fixed Microsoft base tail). doc_id parity picks the sub-format:
+    even docs carry 16-bit PCM (32 little-endian samples), odd docs
+    G.711 mu-law (64 samples), so the reader must resolve the real tag
+    FROM THE GUID. The oracle replays the little-endian pairing with a
+    window lead() and the mu-law expansion as SQL arithmetic."""
+    return _roundtrip(
+        spark, sf_dir, AUDIO_SAMPLE_STATS_SCHEMA,
+        lambda i, n, cp: encode_wav_extensible(
+            _samples(cp, 64, 21).tobytes(), *((7, 8) if i % 2 else (1, 16))
+        ),
+        audio_sample_batches,
     )
 
 
@@ -1328,78 +987,22 @@ def q_multimodal_wavext(spark, sf_dir):
     """,
 )
 def q_multimodal_mp4(spark, sf_dir):
-    """ISO BMFF demux under the driver hash (r14 — the container twin
-    of q_multimodal_video's AVI half): per document, three MJPEG
-    samples (four constant 8×8 blocks each, stride-23 formula with
-    frame-f phase) are muxed executor-side into a VALID minimal mp4 by
-    encode_mp4, with the chunk layout picked by doc_id mod 3 — all
-    samples in one chunk, one per chunk, or two per chunk with a
-    ragged remainder — so the stsz/stsc/stco reconstruction walks a
-    DIFFERENT table shape on every residue class, every round.
-    sample_frames(real_decode=True) rebuilds the sample boundaries
-    from the real tables, pixel-decodes each MJPEG sample through
-    parse_jpeg, and ships PNGs; decode_pixel_stats (keyed
-    doc_id·4+frame_no, split back after) hashes exact per-frame stats
-    that the oracle computes straight from the formula. Scale shape:
-    one scan, one doc_id exchange (_codec_parallel), ONE fused
-    Arrow pass (r18)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.jpeg import encode_jpeg
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_mp4,
-        sample_frames,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # even doc_ids only: halves the three-Arrow-stage tier's cost
-        # while 0,2,4,... still covers every doc_id%3 chunk layout
-        & (F.col("doc_id") % 2 == 0)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(4) * 23 + f) % len(cp))] % 256 for f in range(3)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, fs in zip(pdf["doc_id"], pdf["fs"]):
-                frames = [
-                    encode_jpeg(
-                        np.array(p, dtype="u1")
-                        .reshape(2, 2)
-                        .repeat(8, axis=0)
-                        .repeat(8, axis=1)
-                    )
-                    for p in fs
-                ]
-                payloads.append(
-                    encode_mp4(frames, samples_per_chunk=int(doc_id) % 3)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    stats = _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("fs", bases),
-        synth, frame_sample_batches(n_frames=3, real_decode=True),
-        _frame_keyed, pixel_stats_batches,
-    )
-    return stats.selectExpr(
-        "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
-        "CAST(doc_id % 4 AS INT) AS frame_no",
-        "width", "height", "channels", "mean_val", "min_val", "max_val",
+    """ISO BMFF demux: three MJPEG samples per document (four constant
+    8×8 blocks each, stride-23 formula with frame-f phase) are muxed
+    into a VALID minimal mp4 (encode_mp4) whose chunk layout doc_id
+    mod 3 picks — all samples in one chunk, one per chunk, or two per
+    chunk with a ragged remainder — so the stsz/stsc/stco
+    reconstruction walks a different table shape per residue. The
+    reader rebuilds the sample boundaries from the tables, decodes each
+    sample through parse_jpeg and ships PNGs whose stats the oracle
+    computes from the formula. Population: even doc_ids, which still
+    cover every doc_id % 3 layout."""
+    return _frames_roundtrip(
+        spark, sf_dir,
+        lambda i, n, cp: encode_mp4(
+            _mjpeg_frames(cp, 23), samples_per_chunk=i % 3
+        ),
+        _HAS_TEXT + " AND doc_id % 2 = 0",
     )
 
 
@@ -1440,70 +1043,28 @@ def q_multimodal_mp4(spark, sf_dir):
     """,
 )
 def q_multimodal_avi_audio(spark, sf_dir):
-    """The audio track OF A VIDEO FILE under the driver hash (r14 —
-    completes the AVI container: frames AND sound): 64 G.711 bytes per
-    document (stride-25 code-point sampling, mu-law on even doc_ids,
-    A-law on odd) are muxed executor-side as the SECOND stream of a
-    real AVI — one raw-DIB video frame first, then an 'auds' strl
-    whose strf is the literal WAVEFORMATEX and whose payload rides
-    '01wb' movi chunks, split at a doc_id-dependent point so the
-    chunk-concatenation order is exercised, not just single-chunk
-    tracks. decode_audio_samples demuxes the audio stream
-    (parse_avi_audio: strl-order stream indexing — the audio stream
-    is '01', not '00'), re-wraps it as the WAV its strf describes,
-    and decodes through the same CCITT expansions the WAV tier
-    hashes. The oracle replays both G.711 formulas by parity. Scale
-    shape: one scan, one doc_id exchange (_codec_parallel),
-    Arrow-batched mapInPandas."""
-    from typing import Iterator
+    """The audio track of a video file: 64 G.711 bytes per document
+    (stride-25, mu-law on even doc_ids, A-law on odd) are muxed as the
+    SECOND stream of a real AVI — one raw-DIB video frame first, then
+    an 'auds' strl whose strf is the literal WAVEFORMATEX and whose
+    payload rides '01wb' movi chunks split at a doc_id-dependent point,
+    so chunk concatenation is exercised. The reader demuxes the audio
+    stream (parse_avi_audio: strl-order stream indexing, the audio
+    stream is '01'), re-wraps it as the WAV its strf describes and
+    decodes through the same CCITT expansions as the WAV tier; the
+    oracle replays both G.711 formulas by parity."""
+    dib = np.arange(48, dtype="u1").reshape(4, 4, 3)[::-1, :, ::-1].tobytes()
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_audio_samples,
-        encode_avi,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    bs = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 25) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        dib = (
-            np.arange(48, dtype="u1").reshape(4, 4, 3)[::-1, :, ::-1].tobytes()
+    def write(i, n, cp):
+        data = _samples(cp, 64, 25).tobytes()
+        afmt = struct.pack("<HHIIHH", 6 if i % 2 else 7, 1, 8000, 8000, 1, 8)
+        cut = 16 + (i % 3) * 16
+        return encode_avi(
+            [dib], 4, 4, b"DIB ", audio=(afmt, [data[:cut], data[cut:]])
         )
-        for pdf in batches:
-            payloads = []
-            for doc_id, row in zip(pdf["doc_id"], pdf["bs"]):
-                doc_id = int(doc_id)
-                data = bytes(bytearray(int(x) for x in row))
-                tag = 7 if doc_id % 2 == 0 else 6
-                afmt = struct.pack("<HHIIHH", tag, 1, 8000, 8000, 1, 8)
-                cut = 16 + (doc_id % 3) * 16
-                payloads.append(
-                    encode_avi(
-                        [dib], 4, 4, b"DIB ",
-                        audio=(afmt, [data[:cut], data[cut:]]),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return _fused(
-        _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        _formula("bs", bases), synth, audio_sample_batches,
+    return _roundtrip(
+        spark, sf_dir, AUDIO_SAMPLE_STATS_SCHEMA, write, audio_sample_batches
     )
 
 
@@ -1530,59 +1091,22 @@ def q_multimodal_avi_audio(spark, sf_dir):
     """,
 )
 def q_multimodal_png_subbyte(spark, sf_dir):
-    """Sub-byte-depth PNG round trip under the driver hash (r13 — the
-    last valid-PNG gate, closed and made driver-visible): a 5×5 raster
-    of depth-limited samples is derived from each document's text
-    (stride-13 sampling; doc_id mod 3 picks the bit depth — 1, 2, or
-    4 — so ALL three sub-byte depths are hashed every round, and the
-    odd width forces byte-boundary row padding, PNG spec §7.2),
-    encoded executor-side as a VALID depth-d grayscale PNG
-    (encode_png(depth=d): MSB-first bit packing, zlib IDAT, CRCs),
-    then decoded back through the real parse_png path (inflate, byte
-    filter reconstruction, bit unpacking) by decode_pixel_stats. The
-    oracle computes the stats DIRECTLY from the formula, never
-    touching PNG — a hash match proves decode∘encode = id over real
-    sub-byte bit-packed streams. Scale shape: one scan, one doc_id
-    exchange (_codec_parallel), Arrow-batched mapInPandas."""
-    from typing import Iterator
+    """Sub-byte-depth PNG: a 5×5 raster of stride-13 samples reduced to
+    the bit depth doc_id mod 3 picks (1, 2 or 4, so all three sub-byte
+    depths are hashed; the odd width forces byte-boundary row padding,
+    PNG §7.2) is encoded as a VALID depth-d grayscale PNG (MSB-first
+    bit packing, zlib IDAT, CRCs) and decoded back through parse_png
+    (inflate, filter reconstruction, bit unpacking). The oracle
+    computes the stats from the formula, so a hash match proves
+    decode∘encode = id over real bit-packed streams."""
+    def write(i, n, cp):
+        depth = 1 << (i % 3)
+        return encode_png(
+            (_samples(cp, 25, 13) % (1 << depth)).reshape(5, 5), depth=depth
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_png,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    px = d.select(
-        "doc_id",
-        F.expr("shiftleft(1, cast(doc_id % 3 as int))").alias("depth"),
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        m = 2 if i % 3 == 0 else (4 if i % 3 == 1 else 16)
-        return cp[(np.arange(25) * 13) % len(cp)] % m
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = [
-                encode_png(
-                    np.array(p, dtype="u1").reshape(5, 5), depth=int(depth)
-                )
-                for depth, p in zip(pdf["depth"], pdf["p"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("p", bases), encode, pixel_stats_batches,
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA, write, pixel_stats_batches
     )
 
 
@@ -1611,63 +1135,21 @@ def q_multimodal_png_subbyte(spark, sf_dir):
     """,
 )
 def q_multimodal_qoi(spark, sf_dir):
-    """QOI under the driver hash (r14 — a real interchange format,
-    qoiformat.org, decodable dependency-free because its whole coder
-    is byte arithmetic: 64-slot color index, wraparound DIFF/LUMA
-    deltas, runs, raw escapes). doc_id mod 3 picks the shape: m=0 RGB
-    from raw formula samples (stride-27 code-point sampling — each
-    codec query owns a distinct stride), m=1 RGBA (exercising the
-    0xFF escape and alpha in the index hash), m=2 RGB with the sample
-    formula repeating every row (i mod 4*nch) so every encoded stream
-    carries RUN and INDEX ops, not just escapes. Pixels are encoded
-    executor-side by encode_qoi (full op set in the reference
-    encoder's priority order) and decoded back through parse_qoi by
-    decode_pixel_stats. The oracle computes the stats straight from
-    the formula, never touching QOI — a hash match proves
-    decode∘encode = id across the op set. Scale shape: one scan, one
-    doc_id exchange (_codec_parallel), Arrow-batched mapInPandas."""
-    from typing import Iterator
+    """QOI (qoiformat.org): doc_id mod 3 picks the shape — RGB from raw
+    stride-27 samples, RGBA (the 0xFF escape and alpha in the index
+    hash), or RGB with the samples repeating every row (i mod 4·nch),
+    so the streams carry RUN and INDEX ops, not just escapes. encode_qoi
+    (the full op set in the reference encoder's priority order) writes
+    them and parse_qoi decodes them back; the oracle computes the stats
+    from the formula, so a hash match proves decode∘encode = id across
+    the op set."""
+    def write(i, n, cp):
+        nch = 4 if i % 3 == 1 else 3
+        p = _samples(cp, (4 if i % 3 == 2 else 16) * nch, 27)
+        return encode_qoi(np.resize(p, 16 * nch).reshape(4, 4, nch))
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_qoi,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    px = d.select(
-        "doc_id",
-        F.expr("CASE WHEN doc_id % 3 = 1 THEN 4 ELSE 3 END").alias("nch"),
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        k = 4 if i % 3 == 1 else 3
-        idx = np.arange(16 * k)
-        if i % 3 == 2:
-            idx = idx % (4 * k)
-        return cp[(idx * 27) % len(cp)] % 256
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for nch, p in zip(pdf["nch"], pdf["p"]):
-                nch = int(nch)
-                payloads.append(
-                    encode_qoi(np.array(p, dtype="u1").reshape(4, 4, nch))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("p", bases), encode, pixel_stats_batches,
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA, write, pixel_stats_batches
     )
 
 
@@ -1694,64 +1176,24 @@ def q_multimodal_qoi(spark, sf_dir):
     """,
 )
 def q_multimodal_tiff(spark, sf_dir):
-    """Baseline TIFF under the driver hash (r14): 4x4 formula rasters
-    (stride-31 code-point sampling) are written executor-side by
+    """Baseline TIFF: 4×4 rasters of stride-31 samples are written by
     encode_tiff as MULTI-STRIP files (RowsPerStrip 2, so the strip
     offset/count arrays overflow the 4-byte IFD value slot and the
-    offset-indirection path is what gets hashed) and decoded back
-    through parse_tiff's IFD walk by decode_pixel_stats. doc_id mod 3
-    picks the compression — 1 (none), 32773 (PackBits), 5 (TIFF LZW
-    with the spec's EarlyChange width bump) — and doc_id parity the
-    photometric (gray / RGB), so every compressor and both sample
-    layouts are hashed every round. The oracle computes the stats
-    straight from the formula, never touching TIFF — a hash match
-    proves decode∘encode = id across the IFD grammar, strip math, and
-    both entropy-free compressors. Scale shape: one scan, one doc_id
-    exchange (_codec_parallel), Arrow-batched mapInPandas."""
-    from typing import Iterator
+    offset indirection is hashed) and decoded back through parse_tiff.
+    doc_id mod 3 picks the compression — none, PackBits (32773) or TIFF
+    LZW (5, with the EarlyChange width bump) — and doc_id parity the
+    photometric (gray / RGB). The oracle computes the stats from the
+    formula, so a hash match proves decode∘encode = id across the IFD
+    grammar, strip math and both compressors."""
+    def write(i, n, cp):
+        nch = 3 if i % 2 else 1
+        return encode_tiff(
+            _samples(cp, 16 * nch, 31).reshape(4, 4, nch),
+            compression=(1, 32773, 5)[i % 3], rows_per_strip=2,
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_tiff,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    px = d.select(
-        "doc_id",
-        F.expr("CAST(doc_id % 3 AS INT)").alias("m"),
-        F.expr("CASE WHEN doc_id % 2 = 1 THEN 3 ELSE 1 END").alias("nch"),
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        k = 3 if i % 2 == 1 else 1
-        return cp[(np.arange(16 * k) * 31) % len(cp)] % 256
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        comps = (1, 32773, 5)
-        for pdf in batches:
-            payloads = []
-            for m, nch, p in zip(pdf["m"], pdf["nch"], pdf["p"]):
-                payloads.append(
-                    encode_tiff(
-                        np.array(p, dtype="u1").reshape(4, 4, int(nch)),
-                        compression=comps[int(m)],
-                        rows_per_strip=2,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("p", bases), encode, pixel_stats_batches,
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA, write, pixel_stats_batches
     )
 
 
@@ -1792,87 +1234,30 @@ def q_multimodal_tiff(spark, sf_dir):
     """,
 )
 def q_multimodal_y4m(spark, sf_dir):
-    """YUV4MPEG2 under the driver hash (r14 — the third video
-    container tier after AVI and ISO BMFF, and the only one with NO
-    codec between container and pixels: mjpegtools/ffmpeg's raw
-    planar interchange format). Per document, THREE 4x4 frames of
-    stride-29 formula samples; doc_id mod 3 picks the plane layout —
-    m=0 Cmono (Y only), m=1 C444 (full-res U/V), m=2 C420 (2x2-
-    subsampled U/V: 4+4 chroma samples that nearest-replicate to full
-    res on decode, so each carries weight 4 in the oracle's mean).
-    encode_y4m muxes the planes executor-side;
-    sample_frames(real_decode=True) demuxes the stream, replicates
-    chroma, and ships raw-YUV PNGs; decode_pixel_stats (keyed by
-    doc_id*4+frame_no, split back after) hashes the per-frame stats.
-    The oracle computes them straight from the formula with the
-    replication expressed as weights — a hash match proves the stream
-    -header grammar, FRAME walking, plane math, and all three
-    subsampling layouts end to end. Scale shape: one scan, one doc_id
-    exchange (_codec_parallel), ONE fused Arrow pass (r18: all three stages composed in a single MapInPandas)."""
-    from typing import Iterator
+    """YUV4MPEG2, the raw planar interchange format (no codec between
+    container and pixels): THREE 4×4 frames of stride-29 samples per
+    document, doc_id mod 3 picking the plane layout — Cmono (Y only),
+    C444 (full-res U/V) or C420 (2×2 U/V that nearest-replicate to full
+    resolution on decode, so each chroma sample weighs 4 in the
+    oracle's mean). encode_y4m muxes the planes; the reader demuxes the
+    stream, replicates chroma and ships raw-YUV PNGs. A hash match
+    proves the stream-header grammar, FRAME walking, plane math and all
+    three subsampling layouts. Population: doc_id % 4 = 0, which still
+    covers every doc_id % 3 layout."""
+    def write(i, n, cp):
+        m = i % 3
+        frames = []
+        for f in range(3):
+            a = _samples(cp, (16, 48, 24)[m], 29, f)
+            frames.append(
+                tuple(a.reshape(-1, 4, 4)) if m < 2 else
+                (a[:16].reshape(4, 4), a[16:20].reshape(2, 2),
+                 a[20:].reshape(2, 2))
+            )
+        return encode_y4m(frames, 4, 4, ("mono", "444", "420")[m])
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_y4m,
-        sample_frames,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # quarter of the corpus: 0,4,8,... still covers every doc_id%3
-        # plane layout; 2.59s idle at half population in the r14 bench
-        # against the ~2.3s three-pass floor documented in bench.py
-        & (F.col("doc_id") % 4 == 0)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        w = 16 if i % 3 == 0 else (48 if i % 3 == 1 else 24)
-        return [cp[((np.arange(w) * 29 + f) % len(cp))] % 256 for f in range(3)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, fs in zip(pdf["doc_id"], pdf["fs"]):
-                m = int(doc_id) % 3
-                planes_list = []
-                for p in fs:
-                    a = np.array(p, dtype="u1")
-                    if m == 0:
-                        planes_list.append((a.reshape(4, 4),))
-                    elif m == 1:
-                        planes_list.append(
-                            (a[:16].reshape(4, 4), a[16:32].reshape(4, 4),
-                             a[32:48].reshape(4, 4))
-                        )
-                    else:
-                        planes_list.append(
-                            (a[:16].reshape(4, 4), a[16:20].reshape(2, 2),
-                             a[20:24].reshape(2, 2))
-                        )
-                mode = ("mono", "444", "420")[m]
-                payloads.append(encode_y4m(planes_list, 4, 4, mode))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    stats = _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("fs", bases),
-        synth, frame_sample_batches(n_frames=3, real_decode=True),
-        _frame_keyed, pixel_stats_batches,
-    )
-    return stats.selectExpr(
-        "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
-        "CAST(doc_id % 4 AS INT) AS frame_no",
-        "width", "height", "channels", "mean_val", "min_val", "max_val",
+    return _frames_roundtrip(
+        spark, sf_dir, write, _HAS_TEXT + " AND doc_id % 4 = 0"
     )
 
 
@@ -1903,77 +1288,26 @@ def q_multimodal_y4m(spark, sf_dir):
     """,
 )
 def q_multimodal_flac(spark, sf_dir):
-    """FLAC under the driver hash (r14 — the first lossless COMPRESSED
-    audio codec in the ladder: linear prediction + Rice-coded
-    residuals, functions/flac.py, from the public RFC 9639 spec). Per
-    document, 64 stride-33 formula bytes pair little-endian into 32
-    signed 16-bit samples; doc_id mod 4 picks the encode strategy so
-    every decoder path is hashed every round — m=0 mono with the best
-    fixed polynomial predictor (orders 0-2, Rice residuals), m=1 mono
-    VERBATIM, m=2 stereo MID/SIDE with fixed predictors, m=3 stereo
-    LEFT/SIDE with quantized-LPC subframes. encode_flac writes real
-    streams (CRC-8 header, CRC-16 frame, true audio MD5 in STREAMINFO
-    — so parse_flac's end-to-end hash check is armed on every
-    payload); decode_audio_samples decodes them back to exact PCM.
-    Because FLAC is lossless the oracle is simply the byte-pairing
-    arithmetic replayed in SQL (the wavext lead() idiom) — a hash
+    """FLAC (RFC 9639; linear prediction + Rice-coded residuals,
+    functions/flac.py): 64 stride-33 formula bytes pair little-endian
+    into 32 signed 16-bit samples, and doc_id mod 4 picks the encode
+    strategy — mono fixed predictor, mono VERBATIM, stereo MID/SIDE
+    with fixed predictors, stereo LEFT/SIDE with quantized-LPC
+    subframes. encode_flac writes real streams (CRC-8 header, CRC-16
+    frame, true audio MD5 in STREAMINFO, so parse_flac's end-to-end
+    check is armed on every payload). FLAC is lossless, so the oracle
+    is the byte-pairing arithmetic (the wavext lead() idiom): a hash
     match proves bit-exact decode∘encode = id across subframe types,
-    both stereo decorrelations, the Rice coder, and the CRC/MD5
-    integrity chain. Scale shape: one scan, one doc_id exchange
-    (_codec_parallel), Arrow-batched mapInPandas."""
-    from typing import Iterator
+    both stereo decorrelations, the Rice coder and the CRC/MD5 chain.
+    Population: doc_id % 8 < 4 (all four strategies kept;
+    q_multimodal_ogg_flac takes the other half)."""
+    def write(i, n, cp):
+        pcm, mode = _flac_input(i, cp, 33)
+        return encode_flac(pcm, 8000, 16, 16, *mode)
 
-    import pandas as pd
-
-    from polars_express_spark.functions.flac import encode_flac
-    from polars_express_spark.functions.multimodal import decode_audio_samples
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus, all four doc_id%4 encode strategies kept:
-        # FLAC's Rice/LPC loops price it at the band edge (2.33-2.58s
-        # idle across r14 runs against the ~1.4s two-pass floor)
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 33) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, row in zip(pdf["doc_id"], pdf["bs"]):
-                raw = np.array([int(x) for x in row], dtype=np.int64)
-                pcm = raw[0::2] + 256 * raw[1::2]
-                pcm = np.where(pcm >= 32768, pcm - 65536, pcm)
-                m = int(doc_id) % 4
-                if m == 0:
-                    payloads.append(encode_flac(pcm, 8000, 16, 16, "fixed"))
-                elif m == 1:
-                    payloads.append(encode_flac(pcm, 8000, 16, 16, "verbatim"))
-                elif m == 2:
-                    payloads.append(
-                        encode_flac(pcm.reshape(-1, 2), 8000, 16, 16,
-                                    "fixed", "mid_side")
-                    )
-                else:
-                    payloads.append(
-                        encode_flac(pcm.reshape(-1, 2), 8000, 16, 16,
-                                    "lpc", "left_side")
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        _formula("bs", bases), synth, audio_sample_batches,
+    return _roundtrip(
+        spark, sf_dir, AUDIO_SAMPLE_STATS_SCHEMA, write, audio_sample_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -2016,73 +1350,30 @@ def q_multimodal_flac(spark, sf_dir):
     """,
 )
 def q_multimodal_aiff(spark, sf_dir):
-    """AIFF under the driver hash (r14 — the THIRD audio container
-    after RIFF/WAVE and Sun Au: Apple's big-endian FORM/IFF grammar
-    with the sample rate stored as an 80-BIT IEEE 754 EXTENDED float,
-    a field no other tier exercises). 64 stride-35 formula bytes per
-    document; doc_id mod 4 picks the layout so every sample width and
-    the channel math are hashed every round — m=0 mono PCM16BE (32
-    big-endian pairs), m=1 stereo PCM16BE (16 frames x 2, hashing the
-    frame-interleave bookkeeping), m=2 mono signed PCM8 (first 32
-    bytes), m=3 mono PCM24BE (16 samples of 3 bytes — the only 24-bit
-    path in the audio ladder). encode_aiff writes real containers
-    (COMM with _f80_encode'd rate, SSND with offset/blockSize);
-    decode_audio_samples routes FORM payloads through parse_aiff. The
-    oracle replays the big-endian byte assembly and two's-complement
-    sign logic with window lead()s — a hash match proves the chunk
-    walk, the f80 rate decode, and all four widths end to end. Scale
-    shape: one scan, one doc_id exchange (_codec_parallel),
-    Arrow-batched mapInPandas."""
-    from typing import Iterator
+    """AIFF, Apple's big-endian FORM/IFF grammar with the sample rate as
+    an 80-bit IEEE 754 extended float: 64 stride-35 formula bytes per
+    document, doc_id mod 4 picking the layout — mono PCM16BE (32 pairs),
+    stereo PCM16BE (16 frames × 2, the frame-interleave bookkeeping),
+    mono signed PCM8 (first 32 bytes) or mono PCM24BE (16 three-byte
+    samples). encode_aiff writes real containers (COMM with the f80
+    rate, SSND with offset/blockSize); the reader routes FORM payloads
+    through parse_aiff. The oracle replays the big-endian assembly and
+    two's-complement sign logic with window lead()s."""
+    def write(i, n, cp):
+        m = i % 4
+        if m < 2:
+            return encode_aiff(_pcm16(cp, 35, ">"), 44100, 16, channels=m + 1)
+        b = _samples(cp, 64, 35)
+        if m == 2:
+            return encode_aiff(b[:32].view("i1").astype(np.int64), 8000, 8)
+        t = b[:48].reshape(16, 3).astype(np.int64)
+        pcm = t[:, 0] * 65536 + t[:, 1] * 256 + t[:, 2]
+        return encode_aiff(
+            np.where(pcm >= 1 << 23, pcm - (1 << 24), pcm), 48000, 24
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_audio_samples,
-        encode_aiff,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    bs = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 35) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, row in zip(pdf["doc_id"], pdf["bs"]):
-                raw = np.array([int(x) for x in row], dtype=np.int64)
-                m = int(doc_id) % 4
-                if m in (0, 1):  # big-endian 16-bit pairs
-                    pcm = raw[0::2] * 256 + raw[1::2]
-                    pcm = np.where(pcm >= 32768, pcm - 65536, pcm)
-                    payloads.append(
-                        encode_aiff(pcm, 44100, 16, channels=2 if m == 1 else 1)
-                    )
-                elif m == 2:  # signed 8-bit
-                    pcm = raw[:32]
-                    pcm = np.where(pcm >= 128, pcm - 256, pcm)
-                    payloads.append(encode_aiff(pcm, 8000, 8))
-                else:  # 24-bit big-endian triples
-                    t = raw[:48].reshape(16, 3)
-                    pcm = t[:, 0] * 65536 + t[:, 1] * 256 + t[:, 2]
-                    pcm = np.where(pcm >= 1 << 23, pcm - (1 << 24), pcm)
-                    payloads.append(encode_aiff(pcm, 48000, 24))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        _formula("bs", bases), synth, audio_sample_batches,
+    return _roundtrip(
+        spark, sf_dir, AUDIO_SAMPLE_STATS_SCHEMA, write, audio_sample_batches
     )
 
 
@@ -2112,70 +1403,27 @@ def q_multimodal_aiff(spark, sf_dir):
     """,
 )
 def q_multimodal_tga(spark, sf_dir):
-    """Targa (TGA 2.0) under the driver hash (r14 — the game/VFX-
-    toolchain raster format; the only tier whose detection is by
-    trailing FOOTER rather than magic prefix, which is exactly what
-    parse_tga requires for sound dispatch). 4x4 stride-37 formula
-    rasters; doc_id mod 4 picks the shape so both compressions, all
-    three channel layouts, and both vertical orders are hashed every
-    round — m=0 grayscale uncompressed bottom-up, m=1 RGB (stored
-    BGR) uncompressed top-down, m=2 grayscale RLE with the formula
-    repeating every 2 rows (i mod 8*nch) so run packets occur, m=3
-    RGBA (stored BGRA, alpha-depth 8) RLE with the same repetition.
+    """Targa (TGA 2.0), detected by its trailing FOOTER rather than a
+    magic prefix: 4×4 rasters of stride-37 samples, doc_id mod 4
+    picking the shape — grayscale uncompressed bottom-up, RGB (stored
+    BGR) uncompressed top-down, grayscale RLE with the samples
+    repeating every 2 rows (i mod 8·nch) so run packets occur, and
+    RGBA (stored BGRA, alpha depth 8) RLE with the same repetition.
     encode_tga writes real files (18-byte header, packet stream,
-    TGA-2.0 footer); decode_pixel_stats dispatches through parse_tga.
-    The oracle computes the stats straight from the formula — a hash
-    match proves decode∘encode = id across the header grammar, BGR↔RGB
-    reorder, bottom-up flip, and the RLE packet walk. Scale shape: one
-    scan, one doc_id exchange (_codec_parallel), Arrow-batched
-    mapInPandas."""
-    from typing import Iterator
+    footer) and parse_tga decodes them; the oracle computes the stats
+    from the formula, so a hash match proves the header grammar, the
+    BGR↔RGB reorder, the bottom-up flip and the RLE packet walk."""
+    def write(i, n, cp):
+        m = i % 4
+        nch = (1, 3, 1, 4)[m]
+        p = _samples(cp, (8 if m >= 2 else 16) * nch, 37)
+        return encode_tga(
+            np.resize(p, 16 * nch).reshape(4, 4, nch),
+            rle=m >= 2, top_down=m == 1,
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        encode_tga,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    px = d.select(
-        "doc_id",
-        F.expr("CAST(doc_id % 4 AS INT)").alias("m"),
-        F.expr(
-            "CASE WHEN doc_id % 4 = 1 THEN 3"
-            " WHEN doc_id % 4 = 3 THEN 4 ELSE 1 END"
-        ).alias("nch"),
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        k = 3 if i % 4 == 1 else (4 if i % 4 == 3 else 1)
-        idx = np.arange(16 * k)
-        if i % 4 >= 2:
-            idx = idx % (8 * k)
-        return cp[(idx * 37) % len(cp)] % 256
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for m, nch, p in zip(pdf["m"], pdf["nch"], pdf["p"]):
-                m, nch = int(m), int(nch)
-                arr = np.array(p, dtype="u1").reshape(4, 4, nch)
-                payloads.append(
-                    encode_tga(arr, rle=m >= 2, top_down=m == 1)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("p", bases), encode, pixel_stats_batches,
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA, write, pixel_stats_batches
     )
 
 
@@ -2217,94 +1465,32 @@ def q_multimodal_tga(spark, sf_dir):
     """,
 )
 def q_multimodal_ico(spark, sf_dir):
-    """Windows ICO under the driver hash (r14 — the favicon container:
-    the most pipeline-relevant image container for a web-crawl corpus,
-    and the only tier that COMPOSES two inner decoders — each
-    directory entry is a complete PNG stream or a headerless
-    double-height DIB). Per document TWO entries (stride-39 formula,
-    entry e offsetting the phase); doc_id parity picks the mix so both
-    entry kinds, both orders, the in-band-alpha 32-bpp path, and the
-    AND-mask opaque-alpha path are hashed every round — even docs:
-    PNG-gray + BMP-RGBA (alpha from the formula, proving 32-bpp
-    entries keep IN-BAND alpha rather than the mask); odd docs:
-    BMP-RGB (decoded to RGBA with constant 255 mask-derived alpha,
-    weighted into the oracle as 16 constant rows) + PNG-RGB.
-    encode_ico writes real containers (ICONDIR, 16-byte entries, BGRA
-    XOR rasters, packed AND masks); the stats stage walks parse_ico
-    per entry. A hash match proves the directory walk, both inner
-    routes, and both alpha conventions end to end. Scale shape: one
-    scan, one doc_id exchange (_codec_parallel), ONE fused Arrow
-    pass (r18)."""
-    from typing import Iterator
+    """Windows ICO, the favicon container and the one tier that composes
+    two inner decoders (each directory entry is a complete PNG or a
+    headerless double-height DIB). TWO entries per document (stride-39
+    samples, entry e phasing by e); doc_id parity picks the mix — even
+    docs PNG-gray + BMP-RGBA (alpha from the formula: 32-bpp entries
+    keep IN-BAND alpha), odd docs BMP-RGB (decoded to RGBA with the
+    AND-mask's constant 255 alpha, 16 constant rows in the oracle) +
+    PNG-RGB. encode_ico writes real containers (ICONDIR, 16-byte
+    entries, BGRA XOR rasters, packed AND masks) and the reader walks
+    parse_ico per entry. Population: doc_id % 4 < 2, both parities
+    kept."""
+    schema = ("doc_id bigint, entry_no int, width int, height int,"
+              " channels int, mean_val double, min_val int, max_val int")
 
-    import pandas as pd
+    def write(i, n, cp):
+        a0, a1 = (_samples(cp, 64, 39, e) for e in range(2))
+        if i % 2 == 0:
+            return encode_ico([("png", a0[:16].reshape(4, 4, 1)),
+                               ("bmp", a1.reshape(4, 4, 4))])
+        return encode_ico([("bmp", a0[:48].reshape(4, 4, 3)),
+                           ("png", a1[:48].reshape(4, 4, 3))])
 
-    from polars_express_spark.functions.multimodal import encode_ico, parse_ico
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus, both parities kept (doc%4=0 -> PNG-first
-        # mix, doc%4=1 -> DIB-first): each doc costs TWO inner-codec
-        # round trips, the population is what the band buys
-        & (F.col("doc_id") % 4 < 2)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(64) * 39 + e) % len(cp))] % 256 for e in range(2)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, es in zip(pdf["doc_id"], pdf["es"]):
-                a0 = np.array(es[0], dtype="u1")
-                a1 = np.array(es[1], dtype="u1")
-                if int(doc_id) % 2 == 0:
-                    entries = [
-                        ("png", a0[:16].reshape(4, 4, 1)),
-                        ("bmp", a1.reshape(4, 4, 4)),
-                    ]
-                else:
-                    entries = [
-                        ("bmp", a0[:48].reshape(4, 4, 3)),
-                        ("png", a1[:48].reshape(4, 4, 3)),
-                    ]
-                payloads.append(encode_ico(entries))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                parsed = parse_ico(bytes(payload))
-                if parsed is None:
-                    raise ValueError(f"doc {doc_id}: corrupt ICO container")
-                for e, (w, h, ch, arr) in enumerate(parsed):
-                    rows.append(
-                        (doc_id, e, w, h, ch,
-                         float(arr.mean()), int(arr.min()), int(arr.max()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "entry_no", "width", "height",
-                         "channels", "mean_val", "min_val", "max_val"],
-            ).astype(
-                {"entry_no": "int32", "width": "int32", "height": "int32",
-                 "channels": "int32", "min_val": "int32", "max_val": "int32"}
-            )
-
-    return _fused(
-        _codec_parallel(px),
-        "doc_id bigint, entry_no int, width int, height int,"
-        " channels int, mean_val double, min_val int, max_val int",
-        _formula("es", bases), synth, stats,
+    return _roundtrip(
+        spark, sf_dir, schema, write,
+        _rows(_icon_elements(parse_ico, "ICO"), schema),
+        where=_HAS_TEXT + " AND doc_id % 4 < 2",
     )
 
 
@@ -2333,78 +1519,29 @@ def q_multimodal_ico(spark, sf_dir):
     """,
 )
 def q_multimodal_webp(spark, sf_dir):
-    """Lossless WebP (VP8L) under the driver hash (r14 — the third
-    ENTROPY-CODED image tier after PNG/DEFLATE and JPEG/Huffman-DCT,
-    from the public WebP Lossless Bitstream Specification, RFC 9649:
-    canonical prefix codes whose lengths are themselves prefix-coded
-    with RLE symbols 16/17/18, serialized LSB-first). 4x4 RGBA rasters
-    from stride-41 formula samples (each codec query owns a distinct
-    stride); doc_id mod 4 picks the stream shape — m=0 docs are pure
-    per-channel literal streams, m=1 docs repeat the formula every 4
-    samples so all 16 pixels are identical and encode_webp
-    (use_backrefs) emits one literal plus a 2-D LZ77 run through
-    plain distance code 121, m=2 docs carry the SUBTRACT_GREEN
-    transform (red/blue stored as mod-256 deltas against green), and
-    m=3 docs carry a PREDICTOR transform (mode 12,
-    ClampAddSubtractFull — residuals against the clamped L+T-TL
-    gradient with the spec's edge rules), so the backref decode path
-    AND two real transform inverses sit under the hash, not just
-    under goldens. Decoded back through parse_webp
-    by decode_pixel_stats; the oracle computes the stats straight
-    from the formula, never touching VP8L — a hash match proves
-    decode(encode(x)) = x across all four stream shapes, including
-    the code-length-code serialization both directions. Scale shape: one
-    scan, one doc_id exchange (_codec_parallel), ONE fused
-    Arrow-batched mapInPandas pass (r18) (plan-pinned with the other
-    media queries in tests/test_plans.py)."""
-    from typing import Iterator
+    """Lossless WebP (VP8L, RFC 9649: canonical prefix codes whose
+    lengths are themselves prefix-coded with RLE symbols 16/17/18,
+    serialized LSB-first). 4×4 RGBA rasters of stride-41 samples;
+    doc_id mod 4 picks the stream shape — pure per-channel literals;
+    the samples repeating every 4 so all 16 pixels match and
+    encode_webp emits one literal plus a 2-D LZ77 run through plain
+    distance code 121; the SUBTRACT_GREEN transform; or a PREDICTOR
+    transform (mode 12, ClampAddSubtractFull, with the spec's edge
+    rules). parse_webp decodes them back and the oracle computes the
+    stats from the formula, so a hash match proves decode(encode(x)) =
+    x across all four shapes, including the code-length-code
+    serialization. Population: doc_id % 8 < 4, every shape kept."""
+    def write(i, n, cp):
+        m = i % 4
+        p = np.resize(_samples(cp, 4 if m == 1 else 64, 41), 64)
+        return encode_webp(
+            p.reshape(4, 4, 4), use_backrefs=m == 1, subtract_green=m == 2,
+            predictor_mode=12 if m == 3 else None,
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import decode_pixel_stats
-    from polars_express_spark.functions.webp import encode_webp
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus, all four doc_id%4 stream shapes kept
-        # (residues 0-3 mod 8): VP8L's per-doc prefix-code build is
-        # the priciest flat-codec encode, 2.58s idle at full
-        # population in the r14 bench
-        & (F.col("doc_id") % 8 < 4)
-    )
-    px = d.select(
-        "doc_id",
-        (F.col("doc_id") % 4).cast("int").alias("m"),
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        idx = np.arange(64)
-        if i % 4 == 1:
-            idx = idx % 4
-        return cp[(idx * 41) % len(cp)] % 256
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for m, p in zip(pdf["m"], pdf["p"]):
-                m = int(m)
-                arr = np.array(p, dtype="u1").reshape(4, 4, 4)
-                payloads.append(encode_webp(
-                    arr,
-                    use_backrefs=m == 1,
-                    subtract_green=m == 2,
-                    predictor_mode=12 if m == 3 else None,
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("p", bases), encode, pixel_stats_batches,
+    return _roundtrip(
+        spark, sf_dir, PIXEL_STATS_SCHEMA, write, pixel_stats_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -2460,91 +1597,35 @@ def q_multimodal_webp(spark, sf_dir):
     """,
 )
 def q_multimodal_webp_anim(spark, sf_dir):
-    """The ANIMATED WebP container under the driver hash (r14 — the
-    modern web's animation format, composited per RFC 9649's
-    VP8X/ANIM/ANMF canvas model the way q_multimodal_gif_anim pins
-    the GIF89a disposal model). Per document a 3-frame animation:
-    frame 0 covers the full 4x4 canvas (grayscale stride-43 formula,
-    alpha 255, no-blend), frame 1 is a no-blend 2x2 sub-rect at the
-    top-left that OVERWRITES while the rest shows through, and frame 2
-    is a 2x2 sub-rect at (2,2) — stored in the container's 2-pixel
-    offset units — composited with the BLEND path, its per-pixel alpha
-    driven to 0 or 255 by a formula bit so both blend branches are
-    integer-exact (srcA=1 copies the source, srcA=0 keeps the
-    destination; the fractional-alpha rounding band is covered by the
-    hypothesis property against the in-test spec compositor, this
-    query pins the driver-visible slice). encode_webp_anim muxes real
-    VP8X+ANIM+ANMF containers with VP8L frame chunks;
-    sample_frames(real_decode=True) composites and ships canvas
-    snapshots as RGBA PNGs; decode_pixel_stats hashes per-canvas
-    stats (alpha rows enter as 16 constant-255 samples, the ICO
-    precedent). Population: quarter corpus, the three-pass-tier band
-    (bench.py documents the ~2.3s pass floor). Scale shape: one scan,
-    one doc_id exchange, ONE fused Arrow pass (r18: all three stages composed in a single MapInPandas)."""
-    from typing import Iterator
+    """The ANIMATED WebP container, composited per RFC 9649's
+    VP8X/ANIM/ANMF canvas model: frame 0 covers the 4×4 canvas
+    (grayscale stride-43 samples, alpha 255, no blend), frame 1 is a
+    no-blend 2×2 sub-rect at the top-left that overwrites while the
+    rest shows through, and frame 2 a 2×2 sub-rect at (2,2) — stored in
+    the container's 2-pixel offset units — composited with the BLEND
+    path, its alpha driven to 0 or 255 by a formula bit so both blend
+    branches are integer-exact (the fractional-alpha band is covered by
+    the hypothesis property against an in-test compositor).
+    encode_webp_anim muxes VP8X+ANIM+ANMF containers with VP8L frame
+    chunks; the reader composites and ships canvas snapshots as RGBA
+    PNGs (alpha enters the stats as 16 constant-255 samples).
+    Population: doc_id % 8 = 1."""
+    def write(i, n, cp):
+        a0, a1, a2, a3 = (_samples(cp, 4 if k else 16, 43, k) for k in range(4))
 
-    import pandas as pd
+        def rgba(v, alpha):
+            g = v.reshape(alpha.shape)
+            return np.dstack([g, g, g, alpha])
 
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        sample_frames,
-    )
-    from polars_express_spark.functions.webp import encode_webp_anim
+        return encode_webp_anim(
+            [(0, 0, rgba(a0, np.full((4, 4), 255, "u1")), True, False),
+             (0, 0, rgba(a1, np.full((2, 2), 255, "u1")), True, False),
+             (2, 2, rgba(a2, (a3 % 2 * 255).reshape(2, 2)), False, False)],
+            4, 4, bg=(0, 0, 0, 255),
+        )
 
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # eighth of the corpus: SIX VP8L codec ops per doc (3 frame
-        # encodes + 3 decodes) plus 3 PNG round trips put this at the
-        # top of the three-pass tier's work term (bench.py documents
-        # the ~2.3s pass floor); no doc_id-residue variants to lose
-        & (F.col("doc_id") % 8 == 1)
-    )
-
-    px = d.select("doc_id", "text")
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        # the four frame planes: lengths 16/4/4/4, stride 43, offsets 0-3
-        return [cp[((np.arange(ln) * 43 + off) % len(cp))] % 256
-                for ln, off in ((16, 0), (4, 1), (4, 2), (4, 3))]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def gray_rgba(vals, alpha):
-            v = np.asarray(vals, dtype="u1")
-            side = int(len(vals) ** 0.5)
-            g = v.reshape(side, side)
-            return np.dstack([g, g, g, np.asarray(alpha, dtype="u1")])
-
-        for pdf in batches:
-            payloads = []
-            for a0, a1, a2, a3 in pdf["fs"]:
-                import numpy as np
-
-                f0 = gray_rgba(a0, np.full((4, 4), 255))
-                f1 = gray_rgba(a1, np.full((2, 2), 255))
-                mask = (np.asarray(a3) % 2 * 255).astype("u1").reshape(2, 2)
-                f2 = gray_rgba(a2, mask)
-                payloads.append(encode_webp_anim(
-                    [(0, 0, f0, True, False),
-                     (0, 0, f1, True, False),
-                     (2, 2, f2, False, False)],
-                    4, 4, bg=(0, 0, 0, 255),
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    stats = _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("fs", bases),
-        synth, frame_sample_batches(n_frames=3, real_decode=True),
-        _frame_keyed, pixel_stats_batches,
-    )
-    return stats.selectExpr(
-        "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
-        "CAST(doc_id % 4 AS INT) AS frame_no",
-        "width", "height", "channels", "mean_val", "min_val", "max_val",
+    return _frames_roundtrip(
+        spark, sf_dir, write, _HAS_TEXT + " AND doc_id % 8 = 1"
     )
 
 
@@ -2577,73 +1658,34 @@ def q_multimodal_webp_anim(spark, sf_dir):
     """,
 )
 def q_multimodal_msadpcm(spark, sf_dir):
-    """MS ADPCM (WAVE_FORMAT_ADPCM, tag 0x0002) under the driver hash
-    (r14 — the OTHER classic WAV codec beside IMA, completing the WAV
-    ADPCM pair). doc_id parity picks the tier: m=0 docs pack 16
-    full-range PCM16 samples as EIGHT seed-only blocks (block_align
-    7 = headers only, zero nibbles — the seeds ride the block header
-    verbatim, hashing the block walk, the int16 header fields, and
-    the oldest-first seed emission order); m=1 docs encode one
-    66-sample block on the (0,0) coefficient pair whose 64 codes stay
-    in the ADAPT=230 band, so idelta is pinned at its floor of 16 and
-    every 4-bit code decodes STATELESSLY to code*16 — the adaptive
-    decode loop runs for real executor-side, while the oracle knows
-    the closed form. Free-range adaptation (growing idelta, clamps,
-    all 7 coefficient pairs, stereo interleave) is pinned by the
-    200-block agreement test against an independent spec-text decoder
-    (tests/test_pipeline_ops.py); this query pins the driver-visible
-    slice. encode_wav_msadpcm writes complete RIFF containers (fmt
-    extension with the 7 coefficient pairs, fact, data);
-    decode_audio_samples dispatches tag 0x0002 to
-    _wav_ms_blocks_decode. Scale shape: one scan, one doc_id exchange
-    (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas)."""
-    from typing import Iterator
+    """MS ADPCM (WAVE_FORMAT_ADPCM, tag 0x0002): doc_id parity picks the
+    tier. Even docs pack 16 full-range PCM16 samples as EIGHT seed-only
+    blocks (block_align 7, headers only — the seeds ride the block
+    header verbatim, hashing the block walk, the int16 header fields
+    and the oldest-first seed order); odd docs encode one 66-sample
+    block on the (0,0) coefficient pair whose 64 codes stay in the
+    ADAPT=230 band, so idelta stays at its floor of 16 and every 4-bit
+    code decodes to code·16 — the adaptive loop runs for real while the
+    oracle knows the closed form. Free-range adaptation is pinned by
+    the 200-block agreement test against an independent spec-text
+    decoder (tests/test_pipeline_ops.py). Population: doc_id % 4 < 2,
+    both parities kept."""
+    def write(i, n, cp):
+        vs = _samples(cp, 66 if i % 2 else 16, 45).tolist()
+        if i % 2 == 0:
+            return encode_wav_msadpcm(
+                [(v - 128) * 256 for v in vs], samples_per_block=2
+            )
+        pcm = [(v - 128) * 256 for v in vs[:2]] + [
+            (v % 7 - 3) * 16 for v in vs[2:]
+        ]
+        return encode_wav_msadpcm(
+            pcm, predictor=2, idelta0=16, samples_per_block=66
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_audio_samples,
-        encode_wav_msadpcm,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus, both parities kept
-        & (F.col("doc_id") % 4 < 2)
-    )
-    bs = d.select(
-        "doc_id",
-        (F.col("doc_id") % 2).cast("int").alias("m"),
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(16 if i % 2 == 0 else 66) * 45) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for m, vs in zip(pdf["m"], pdf["vs"]):
-                vs = [int(v) for v in vs]
-                if int(m) == 0:
-                    pcm = [(v - 128) * 256 for v in vs]
-                    payloads.append(
-                        encode_wav_msadpcm(pcm, samples_per_block=2)
-                    )
-                else:
-                    pcm = [(v - 128) * 256 for v in vs[:2]] + [
-                        (v % 7 - 3) * 16 for v in vs[2:]
-                    ]
-                    payloads.append(encode_wav_msadpcm(
-                        pcm, predictor=2, idelta0=16, samples_per_block=66
-                    ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        _formula("vs", bases), synth, audio_sample_batches,
+    return _roundtrip(
+        spark, sf_dir, AUDIO_SAMPLE_STATS_SCHEMA, write, audio_sample_batches,
+        where=_HAS_TEXT + " AND doc_id % 4 < 2",
     )
 
 
@@ -2682,112 +1724,33 @@ def q_multimodal_msadpcm(spark, sf_dir):
     """,
 )
 def q_multimodal_ogg(spark, sf_dir):
-    """Ogg under the driver hash (r15 — RFC 3533, the Xiph container
-    and the last mainstream media container family the ladder lacked;
-    the only tier whose integrity posture is a PER-PAGE CRC-32, so the
-    hash also pins the unreflected 0x04c11db7 implementation: one
-    polynomial bug and no page parses). Per document the data bytes are
-    the stride-29 formula (a 64-byte base cycled to length — see the
-    bs comment); doc_id picks the mux shape so every lacing
-    edge case is hashed every round — packet sizes [300, 510, 0] always
-    (a multi-segment packet, an exact-255-multiple packet needing the
-    explicit 0 terminator, and a ZERO-LENGTH packet), plus
-    100+n_chars%156 when doc_id%3>=1 and a single-full-segment 255 when
-    doc_id%3=2; max_page_payload=500 forces packets to SPAN pages, so
-    the continuation flag and mid-packet granule=-1 path run on every
-    doc. doc_id parity picks the codec mapping: even = OpusHead
-    (channels from (doc_id div 2)%2, pre-skip doc_id%1000 — the u16le
-    field), odd = Vorbis id (rate 8000*(1+doc_id%3), framing bit). The
-    encoder and parser are independent ends of RFC 3533; the oracle
-    replays the size/id arithmetic and the byte formula in SQL — a hash
-    match proves page CRC generation+verification, lacing reassembly
-    across continuation boundaries, and both id-header decodes end to
-    end. The Vorbis/Opus payload codec itself stays policy-gated
-    (decode_audio_samples raises on OggS). Scale shape: one scan, one
-    doc_id exchange (_codec_parallel), Arrow-batched mapInPandas."""
-    from typing import Iterator
+    """Ogg (RFC 3533), whose integrity is a PER-PAGE CRC-32 (one
+    polynomial bug and no page parses). The data bytes are a 64-byte
+    stride-29 base cycled to length; doc_id picks the mux shape so every
+    lacing edge case is hashed — packets of 300, 510 and 0 bytes always
+    (multi-segment, an exact 255 multiple needing the explicit 0
+    terminator, and a ZERO-LENGTH packet), plus 100 + n_chars%156 when
+    doc_id%3 ≥ 1 and a single full 255 segment when doc_id%3 = 2;
+    max_page_payload=500 makes packets SPAN pages, so the continuation
+    flag and mid-packet granule -1 run on every doc. doc_id parity picks
+    the id header: even = OpusHead (channels from (doc_id div 2)%2,
+    pre-skip doc_id%1000), odd = Vorbis id (rate 8000·(1+doc_id%3)).
+    The oracle replays the size/id arithmetic and the byte formula, so
+    a hash match proves page CRCs, lacing reassembly across pages and
+    both id-header decodes. The Vorbis/Opus payload codec stays gated.
+    Population: doc_id % 8 < 4, every strategy kept."""
+    def write(i, n, cp):
+        sizes = [300, 510, 0, 100 + n % 156, 255][: 3 + i % 3]
+        raw = _cycle(_samples(cp, 64, 29), sum(sizes))
+        pkts = [raw[e - s:e] for s, e in zip(sizes, accumulate(sizes))]
+        ch = 1 + (i // 2) % 2
+        ident = (make_vorbis_id(ch, 8000 * (1 + i % 3)) if i % 2 else
+                 make_opus_head(ch, 48000, pre_skip=i % 1000))
+        return encode_ogg(ident, pkts, max_page_payload=500)
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_ogg_stats,
-        encode_ogg,
-        make_opus_head,
-        make_vorbis_id,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus, every doc_id-stride strategy kept
-        # (%2 codec/method/gzip parity, %3 record counts, //2
-        # channel parity all survive doc%8<4); idle sf0.1
-        # measurements that justify the trim are in the commit
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = (
-        d.select(
-            "doc_id",
-            (3 + F.col("doc_id") % 3).cast("int").alias("k"),
-            "n_chars",
-            "text",
-        )
-        .withColumn(
-            "n",
-            F.lit(810)
-            + F.when(F.col("k") >= 4, 100 + F.col("n_chars") % 156).otherwise(0)
-            + F.when(F.col("k") == 5, 255).otherwise(0),
-        )
-        .select(
-            "doc_id",
-            "k",
-            "n",
-            # a 64-byte formula BASE, cycled to n bytes in Python:
-            # evaluating ascii(substring(...)) per DATA byte is O(pos)
-            # per call JVM-side and priced this query at 15.6s idle at
-            # sf0.1 before the r15 fix — the base-cycling form reads
-            # 0.64s with identical lacing coverage (b(i) = base[i%64])
-            "text",
-        )
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 29) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, k, n, row in zip(
-                pdf["doc_id"], pdf["k"], pdf["n"], pdf["bs"]
-            ):
-                doc_id, k, n = int(doc_id), int(k), int(n)
-                base = np.array([int(x) for x in row], dtype=np.uint8)
-                raw = np.tile(base, (n + 63) // 64)[:n].tobytes()
-                sizes = [300, 510, 0]
-                if k >= 4:
-                    sizes.append(len(raw) - 810 - (255 if k == 5 else 0))
-                if k == 5:
-                    sizes.append(255)
-                pkts, off = [], 0
-                for s in sizes:
-                    pkts.append(raw[off : off + s])
-                    off += s
-                ch = 1 + (doc_id // 2) % 2
-                if doc_id % 2 == 0:
-                    ident = make_opus_head(ch, 48000, pre_skip=doc_id % 1000)
-                else:
-                    ident = make_vorbis_id(ch, 8000 * (1 + doc_id % 3))
-                payloads.append(
-                    encode_ogg(ident, pkts, max_page_payload=500)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), OGG_STATS_SCHEMA,
-        _formula("bs", bases), synth, ogg_stats_batches,
+    return _roundtrip(
+        spark, sf_dir, OGG_STATS_SCHEMA, write, ogg_stats_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -2818,89 +1781,25 @@ def q_multimodal_ogg(spark, sf_dir):
     """,
 )
 def q_multimodal_ogg_flac(spark, sf_dir):
-    """FLAC-in-Ogg under the driver hash (r15 — the Xiph FLAC-to-Ogg
-    mapping: the one Ogg payload that decodes all the way to SAMPLES
-    in-tree, because functions/flac.py is a full codec; Vorbis/Opus
-    stay policy-gated). Per document, 64 stride-31 formula bytes pair
-    little-endian into 32 signed 16-bit samples; doc_id mod 4 picks the
-    encode strategy (m=0 mono fixed-predictor, m=1 mono VERBATIM, m=2
-    stereo MID/SIDE, m=3 stereo LEFT/SIDE with quantized LPC — the
-    q_multimodal_flac rotation, here re-muxed) and the complementary
-    corpus half (doc_id%8 >= 4 vs the native-FLAC query's < 4) keeps
-    the pair inside the bench band while covering the full corpus
-    between them. encode_ogg_flac muxes real mapping streams — packet
-    0 is 0x7F'FLAC' + 'fLaC' + STREAMINFO, one frame per packet,
-    block_size 16 so mono docs carry TWO frame packets, page cap 120
-    so packets span pages through the continuation flag — and
-    decode_audio_samples demuxes the pages (per-page CRC-32),
-    rebuilds the native stream, and decodes through parse_flac with
-    its CRC-8/16 + MD5 chain still armed. The oracle is the
-    byte-pairing arithmetic in SQL: a hash match proves bit-exact
-    decode∘(ogg-mux∘flac-encode) = id through BOTH integrity layers.
-    Scale shape: one scan, one doc_id exchange (_codec_parallel),
-    Arrow-batched mapInPandas."""
-    from typing import Iterator
+    """FLAC-in-Ogg, the one Ogg payload that decodes to SAMPLES in-tree:
+    64 stride-31 formula bytes pair little-endian into 32 signed 16-bit
+    samples with the q_multimodal_flac strategy rotation by doc_id mod
+    4. encode_ogg_flac muxes real mapping streams — packet 0 is
+    0x7F'FLAC' + 'fLaC' + STREAMINFO, one frame per packet, block_size
+    16 so mono docs carry two frame packets, page cap 120 so packets
+    span pages — and the reader demuxes the pages (per-page CRC-32),
+    rebuilds the native stream and decodes it through parse_flac with
+    its CRC-8/16 + MD5 chain armed. The oracle is the byte-pairing
+    arithmetic: a hash match proves bit-exact decode∘(mux∘encode) = id
+    through both integrity layers. Population: doc_id % 8 ≥ 4, the
+    half q_multimodal_flac leaves."""
+    def write(i, n, cp):
+        pcm, mode = _flac_input(i, cp, 31)
+        return encode_ogg_flac(pcm, 8000, 16, 16, *mode, max_page_payload=120)
 
-    import pandas as pd
-
-    from polars_express_spark.functions.multimodal import (
-        decode_audio_samples,
-        encode_ogg_flac,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # the complementary half to q_multimodal_flac — all four
-        # doc_id%4 strategies kept (4,5,6,7 mod 4 = 0,1,2,3)
-        & (F.col("doc_id") % 8 >= 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 31) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, row in zip(pdf["doc_id"], pdf["bs"]):
-                raw = np.array([int(x) for x in row], dtype=np.int64)
-                pcm = raw[0::2] + 256 * raw[1::2]
-                pcm = np.where(pcm >= 32768, pcm - 65536, pcm)
-                m = int(doc_id) % 4
-                if m == 0:
-                    payloads.append(
-                        encode_ogg_flac(pcm, 8000, 16, 16, "fixed",
-                                        max_page_payload=120)
-                    )
-                elif m == 1:
-                    payloads.append(
-                        encode_ogg_flac(pcm, 8000, 16, 16, "verbatim",
-                                        max_page_payload=120)
-                    )
-                elif m == 2:
-                    payloads.append(
-                        encode_ogg_flac(pcm.reshape(-1, 2), 8000, 16, 16,
-                                        "fixed", "mid_side",
-                                        max_page_payload=120)
-                    )
-                else:
-                    payloads.append(
-                        encode_ogg_flac(pcm.reshape(-1, 2), 8000, 16, 16,
-                                        "lpc", "left_side",
-                                        max_page_payload=120)
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        _formula("bs", bases), synth, audio_sample_batches,
+    return _roundtrip(
+        spark, sf_dir, AUDIO_SAMPLE_STATS_SCHEMA, write, audio_sample_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 >= 4",
     )
 
 
@@ -2930,84 +1829,24 @@ def q_multimodal_ogg_flac(spark, sf_dir):
     """,
 )
 def q_multimodal_mkv(spark, sf_dir):
-    """Matroska/webm under the driver hash (r15 — the EBML container
-    family, functions/mkv.py: RFC 8794 vints, Segment/Tracks/Cluster
-    walk, SimpleBlock lacing, and the spec's OPTIONAL per-master
-    CRC-32 armed by the writer and verified by the parser). Per
-    document, THREE MJPEG frames (stride-23 formula, frame f phasing
-    the stride — each a baseline JPEG of four constant 8x8 blocks, the
-    q_multimodal_jpeg exactness tier) are muxed executor-side by
-    encode_mkv; doc_id mod 3 picks the block layout so the lacing
-    grammar is hashed every round — 0 = one SimpleBlock per frame
-    (no lacing), 1 = ONE Xiph-laced block (255-run size table), 2 =
-    ONE EBML-laced block (vint first size + signed-vint deltas, the
-    only signed-vint consumer in the repo). sample_frames
-    (real_decode=True) demuxes via parse_mkv_frames — Info/Tracks/
-    Cluster CRC-32s verified — and decodes each frame through
-    parse_jpeg to a PNG; decode_pixel_stats (keyed doc_id*4+frame_no)
-    hashes exact per-frame stats the oracle computes straight from the
-    formula. A hash match proves the EBML walk, all three mux shapes,
-    and the pixel decode end to end. Quarter population (doc_id%8 >=
-    6), disjoint from q_multimodal_video's and q_multimodal_mp4's
-    slices — the three-Arrow-stage video tier prices ~2x a flat codec
-    query per doc. Scale shape: one scan, one doc_id exchange
-    (_codec_parallel), ONE fused Arrow pass (r18: all three stages composed in a single MapInPandas)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.jpeg import encode_jpeg
-    from polars_express_spark.functions.mkv import encode_mkv
-    from polars_express_spark.functions.multimodal import (
-        decode_pixel_stats,
-        sample_frames,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        & (F.col("doc_id") % 8 >= 6)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(4) * 23 + f) % len(cp))] % 256 for f in range(3)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, fs in zip(pdf["doc_id"], pdf["fs"]):
-                frames = [
-                    encode_jpeg(
-                        np.array(p, dtype="u1")
-                        .reshape(2, 2)
-                        .repeat(8, axis=0)
-                        .repeat(8, axis=1)
-                    )
-                    for p in fs
-                ]
-                lac = ["none", "xiph", "ebml"][int(doc_id) % 3]
-                payloads.append(
-                    encode_mkv(frames, 16, 16, "V_MJPEG", lacing=lac)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    stats = _fused(
-        _codec_parallel(px), PIXEL_STATS_SCHEMA,
-        _formula("fs", bases),
-        synth, frame_sample_batches(n_frames=3, real_decode=True),
-        _frame_keyed, pixel_stats_batches,
-    )
-    return stats.selectExpr(
-        "CAST(doc_id DIV 4 AS BIGINT) AS doc_id",
-        "CAST(doc_id % 4 AS INT) AS frame_no",
-        "width", "height", "channels", "mean_val", "min_val", "max_val",
+    """Matroska/webm (functions/mkv.py: RFC 8794 vints, the
+    Segment/Tracks/Cluster walk, SimpleBlock lacing, and the OPTIONAL
+    per-master CRC-32 armed by the writer and verified by the parser).
+    Three MJPEG frames per document (stride-23, frame f phasing the
+    stride, four constant 8×8 blocks each) are muxed by encode_mkv with
+    the block layout doc_id mod 3 picks — one SimpleBlock per frame,
+    ONE Xiph-laced block, or ONE EBML-laced block (signed-vint size
+    deltas). The reader demuxes via parse_mkv_frames and decodes each
+    frame through parse_jpeg to a PNG whose stats the oracle computes
+    from the formula. Population: doc_id % 8 ≥ 6, disjoint from the
+    video and mp4 slices."""
+    return _frames_roundtrip(
+        spark, sf_dir,
+        lambda i, n, cp: encode_mkv(
+            _mjpeg_frames(cp, 23), 16, 16, "V_MJPEG",
+            lacing=("none", "xiph", "ebml")[i % 3],
+        ),
+        _HAS_TEXT + " AND doc_id % 8 >= 6",
     )
 
 
@@ -3049,110 +1888,43 @@ def q_multimodal_mkv(spark, sf_dir):
     """,
 )
 def q_multimodal_mkv_audio(spark, sf_dir):
-    """Matroska PCM audio under the driver hash (r15 — the audio half
-    of the EBML tier; the only tier that hashes BOTH byte orders of
-    the same codec id, because Matroska splits them into
-    A_PCM/INT/LIT and A_PCM/INT/BIG). Per document, 64 stride-27
-    formula bytes ARE the track payload; the interpretation is what's
-    differentially tested — (doc_id div 4) parity picks 8-bit SIGNED
-    PCM (Matroska PCM8, unlike WAV's unsigned) vs 16-bit, doc_id
-    parity picks little vs big endian at 16 bits, and doc_id mod 4
-    picks the mux: 0 = one block per 16-byte frame (no lacing), 1 =
-    Xiph lacing, 2 = FIXED lacing (the equal-size table-free mode —
-    only exercisable here where frames are equal), 3 = EBML lacing.
-    encode_mkv writes CRC-32-armed masters; decode_audio_samples
-    demuxes via parse_mkv_audio and ships exact stats. The
-    (doc_id div 8) parity residue (r17) re-codes the SAME samples as
-    an A_FLAC track — fLaC+STREAMINFO in CodecPrivate, one complete
-    FLAC frame per Matroska frame per the public codec mapping — so
-    the full flac.py CRC-8/16+MD5 chain runs UNDER the EBML demux
-    (the FLAC-in-Ogg composition repeated for Matroska) and the
-    lossless round trip keeps the oracle identical. The oracle
-    replays the endianness/sign arithmetic with the established
-    lead() idiom. Scale shape: one scan, one doc_id exchange
-    (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas)."""
-    from typing import Iterator
+    """Matroska PCM audio, the one tier that hashes BOTH byte orders of
+    one codec (A_PCM/INT/LIT and A_PCM/INT/BIG). 64 stride-27 formula
+    bytes ARE the track payload; (doc_id div 4) parity picks 8-bit
+    SIGNED PCM vs 16-bit, doc_id parity little vs big endian at 16
+    bits, and doc_id mod 4 the mux — one block per 16-byte frame, Xiph
+    lacing, FIXED lacing (the equal-size table-free mode) or EBML
+    lacing. The (doc_id div 8) parity residue re-codes the SAME samples
+    as an A_FLAC track (fLaC+STREAMINFO in CodecPrivate, one FLAC frame
+    per Matroska frame, lacing none/xiph/ebml by doc_id mod 3), so the
+    flac.py CRC-8/16+MD5 chain runs under the EBML demux and the
+    lossless round trip keeps the oracle identical. The oracle replays
+    the endianness/sign arithmetic with the lead() idiom."""
+    def write(i, n, cp):
+        raw = _samples(cp, 64, 27).tobytes()
+        bits = 8 if (i // 4) % 2 else 16
+        if (i // 8) % 2:
+            dt = "i1" if bits == 8 else (">i2" if i % 2 else "<i2")
+            si, frames = encode_flac_parts(
+                np.frombuffer(raw, dt).astype(np.int64)[:, None],
+                sample_rate=8000, bits_per_sample=bits, block_size=16,
+            )
+            return encode_mkv(
+                None, channels=1, rate=8000, bit_depth=bits,
+                audio_codec="A_FLAC", audio_frames=frames,
+                audio_codec_private=b"fLaC" + si,
+                lacing=("none", "xiph", "ebml")[i % 3],
+            )
+        return encode_mkv(
+            None, audio_data=raw, channels=1, rate=8000, bit_depth=bits,
+            audio_codec="A_PCM/INT/BIG" if bits == 16 and i % 2
+            else "A_PCM/INT/LIT",
+            lacing=("none", "xiph", "fixed", "ebml")[i % 4],
+            audio_frame_bytes=16,
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.mkv import encode_mkv
-    from polars_express_spark.functions.multimodal import (
-        decode_audio_samples,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    bs = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 27) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from polars_express_spark.functions.flac import encode_flac_parts
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, row in zip(pdf["doc_id"], pdf["bs"]):
-                doc_id = int(doc_id)
-                raw = bytes(int(x) for x in row)
-                eight = (doc_id // 4) % 2 == 1
-                codec = (
-                    "A_PCM/INT/LIT" if doc_id % 2 == 0 else "A_PCM/INT/BIG"
-                )
-                if (doc_id // 8) % 2 == 1:
-                    # r17: the A_FLAC residue — the SAME samples the
-                    # doc's PCM interpretation yields, losslessly FLAC-
-                    # coded (block size 16 → several frames), muxed
-                    # with fLaC+STREAMINFO in CodecPrivate and one
-                    # complete FLAC frame per Matroska frame per the
-                    # public codec mapping; the oracle is unchanged
-                    # because the round trip is exact. Lacing rotates
-                    # none/xiph/ebml (fixed needs equal sizes, which
-                    # FLAC frames don't have).
-                    if eight:
-                        samps = np.frombuffer(raw, np.int8)
-                    else:
-                        dt = "<i2" if doc_id % 2 == 0 else ">i2"
-                        samps = np.frombuffer(raw, dt)
-                    si, fl_frames = encode_flac_parts(
-                        samps.astype(np.int64)[:, None],
-                        sample_rate=8000,
-                        bits_per_sample=8 if eight else 16,
-                        block_size=16,
-                    )
-                    payloads.append(
-                        encode_mkv(
-                            None, channels=1, rate=8000,
-                            bit_depth=8 if eight else 16,
-                            audio_codec="A_FLAC",
-                            audio_frames=fl_frames,
-                            audio_codec_private=b"fLaC" + si,
-                            lacing=["none", "xiph", "ebml"][doc_id % 3],
-                        )
-                    )
-                    continue
-                lac = ["none", "xiph", "fixed", "ebml"][doc_id % 4]
-                payloads.append(
-                    encode_mkv(
-                        None, audio_data=raw, channels=1, rate=8000,
-                        bit_depth=8 if eight else 16,
-                        audio_codec="A_PCM/INT/LIT" if eight else codec,
-                        lacing=lac, audio_frame_bytes=16,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), AUDIO_SAMPLE_STATS_SCHEMA,
-        _formula("bs", bases), synth, audio_sample_batches,
+    return _roundtrip(
+        spark, sf_dir, AUDIO_SAMPLE_STATS_SCHEMA, write, audio_sample_batches
     )
 
 
@@ -3191,92 +1963,35 @@ def q_multimodal_mkv_audio(spark, sf_dir):
     """,
 )
 def q_warc_extract(spark, sf_dir):
-    """WARC crawl extraction under the driver hash (r15 — the Common
-    Crawl archive grammar, functions/warc.py; the §2.10 ingestion tier
-    a training pipeline actually starts from). Per document a real
-    WARC archive is muxed executor-side — a warcinfo record then
-    1 + doc_id%3 HTTP response records whose bodies are stride-13
-    formula bytes cycled from a 64-byte base (record r phasing the
-    stride, length 50 + (n_chars + 7r)%100) and whose statuses rotate
-    200/404/301 — gzipped PER MEMBER for odd docs (the splittability
-    convention; zlib verifies each member's CRC-32 trailer) and plain
-    for even. r18: each response's BODY rotates through the four HTTP
-    wire forms by (doc+r)%4 — identity, Transfer-Encoding: chunked
-    (chunk size 7 + doc%40, framing must consume the record exactly),
-    Content-Encoding: gzip, and chunked-over-gzip (the RFC layering) —
-    exactly what real Common Crawl response records carry; the decoded
-    body stats are wire-form-invariant and body_mode pins the coding
-    under the hash. read_warc_records then re-parses the archive,
-    splits + DECODES each HTTP payload, and ships one row per response
-    with exact body-byte stats. Writer and reader are independent ends of ISO 28500 +
-    RFC 9110 framing; the oracle replays the size/status/URI
-    arithmetic in SQL — a hash match proves record framing,
-    Content-Length discipline, per-member gunzip, and the HTTP split
-    end to end, through the generator-shaped row explosion. Scale
-    shape: one scan, one doc_id exchange (_codec_parallel), ONE fused
-    Arrow pass (r18)."""
-    from typing import Iterator
+    """WARC crawl extraction (ISO 28500, the Common Crawl archive
+    grammar): a warcinfo record then 1 + doc_id%3 HTTP response records
+    whose bodies are stride-13 samples cycled from a 64-byte base
+    (record r phasing the stride, length 50 + (n_chars + 7r)%100) and
+    whose statuses rotate 200/404/301, gzipped PER MEMBER for odd docs
+    (zlib verifies each member's CRC-32) and plain for even. Each
+    body's HTTP wire form rotates by (doc+r)%4 — identity,
+    Transfer-Encoding: chunked (chunk size 7 + doc%40), Content-Encoding:
+    gzip, and chunked-over-gzip; the decoded body stats do not depend
+    on the form, and body_mode pins it. The reader re-parses the
+    archive, splits and decodes each HTTP payload and ships one row per
+    response. The oracle replays the size/status/URI arithmetic, so a
+    hash match proves record framing, Content-Length discipline,
+    per-member gunzip and the HTTP split. Population: doc_id % 8 < 4,
+    every strategy kept."""
+    def write(i, n, cp):
+        resps = [
+            (f"http://example.com/{i}/{r}", (200, 404, 301)[r % 3],
+             _cycle(_samples(cp, 64, 13, r), 50 + (n + r * 7) % 100),
+             ("identity", "chunked", "gzip", "chunked+gzip")[(i + r) % 4])
+            for r in range(1 + i % 3)
+        ]
+        return encode_warc(
+            resps, gzip_members=i % 2 == 1, chunk_size=7 + i % 40
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.warc import (
-        encode_warc,
-        read_warc_records,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus, every doc_id-stride strategy kept
-        # (%2 codec/method/gzip parity, %3 record counts, //2
-        # channel parity all survive doc%8<4); idle sf0.1
-        # measurements that justify the trim are in the commit
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        # 64-byte bases per record, cycled to body_len in Python (the
-        # per-data-byte JVM formula form read 3.85s idle at sf0.1;
-        # base-cycling is equivalent per the oracle's i%64 replay)
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(64) * 13 + r) % len(cp))] % 256
-                for r in range(i % 3 + 1)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                resps = []
-                for r, base in enumerate(fs):
-                    status = [200, 404, 301][r % 3]
-                    ln = 50 + (n_chars + r * 7) % 100
-                    arr = np.array([int(x) for x in base], dtype=np.uint8)
-                    body = np.tile(arr, (ln + 63) // 64)[:ln].tobytes()
-                    mode = ["identity", "chunked", "gzip",
-                            "chunked+gzip"][(doc_id + r) % 4]
-                    resps.append(
-                        (f"http://example.com/{doc_id}/{r}", status,
-                         body, mode)
-                    )
-                payloads.append(
-                    encode_warc(resps, gzip_members=doc_id % 2 == 1,
-                                chunk_size=7 + doc_id % 40)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), WARC_RECORDS_SCHEMA,
-        _formula("fs", bases), synth, warc_record_batches,
+    return _roundtrip(
+        spark, sf_dir, WARC_RECORDS_SCHEMA, write, warc_record_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -3325,84 +2040,41 @@ def q_warc_extract(spark, sf_dir):
     """,
 )
 def q_multimodal_mp3(spark, sf_dir):
-    """MP3 metadata under the driver hash (r15 — the audio twin of the
-    JPEG SOF walk, functions/mp3.py: the most mainstream audio format
-    gets honest frame-chain metadata while its sample codec stays
-    policy-gated). Per document, 3 + doc_id%4 MPEG-1 Layer III frames:
-    doc parity picks CBR 128 vs VBR rotating 64/128/192/320 (so the
-    whole bitrate-index table is hashed), doc_id mod 3 the sample rate
-    (all three MPEG-1 rates), doc_id mod 4 the channel mode, per-frame
-    padding bits alternate by (doc_id+f) parity — and the walk strides
-    by floor(144000·kbps/rate)+pad, so byte_len pins the size formula
-    frame by frame (one wrong table entry desyncs the walk and the
-    query errors). Even docs carry a REAL ID3v2 tag whose
-    TIT2 title lands under the hash (decoded by parse_id3v2 — v2.4
-    syncsafe vs v2.3 plain frame sizes by (doc_id div 2) parity; the
-    doc%8==6 residue writes v2.3 UNSYNCHRONISED (r17) with a 0xFF
-    title byte, so the whole-tag 0xFF 0x00 un-escape and the
-    escaped-size accounting are both value-pinned), every third doc
-    the fixed ID3v1 trailer. decode_mp3_meta ships the
-    metadata; the oracle replays all the arithmetic in SQL. Scale shape: one scan,
-    one doc_id exchange (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas)."""
-    from typing import Iterator
+    """MP3 metadata (functions/mp3.py; the sample codec stays gated):
+    3 + doc_id%4 MPEG-1 Layer III frames per document — doc parity
+    picks CBR 128 vs VBR rotating 64/128/192/320 (the whole bitrate
+    table), doc_id mod 3 the sample rate, doc_id mod 4 the channel
+    mode, (doc_id+f) parity each frame's padding bit — and the reader
+    strides by floor(144000·kbps/rate)+pad, so byte_len pins the size
+    formula frame by frame. Even docs carry a REAL ID3v2 tag whose TIT2
+    title is hashed: v2.4 syncsafe vs v2.3 plain frame sizes by
+    (doc_id div 2) parity; doc%8 = 6 writes v2.3 UNSYNCHRONISED with a
+    0xFF title byte ('ÿ' in Latin-1), so the 0xFF 0x00 un-escape is
+    value-pinned, and doc%8 = 4 arms v2.4's per-frame flag (UTF-8 text
+    has no 0xFF, so there only the flag handling is hashed). Every
+    third doc adds the ID3v1 trailer. The oracle replays all the
+    arithmetic in SQL."""
+    def write(i, n, cp):
+        frames = range(3 + i % 4)
+        tag = None
+        if i % 2 == 0:
+            tag = encode_id3v2(
+                {"TIT2": f"doc-{i}-{n % 97}" + ("ÿ" if i % 8 == 6 else "")},
+                version=4 if (i // 2) % 2 == 0 else 3,
+                unsync=i % 8 in (4, 6),
+            )
+        return encode_mp3_frames(
+            [(64, 128, 192, 320)[(i + f) % 4] if i % 2 else 128
+             for f in frames],
+            (44100, 48000, 32000)[i % 3],
+            ("stereo", "joint_stereo", "dual_channel", "mono")[i % 4],
+            paddings=[(i + f) % 2 for f in frames],
+            id3v2_tag=tag,
+            id3v1=i % 3 == 0,
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.mp3 import (
-        decode_mp3_meta,
-        encode_id3v2,
-        encode_mp3_frames,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    bs = d.select("doc_id", "n_chars")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                n = 3 + doc_id % 4
-                if doc_id % 2 == 1:
-                    ks = [[64, 128, 192, 320][(doc_id + f) % 4]
-                          for f in range(n)]
-                else:
-                    ks = [128] * n
-                tag = None
-                if doc_id % 2 == 0:
-                    # a REAL tag: TIT2 under the hash, v2.4 syncsafe vs
-                    # v2.3 plain frame sizes by (doc_id div 2) parity;
-                    # the doc%8==6 residue (half the v2.3 docs) writes
-                    # the UNSYNCHRONISED form (r17) with a 0xFF title
-                    # byte ('ÿ' in Latin-1) so the 0xFF 0x00 un-escape
-                    # is value-pinned, not just flag-deep
-                    # the doc%8==4 residue arms v2.4's PER-FRAME flag
-                    # (format flag 0x02; UTF-8 text carries no 0xFF so
-                    # the escape is vacuous there by construction —
-                    # the flag/branch handling is what's hashed)
-                    unsync = doc_id % 8 in (4, 6)
-                    tag = encode_id3v2(
-                        {"TIT2": f"doc-{doc_id}-{n_chars % 97}"
-                                 + ("ÿ" if doc_id % 8 == 6 else "")},
-                        version=4 if (doc_id // 2) % 2 == 0 else 3,
-                        unsync=unsync,
-                    )
-                payloads.append(encode_mp3_frames(
-                    ks,
-                    [44100, 48000, 32000][doc_id % 3],
-                    ["stereo", "joint_stereo", "dual_channel",
-                     "mono"][doc_id % 4],
-                    paddings=[(doc_id + f) % 2 for f in range(n)],
-                    id3v2_tag=tag,
-                    id3v1=doc_id % 3 == 0,
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), MP3_META_SCHEMA,
-        synth, mp3_meta_batches,
+    return _roundtrip(
+        spark, sf_dir, MP3_META_SCHEMA, write, mp3_meta_batches
     )
 
 
@@ -3436,79 +2108,28 @@ def q_multimodal_mp3(spark, sf_dir):
     """,
 )
 def q_zip_extract(spark, sf_dir):
-    """Zip corpus extraction under the driver hash (r15 — the other
-    archive-ingestion grammar next to WARC, functions/ziparc.py,
-    cross-verified both ways against the stdlib zipfile module in the
-    property suite). Per document a real zip is muxed executor-side —
-    1 + doc_id%3 members named corpus/{doc}/{e}.txt with stride-19
-    formula bodies cycled from 64-byte bases (entry e phasing the
-    stride, length 40 + (n_chars + 11e)%120) — DEFLATE for even docs, STORED for odd (both
-    methods hashed every round). read_zip_entries re-parses via the
-    EOCD → central directory → local header chain, inflates behind the
-    bomb cap, verifies each member's CRC-32 and declared size (zip's
-    own integrity: the exhaustive single-flip sweep shows member DATA
-    can never silently alter — only names, which the format leaves
-    unchecksummed), and ships one row per member with exact stats.
-    comp_size is NOT hashed (DEFLATE output is a zlib implementation
-    detail, not a format invariant). The oracle replays the name/size/
-    method/byte arithmetic in SQL. Scale shape: one scan, one doc_id
-    exchange (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas)."""
-    from typing import Iterator
+    """Zip corpus extraction (functions/ziparc.py, cross-verified against
+    the stdlib zipfile module in the property suite): 1 + doc_id%3
+    members named corpus/{doc}/{e}.txt with stride-19 bodies cycled from
+    64-byte bases (entry e phasing by 3e, length 40 + (n_chars +
+    11e)%120), DEFLATE for even docs and STORED for odd. The reader
+    walks EOCD → central directory → local headers, inflates behind the
+    bomb cap, verifies each member's CRC-32 and declared size, and
+    ships one row per member. comp_size is dropped: DEFLATE output is a
+    zlib implementation detail, not a format invariant. The oracle
+    replays the name/size/method/byte arithmetic. Population: doc_id %
+    8 < 4."""
+    def write(i, n, cp):
+        entries = [
+            (f"corpus/{i}/{e}.txt",
+             _cycle(_samples(cp, 64, 19, e * 3), 40 + (n + e * 11) % 120))
+            for e in range(1 + i % 3)
+        ]
+        return encode_zip(entries, method=8 if i % 2 == 0 else 0)
 
-    import pandas as pd
-
-    from polars_express_spark.functions.ziparc import (
-        encode_zip,
-        read_zip_entries,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus, every doc_id-stride strategy kept
-        # (%2 codec/method/gzip parity, %3 record counts, //2
-        # channel parity all survive doc%8<4); idle sf0.1
-        # measurements that justify the trim are in the commit
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        # 64-byte bases, cycled in Python (see q_multimodal_ogg: the
-        # per-data-byte JVM formula priced this at 4.84s idle at sf0.1)
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(64) * 19 + e * 3) % len(cp))] % 256
-                for e in range(i % 3 + 1)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                entries = []
-                for e, base in enumerate(fs):
-                    ln = 40 + (n_chars + e * 11) % 120
-                    arr = np.array([int(x) for x in base], dtype=np.uint8)
-                    entries.append(
-                        (f"corpus/{doc_id}/{e}.txt",
-                         np.tile(arr, (ln + 63) // 64)[:ln].tobytes())
-                    )
-                payloads.append(
-                    encode_zip(entries, method=8 if doc_id % 2 == 0 else 0)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), ZIP_ENTRIES_SCHEMA,
-        _formula("fs", bases), synth, zip_entry_batches,
+    return _roundtrip(
+        spark, sf_dir, ZIP_ENTRIES_SCHEMA, write, zip_entry_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     ).drop("comp_size")
 
 
@@ -3545,93 +2166,35 @@ def q_zip_extract(spark, sf_dir):
     """,
 )
 def q_tar_extract(spark, sf_dir):
-    """Tar/WebDataset-shard extraction under the driver hash (r15 —
-    the third archive-ingestion grammar, functions/tar.py; WebDataset
-    shards ARE tar files, so this is the shard-reading path of a
-    training pipeline). Per document a real ustar archive is muxed
-    executor-side — 1 + doc_id%3 members shard/{doc}/{e}.bin with
-    stride-21 formula bodies cycled from 64-byte bases (entry e
-    phasing the stride, size 30 + (n_chars + 13e)%150, exercising
-    block padding at every residue) — the shard wrapper rotating
-    bare / .tar.gz (capped inflate) / bare / .tar.zst (r18 — the
-    checksummed RFC 8878 stream through functions/zstd.py) by doc%4.
-    r18: entries
-    with (doc+e)%3==2 take a 130+-char deep/ppp.../ path that
-    overflows the 100-byte ustar name field, emitted as a GNU 'L'
-    long-name member for doc%4<2 and a pax 'x' extended header
-    otherwise — the modern tar default this tier previously rejected
-    — so both long-name grammars sit under the hash, mixed with
-    short-name members in the same archive. read_tar_entries re-walks the 512-byte block
-    grammar, verifies every header checksum, and ships one row per
-    member with exact stats; writer and reader cross-verify against
-    the stdlib tarfile module in the property suite. The oracle
-    replays the name/size/byte arithmetic in SQL. Scale shape: one
-    scan, one doc_id exchange (_codec_parallel), ONE fused Arrow
-    pass (r18)."""
-    from typing import Iterator
+    """Tar / WebDataset-shard extraction (functions/tar.py; WebDataset
+    shards are tar files): 1 + doc_id%3 members with stride-21 bodies
+    cycled from 64-byte bases (entry e phasing by 5e, size 30 + (n_chars
+    + 13e)%150, so block padding varies), the archive bare, .tar.gz
+    (capped inflate), bare or .tar.zst by doc%4. Entries with
+    (doc+e)%3 = 2 take a 130+-character deep/ppp.../ path that
+    overflows the 100-byte ustar name field, written as a GNU 'L'
+    long-name member for doc%4 < 2 and a pax 'x' header otherwise, so
+    both long-name grammars are hashed next to short names. The reader
+    re-walks the 512-byte block grammar, verifies every header checksum
+    and ships one row per member; writer and reader cross-verify
+    against the stdlib tarfile module in the property suite. The oracle
+    replays the name/size/byte arithmetic. Population: doc_id % 8 <
+    4."""
+    def write(i, n, cp):
+        entries = [
+            (f"deep/{'p' * 120}/{i}/{e}.bin" if (i + e) % 3 == 2
+             else f"shard/{i}/{e}.bin",
+             _cycle(_samples(cp, 64, 21, e * 5), 30 + (n + e * 13) % 150))
+            for e in range(1 + i % 3)
+        ]
+        return encode_tar(
+            entries, compression=(None, "gz", None, "zst")[i % 4],
+            long_names="gnu" if i % 4 < 2 else "pax",
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.tar import (
-        TAR_ENTRIES_SCHEMA,
-        encode_tar,
-        tar_entry_batches,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus, every doc_id-stride strategy kept
-        # (%2 codec/method/gzip parity, %3 record counts, //2
-        # channel parity all survive doc%8<4); idle sf0.1
-        # measurements that justify the trim are in the commit
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        # 64-byte bases, cycled in Python (see q_multimodal_ogg: the
-        # per-data-byte JVM formula priced this at 4.35s idle at sf0.1)
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(64) * 21 + e * 5) % len(cp))] % 256
-                for e in range(i % 3 + 1)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                entries = []
-                for e, base in enumerate(fs):
-                    ln = 30 + (n_chars + e * 13) % 150
-                    arr = np.array([int(x) for x in base], dtype=np.uint8)
-                    name = (f"deep/{'p' * 120}/{doc_id}/{e}.bin"
-                            if (doc_id + e) % 3 == 2
-                            else f"shard/{doc_id}/{e}.bin")
-                    entries.append(
-                        (name,
-                         np.tile(arr, (ln + 63) // 64)[:ln].tobytes())
-                    )
-                payloads.append(
-                    encode_tar(entries,
-                               compression=[None, "gz", None,
-                                            "zst"][doc_id % 4],
-                               long_names="gnu" if doc_id % 4 < 2
-                               else "pax")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), TAR_ENTRIES_SCHEMA,
-        _formula("fs", bases), synth, tar_entry_batches,
+    return _roundtrip(
+        spark, sf_dir, TAR_ENTRIES_SCHEMA, write, tar_entry_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -3673,72 +2236,24 @@ def q_tar_extract(spark, sf_dir):
     """,
 )
 def q_tfrecord_extract(spark, sf_dir):
-    """TFRecord shard extraction under the driver hash (r15 — the
-    TensorFlow training-shard framing, functions/tfrecord.py; with
-    WARC/tar/zip this completes the §2.10 ingestion set). Per document
-    a real shard is muxed executor-side — 2 + doc_id%3 records with
-    stride-23 formula payloads cycled from 64-byte bases (record r
-    phasing the stride, size 20 + (n_chars + 17r)%200), record 1 always ZERO-LENGTH (the empty-
-    record framing edge). read_tfrecord_records re-parses the shard
-    verifying BOTH masked CRC32Cs per record — the Castagnoli table
-    and the TFRecord mask rotation are pinned by the hash, because one
-    wrong constant fails every record — and ships one row per record
-    with exact stats. The oracle replays the size/byte arithmetic in
-    SQL (a LEFT JOIN keeps the empty record's zero-stats row). Scale
-    shape: one scan, one doc_id exchange (_codec_parallel), ONE fused
-    Arrow pass (r18)."""
-    from typing import Iterator
+    """TFRecord shard extraction (functions/tfrecord.py): 2 + doc_id%3
+    records with stride-23 payloads cycled from 64-byte bases (record r
+    phasing by 7r, size 20 + (n_chars + 17r)%200), record 1 always
+    ZERO-LENGTH. The reader verifies BOTH masked CRC32Cs per record —
+    one wrong Castagnoli table entry or mask constant fails every
+    record — and ships one row per record. The oracle replays the
+    size/byte arithmetic (a LEFT JOIN keeps the empty record's
+    zero-stats row). Population: doc_id % 8 < 4."""
+    def write(i, n, cp):
+        return encode_tfrecord([
+            b"" if r == 1 else
+            _cycle(_samples(cp, 64, 23, r * 7), 20 + (n + r * 17) % 200)
+            for r in range(2 + i % 3)
+        ])
 
-    import pandas as pd
-
-    from polars_express_spark.functions.tfrecord import (
-        encode_tfrecord,
-        read_tfrecord_records,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus, every doc_id-stride strategy kept
-        # (%2 codec/method/gzip parity, %3 record counts, //2
-        # channel parity all survive doc%8<4); idle sf0.1
-        # measurements that justify the trim are in the commit
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        # 64-byte bases, cycled in Python (the archive-tier idiom:
-        # per-data-byte JVM formulas are O(pos) per substring call)
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(64) * 23 + r * 7) % len(cp))] % 256
-                for r in range(2 + i % 3)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for n_chars, fs in zip(pdf["n_chars"], pdf["fs"]):
-                n_chars = int(n_chars)
-                recs = []
-                for r, base in enumerate(fs):
-                    if r == 1:  # the zero-length framing edge
-                        recs.append(b"")
-                        continue
-                    ln = 20 + (n_chars + r * 17) % 200
-                    arr = np.array([int(x) for x in base], dtype=np.uint8)
-                    recs.append(np.tile(arr, (ln + 63) // 64)[:ln].tobytes())
-                payloads.append(encode_tfrecord(recs))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), TFRECORD_SCHEMA,
-        _formula("fs", bases), synth, tfrecord_record_batches,
+    return _roundtrip(
+        spark, sf_dir, TFRECORD_SCHEMA, write, tfrecord_record_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -3793,110 +2308,40 @@ def q_tfrecord_extract(spark, sf_dir):
     """,
 )
 def q_tfexample_extract(spark, sf_dir):
-    """tf.Example decode under the driver hash (r16 — lifting the
-    TFRecord tier's payload gate: tf.Example is a FIXED public
-    protobuf message, so functions/protowire.py decodes it from the
-    wire format with no schema registry). Per document a real TFRecord
-    shard of 2 + doc_id%3 tf.Example records is muxed executor-side;
-    each record carries a bytes feature 'txt' (1 + r%2 byte strings —
-    stride-13 formula bodies cycled from ONE 64-byte base per record,
-    the second string a +7 byte-rotation of the same base), an int64
-    feature 'ids' (1 + (doc+r)%4 varint values), and a float feature
-    'emb' (2 + (doc+r)%3 float32 values, quarter-integer so the f32
-    round trip is exact) — PACKED numeric encoding for even docs and
-    the per-element unpacked form for odd docs, so both legal proto3
-    wire layouts are hashed every round. read_tfexample_records
-    re-verifies the TFRecord CRCs, walks the wire format (Example →
-    Features → map entries → Feature oneof), and ships one row per
-    (record, feature) with kind, element count, and exact value sums.
-    The oracle replays all three features' arithmetic in SQL. Scale
-    shape: one scan, one doc_id exchange (_codec_parallel), ONE fused
-    Arrow pass (r18)."""
-    from typing import Iterator
+    """tf.Example decode (a fixed public protobuf message, decoded from
+    the wire format by functions/protowire.py with no schema registry):
+    a TFRecord shard of 2 + doc_id%3 tf.Example records, each with a
+    bytes feature 'txt' (1 + r%2 strings cycled from one stride-13
+    64-byte base per record, the second a +7 byte rotation of it), an
+    int64 feature 'ids' (1 + (doc+r)%4 varints) and a float feature
+    'emb' (2 + (doc+r)%3 quarter-integer float32 values, exact through
+    f32) — PACKED numeric encoding for even docs, unpacked for odd, so
+    both proto3 wire layouts are hashed. The reader re-verifies the
+    TFRecord CRCs, walks Example → Features → map entries → Feature
+    oneof and ships one row per (record, feature) with kind, element
+    count and exact value sums; the oracle replays all three features.
+    Population: doc_id % 8 < 2 (both parities, every record count)."""
+    def write(i, n, cp):
+        recs = []
+        for r in range(2 + i % 3):
+            base = _samples(cp, 64, 13, r * 5)
+            recs.append(encode_tf_example(
+                {"txt": ("bytes",
+                         [_cycle(base, 10 + (n + 7 * r + 11 * t) % 120, 7 * t)
+                          for t in range(1 + r % 2)]),
+                 "ids": ("int64",
+                         [(n * j + r) % 100000
+                          for j in range(1, 2 + (i + r) % 4)]),
+                 "emb": ("float",
+                         [((n + 31 * j + 17 * r) % 512) / 4.0
+                          for j in range(2 + (i + r) % 3)])},
+                packed=i % 2 == 0,
+            ))
+        return encode_tfrecord(recs)
 
-    import pandas as pd
-
-    from polars_express_spark.functions.protowire import (
-        encode_tf_example,
-        read_tfexample_records,
-    )
-    from polars_express_spark.functions.tfrecord import encode_tfrecord
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # quarter population — this query does strictly more work than
-        # its q_tfrecord_extract sibling (same CRC framing PLUS the
-        # full payload decode and 3 output rows per record), so it
-        # takes the smaller slice; every strategy survives: packed
-        # parity needs doc%2 ∈ {0,1} (doc%8<2 gives both), record
-        # counts doc%3 span all residues over {0,1,8,9,16,17,...}, and
-        # the %4/%3 list lengths key on (doc_id + r) with r spanning
-        # 0..k-1. Idle sf0.1 measurement in the commit (the standing
-        # trim ratchet).
-        & (F.col("doc_id") % 8 < 2)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        # ONE 64-byte base per record, cycled in Python; the second
-        # byte string of odd records derives from the same base via a
-        # +7t rotation Python-side — keeping the JVM substring count
-        # at the 64·k archive-tier norm (an earlier per-string base
-        # doubled it and priced this query at 3.3s idle sf0.1)
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(64) * 13 + r * 5) % len(cp))] % 256
-                for r in range(2 + i % 3)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                recs = []
-                for r, base in enumerate(fs):
-                    base_arr = np.array(
-                        [int(x) for x in base], dtype=np.uint8
-                    )
-                    strs = []
-                    for t in range(1 + r % 2):
-                        ln = 10 + (n_chars + 7 * r + 11 * t) % 120
-                        arr = ((base_arr.astype(np.int64) + 7 * t) % 256).astype(np.uint8)
-                        strs.append(
-                            np.tile(arr, (ln + 63) // 64)[:ln].tobytes()
-                        )
-                    n_ids = 1 + (doc_id + r) % 4
-                    ids = [
-                        (n_chars * j + r) % 100000
-                        for j in range(1, n_ids + 1)
-                    ]
-                    n_emb = 2 + (doc_id + r) % 3
-                    emb = [
-                        ((n_chars + 31 * j + 17 * r) % 512) / 4.0
-                        for j in range(n_emb)
-                    ]
-                    recs.append(
-                        encode_tf_example(
-                            {"txt": ("bytes", strs),
-                             "ids": ("int64", ids),
-                             "emb": ("float", emb)},
-                            packed=doc_id % 2 == 0,
-                        )
-                    )
-                payloads.append(encode_tfrecord(recs))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), TFEXAMPLE_SCHEMA,
-        _formula("fs", bases), synth, tfexample_record_batches,
+    return _roundtrip(
+        spark, sf_dir, TFEXAMPLE_SCHEMA, write, tfexample_record_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 2",
     )
 
 
@@ -3961,99 +2406,43 @@ def q_tfexample_extract(spark, sf_dir):
     """,
 )
 def q_tfseq_extract(spark, sf_dir):
-    """tf.SequenceExample decode under the driver hash (r17 — the
-    SECOND fixed public TF training format, sequence_example.proto:
-    context Features + per-step FeatureLists, the shape sequence /
-    video / RL corpora ship). Per document a real TFRecord shard of
-    1 + doc_id%2 SequenceExamples is muxed executor-side; each record
-    carries a CONTEXT block (a bytes 'doc' string — stride-43 formula
-    bytes cycled from the doc's ONE 64-byte base with a +3r rotation —
-    and a quarter-integer float 'weight') plus two FEATURE LISTS:
-    'toks' with 1 + (doc+r)%3 int64 steps of 1 + (n_chars+t)%4 varints
-    spanning negatives, and 'frames' with 1 + (doc+r)%2 bytes steps
-    whose +11r+7t-rotated formula bodies pin every step payload —
-    PACKED numeric encoding for even docs, per-element unpacked for
-    odd, so both legal proto3 layouts are hashed. read_tfseq_records
-    re-verifies the TFRecord CRCs, walks SequenceExample → context /
-    FeatureLists → map entries → per-step Feature oneofs, and ships
-    one row per context feature (step -1) and per (list, step). The
-    oracle replays every formula in SQL. Scale shape: one scan, one
-    doc_id exchange (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas); quarter
-    population doc%8 in {2,3}, disjoint from the tfexample slice, with
-    every strategy surviving (%2 parity and record counts, %3/%2 step
-    counts key on doc+r)."""
-    from typing import Iterator
+    """tf.SequenceExample decode (sequence_example.proto: context
+    Features + per-step FeatureLists): a TFRecord shard of 1 + doc_id%2
+    records, each with a CONTEXT block (a bytes 'doc' string cycled
+    from the doc's stride-43 64-byte base with a +3r rotation, and a
+    quarter-integer float 'weight') and two FEATURE LISTS — 'toks' with
+    1 + (doc+r)%3 int64 steps of 1 + (n_chars+t)%4 varints spanning
+    negatives, and 'frames' with 1 + (doc+r)%2 bytes steps rotated
+    +11r+7t — PACKED numeric encoding for even docs, unpacked for odd.
+    The reader re-verifies the TFRecord CRCs, walks SequenceExample →
+    context / FeatureLists → per-step Feature oneofs and ships one row
+    per context feature (step -1) and per (list, step); the oracle
+    replays every formula. Population: doc_id % 8 in {2, 3}, disjoint
+    from the tfexample slice."""
+    def write(i, n, cp):
+        base = _samples(cp, 64, 43)
+        recs = []
+        for r in range(1 + i % 2):
+            ctx = {"doc": ("bytes", [_cycle(base, 10 + (n + r) % 40, 3 * r)]),
+                   "weight": ("float", [((n + r) % 256) / 4.0])}
+            fls = {
+                "toks": [
+                    ("int64", [(n * j + 13 * t + r) % 50000 - 25000
+                               for j in range(1, 2 + (n + t) % 4)])
+                    for t in range(1 + (i + r) % 3)
+                ],
+                "frames": [
+                    ("bytes", [_cycle(base, 8 + (n + 9 * t + 5 * r) % 80,
+                                      11 * r + 7 * t)])
+                    for t in range(1 + (i + r) % 2)
+                ],
+            }
+            recs.append(encode_tf_sequence_example(ctx, fls, packed=i % 2 == 0))
+        return encode_tfrecord(recs)
 
-    import pandas as pd
-
-    from polars_express_spark.functions.protowire import (
-        encode_tf_sequence_example,
-        read_tfseq_records,
-    )
-    from polars_express_spark.functions.tfrecord import encode_tfrecord
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        & (F.col("doc_id") % 8 >= 2) & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 43) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                base_arr = np.array([int(x) for x in fs], dtype=np.uint8)
-
-                def body(ln, c):
-                    arr = ((base_arr.astype(np.int64) + c) % 256
-                           ).astype(np.uint8)
-                    return np.tile(arr, (ln + 63) // 64)[:ln].tobytes()
-
-                recs = []
-                for r in range(1 + doc_id % 2):
-                    ctx = {
-                        "doc": ("bytes",
-                                [body(10 + (n_chars + r) % 40, 3 * r)]),
-                        "weight": ("float",
-                                   [((n_chars + r) % 256) / 4.0]),
-                    }
-                    fls = {
-                        "toks": [
-                            ("int64",
-                             [(n_chars * j + 13 * t + r) % 50000 - 25000
-                              for j in range(1, 2 + (n_chars + t) % 4)])
-                            for t in range(1 + (doc_id + r) % 3)
-                        ],
-                        "frames": [
-                            ("bytes",
-                             [body(8 + (n_chars + 9 * t + 5 * r) % 80,
-                                   11 * r + 7 * t)])
-                            for t in range(1 + (doc_id + r) % 2)
-                        ],
-                    }
-                    recs.append(encode_tf_sequence_example(
-                        ctx, fls, packed=doc_id % 2 == 0
-                    ))
-                payloads.append(encode_tfrecord(recs))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), TFSEQ_SCHEMA,
-        _formula("fs", bases), synth, tfseq_record_batches,
+    return _roundtrip(
+        spark, sf_dir, TFSEQ_SCHEMA, write, tfseq_record_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 >= 2 AND doc_id % 8 < 4",
     )
 
 
@@ -4107,97 +2496,37 @@ def q_tfseq_extract(spark, sf_dir):
     """,
 )
 def q_avro_extract(spark, sf_dir):
-    """Avro object-container extraction under the driver hash (r16 —
-    the Kafka/Hive-era container family, functions/avro.py; completes
-    the §2.10 ingestion ladder next to WARC/zip/tar/TFRecord). Per
-    document a real container is muxed executor-side — 2 + doc_id%3
-    datums with stride-19 formula bodies cycled from the doc's ONE
-    64-byte base (record r a +17r byte rotation, size
-    15 + (n_chars + 11r)%180, record 1 always zero-length — the
-    tfexample perf lesson applied: per-record JVM bases priced this at
-    3.09s idle sf0.1), TWO datums per data block so the
-    block framing and every inter-block sync marker are exercised —
-    with the codec (null vs raw-deflate through the capped inflate) on
-    doc parity and the schema (string with printable-mapped bodies vs
-    bytes) on doc_id%4, so all four codec×schema combinations are
-    hashed every round. read_avro_records re-parses the container —
-    zigzag-varint metadata map, block counts/sizes, sync-marker
-    equality, exact per-block datum consumption, UTF-8 validation for
-    string datums — and ships one row per record carrying the PARSED
-    codec/schema/block_no (the metadata and framing decode are pinned
-    by the hash, not just byte stats). The oracle replays the
-    size/byte/codec arithmetic in SQL (a LEFT JOIN keeps the empty
-    record's zero-stats row). Scale shape: one scan, one doc_id
-    exchange (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas); the sync
-    markers this query verifies are exactly Avro's 100 TB
-    splittability convention."""
-    from typing import Iterator
+    """Avro object-container extraction (functions/avro.py): 2 +
+    doc_id%3 datums cycled from the doc's stride-19 64-byte base (record
+    r a +17r byte rotation, size 15 + (n_chars + 11r)%180, record 1
+    always zero-length), TWO datums per data block so the block framing
+    and every inter-block sync marker are exercised, with the codec
+    (null vs raw deflate through the capped inflate) on doc parity and
+    the schema (string with printable-mapped bodies vs bytes) on
+    doc_id%4, so all four codec×schema combinations are hashed. The
+    reader re-parses the container — zigzag-varint metadata map, block
+    counts/sizes, sync-marker equality, exact per-block consumption,
+    UTF-8 validation for strings — and ships one row per record with
+    the PARSED codec/schema/block_no. The oracle replays the
+    size/byte/codec arithmetic (a LEFT JOIN keeps the empty record's
+    zero-stats row). Population: doc_id % 8 < 4."""
+    def write(i, n, cp):
+        base = _samples(cp, 64, 19).astype(np.int64)
+        schema = "string" if i % 4 < 2 else "bytes"
+        recs = []
+        for r in range(2 + i % 3):
+            b = (base + 17 * r) % 256
+            if schema == "string":
+                b = 32 + b % 95  # printable ASCII: valid UTF-8
+            recs.append(b"" if r == 1 else _cycle(b, 15 + (n + r * 11) % 180))
+        return encode_avro(
+            recs, codec="deflate" if i % 2 else "null", schema=schema,
+            objects_per_block=2,
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.avro import (
-        encode_avro,
-        read_avro_records,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus, every doc_id-stride strategy kept (%2 codec
-        # parity, %4 schema split, %3 record counts all survive
-        # doc%8<4); idle sf0.1 measurement in the commit per the
-        # standing population-trim ratchet
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        # ONE 64-byte base per doc, cycled in Python; record r derives
-        # via a +17r byte rotation (the tfexample lesson: per-record
-        # JVM bases multiply the O(pos) substring count by k and
-        # priced this query at 3.09s idle sf0.1; the oracle replays
-        # the same rotation)
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 19) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                schema = "string" if doc_id % 4 < 2 else "bytes"
-                base_arr = np.array([int(x) for x in fs], dtype=np.uint8)
-                recs = []
-                for r in range(2 + doc_id % 3):
-                    if r == 1:  # the zero-length datum edge
-                        recs.append(b"")
-                        continue
-                    ln = 15 + (n_chars + r * 11) % 180
-                    arr = ((base_arr.astype(np.int64) + 17 * r) % 256).astype(np.uint8)
-                    if schema == "string":
-                        arr = 32 + arr % 95  # printable ASCII: valid UTF-8
-                    recs.append(np.tile(arr, (ln + 63) // 64)[:ln].tobytes())
-                payloads.append(
-                    encode_avro(
-                        recs,
-                        codec="deflate" if doc_id % 2 == 1 else "null",
-                        schema=schema,
-                        objects_per_block=2,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), AVRO_SCHEMA,
-        _formula("fs", bases), synth, avro_record_batches,
+    return _roundtrip(
+        spark, sf_dir, AVRO_SCHEMA, write, avro_record_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -4274,127 +2603,51 @@ def q_avro_extract(spark, sf_dir):
     """,
 )
 def q_avro_record(spark, sf_dir):
-    """Avro RECORD-schema datum decode under the driver hash (r17 —
-    the r16 verdict's highest-leverage functional gap: real Kafka/Hive
-    Avro is overwhelmingly "type":"record", and the schema JSON lives
-    IN the file metadata, so the reader is fully self-describing). Per
-    document a real container is muxed executor-side carrying
-    1 + doc_id%3 records of a seven-field flat-primitive schema that
-    exercises EVERY in-envelope field type — a sign-alternating `long`
-    (the zigzag negative path), an `int` spanning negatives, an exact
-    `double`, a `float` chosen on the 0.125 grid so the f32 round-trip
-    is exact, a `boolean`, a decimal-rendered `string` (the full value
-    is hashed, not just stats), formula `bytes` cycled from the
-    doc's ONE 64-byte base with a +13r rotation, and BOTH branch
-    orders of the nullable union — `null|long` and `string|null`, the
-    ubiquitous optional-field shape, their null/value branches rotated
-    by record formulas and pinned by the is_null column — ALL THREE
-    codecs rotating by doc_id%3 (null / raw-deflate / SNAPPY through
-    functions/snappy.py's libsnappy decode, whose spec-mandated
-    per-block CRC32 of the uncompressed data is verified), TWO records
-    per block so the framing rotates. read_avro_fields
-    re-parses the container (metadata-map schema resolution, per-field
-    binary decode, exact block consumption, sync equality) and ships
-    one row per (record, field) in the long format, each value in the
-    column its type owns. The oracle replays the schema's field list
-    (a VALUES join) and every field formula in SQL. Scale shape: one
-    scan, one doc_id exchange (_codec_parallel), ONE fused Arrow
-    pass (r18); the long format keeps the output schema fixed across
-    arbitrary record schemas — no per-corpus inference."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.avro import (
-        encode_avro,
-        read_avro_fields,
-    )
-
+    """Avro RECORD-schema datum decode (the schema JSON lives in the
+    file metadata, so the reader is self-describing): 1 + doc_id%3
+    records of a schema with every in-envelope primitive — a
+    sign-alternating `long` (the zigzag negative path), an `int`
+    spanning negatives, an exact `double`, a `float` on the 0.125 grid
+    (exact through f32), a `boolean`, a decimal `string` (hashed
+    verbatim), `bytes` cycled from the doc's stride-23 64-byte base with
+    a +13r rotation, and BOTH branch orders of the nullable union
+    (`null|long`, `string|null`), their branches rotated by record
+    formulas and pinned by is_null. The codec rotates null / raw
+    deflate / snappy (whose per-block CRC32 of the uncompressed data is
+    verified) by doc_id%3, TWO records per block. The reader re-parses
+    the container (schema resolution from the metadata map, per-field
+    decode, exact block consumption, sync equality) and ships one row
+    per (record, field) in the long format; the oracle replays the
+    field list (a VALUES join) and every field formula. Population:
+    doc_id % 8 ≥ 6 (every codec and record count)."""
     fields = [("id", "long"), ("n", "int"), ("score", "double"),
               ("ratio", "float"), ("flag", "boolean"),
               ("label", "string"), ("payload", "bytes"),
               ("opt_v", "null|long"), ("opt_s", "string|null")]
 
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # quarter population, disjoint from q_avro_extract's doc%8<4
-        # slice; every strategy survives: doc%8>=6 gives
-        # {6,7,14,15,22,23,...} whose doc%3 residues (0,1,2,0,1,2,...)
-        # cover all three codecs AND all record counts
-        & (F.col("doc_id") % 8 >= 6)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        # ONE 64-byte base per doc (stride 23), cycled in Python;
-        # record r derives via a +13r rotation the oracle replays
-        "text",
-    )
+    def write(i, n, cp):
+        base = _samples(cp, 64, 23)
+        recs = [{
+            "id": (1 - 2 * ((i + r) % 2)) * (n * 1009 + r * 7919 + i),
+            "n": (i * 7 + r * 13) % 4096 - 2048,
+            "score": (n % 10000) / 16.0 + 3 * r,
+            "ratio": ((i * 31 + r * 17) % 4096) / 8.0,
+            "flag": (n + r) % 2 == 0,
+            "label": str((n * (r + 1)) % 100000),
+            "payload": _cycle(base, 5 + (n + 9 * r) % 96, 13 * r),
+            "opt_v": (None if (i + r) % 3 == 0 else
+                      (n * 13 + r * 101) % 100000 - 50000),
+            "opt_s": (None if (n + r) % 2 == 1 else str((i + r * 7) % 9999)),
+        } for r in range(1 + i % 3)]
+        return encode_avro(
+            recs, codec=("null", "deflate", "snappy")[i % 3], schema=fields,
+            objects_per_block=2,
+        )
 
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 23) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                base_arr = np.array([int(x) for x in fs], dtype=np.uint8)
-                recs = []
-                for r in range(1 + doc_id % 3):
-                    ln = 5 + (n_chars + 9 * r) % 96
-                    arr = ((base_arr.astype(np.int64) + 13 * r) % 256
-                           ).astype(np.uint8)
-                    recs.append({
-                        "id": (1 - 2 * ((doc_id + r) % 2))
-                              * (n_chars * 1009 + r * 7919 + doc_id),
-                        "n": (doc_id * 7 + r * 13) % 4096 - 2048,
-                        "score": (n_chars % 10000) / 16.0 + 3 * r,
-                        "ratio": ((doc_id * 31 + r * 17) % 4096) / 8.0,
-                        "flag": (n_chars + r) % 2 == 0,
-                        "label": str((n_chars * (r + 1)) % 100000),
-                        "payload": np.tile(
-                            arr, (ln + 63) // 64)[:ln].tobytes(),
-                        "opt_v": (None if (doc_id + r) % 3 == 0 else
-                                  (n_chars * 13 + r * 101) % 100000
-                                  - 50000),
-                        "opt_s": (None if (n_chars + r) % 2 == 1 else
-                                  str((doc_id + r * 7) % 9999)),
-                    })
-                payloads.append(
-                    encode_avro(
-                        recs,
-                        codec=["null", "deflate",
-                               "snappy"][doc_id % 3],
-                        schema=fields,
-                        objects_per_block=2,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    av = _fused(
-        _codec_parallel(bs), AVRO_FIELDS_SCHEMA, _formula("fs", bases), synth, avro_field_batches
-    )
-    # the operator's honest contract is NULL in the columns a type
-    # doesn't own; the hashed query coalesces to sentinels (0 / 0.0 /
-    # '' / -1) because a NULL int materializes as float64-with-NaN on
-    # the DuckDB-pandas side and splits a dtype-sensitive hash (the r8
-    # canonicalizer lesson pinned by test_oracle_dtypes_match_spark_schema)
-    return av.select(
-        "doc_id", "rec_no", "block_no", "codec", "fname", "ftype",
-        "is_null",
-        F.coalesce("v_int", F.lit(0)).alias("v_int"),
-        F.coalesce("v_dbl", F.lit(0.0)).alias("v_dbl"),
-        F.coalesce("v_str", F.lit("")).alias("v_str"),
-        F.coalesce("v_len", F.lit(-1)).alias("v_len"),
-        F.coalesce("v_sum", F.lit(-1)).alias("v_sum"),
-    )
+    return _sentinels(_roundtrip(
+        spark, sf_dir, AVRO_FIELDS_SCHEMA, write, avro_field_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 >= 6",
+    ))
 
 
 @query(
@@ -4480,32 +2733,19 @@ def q_avro_record(spark, sf_dir):
     """,
 )
 def q_avro_nested(spark, sf_dir):
-    """Avro COMPLEX-type decode under the driver hash (r18 — the r17
-    verdict's "What's missing" #2: real Hive/Kafka schemas routinely
-    carry arrays, maps, enums, fixed, and nested records, all
-    self-delimiting per the public spec and resolvable from the
-    container's own schema JSON). Per document a real container
-    carries 1 + doc%2 records of a six-field schema exercising EVERY
-    complex type: an array<string> of 1 + (doc+rec)%3 decimal tags, a
-    nested record geo{lat,lon} on the exact-in-binary64 /8 and /16
-    grids, a map<long> of (doc+rec)%3 entries INCLUDING the empty-map
-    edge (its zero-count terminator still hashed via the container
-    row's v_len), a 3-symbol enum, a fixed4 whose bytes come from the
-    doc's stride-29 base with a +5r rotation, and a NULLABLE UNION
-    OVER AN ARRAY — union<null,array<long>> — whose null branch
-    rotates by (doc+rec)%3. All FOUR codecs rotate by doc%4,
-    including zstandard through libzstd (functions/zstd.py); one record
-    per block so block framing tracks rec_no. read_avro_fields
-    explodes complex values into leaf rows under wire-order path
-    names ('tags[0]', 'm.k1', 'geo.lat') with container rows pinning
-    element counts; the oracle replays the whole row explosion as a
-    UNION ALL in SQL. Scale shape: one scan, one doc_id exchange
-    (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas); eighth population
-    doc%8=5 (the complex row explosion prices ~13 rows/record)."""
-    from typing import Iterator
-
-    import pandas as pd
-
+    """Avro COMPLEX-type decode: 1 + doc%2 records of a six-field schema
+    with every complex type — an array<string> of 1 + (doc+rec)%3
+    decimal tags, a nested record geo{lat,lon} on the exact /8 and /16
+    grids, a map<long> of (doc+rec)%3 entries including the empty map
+    (its zero-count terminator hashed via the container row's v_len), a
+    3-symbol enum, a fixed4 from the doc's stride-29 samples with a +5r
+    rotation, and a NULLABLE UNION OVER AN ARRAY whose null branch
+    rotates by (doc+rec)%3. All four codecs rotate by doc%4 (null,
+    deflate, snappy, zstandard), one record per block. The reader
+    explodes complex values into leaf rows under wire-order path names
+    ('tags[0]', 'm.k1', 'geo.lat') with container rows pinning element
+    counts; the oracle replays the explosion as a UNION ALL.
+    Population: doc_id % 8 = 5 (about 13 rows per record)."""
     fields = [
         ("tags", ("array", "string")),
         ("geo", ("record", (("lat", "double"), ("lon", "double")))),
@@ -4515,75 +2755,30 @@ def q_avro_nested(spark, sf_dir):
         ("u", ("union", ("null", ("array", "long")))),
     ]
 
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        & (F.col("doc_id") % 8 == 5)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        "text",
-    )
+    def write(i, n, cp):
+        base4 = _samples(cp, 4, 29)
+        recs = [{
+            "tags": [str((n * (t + 1) + r) % 1000)
+                     for t in range(1 + (i + r) % 3)],
+            "geo": {"lat": (n % 5000) / 8.0 + r,
+                    "lon": ((i * 13) % 4000) / 16.0 - 100},
+            "m": {f"k{t}": (n * 7 + t * 31 + r) % 100000 - 50000
+                  for t in range((i + r) % 3)},
+            "col": ("R", "G", "B")[(n + r) % 3],
+            "fx": _cycle(base4, 4, 5 * r),
+            "u": (None if (i + r) % 3 == 1 else
+                  [(i * 17 + t * 7 + r) % 9000 - 4500
+                   for t in range(1 + (n + r) % 2)]),
+        } for r in range(1 + i % 2)]
+        return encode_avro(
+            recs, codec=("null", "deflate", "snappy", "zstandard")[i % 4],
+            schema=fields, objects_per_block=1,
+        )
 
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(4) * 29) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from polars_express_spark.functions.avro import encode_avro
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                base4 = [int(x) for x in fs]
-                recs = []
-                for r in range(1 + doc_id % 2):
-                    nt = 1 + (doc_id + r) % 3
-                    nm = (doc_id + r) % 3
-                    nu = 1 + (n_chars + r) % 2
-                    recs.append({
-                        "tags": [str((n_chars * (t + 1) + r) % 1000)
-                                 for t in range(nt)],
-                        "geo": {"lat": (n_chars % 5000) / 8.0 + r,
-                                "lon": ((doc_id * 13) % 4000) / 16.0
-                                       - 100},
-                        "m": {f"k{t}": (n_chars * 7 + t * 31 + r)
-                              % 100000 - 50000 for t in range(nm)},
-                        "col": ["R", "G", "B"][(n_chars + r) % 3],
-                        "fx": bytes((b + 5 * r) % 256 for b in base4),
-                        "u": (None if (doc_id + r) % 3 == 1 else
-                              [(doc_id * 17 + t * 7 + r) % 9000 - 4500
-                               for t in range(nu)]),
-                    })
-                payloads.append(
-                    encode_avro(
-                        recs,
-                        codec=["null", "deflate", "snappy",
-                               "zstandard"][doc_id % 4],
-                        schema=fields,
-                        objects_per_block=1,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    from polars_express_spark.functions.avro import read_avro_fields
-
-    return _fused(
-        _codec_parallel(bs), AVRO_FIELDS_SCHEMA,
-        _formula("fs", bases), synth, avro_field_batches,
-    ).select(
-        "doc_id", "rec_no", "block_no", "codec", "fname", "ftype",
-        "is_null",
-        F.coalesce("v_int", F.lit(0)).alias("v_int"),
-        F.coalesce("v_dbl", F.lit(0.0)).alias("v_dbl"),
-        F.coalesce("v_str", F.lit("")).alias("v_str"),
-        F.coalesce("v_len", F.lit(-1)).alias("v_len"),
-        F.coalesce("v_sum", F.lit(-1)).alias("v_sum"),
-    )
+    return _sentinels(_roundtrip(
+        spark, sf_dir, AVRO_FIELDS_SCHEMA, write, avro_field_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 = 5",
+    ))
 
 
 @query(
@@ -4628,116 +2823,47 @@ def q_avro_nested(spark, sf_dir):
     """,
 )
 def q_multimodal_ogg_theora(spark, sf_dir):
-    """Ogg Theora identification headers under the driver hash (r16 —
-    the video member of the Xiph family, extending parse_ogg's mapping
-    table per the r15 verdict's codec-depth item; the compressed frame
-    payload stays policy-gated like Vorbis/Opus). Per document a real
-    Ogg stream is muxed executor-side whose BOS packet is a 42-byte
-    Theora §6.2 header — picture dims offset inside the 16-px
-    macroblock frame (pic_x/pic_y from doc formulas), the frame-rate
-    fraction, and the QUAL/KFGSHIFT/PF bitfield with pixel format
-    cycling over the three non-reserved values by doc_id%3 — followed
-    by 1 + doc_id%3 data packets of stride-37 formula bytes cycled
-    from 64-byte bases. parse_ogg re-walks every page (CRC-32 per RFC
-    3533), identifies the Theora mapping with full header validation
-    (version 3.2, picture-fits-frame, reserved bits zero, PF!=1), and
-    parse_ogg_theora_info ships every header field plus the
-    reassembled data packets' byte count AND value sum — so the page
-    framing, the granule arithmetic, and the lacing reassembly are all
-    pinned even though no frame decodes. The oracle replays the
-    header and byte arithmetic in SQL. Scale shape: one scan, one
-    doc_id exchange (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas)."""
-    from typing import Iterator
+    """Ogg Theora identification headers (the compressed frame payload
+    stays gated like Vorbis/Opus): the BOS packet is a 42-byte Theora
+    §6.2 header — picture dims offset inside the 16-px macroblock frame
+    (pic_x/pic_y from doc formulas), the frame-rate fraction, and the
+    QUAL/KFGSHIFT/PF bitfield with the pixel format cycling over the
+    three non-reserved values by doc_id%3 — followed by 1 + doc_id%3
+    data packets of stride-37 bytes cycled from 64-byte bases. The
+    reader re-walks every page (CRC-32 per RFC 3533), identifies the
+    Theora mapping with full header validation (version 3.2,
+    picture-fits-frame, reserved bits zero, PF≠1), and
+    parse_ogg_theora_info ships every header field plus the reassembled
+    data packets' byte count and value sum, so page framing, granule
+    arithmetic and lacing reassembly are pinned though no frame
+    decodes. Population: doc_id % 8 < 4."""
+    schema = ("doc_id bigint, pic_w int, pic_h int, fps_num int,"
+              " fps_den int, qual int, kfgshift int, pixel_fmt int,"
+              " n_pages int, granule bigint, n_packets bigint,"
+              " data_bytes bigint, data_sum bigint")
 
-    import pandas as pd
+    def write(i, n, cp):
+        ident = make_theora_id(
+            16 + i % 49, 16 + (i * 3) % 33, 24000 + n % 6001, 1 + i % 1000,
+            qual=i % 64, kfgshift=i % 32, pixel_fmt=(0, 2, 3)[i % 3],
+            pic_x=i % 5, pic_y=(i * 7) % 5,
+        )
+        return encode_ogg(ident, [
+            _cycle(_samples(cp, 64, 37, r * 11), 20 + (n + 13 * r) % 200)
+            for r in range(1 + i % 3)
+        ])
 
-    from polars_express_spark.functions.multimodal import (
-        encode_ogg,
-        make_theora_id,
-        parse_ogg_theora_info,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus; the %3 pixel-format/packet-count and %2
-        # parity strategies all survive doc%8<4 (idle sf0.1
-        # measurement in the commit, the standing trim ratchet)
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(64) * 37 + r * 11) % len(cp))] % 256
-                for r in range(i % 3 + 1)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                ident = make_theora_id(
-                    16 + doc_id % 49,
-                    16 + (doc_id * 3) % 33,
-                    24000 + n_chars % 6001,
-                    1 + doc_id % 1000,
-                    qual=doc_id % 64,
-                    kfgshift=doc_id % 32,
-                    pixel_fmt=(0, 2, 3)[doc_id % 3],
-                    pic_x=doc_id % 5,
-                    pic_y=(doc_id * 7) % 5,
-                )
-                pkts = []
-                for r, base in enumerate(fs):
-                    ln = 20 + (n_chars + 13 * r) % 200
-                    arr = np.array([int(x) for x in base], dtype=np.uint8)
-                    pkts.append(np.tile(arr, (ln + 63) // 64)[:ln].tobytes())
-                payloads.append(encode_ogg(ident, pkts))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                info = parse_ogg_theora_info(bytes(payload))
-                if info is None:
-                    raise ValueError(
-                        f"doc {doc_id}: corrupt or out-of-envelope Ogg "
-                        "Theora stream"
-                    )
-                (pw, ph, fn, fd, q, kg, pf, n_pages, gran, n_pkts,
-                 dbytes, dsum) = info
-                rows.append(
-                    (doc_id, pw, ph, fn, fd, q, kg, pf, n_pages, gran,
-                     n_pkts, dbytes, dsum)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "pic_w", "pic_h", "fps_num", "fps_den",
-                         "qual", "kfgshift", "pixel_fmt", "n_pages",
-                         "granule", "n_packets", "data_bytes", "data_sum"],
-            ).astype(
-                {"pic_w": "int32", "pic_h": "int32", "fps_num": "int32",
-                 "fps_den": "int32", "qual": "int32", "kfgshift": "int32",
-                 "pixel_fmt": "int32", "n_pages": "int32"}
+    def read(doc_id, payload):
+        info = parse_ogg_theora_info(payload)
+        if info is None:
+            raise ValueError(
+                f"doc {doc_id}: corrupt or out-of-envelope Ogg Theora stream"
             )
+        return [(doc_id, *info)]
 
-    return _fused(
-        _codec_parallel(bs),
-        "doc_id bigint, pic_w int, pic_h int, fps_num int,"
-        " fps_den int, qual int, kfgshift int, pixel_fmt int,"
-        " n_pages int, granule bigint, n_packets bigint,"
-        " data_bytes bigint, data_sum bigint",
-        _formula("fs", bases), synth, stats,
+    return _roundtrip(
+        spark, sf_dir, schema, write, _rows(read, schema),
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -4768,97 +2894,32 @@ def q_multimodal_ogg_theora(spark, sf_dir):
     """,
 )
 def q_multimodal_icns(spark, sf_dir):
-    """Apple ICNS under the driver hash (r16 — the macOS icon
-    container, the second PNG-composing container after ICO, per the
-    r15 verdict's codec-depth item). Per document a real ICNS is
-    muxed executor-side: an icp4 16x16 grayscale PNG element always,
-    plus an icp5 32x32 RGB element for odd docs, with the 'TOC '
-    element (which parse_icns validates against the elements that
-    follow) armed for doc_id%4 >= 2 — so single/multi element, gray/
-    RGB inner PNGs, and both TOC states are hashed every round.
-    Pixels cycle 64-byte stride-43 formula bases; both element pixel
-    counts (256 and 3072) are exact multiples of 64, so the oracle
-    computes the identical stats over just the base values. parse_icns
-    re-walks the container — file-length equality, element bounds,
-    nominal-size enforcement per OSType, full PNG decode of every
-    element through the entropy-coded tier — and a hash match proves
-    encode∘decode = id over real compressed bytes (the ICO argument).
-    Scale shape: one scan, one doc_id exchange (_codec_parallel), two
-    fused Arrow stages."""
-    from typing import Iterator
+    """Apple ICNS, the second PNG-composing container after ICO: an icp4
+    16×16 grayscale PNG element always, plus an icp5 32×32 RGB element
+    for odd docs, with the 'TOC ' element (which parse_icns validates
+    against the elements that follow) for doc_id%4 ≥ 2. Pixels cycle
+    64-byte stride-43 bases (element e phasing by 7e); both pixel
+    counts (256 and 3072) are multiples of 64, so the oracle computes
+    the same stats over just the base values. The reader re-walks the
+    container — file-length equality, element bounds, nominal size per
+    OSType, full PNG decode of every element. Population: doc_id % 8 <
+    4."""
+    schema = ("doc_id bigint, elem_no int, ostype string, width int,"
+              " height int, channels int, mean_val double, min_val int,"
+              " max_val int")
 
-    import pandas as pd
+    def write(i, n, cp):
+        gray = np.tile(_samples(cp, 64, 43), 4).reshape(16, 16, 1)
+        entries = [("icp4", gray)]
+        if i % 2:
+            rgb = np.tile(_samples(cp, 64, 43, 7), 48).reshape(32, 32, 3)
+            entries.append(("icp5", rgb))
+        return encode_icns(entries, toc=i % 4 >= 2)
 
-    from polars_express_spark.functions.multimodal import (
-        encode_icns,
-        parse_icns,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus; %2 element-count parity and the %4 TOC
-        # split both survive doc%8<4 (idle sf0.1 measurement in the
-        # commit, the standing trim ratchet)
-        & (F.col("doc_id") % 8 < 4)
-    )
-    px = d.select(
-        "doc_id",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return [cp[((np.arange(64) * 43 + e * 7) % len(cp))] % 256
-                for e in range(i % 2 + 1)]
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, es in zip(pdf["doc_id"], pdf["es"]):
-                doc_id = int(doc_id)
-                b0 = np.array([int(x) for x in es[0]], dtype="u1")
-                entries = [("icp4", np.tile(b0, 4).reshape(16, 16, 1))]
-                if doc_id % 2 == 1:
-                    b1 = np.array([int(x) for x in es[1]], dtype="u1")
-                    entries.append(
-                        ("icp5", np.tile(b1, 48).reshape(32, 32, 3))
-                    )
-                payloads.append(encode_icns(entries, toc=doc_id % 4 >= 2))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                parsed = parse_icns(bytes(payload))
-                if parsed is None:
-                    raise ValueError(
-                        f"doc {doc_id}: corrupt ICNS container"
-                    )
-                for e, (typ, w, h, ch, arr) in enumerate(parsed):
-                    rows.append(
-                        (doc_id, e, typ, w, h, ch,
-                         float(arr.mean()), int(arr.min()), int(arr.max()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "elem_no", "ostype", "width", "height",
-                         "channels", "mean_val", "min_val", "max_val"],
-            ).astype(
-                {"elem_no": "int32", "width": "int32", "height": "int32",
-                 "channels": "int32", "min_val": "int32",
-                 "max_val": "int32"}
-            )
-
-    return _fused(
-        _codec_parallel(px),
-        "doc_id bigint, elem_no int, ostype string, width int,"
-        " height int, channels int, mean_val double, min_val int,"
-        " max_val int",
-        _formula("es", bases), synth, stats,
+    return _roundtrip(
+        spark, sf_dir, schema, write,
+        _rows(_icon_elements(parse_icns, "ICNS"), schema),
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -4915,121 +2976,55 @@ def q_multimodal_icns(spark, sf_dir):
     """,
 )
 def q_seqfile_extract(spark, sf_dir):
-    """Hadoop SequenceFile extraction under the driver hash (r16 —
-    the Hive-era row container next to Avro, functions/seqfile.py).
-    Per document a real version-6 file is muxed executor-side — 2 +
-    doc_id%3 records whose KEY CLASS rotates by doc_id%4 (r17: Text
-    'k{doc}/{r}' keys, signed LongWritable keys spanning negatives —
-    the classic MR line-offset shape — and signed IntWritable keys,
-    each rendered by its Hadoop toString convention) and BytesWritable
-    values carrying stride-31 formula bodies cycled from the doc's ONE
-    64-byte base (record r a +7r byte rotation — the tfexample perf
-    lesson, size 18 + (n_chars + 9r)%160, record 1 a zero-length
-    value), and the compression rotating over all THIRTEEN layout×codec
-    forms by doc_id%13 (r17 block + five codecs; r18 adds
-    ZStandardCodec in both layouts via libzstd — ALL SIX
-    public Hadoop codecs: Default/Gzip/BZip2/ZStandard as stream
-    codecs, Snappy/Lz4 via libsnappy/liblz4 raw blocks under
-    Hadoop's BlockCompressorStream framing): 'none'
-    and the 'record' codecs carry a sync escape every 2 records
-    so the mid-stream 0xFFFFFFFF marker path is hashed; the 'block'
-    codecs group 2 records per block through the four compressed
-    buffer groups of the Hadoop BlockCompressWriter layout, so
-    multi-block files with per-block sync markers are hashed too. read_seqfile_records re-walks the header (Hadoop vint
-    class names, booleans, metadata map), verifies every sync marker,
-    unwraps both Writable envelopes (Text UTF-8 validated,
-    BytesWritable inner length enforced), and ships one row per record
-    with the key, the PARSED compression layout, and exact value stats.
-    The oracle replays the key/size/byte arithmetic in SQL (a LEFT
-    JOIN keeps the empty value's zero-stats row). Scale shape: one
-    scan, one doc_id exchange (_codec_parallel), ONE fused Arrow
-    pass (r18); the sync escapes this query verifies are exactly what
-    makes a 100 TB SequenceFile splittable."""
-    from typing import Iterator
+    """Hadoop SequenceFile extraction (functions/seqfile.py): a
+    version-6 file of 2 + doc_id%3 records whose KEY CLASS rotates by
+    doc_id%4 — Text 'k{doc}/{r}' keys, signed LongWritable keys
+    spanning negatives (the MR line-offset shape) and signed
+    IntWritable keys, each rendered by its Hadoop toString — and whose
+    BytesWritable values are cycled from the doc's stride-31 64-byte
+    base (record r a +7r rotation, size 18 + (n_chars + 9r)%160, record
+    1 zero-length). The layout×codec rotates over all THIRTEEN forms by
+    doc_id%13: uncompressed, and record or block compression with each
+    of the six public Hadoop codecs (Default/Gzip/BZip2/ZStandard as
+    stream codecs, Snappy/Lz4 as raw blocks under Hadoop's
+    BlockCompressorStream framing). Record layouts carry a sync escape
+    every 2 records (the mid-stream 0xFFFFFFFF marker), block layouts
+    group 2 records per block. The reader re-walks the header, verifies
+    every sync marker, unwraps both Writable envelopes and ships one
+    row per record with the key, the PARSED layout and exact value
+    stats; the oracle replays the key/size/byte arithmetic (a LEFT JOIN
+    keeps the empty value's row). Population: doc_id % 8 < 4, whose
+    residues mod 13 cover every form."""
+    def write(i, n, cp):
+        base = _samples(cp, 64, 31)
+        recs = []
+        for r in range(2 + i % 3):
+            if i % 4 == 2:
+                key = i * 1000 + r * 7 - 500000
+            elif i % 4 == 3:
+                key = (i * 31 + r) % 100000 - 50000
+            else:
+                key = f"k{i}/{r}".encode()
+            recs.append(
+                (key, b"" if r == 1 else
+                 _cycle(base, 18 + (n + r * 9) % 160, 7 * r))
+            )
+        comp = ("none", "record", "block", "record-snappy", "block-snappy",
+                "record-lz4", "block-lz4", "record-gzip", "block-gzip",
+                "record-bzip2", "block-bzip2", "record-zstd",
+                "block-zstd")[i % 13]
+        return encode_seqfile(
+            recs,
+            key_class="org.apache.hadoop.io." + (
+                "Text", "Text", "LongWritable", "IntWritable")[i % 4],
+            compress=comp,
+            sync_interval=0 if comp.startswith("block") else 2,
+            records_per_block=2,
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.seqfile import (
-        encode_seqfile,
-        read_seqfile_records,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus; the %13 layout-codec rotation, %4 key
-        # classes, and %3 record counts all survive doc%8<4
-        # (gcd(8,13)=1, so the slice's residues cover 0..12; idle
-        # sf0.1 measurement in the commit, the standing trim ratchet)
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        # ONE 64-byte base per doc; record r derives via a +7r byte
-        # rotation Python-side (the oracle replays it)
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 31) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                base_arr = np.array([int(x) for x in fs], dtype=np.uint8)
-                # key class rotates by doc_id%4 (r17): the classic MR
-                # output key classes — LongWritable (signed 8-byte BE,
-                # negative via the -500000 offset) and IntWritable
-                # (signed 4-byte BE) render as their decimal forms,
-                # Text keeps the 'k{doc}/{r}' form
-                kcls = ["org.apache.hadoop.io.Text",
-                        "org.apache.hadoop.io.Text",
-                        "org.apache.hadoop.io.LongWritable",
-                        "org.apache.hadoop.io.IntWritable"][doc_id % 4]
-                recs = []
-                for r in range(2 + doc_id % 3):
-                    if doc_id % 4 == 2:
-                        key = doc_id * 1000 + r * 7 - 500000
-                    elif doc_id % 4 == 3:
-                        key = (doc_id * 31 + r) % 100000 - 50000
-                    else:
-                        key = f"k{doc_id}/{r}".encode()
-                    if r == 1:  # the zero-length value edge
-                        recs.append((key, b""))
-                        continue
-                    ln = 18 + (n_chars + r * 9) % 160
-                    arr = ((base_arr.astype(np.int64) + 7 * r) % 256).astype(np.uint8)
-                    recs.append(
-                        (key, np.tile(arr, (ln + 63) // 64)[:ln].tobytes())
-                    )
-                comp = ["none", "record", "block", "record-snappy",
-                        "block-snappy", "record-lz4", "block-lz4",
-                        "record-gzip", "block-gzip", "record-bzip2",
-                        "block-bzip2", "record-zstd",
-                        "block-zstd"][doc_id % 13]
-                payloads.append(
-                    encode_seqfile(
-                        recs,
-                        key_class=kcls,
-                        compress=comp,
-                        sync_interval=0 if comp.startswith("block")
-                        else 2,
-                        records_per_block=2,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), SEQFILE_SCHEMA,
-        _formula("fs", bases), synth, seqfile_record_batches,
+    return _roundtrip(
+        spark, sf_dir, SEQFILE_SCHEMA, write, seqfile_record_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -5082,106 +3077,42 @@ def q_seqfile_extract(spark, sf_dir):
     """,
 )
 def q_cbor_extract(spark, sf_dir):
-    """CBOR decode under the driver hash (r16 — RFC 8949, the
-    self-describing metadata-blob serialization; functions/cbor.py is
-    pinned against the RFC's own Appendix A test vectors in the
-    property suite). Per document a real CBOR payload is muxed
-    executor-side: a top-level array of 2 + doc_id%3 maps, each with
-    an integer 'id' spanning negative and multi-width positive heads
-    (n_chars·(r+1) − 600), a byte string 'txt' of stride-41 formula
-    bytes cycled from the doc's ONE 64-byte base with a +9r rotation
-    per record (the tfexample perf lesson; record 1 a zero-length
-    string — the empty-bytes head), an eighth-integer float 'score'
-    (exact in
-    binary64), a parity boolean 'flag', and (r17, the r16 verdict's
-    missing #4) the two STANDARD TAGS of §3.4: 'created' carries tag 0
-    (an RFC 3339 text item, validated and hashed verbatim) and 'ts'
-    tag 1 (an integer epoch spanning negatives) — so integer, bytes,
-    text, float, boolean, array, map, and both datetime tags are all
-    hashed every round. Odd docs additionally serialize the WHOLE
-    payload in the INDEFINITE forms of §3.2 (chunked strings at
-    7-byte/char chunks, break-terminated arrays/maps via
-    encode_cbor_indefinite), even docs in the preferred definite form
-    — the decoder normalizes both to the same values, so the hash pins
-    the indefinite walk on half the corpus. read_cbor_records
-    re-decodes through the full RFC walk (UTF-8 validation per chunk,
-    duplicate-key rejection, depth cap, RFC 3339 validation) and ships
-    one row per element; the oracle replays the arithmetic in SQL.
-    Scale shape: one scan, one doc_id exchange (_codec_parallel), two
-    fused Arrow stages."""
-    from typing import Iterator
+    """CBOR decode (RFC 8949; functions/cbor.py is pinned against the
+    RFC's Appendix A vectors in the property suite): a top-level array
+    of 2 + doc_id%3 maps, each with an integer 'id' spanning negative
+    and multi-width heads (n_chars·(r+1) − 600), a byte string 'txt'
+    cycled from the doc's stride-41 64-byte base with a +9r rotation
+    (record 1 empty), an eighth-integer float 'score', a parity boolean
+    'flag', and the two standard tags of §3.4 — 'created' (tag 0, an
+    RFC 3339 text item, validated and hashed verbatim) and 'ts' (tag 1,
+    an integer epoch spanning negatives). Odd docs serialize the whole
+    payload in the INDEFINITE forms of §3.2 (chunked strings,
+    break-terminated arrays/maps), even docs in the preferred definite
+    form; the decoder normalizes both. The reader runs the full RFC
+    walk (UTF-8 per chunk, duplicate-key rejection, depth cap, RFC 3339
+    validation) and ships one row per element; the oracle replays the
+    arithmetic. Population: doc_id % 8 < 4."""
+    def write(i, n, cp):
+        base = _samples(cp, 64, 41)
+        items = [{
+            "id": n * (r + 1) - 600,
+            "txt": (b"" if r == 1 else
+                    _cycle(base, 12 + (n + r * 5) % 140, 9 * r)),
+            "score": ((n + 29 * r) % 1024) / 8.0,
+            "flag": (i + r) % 2 == 1,
+            "created": CborDateTime(
+                f"2026-08-{1 + (n + r) % 28:02d}T{(i + r) % 24:02d}"
+                f":{n % 60:02d}:{(r * 7) % 60:02d}Z"
+            ),
+            "ts": CborEpochTime(n * 1000 + r * 37 - 500000),
+        } for r in range(2 + i % 3)]
+        if i % 2:
+            return encode_cbor_indefinite(items, chunk=7)
+        return encode_cbor(items)
 
-    import pandas as pd
-
-    from polars_express_spark.functions.cbor import (
-        CborDateTime,
-        CborEpochTime,
-        encode_cbor,
-        encode_cbor_indefinite,
-        read_cbor_records,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus; %3 record counts and %2 flag parity survive
-        # doc%8<4 (idle sf0.1 measurement in the commit, the standing
-        # trim ratchet)
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        # ONE 64-byte base per doc; record r derives via a +9r byte
-        # rotation Python-side (the oracle replays it)
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 41) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                base_arr = np.array([int(x) for x in fs], dtype=np.uint8)
-                items = []
-                for r in range(2 + doc_id % 3):
-                    if r == 1:
-                        txt = b""
-                    else:
-                        ln = 12 + (n_chars + r * 5) % 140
-                        arr = ((base_arr.astype(np.int64) + 9 * r) % 256).astype(np.uint8)
-                        txt = np.tile(arr, (ln + 63) // 64)[:ln].tobytes()
-                    items.append({
-                        "id": n_chars * (r + 1) - 600,
-                        "txt": txt,
-                        "score": ((n_chars + 29 * r) % 1024) / 8.0,
-                        "flag": (doc_id + r) % 2 == 1,
-                        "created": CborDateTime(
-                            f"2026-08-{1 + (n_chars + r) % 28:02d}"
-                            f"T{(doc_id + r) % 24:02d}"
-                            f":{n_chars % 60:02d}:{(r * 7) % 60:02d}Z"
-                        ),
-                        "ts": CborEpochTime(
-                            n_chars * 1000 + r * 37 - 500000
-                        ),
-                    })
-                payloads.append(
-                    encode_cbor_indefinite(items, chunk=7)
-                    if doc_id % 2 == 1 else encode_cbor(items)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), CBOR_SCHEMA,
-        _formula("fs", bases), synth, cbor_record_batches,
+    return _roundtrip(
+        spark, sf_dir, CBOR_SCHEMA, write, cbor_record_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -5275,106 +3206,47 @@ def q_cbor_extract(spark, sf_dir):
     """,
 )
 def q_kafka_extract(spark, sf_dir):
-    """Kafka RecordBatch v2 log segments under the driver hash (r17,
-    codec set grown r18 — the streaming-era ingestion capstone,
-    functions/kafka.py: the codec modules make all FIVE batch
-    compressions decodable — none, gzip, xerial-framed snappy, the
-    LZ4 frame, and zstd via libzstd — rotated by
-    (doc//8)%5 so every codec is hashed every round). Per
-    document a real segment of 1 + doc%2 batches is muxed
-    executor-side, each batch carrying 1 + (doc+b)%3 records with a
-    NEGATIVE timestampDelta at r=0 (the zigzag sign path), Kafka's
-    null-key/null-value tombstone convention rotated by record
-    formulas (-1 lengths under the hash), stride-61 formula key/value
-    bodies rotated +5r+3b / +7r+11b from the doc's ONE 64-byte base,
-    and 0-2 headers ('h{t}', header 1's value null) pinning the header
-    grammar. parse_kafka_segment verifies each batch's CRC-32C over
-    attributes..end — the strongest integrity posture in the ingestion
-    family, and the format's own mid-segment resume convention — plus
-    magic, batchLength, exact record/varint consumption, and
-    recordCount. read_kafka_records ships one row per record with
-    reconstructed absolute offsets/timestamps and exact stats; the
-    oracle replays every formula in SQL. Scale shape: one scan, one
-    doc_id exchange (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas); quarter
-    population doc%8<2 (shared with the tfexample slice — the two
-    never run in the same stage)."""
-    from typing import Iterator
+    """Kafka RecordBatch v2 log segments (functions/kafka.py), with all
+    five batch compressions — none, gzip, xerial-framed snappy, the LZ4
+    frame and zstd — rotated by (doc//8)%5. A segment of 1 + doc%2
+    batches, each of 1 + (doc+b)%3 records with a NEGATIVE
+    timestampDelta at r=0 (the zigzag sign path), Kafka's
+    null-key/null-value tombstones rotated by record formulas (-1
+    lengths under the hash), key/value bodies cycled from the doc's
+    stride-61 64-byte base with +5r+3b / +7r+11b rotations, and 0-2
+    headers ('h{t}', header 1's value null). The reader verifies each
+    batch's CRC-32C over attributes..end plus magic, batchLength, exact
+    record/varint consumption and recordCount, and ships one row per
+    record with reconstructed absolute offsets/timestamps; the oracle
+    replays every formula. Population: doc_id % 8 < 2."""
+    def write(i, n, cp):
+        base = _samples(cp, 64, 61)
+        segs = []
+        for b in range(1 + i % 2):
+            base_ts = 1700000000000 + i * 100 + b
+            recs = [{
+                "timestamp": base_ts + r * 37 - 10,
+                "key": (None if (i + b + r) % 4 == 0 else
+                        _cycle(base, 4 + (n + r) % 20, 5 * r + 3 * b)),
+                "value": (None if (i + b + r) % 5 == 1 else
+                          _cycle(base, 10 + (n + 3 * r + 7 * b) % 120,
+                                 7 * r + 11 * b)),
+                "headers": [
+                    (f"h{t}", None if t == 1 else
+                     _cycle(base, 3 + (n + t) % 9, 13 * t))
+                    for t in range((i + r) % 3)
+                ],
+            } for r in range(1 + (i + b) % 3)]
+            segs.append({"base_offset": i * 1000 + b * 500,
+                         "base_timestamp": base_ts, "producer_id": i - 500,
+                         "records": recs})
+        return encode_kafka_segment(
+            segs, codec=("none", "gzip", "snappy", "lz4", "zstd")[(i // 8) % 5]
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.kafka import (
-        encode_kafka_segment,
-        read_kafka_records,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        & (F.col("doc_id") % 8 < 2)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 61) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                base_arr = np.array([int(x) for x in fs], dtype=np.uint8)
-
-                def body(ln, c):
-                    arr = ((base_arr.astype(np.int64) + c) % 256
-                           ).astype(np.uint8)
-                    return np.tile(arr, (ln + 63) // 64)[:ln].tobytes()
-
-                segs = []
-                for b in range(1 + doc_id % 2):
-                    base_ts = 1700000000000 + doc_id * 100 + b
-                    recs = []
-                    for r in range(1 + (doc_id + b) % 3):
-                        key = (None if (doc_id + b + r) % 4 == 0 else
-                               body(4 + (n_chars + r) % 20,
-                                    5 * r + 3 * b))
-                        val = (None if (doc_id + b + r) % 5 == 1 else
-                               body(10 + (n_chars + 3 * r + 7 * b)
-                                    % 120, 7 * r + 11 * b))
-                        headers = []
-                        for t in range((doc_id + r) % 3):
-                            hv = (None if t == 1 else
-                                  body(3 + (n_chars + t) % 9, 13 * t))
-                            headers.append((f"h{t}", hv))
-                        recs.append({
-                            "timestamp": base_ts + r * 37 - 10,
-                            "key": key, "value": val,
-                            "headers": headers,
-                        })
-                    segs.append({
-                        "base_offset": doc_id * 1000 + b * 500,
-                        "base_timestamp": base_ts,
-                        "producer_id": doc_id - 500,
-                        "records": recs,
-                    })
-                payloads.append(encode_kafka_segment(
-                    segs,
-                    codec=["none", "gzip", "snappy", "lz4",
-                           "zstd"][(doc_id // 8) % 5],
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), KAFKA_SCHEMA,
-        _formula("fs", bases), synth, kafka_record_batches,
+    return _roundtrip(
+        spark, sf_dir, KAFKA_SCHEMA, write, kafka_record_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 2",
     )
 
 
@@ -5396,77 +3268,37 @@ def q_kafka_extract(spark, sf_dir):
     """,
 )
 def q_jsonl_zst(spark, sf_dir):
-    """The ``.jsonl.zst`` SHARD PATH under the driver hash (r18 — the
-    wire format modern LLM corpora actually ship in, and the
-    goal-state form the r17 verdict's missing #1 named): per document
-    a real shard of 3 + doc%4 compact JSON lines is muxed
-    executor-side and compressed with the wire form rotating by
-    doc%3 — libzstd itself (pyarrow, level 3), the in-tree
-    checksummed writer, or a TWO-FRAME stream split mid-shard (the
-    multi-file-append form decode_zstd concatenates). read_jsonl_zst
-    owns only decompression + line framing (newline-terminated UTF-8,
-    no empty lines); the JSON itself is parsed JVM-SIDE with
-    from_json — Catalyst owns the parse, exactly where a 100 TB shard
-    pipeline wants it — and the unpacked id/tok/tag columns are
-    hashed against the oracle's formula replay, proving
-    decompress → frame → parse end to end. Scale shape: one scan, one
-    doc_id exchange (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas), the
-    JSON projection pipelined above them; eighth population
-    doc%8=4."""
-    from typing import Iterator
+    """The ``.jsonl.zst`` shard path: a shard of 3 + doc%4 compact JSON
+    lines per document, compressed in the wire form doc%3 picks —
+    libzstd itself (pyarrow, level 3), the in-tree checksummed writer,
+    or a TWO-FRAME stream split mid-shard (the multi-file-append form).
+    The reader owns only decompression and line framing
+    (newline-terminated UTF-8, no empty lines); the JSON is parsed in
+    the JVM by from_json above the pass, and the unpacked id/tok/tag
+    columns are hashed against the oracle's formula replay, proving
+    decompress → frame → parse end to end. Population: doc_id % 8 = 4."""
+    def write(i, n, cp):
+        content = "".join(
+            json.dumps({"id": i * 100 + k, "tok": (n + k * 17) % 5000,
+                        "tag": f"t{(i + k) % 7}"}, separators=(",", ":"))
+            + "\n"
+            for k in range(3 + i % 4)
+        ).encode()
+        if i % 3 == 0:
+            return pa.Codec("zstd", compression_level=3).compress(
+                content, asbytes=True
+            )
+        if i % 3 == 1:
+            return encode_zstd(content, checksum=True)
+        h = len(content) // 2
+        return (encode_zstd(content[:h], single_segment=True, checksum=True)
+                + encode_zstd(content[h:], single_segment=True, checksum=True))
 
-    import pandas as pd
-
-    from polars_express_spark.functions.zstd import read_jsonl_zst
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        & (F.col("doc_id") % 8 == 4)
-    )
-    bs = d.select("doc_id", "n_chars")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
-
-        from polars_express_spark.functions.zstd import encode_zstd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                lines = []
-                for i in range(3 + doc_id % 4):
-                    lines.append(_json.dumps(
-                        {"id": doc_id * 100 + i,
-                         "tok": (n_chars + i * 17) % 5000,
-                         "tag": f"t{(doc_id + i) % 7}"},
-                        separators=(",", ":"),
-                    ))
-                content = ("\n".join(lines) + "\n").encode()
-                strat = doc_id % 3
-                if strat == 0:
-                    import pyarrow as pa
-
-                    blob = bytes(pa.Codec(
-                        "zstd", compression_level=3
-                    ).compress(content, asbytes=True))
-                elif strat == 1:
-                    blob = encode_zstd(content, checksum=True)
-                else:
-                    h = len(content) // 2
-                    blob = (encode_zstd(content[:h], single_segment=True,
-                                        checksum=True)
-                            + encode_zstd(content[h:],
-                                          single_segment=True,
-                                          checksum=True))
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    lines = _fused(
-        _codec_parallel(bs), JSONL_SCHEMA, synth, jsonl_zst_batches
-    )
     j = F.from_json("line", "id BIGINT, tok BIGINT, tag STRING")
-    return lines.select(
+    return _roundtrip(
+        spark, sf_dir, JSONL_SCHEMA, write, jsonl_zst_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 = 4",
+    ).select(
         "doc_id", "line_no",
         j.getField("id").alias("id_val"),
         j.getField("tok").alias("tok_ct"),
@@ -5537,92 +3369,38 @@ def q_jsonl_zst(spark, sf_dir):
     """,
 )
 def q_kafka_legacy(spark, sf_dir):
-    """LEGACY Kafka message sets (magic 0/1) under the driver hash
-    (r18 — archived pre-0.11 topics in long-lived lakes, the r17
-    verdict's "What's missing" #5; functions/kafka.py dispatches on
-    the magic byte both layouts carry at entry offset 16, exactly as
-    Kafka's own log layer does). Per document a real legacy set of
-    1 + (doc+n_chars)%3 messages is muxed executor-side — magic by
-    doc parity (magic 0 timestamp-less, ts = -1 under the hash;
-    magic 1 with per-message i64 timestamps), codec by (doc//8)%4:
-    uncompressed sets as flat entries (one batch per entry),
-    gzip/xerial-snappy/lz4 as ONE wrapper message whose nested set
-    carries RELATIVE inner offsets for magic 1 (reconstructed from
-    the wrapper's absolute offset — the koffset column proves it) and
-    stored offsets for magic 0, and the magic-0 lz4 residue written
-    in KIP-57's 'broken HC' form (header checksum over magic bytes +
-    descriptor) that the decoder accepts by HC rewrite. Null
-    keys/values rotate by message formulas; every message's IEEE
-    CRC-32 over magic..end is verified — a flip anywhere in a message
-    body is DETECTED. read_kafka_records ships one row per record
-    with the parsed magic pinned; the oracle replays every formula in
-    SQL. Scale shape: one scan, one doc_id exchange (_codec_parallel),
-    ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas); quarter population doc%8 in {2,3} (both
-    magic parities survive: residues 2,3,10,11,... span even and
-    odd)."""
-    from typing import Iterator
+    """LEGACY Kafka message sets (magic 0/1, archived pre-0.11 topics;
+    functions/kafka.py dispatches on the magic byte at entry offset 16,
+    as Kafka's log layer does): 1 + (doc+n_chars)%3 messages per
+    document, magic by doc parity (magic 0 has no timestamp, ts = -1;
+    magic 1 carries per-message i64 timestamps), codec by (doc//8)%4 —
+    uncompressed sets as flat entries, gzip/xerial-snappy/lz4 as ONE
+    wrapper message whose nested set carries RELATIVE inner offsets for
+    magic 1 (reconstructed from the wrapper's absolute offset; koffset
+    proves it) and stored offsets for magic 0, the magic-0 lz4 residue
+    in KIP-57's 'broken HC' form that the decoder accepts by HC
+    rewrite. Null keys/values rotate by message formulas; every
+    message's CRC-32 over magic..end is verified. The reader ships one
+    row per record with the parsed magic; the oracle replays every
+    formula. Population: doc_id % 8 in {2, 3}, both magic parities."""
+    def write(i, n, cp):
+        base = _samples(cp, 64, 53)
+        msgs = [{
+            "timestamp": 1600000000000 + i * 50 + k * 13 if i % 2 else -1,
+            "key": (None if (i + k) % 3 == 0 else
+                    _cycle(base, 3 + (n + k) % 15, 5 * k)),
+            "value": (None if (i + k) % 4 == 1 else
+                      _cycle(base, 8 + (n * 2 + k * 7) % 90, 9 * k)),
+        } for k in range(1 + (i + n) % 3)]
+        return encode_kafka_legacy_set(
+            msgs, magic=i % 2,
+            codec=("none", "gzip", "snappy", "lz4")[(i // 8) % 4],
+            base_offset=i * 500,
+        )
 
-    import pandas as pd
-
-    from polars_express_spark.functions.kafka import (
-        encode_kafka_legacy_set,
-        read_kafka_records,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        & (F.col("doc_id") % 8 >= 2) & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 53) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                base_arr = np.array([int(x) for x in fs], dtype=np.uint8)
-
-                def body(ln, c):
-                    arr = ((base_arr.astype(np.int64) + c) % 256
-                           ).astype(np.uint8)
-                    return np.tile(arr, (ln + 63) // 64)[:ln].tobytes()
-
-                magic = doc_id % 2
-                msgs = []
-                for i in range(1 + (doc_id + n_chars) % 3):
-                    key = (None if (doc_id + i) % 3 == 0 else
-                           body(3 + (n_chars + i) % 15, 5 * i))
-                    val = (None if (doc_id + i) % 4 == 1 else
-                           body(8 + (n_chars * 2 + i * 7) % 90, 9 * i))
-                    msgs.append({
-                        "timestamp": (1600000000000 + doc_id * 50
-                                      + i * 13) if magic else -1,
-                        "key": key, "value": val,
-                    })
-                payloads.append(encode_kafka_legacy_set(
-                    msgs, magic=magic,
-                    codec=["none", "gzip", "snappy",
-                           "lz4"][(doc_id // 8) % 4],
-                    base_offset=doc_id * 500,
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), KAFKA_SCHEMA,
-        _formula("fs", bases), synth, kafka_record_batches,
+    return _roundtrip(
+        spark, sf_dir, KAFKA_SCHEMA, write, kafka_record_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 >= 2 AND doc_id % 8 < 4",
     )
 
 
@@ -5652,76 +3430,30 @@ def q_kafka_legacy(spark, sf_dir):
     """,
 )
 def q_lz4_extract(spark, sf_dir):
-    """LZ4 frame decompression under the driver hash (the codec
-    modern infrastructure actually runs, functions/lz4.py: frames
-    written by the in-tree writer twin with its xxHash32, headers
-    walked in Python and decoded by liblz4 through pyarrow). Per
-    document a real ``.lz4`` frame is muxed
-    executor-side over 40 + (n_chars*3)%400 stride-59 formula bytes at
-    block size 64 — every frame MULTI-BLOCK, so the block loop and the
-    EndMark are exercised — with per-block xxh32 checksums on even
-    docs, the content-size field omitted on doc%3==2, stored
-    (uncompressed-bit) blocks on doc%3==1 and compressed run-match
-    blocks otherwise, and the whole-content xxh32 ALWAYS on (one
-    hash-function bug and nothing parses). read_lz4_content walks
-    the frame's block framing and has liblz4 verify the
-    header-checksum byte and every checksum layer, then ships exact
-    content stats plus the verified posture flags; the oracle replays the byte arithmetic in SQL. Scale shape:
-    one scan, one doc_id exchange (_codec_parallel), ONE fused Arrow
-    pass; quarter population doc%8 in {4,5}, disjoint from the other
-    serialization slices, with the %2/%3 strategies surviving (their
-    residues over {4,5,12,13,20,21,...} cover every case)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from polars_express_spark.functions.lz4 import (
-        encode_lz4_frame,
-        read_lz4_content,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        & (F.col("doc_id") % 8 >= 4) & (F.col("doc_id") % 8 < 6)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 59) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                base_arr = np.array([int(x) for x in fs], dtype=np.uint8)
-                ln = 40 + (n_chars * 3) % 400
-                content = np.tile(
-                    base_arr, (ln + 63) // 64
-                )[:ln].tobytes()
-                payloads.append(encode_lz4_frame(
-                    content,
-                    block_size=64,
-                    block_checksums=doc_id % 2 == 0,
-                    content_size=doc_id % 3 != 2,
-                    content_checksum=True,
-                    store_uncompressed=doc_id % 3 == 1,
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), LZ4_SCHEMA,
-        _formula("fs", bases), synth, lz4_content_batches,
+    """LZ4 frame decompression (functions/lz4.py: frames from the in-tree
+    writer twin with its xxHash32, headers walked in Python and decoded
+    by liblz4 through pyarrow): 40 + (n_chars·3)%400 bytes cycled from a
+    stride-59 base at block size 64, so every frame is MULTI-BLOCK, with
+    per-block xxh32 checksums on even docs, the content-size field
+    omitted on doc%3 = 2, stored (uncompressed-bit) blocks on doc%3 = 1
+    and compressed run-match blocks otherwise, and the whole-content
+    xxh32 always on. The reader walks the block framing, has liblz4
+    verify the header checksum and every checksum layer, and ships
+    exact content stats plus the verified posture flags; the oracle
+    replays the byte arithmetic. Population: doc_id % 8 in {4, 5},
+    whose residues cover every %2/%3 case."""
+    return _roundtrip(
+        spark, sf_dir, LZ4_SCHEMA,
+        lambda i, n, cp: encode_lz4_frame(
+            _cycle(_samples(cp, 64, 59), 40 + (n * 3) % 400),
+            block_size=64,
+            block_checksums=i % 2 == 0,
+            content_size=i % 3 != 2,
+            content_checksum=True,
+            store_uncompressed=i % 3 == 1,
+        ),
+        lz4_content_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 >= 4 AND doc_id % 8 < 6",
     )
 
 
@@ -5766,106 +3498,49 @@ def q_lz4_extract(spark, sf_dir):
     """,
 )
 def q_zstd_extract(spark, sf_dir):
-    """Zstandard shard decompression under the driver hash (the
-    compression modern LLM corpora actually ship in, functions/
-    zstd.py: RFC 8878 frame headers walked in Python, the frames
-    decoded by libzstd through pyarrow). Per document the content is stride-67
-    formula bytes cycled from ONE 64-byte base whose last byte is
-    forced to 0x0A — every 64th byte a newline, the ``.jsonl.zst``
-    shard shape, with n_lines pinning the record count — length
-    48 + (n_chars*5)%480, and the WIRE FORM rotates by doc%4:
-    0 = the in-tree store writer (single-segment, content size +
-    xxh64 checksum); 1 = windowed checksum-less blocks of 64 with an
-    appended 64-192-byte run that the writer emits as real RLE
-    blocks; 2 = libzstd ITSELF via pyarrow at level 1/3/9/19 by
-    (doc//4)%4 — genuine FSE-compressed sequences and Huffman
-    literals under the driver hash; 3 = a multi-frame stream (two
-    checksummed frames split at ln//2 with an RFC 8878 skippable
-    frame between). read_zstd_content walks every frame header and
-    has libzstd decode them — declared sizes and checksums
-    verified — and ships exact content stats plus the
-    stream's posture (frame count, all-checksummed flag, declared
-    size or -1); the oracle replays the byte arithmetic in SQL.
-    Scale shape: one scan, one doc_id exchange (_codec_parallel),
-    ONE fused Arrow pass (synth+decode composed in a single
-    MapInPandas); quarter population doc%8>=6 with the %4
-    wire-form rotation surviving (residues {6,7,14,15,...} cover
-    every case)."""
-    from typing import Iterator
+    """Zstandard shard decompression (functions/zstd.py: RFC 8878 frame
+    headers walked in Python, frames decoded by libzstd through
+    pyarrow). The content is 48 + (n_chars·5)%480 bytes cycled from a
+    stride-67 base whose last byte is forced to 0x0A — every 64th byte
+    a newline, the ``.jsonl.zst`` shape, with n_lines pinning the
+    record count — and the WIRE FORM rotates by doc%4: the in-tree
+    store writer (single segment, content size + xxh64 checksum);
+    windowed checksum-less blocks of 64 with an appended 64-192-byte
+    run the writer emits as RLE blocks; libzstd itself at level
+    1/3/9/19 by (doc//4)%4 (real FSE sequences and Huffman literals);
+    or two checksummed frames split at ln//2 with a skippable frame
+    between. The reader walks every frame header, has libzstd decode
+    them with declared sizes and checksums verified, and ships exact
+    content stats plus the stream's posture (frame count,
+    all-checksummed flag, declared size or -1); the oracle replays the
+    byte arithmetic. Population: doc_id % 8 ≥ 6, whose residues cover
+    every wire form."""
+    def write(i, n, cp):
+        base = _samples(cp, 64, 67)
+        base[63] = 10  # the IF(j = 63, 10, ...) newline sentinel
+        ln = 48 + (n * 5) % 480
+        content = _cycle(base, ln)
+        if i % 4 == 0:
+            return encode_zstd(content, single_segment=True, checksum=True)
+        if i % 4 == 1:
+            return encode_zstd(
+                content + content[:1] * (64 + (n % 3) * 64),
+                block_size=64, content_size=False, checksum=False,
+            )
+        if i % 4 == 2:
+            return pa.Codec(
+                "zstd", compression_level=(1, 3, 9, 19)[(i // 4) % 4]
+            ).compress(content, asbytes=True)
+        skip = struct.pack("<II", 0x184D2A50, i % 64) + b"m" * (i % 64)
+        return (encode_zstd(content[:ln // 2], single_segment=True,
+                            checksum=True)
+                + skip
+                + encode_zstd(content[ln // 2:], content_size=True,
+                              checksum=True))
 
-    import pandas as pd
-
-    from polars_express_spark.functions.zstd import (
-        encode_zstd,
-        read_zstd_content,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        & (F.col("doc_id") % 8 >= 6)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        b = cp[(np.arange(64) * 67) % len(cp)] % 256
-        b[63] = 10  # the IF(j = 63, 10, ...) newline sentinel
-        return b
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _s
-
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                base_arr = np.array([int(x) for x in fs], dtype=np.uint8)
-                ln = 48 + (n_chars * 5) % 480
-                content = np.tile(
-                    base_arr, (ln + 63) // 64
-                )[:ln].tobytes()
-                strat = doc_id % 4
-                if strat == 0:
-                    blob = encode_zstd(content, single_segment=True,
-                                       checksum=True)
-                elif strat == 1:
-                    rl = 64 + (n_chars % 3) * 64
-                    blob = encode_zstd(
-                        content + bytes([content[0]]) * rl,
-                        block_size=64, content_size=False,
-                        checksum=False,
-                    )
-                elif strat == 2:
-                    import pyarrow as pa
-
-                    lvl = [1, 3, 9, 19][(doc_id // 4) % 4]
-                    blob = bytes(pa.Codec(
-                        "zstd", compression_level=lvl
-                    ).compress(content, asbytes=True))
-                else:
-                    h = ln // 2
-                    skip = _s.pack("<II", 0x184D2A50,
-                                   doc_id % 64) + b"m" * (doc_id % 64)
-                    blob = (encode_zstd(content[:h], single_segment=True,
-                                        checksum=True)
-                            + skip
-                            + encode_zstd(content[h:], content_size=True,
-                                          checksum=True))
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), ZSTD_SCHEMA,
-        _formula("fs", bases), synth, zstd_content_batches,
+    return _roundtrip(
+        spark, sf_dir, ZSTD_SCHEMA, write, zstd_content_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 >= 6",
     )
 
 
@@ -5932,105 +3607,46 @@ def q_zstd_extract(spark, sf_dir):
     """,
 )
 def q_msgpack_extract(spark, sf_dir):
-    """MessagePack decode under the driver hash (r16 — the Fluentd/
-    Redis serialization next to CBOR; functions/msgpack.py is pinned
-    against spec-derived byte vectors in the property suite). Per
-    document a real payload is muxed executor-side: a top-level array
-    of 2 + doc_id%3 maps, each carrying an integer 'id' spanning
-    negative and multi-width heads (n_chars·(r+1) − 700), a str 'name'
-    ('rec-{doc}-{r}' — fixstr and str8 widths both land), a bin 'bin'
-    of stride-47 formula bytes cycled from the doc's ONE 64-byte base
-    with a +13r rotation per record (the tfexample perf lesson;
-    record 1 zero-length — the empty-bin head), a fixarray 'tags' of
-    1 + (doc+r)%5 small ints, a
-    sixteenth-integer float 'score' (exact in binary64), a parity
-    boolean 'ok', and (r17) the spec-defined TIMESTAMP extension 'ts'
-    (ext -1 — the Fluentd event-time field, the r16 verdict's missing
-    #3) rotating all three layouts by (doc+r)%3: timestamp32 (nsec=0,
-    sec<2^32), timestamp64 (30-bit nsec over 34-bit sec), timestamp96
-    (negative pre-epoch seconds) — so fixint/negative-fixint/uint/int,
-    fixstr, bin, fixarray, fixmap, float64, bool, and all three ext -1
-    layouts are hashed every round. read_msgpack_records re-decodes
-    through the full spec walk (UTF-8 validation, duplicate-key
-    rejection, depth cap, nanosecond range enforcement) and ships one
-    row per element with exact ts_sec/ts_nsec columns; the oracle
-    replays the arithmetic in SQL.
-    Scale shape: one scan, one doc_id exchange (_codec_parallel), two
-    fused Arrow stages."""
-    from typing import Iterator
+    """MessagePack decode (functions/msgpack.py, pinned against
+    spec-derived vectors in the property suite): a top-level array of
+    2 + doc_id%3 maps, each with an integer 'id' spanning negative and
+    multi-width heads (n_chars·(r+1) − 700), a str 'name'
+    ('rec-{doc}-{r}', fixstr and str8 widths), a bin 'bin' cycled from
+    the doc's stride-47 64-byte base with a +13r rotation (record 1
+    empty), a fixarray 'tags' of 1 + (doc+r)%5 small ints, a
+    sixteenth-integer float 'score', a parity boolean 'ok', and the
+    timestamp extension 'ts' (ext -1) rotating all three layouts by
+    (doc+r)%3 — timestamp32, timestamp64 (30-bit nsec over 34-bit sec)
+    and timestamp96 (negative pre-epoch seconds). The reader runs the
+    full spec walk (UTF-8 validation, duplicate-key rejection, depth
+    cap, nanosecond range) and ships one row per element with exact
+    ts_sec/ts_nsec; the oracle replays the arithmetic. Population:
+    doc_id % 8 < 4."""
+    def write(i, n, cp):
+        base = _samples(cp, 64, 47)
+        items = []
+        for r in range(2 + i % 3):
+            sec = n * 97 + r * 1013
+            items.append({
+                "id": n * (r + 1) - 700,
+                "name": f"rec-{i}-{r}",
+                "bin": (b"" if r == 1 else
+                        _cycle(base, 14 + (n + r * 3) % 130, 13 * r)),
+                "tags": [(n + t * 7 + r) % 256
+                         for t in range(1 + (i + r) % 5)],
+                "score": ((n + 23 * r) % 2048) / 16.0,
+                "ok": (i + r) % 2 == 0,
+                "ts": MsgpackTimestamp(*[
+                    (sec % 2**32, 0),
+                    (sec % 2**34, 1 + (n + r) % 999_999_999),
+                    (-(sec % 10_000_000_000) - 1, (n + r) % 1_000_000_000),
+                ][(i + r) % 3]),
+            })
+        return encode_msgpack(items)
 
-    import pandas as pd
-
-    from polars_express_spark.functions.msgpack import (
-        MsgpackTimestamp,
-        encode_msgpack,
-        read_msgpack_records,
-    )
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus; %3 record counts, %5 tag counts, and %2
-        # parities survive doc%8<4 (idle sf0.1 measurement in the
-        # commit, the standing trim ratchet)
-        & (F.col("doc_id") % 8 < 4)
-    )
-    bs = d.select(
-        "doc_id",
-        "n_chars",
-        # ONE 64-byte base per doc; record r derives via a +13r byte
-        # rotation Python-side (the oracle replays it)
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(64) * 47) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, fs in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["fs"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                base_arr = np.array([int(x) for x in fs], dtype=np.uint8)
-                items = []
-                for r in range(2 + doc_id % 3):
-                    if r == 1:
-                        binv = b""
-                    else:
-                        ln = 14 + (n_chars + r * 3) % 130
-                        arr = ((base_arr.astype(np.int64) + 13 * r) % 256).astype(np.uint8)
-                        binv = np.tile(arr, (ln + 63) // 64)[:ln].tobytes()
-                    n_tags = 1 + (doc_id + r) % 5
-                    items.append({
-                        "id": n_chars * (r + 1) - 700,
-                        "name": f"rec-{doc_id}-{r}",
-                        "bin": binv,
-                        "tags": [(n_chars + t * 7 + r) % 256
-                                 for t in range(n_tags)],
-                        "score": ((n_chars + 23 * r) % 2048) / 16.0,
-                        "ok": (doc_id + r) % 2 == 0,
-                        "ts": MsgpackTimestamp(
-                            *[
-                                ((n_chars * 97 + r * 1013) % 2**32, 0),
-                                ((n_chars * 97 + r * 1013) % 2**34,
-                                 1 + (n_chars + r) % 999_999_999),
-                                (-((n_chars * 97 + r * 1013)
-                                   % 10_000_000_000) - 1,
-                                 (n_chars + r) % 1_000_000_000),
-                            ][(doc_id + r) % 3]
-                        ),
-                    })
-                payloads.append(encode_msgpack(items))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(bs), MSGPACK_SCHEMA,
-        _formula("fs", bases), synth, msgpack_record_batches,
+    return _roundtrip(
+        spark, sf_dir, MSGPACK_SCHEMA, write, msgpack_record_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )
 
 
@@ -6060,82 +3676,34 @@ def q_msgpack_extract(spark, sf_dir):
     """,
 )
 def q_multimodal_exif(spark, sf_dir):
-    """EXIF extraction under the driver hash (r16 — the standard
-    image-corpus preprocessing read: orientation correction and camera
-    metadata; functions/exif.py composes the JPEG marker walk with the
-    TIFF IFD grammar). Per document a real baseline JPEG (the
-    q_multimodal_jpeg constant-block exact tier, stride-53 so the
-    rasters are hash-independent of the r12 twin) is spliced with a
-    real APP1 Exif segment — byte order II/MM by doc parity so BOTH
-    TIFF endiannesses are hashed, orientation covering all 8 spec
-    values via (doc//8 + doc)%8 + 1, formula-driven Make/Model/ISO
-    strings and a RATIONAL FNumber, and the Exif sub-IFD reached
-    through the 0x8769 pointer. read_exif_meta re-walks the markers,
-    decodes the IFDs with bounds/NUL/orientation validation, AND
-    decodes the raster through parse_jpeg behind the spliced segment —
-    pinning that the splice leaves the entropy-coded body intact. The
-    oracle replays every field formula in SQL. Scale shape: one scan,
-    one doc_id exchange (_codec_parallel), ONE fused Arrow pass (r18: synth+decode composed in a single MapInPandas)."""
-    from typing import Iterator
+    """EXIF extraction (functions/exif.py composes the JPEG marker walk
+    with the TIFF IFD grammar): a baseline JPEG of constant 8×8 blocks
+    (stride-53 samples) spliced with a real APP1 Exif segment — byte
+    order II/MM by doc parity, so both TIFF endiannesses are hashed;
+    orientation over all 8 values via (doc//8 + doc)%8 + 1;
+    formula-driven Make/Model/ISO; a RATIONAL FNumber; and the Exif
+    sub-IFD reached through the 0x8769 pointer. The reader re-walks the
+    markers, decodes the IFDs with bounds/NUL/orientation validation,
+    and decodes the raster through parse_jpeg behind the spliced
+    segment, pinning that the splice leaves the entropy-coded body
+    intact. The oracle replays every field formula. Population:
+    doc_id % 8 < 4."""
+    def write(i, n, cp):
+        app1 = encode_exif_app1(
+            make=f"maker-{i % 5}",
+            model=f"cam-{n % 100}",
+            orientation=(i // 8 + i) % 8 + 1,
+            datetime=f"2026:08:{1 + i % 28:02d} 12:00:00",
+            iso=100 * (1 + i % 32),
+            exif_w=32,
+            exif_h=32,
+            fnumber=(10 + i % 90, 10),
+            big_endian=i % 2 == 1,
+        )
+        jpeg = encode_jpeg(_blocks(_samples(cp, 16, 53), 4))
+        return splice_exif_app1(jpeg, app1)
 
-    import pandas as pd
-
-    from polars_express_spark.functions.exif import (
-        encode_exif_app1,
-        read_exif_meta,
-        splice_exif_app1,
-    )
-    from polars_express_spark.functions.jpeg import encode_jpeg
-
-    d = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-        # half the corpus; the %2 byte-order parity, %5/%32/%90 field
-        # formulas, and the (doc//8 + doc)%8 orientation sweep all
-        # survive doc%8<4 (idle sf0.1 measurement in the commit, the
-        # standing trim ratchet)
-        & (F.col("doc_id") % 8 < 4)
-    )
-    px = d.select(
-        "doc_id",
-        "n_chars",
-        "text",
-    )
-
-    def bases(cp, i, n):
-        import numpy as np
-
-        return cp[(np.arange(16) * 53) % len(cp)] % 256
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars, p in zip(
-                pdf["doc_id"], pdf["n_chars"], pdf["p"]
-            ):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                raster = (
-                    np.array([int(x) for x in p], dtype="u1")
-                    .reshape(4, 4).repeat(8, axis=0).repeat(8, axis=1)
-                )
-                app1 = encode_exif_app1(
-                    make=f"maker-{doc_id % 5}",
-                    model=f"cam-{n_chars % 100}",
-                    orientation=(doc_id // 8 + doc_id) % 8 + 1,
-                    datetime=f"2026:08:{1 + doc_id % 28:02d} 12:00:00",
-                    iso=100 * (1 + doc_id % 32),
-                    exif_w=32,
-                    exif_h=32,
-                    fnumber=(10 + doc_id % 90, 10),
-                    big_endian=doc_id % 2 == 1,
-                )
-                payloads.append(
-                    splice_exif_app1(encode_jpeg(raster), app1)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return _fused(
-        _codec_parallel(px), EXIF_SCHEMA,
-        _formula("p", bases), synth, exif_meta_batches,
+    return _roundtrip(
+        spark, sf_dir, EXIF_SCHEMA, write, exif_meta_batches,
+        where=_HAS_TEXT + " AND doc_id % 8 < 4",
     )

@@ -1743,15 +1743,22 @@ def test_ima_adpcm_decode(spark):
 
 
 def test_pixel_formula_codepoint_parity(spark, ddb):
-    """r12 (ADVICE): q_multimodal_pixels' pixel formula
+    """The round-trip oracles' code-point formula
     ascii(substr(text, (i % length(text)) + 1, 1)) % 256 must agree
-    between Spark and DuckDB for ANY text, including supplementary-plane
-    characters. Measured on this Spark 4.1: ascii() returns the full
-    code point (128512 for U+1F600, not the 0xD8xx high surrogate) and
-    length()/substring() count code points — identical to DuckDB. This
-    test pins that parity on astral, BMP-high, and mixed strings so a
-    Spark regression to UTF-16-code-unit semantics fails HERE, not as an
-    opaque driver hash flip."""
+    between Spark, DuckDB and the Python side that the multimodal
+    corpus writers actually use (multimodal_corpus._codepoints, the
+    skeleton's per-row UTF-32 decode, sampled by _samples) for ANY
+    text, including supplementary-plane characters. Spark 4.1's ascii()
+    returns the full code point (128512 for U+1F600, not the 0xD8xx
+    high surrogate) and length()/substring() count code points, as
+    DuckDB does. Pinned on astral, BMP-high and mixed strings, so a
+    regression to UTF-16-code-unit semantics on any side fails HERE,
+    not as an opaque oracle mismatch."""
+    from polars_express_spark.queries.multimodal_corpus import (
+        _codepoints,
+        _samples,
+    )
+
     texts = [
         "plain ascii",
         "café naïve",          # latin-1 supplement
@@ -1774,7 +1781,9 @@ def test_pixel_formula_codepoint_parity(spark, ddb):
             " for i in range(0, 16)]",
             [t, t],
         ).fetchone()[0]
-        assert got_spark[i] == list(got_duck), (t, got_spark[i], got_duck)
+        got_python = _samples(_codepoints(t), 16, 1).tolist()
+        assert got_spark[i] == list(got_duck) == got_python, (
+            t, got_spark[i], got_duck, got_python)
 
 
 def test_png_real_resize_features_and_encoder_roundtrip(spark):

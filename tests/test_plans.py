@@ -732,54 +732,31 @@ def _assert_one_fused_pass_over_doc_id_exchange(p: str) -> None:
     assert seq == ["MapInPandas", "Exchange", "Scan parquet"], seq
 
 
-@pytest.mark.parametrize(
-    "name",
-    ["q_multimodal_pixels", "q_multimodal_bmp", "q_multimodal_gif",
-     "q_multimodal_jpeg", "q_multimodal_mulaw", "q_multimodal_alaw",
-     "q_multimodal_png_subbyte", "q_multimodal_netpbm", "q_multimodal_au",
-     "q_multimodal_wavext", "q_multimodal_avi_audio", "q_multimodal_qoi",
-     "q_multimodal_tiff", "q_multimodal_flac", "q_multimodal_aiff",
-     "q_multimodal_tga", "q_multimodal_ico", "q_multimodal_webp",
-     "q_multimodal_msadpcm", "q_multimodal_ogg", "q_multimodal_ogg_flac",
-     "q_multimodal_mkv_audio", "q_warc_extract", "q_multimodal_mp3",
-     "q_zip_extract", "q_tar_extract", "q_tfrecord_extract",
-     "q_avro_extract", "q_tfexample_extract", "q_multimodal_ogg_theora",
-     "q_multimodal_icns", "q_seqfile_extract", "q_cbor_extract",
-     "q_msgpack_extract", "q_multimodal_exif", "q_avro_record",
-     "q_tfseq_extract", "q_lz4_extract", "q_kafka_extract",
-     "q_zstd_extract", "q_avro_nested", "q_kafka_legacy",
-     "q_jsonl_zst"],
+# every multimodal corpus query is a write→read round trip built by
+# multimodal_corpus._roundtrip, except these two
+_NOT_ROUNDTRIPS = {"q_multimodal_meta", "q_multimodal_frames"}
+_ROUNDTRIPS = sorted(
+    n for n, fn in QS.items()
+    if fn.__module__.endswith(".multimodal_corpus") and n not in _NOT_ROUNDTRIPS
 )
+
+
+def test_roundtrip_list_is_derived_from_the_registry():
+    assert len(_ROUNDTRIPS) == 50, _ROUNDTRIPS
+
+
+@pytest.mark.parametrize("name", _ROUNDTRIPS)
 def test_codec_roundtrip_plan_shape(spark, name):
-    """Pin the codec-query scale shape: ONE parquet scan, ONE hash
-    exchange of the kilobyte formula rows on doc_id directly under the
-    Python tier (the _codec_parallel fix — without it the single-split
-    documents scan serializes the Python codec on one core), and the
-    encode and decode stages fused into a SINGLE MapInPandas pass
-    (each extra MapInPandas node is a separate Python runner with its
-    own per-pass handshake plus a JVM round trip of the payload bytes —
-    _fused composes the same stage functions into one node). Nothing
-    sits above the pass: no Sort or range exchange (result order is not
-    part of a query's contract) and no InMemoryRelation (nothing is
-    persisted per invocation). A refactor that drops the repartition,
-    splits the codec pipeline back into chained Python nodes or puts a
-    presentation sort back fails here, not in a bench regression."""
-    _assert_one_fused_pass_over_doc_id_exchange(plan_of(name, spark))
-
-
-@pytest.mark.parametrize(
-    "name",
-    ["q_multimodal_video", "q_multimodal_gif_anim", "q_multimodal_mp4",
-     "q_multimodal_y4m", "q_multimodal_webp_anim", "q_multimodal_mkv"],
-)
-def test_video_roundtrip_plan_shape(spark, name):
-    """The frame-sampling round trips run a three-stage Python pipeline
-    (mux → demux+decode → stats) with the same scale contract as the
-    other codec queries: ONE parquet scan, ONE hash exchange of the
-    kilobyte formula rows on doc_id directly under the Python tier, all
-    three stages fused into a SINGLE MapInPandas pass (one Python runner
-    handshake instead of three, and the muxed container plus the
-    sampled frames never round-trip through the JVM), and above it only
-    the JVM projection that splits the frame key — no Sort, no range
-    exchange, no InMemoryRelation."""
+    """Pin the round-trip scale shape: ONE parquet scan, ONE hash
+    exchange of the small document rows on doc_id under the Python
+    tier (without it the single-split documents scan runs the Python
+    codecs on one core), and the writer and every reader stage fused
+    into a SINGLE MapInPandas pass (each extra MapInPandas node is a
+    separate Python runner with its own handshake plus a JVM round trip
+    of the payload bytes). No Sort or range exchange (result order is
+    not part of a query's contract) and no InMemoryRelation (nothing is
+    persisted per invocation). A query that bypasses the skeleton, drops
+    the repartition, splits the pipeline into chained Python nodes or
+    puts a presentation sort back fails here, not in a bench
+    regression."""
     _assert_one_fused_pass_over_doc_id_exchange(plan_of(name, spark))

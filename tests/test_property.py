@@ -3797,6 +3797,36 @@ def test_avro_zero_width_record_roundtrip():
     assert parse_avro(patched) is None
 
 
+def test_avro_zero_width_array_items_decode_in_bulk():
+    """An array block of zero-width items (fixed size 0 here) packs any
+    count into no bytes. The decoder charges the count to its item
+    budget and repeats one decoded item, so 2^22 items from a 5-byte
+    input cost one list extension; decoding them one by one took about
+    2 s. A count over the budget is still refused before anything is
+    allocated."""
+    import time
+
+    from polars_express_spark.functions.avro import (
+        _MAX_INFLATE,
+        _read_datum,
+        _w_long,
+    )
+
+    arr = ("array", ("fixed", 0))
+    data = _w_long(1 << 22) + _w_long(0)
+    assert len(data) == 5
+    t0 = time.process_time()
+    items, end = _read_datum(data, 0, arr)
+    assert time.process_time() - t0 < 0.5
+    assert end == len(data) and len(items) == 1 << 22 and items[-1] == b""
+    assert _read_datum(_w_long(_MAX_INFLATE + 1) + _w_long(0), 0, arr) is None
+    # the budget spans blocks: two that each fit but together exceed it
+    half = (1 << 19) + 1
+    two = _w_long(half) + _w_long(half) + _w_long(0)
+    assert _read_datum(two, 0, arr, [1 << 20]) is None
+    assert len(_read_datum(two, 0, arr, [1 << 21])[0]) == 2 * half
+
+
 @given(
     codec=st.sampled_from(["null", "deflate", "snappy", "zstandard"]),
     opb=st.integers(0, 3),
