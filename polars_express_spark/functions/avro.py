@@ -787,16 +787,16 @@ def parse_avro(payload: bytes):
                 return None
             data = raw
         total_inflated += len(data)
+        zero_width = fields is not None and _min_datum_width(schema) == 0
         if count > len(data):
-            # r18 fix (found by the property suite): a record schema can
-            # be ZERO-width on the wire (fixed size 0, or a record of
-            # only such fields / bare nulls), so any count legally packs
-            # into zero bytes and the "every datum takes >=1 byte" guard
-            # wrongly rejected valid files. For zero-width schemas bound
-            # the ALLOCATION instead: charge one byte of the shared
-            # inflate budget per datum, so a lying count can never
-            # allocate past the same 64 MiB cap everything else obeys.
-            if fields is None or _min_datum_width(("record", fields)) > 0:
+            # a record schema can be ZERO-width on the wire (fixed size
+            # 0, or a record of only such fields / bare nulls), so any
+            # count legally packs into zero bytes. For zero-width
+            # schemas bound the ALLOCATION instead: charge one byte of
+            # the shared inflate budget per datum, so a lying count can
+            # never allocate past the same 64 MiB cap everything else
+            # obeys.
+            if not zero_width:
                 return None
             if count > _MAX_INFLATE - total_inflated:
                 return None
@@ -805,14 +805,20 @@ def parse_avro(payload: bytes):
         block: list = []
         # zero-width array items draw on the same shared budget
         budget = [_MAX_INFLATE - total_inflated]
+        if zero_width:
+            # every datum decodes to the same record from no bytes:
+            # decode one, repeat it, and skip the per-datum loop
+            r = _read_datum(data, q, schema, budget)
+            if r is None or r[1] != q:
+                return None
+            block.extend([r[0]] * count)
+            count = 0
         for _ in range(count):
             if fields is not None:
-                rec = {}
-                for fname, ftype in fields:
-                    r = _read_datum(data, q, ftype, budget)
-                    if r is None:
-                        return None
-                    rec[fname], q = r
+                r = _read_datum(data, q, schema, budget)
+                if r is None:
+                    return None
+                rec, q = r
                 block.append(rec)
                 continue
             r = _read_sized(data, q)

@@ -29,9 +29,12 @@ checksum, the declared content size against the output, linked-block
 match windows, and every block's sequences (a match before the start,
 a truncated sequence, a block not ending on the format's 5 trailing
 literals). Output is read in chunks and capped at ``max_output``.
-liblz4 does NOT reject a match with offset 0, which the format calls
-invalid: such a match leaves whatever the output buffer held, so only
-a content checksum (or the caller's own CRC) detects it.
+liblz4 does not reject a match with offset 0, which the format calls
+invalid: such a match copies whatever the output buffer held, and a
+content checksum computed over that output passes. So Python also
+walks each compressed block's sequence headers (``_zero_offset``) and
+rejects an offset-0 match before liblz4 runs; the walk reads only
+tokens, length extensions and offsets, never decodes.
 
 A bare block decodes by wrapping it in a constant frame header (block
 independent, 4 MiB block maximum, no checksums) and an EndMark, so
@@ -108,6 +111,35 @@ def xxh32(data: bytes, seed: int = 0) -> int:
     return h
 
 
+def _zero_offset(block: bytes) -> bool:
+    """True if a match in this LZ4 block has offset 0. Only the
+    sequence headers are read; a block whose lengths run past its end
+    is left for liblz4 to reject."""
+    pos, n = 0, len(block)
+    while pos < n:
+        token = block[pos]
+        pos += 1
+        lit = token >> 4
+        if lit == 15:
+            while pos < n:
+                ext = block[pos]
+                pos += 1
+                lit += ext
+                if ext != 255:
+                    break
+        pos += lit
+        if pos + 2 > n:  # the last sequence is literals only
+            return False
+        if block[pos] == 0 and block[pos + 1] == 0:
+            return True
+        pos += 2
+        if token & 15 == 15:
+            while pos < n and block[pos] == 255:
+                pos += 1
+            pos += 1
+    return False
+
+
 def decompress_lz4_block(payload: bytes, max_output: int = _MAX_OUTPUT):
     """LZ4 block decompression: returns the uncompressed bytes or None
     on a malformed block (see the module docstring), an empty block
@@ -116,7 +148,7 @@ def decompress_lz4_block(payload: bytes, max_output: int = _MAX_OUTPUT):
     ``max_output``."""
     if not isinstance(payload, (bytes, bytearray, memoryview)):
         return None
-    if not 0 < len(payload) <= _BLOCK_MAX:
+    if not 0 < len(payload) <= _BLOCK_MAX or _zero_offset(payload):
         return None
     frame = (_BLOCK_FRAME_HEAD + struct.pack("<I", len(payload))
              + bytes(payload) + _END_MARK)
@@ -216,7 +248,10 @@ def parse_lz4_frame(payload: bytes, max_output: int = _MAX_OUTPUT):
         pos += 4
         if word == 0:
             break
-        pos += (word & 0x7FFFFFFF) + (4 if blk_cs else 0)
+        size = word & 0x7FFFFFFF
+        if not word & 0x80000000 and _zero_offset(payload[pos : pos + size]):
+            return None
+        pos += size + (4 if blk_cs else 0)
     if pos + (4 if content_cs else 0) != n:
         return None  # truncated, or bytes after the frame
     content = stream_decompress(payload, "lz4", max_output)

@@ -145,13 +145,6 @@ def bloom_pruned_join(
     counted once to size the bitmap (it is the SMALL side by contract,
     as in every runtime-filter plan).
 
-    The dim side is PERSISTED (it is read three times: the sizing
-    count, the bitmap build and the join) and is never unpersisted
-    here, because the returned frame still reads it: its storage stays
-    until the caller runs ``spark.catalog.clearCache()`` (or unpersists
-    ``dim``'s cached plan). A long-lived session calling this in a loop
-    must do so, as the query registry's callers do.
-
     Only inner and left_semi are accepted: pruning the fact side is
     semantics-preserving exactly when unmatched fact rows would be
     dropped anyway; a left/full outer join must KEEP them, so a
@@ -161,11 +154,11 @@ def bloom_pruned_join(
         raise ValueError(
             f"bloom pruning only preserves inner/left_semi semantics, got {how!r}"
         )
-    # the dim side is consumed three times (sizing count, bitmap build,
-    # the join itself) — persist it so the filtered scan runs once
-    # (r19, guide §5; a per-invocation intermediate, the caller's
-    # clearCache drops it)
-    dim = dim.persist()
+    # the dim side is read three times (sizing count, bitmap build, the
+    # join itself): a lazy local checkpoint runs its filtered scan once
+    # during the count, and Spark's ContextCleaner frees the blocks once
+    # the returned frame is unreachable
+    dim = dim.localCheckpoint(eager=False)
     n = dim.select(dim_key).where(F.col(dim_key).isNotNull()).count()
     bf = bloom_build(dim, dim_key, num_bits=bloom_size_for(max(n, 1)), num_hashes=num_hashes)
     # ship the bitmap as a broadcast 1-row FRAME, not an expression

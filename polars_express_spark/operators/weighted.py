@@ -85,17 +85,8 @@ def weighted_quantile(
     # distinct (group, value) with combined mass: the partial→final agg
     # is the map-side combine a naive window never gets, and it makes
     # `value` a total order per group (the prefix-scan contract).
-    # r19: hash-repartition on the agg keys FIRST — the input scan is a
-    # handful of splits at test SFs (guide §2.5 input skew), so without
-    # the exchange the partial aggregate hashes every row on those few
-    # cores; near-unique values make that partial pure overhead, and
-    # spreading it across shuffle.partitions measured 0.83 → 0.58s on
-    # the dd stage alone (interleaved sf0.1, every paired pass faster).
-    # The exchange moves the same skinny rows the agg exchange moved.
-    base = d.select(group, value, w_expr.alias("__w"))
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     dd = (
-        base.repartition(n_part, group, value)
+        d.select(group, value, w_expr.alias("__w"))
         .groupBy(group, value)
         .agg(F.sum("__w").alias("__w"))
         .localCheckpoint(eager=False)

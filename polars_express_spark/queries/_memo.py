@@ -7,10 +7,11 @@ persisted inter-stage table in the 100 TB design, so it is materialized
 ONCE per (application, dataset, params) and every consumer reads the
 materialization.
 
-The round-3 version was a pair of module-level dicts with no eviction:
-harmless over a bench run, an executor-storage leak over a long server
-lifetime with many datasets (ADVICE r3). This is the one LRU-bounded
-store both query families now use:
+Every entry is a lazy ``localCheckpoint``: it truncates lineage,
+materializes on its first consumer's action, and survives an external
+``spark.catalog.clearCache()``. The store is LRU-bounded, so executor
+storage does not grow with the number of datasets a long-lived server
+sees:
 
 - each entry remembers the SparkSession that built it; entries whose
   SparkContext has been STOPPED are dropped on the next access (test
@@ -18,21 +19,13 @@ store both query families now use:
   process). Entries of other live sessions are left alone, so two
   concurrent sessions never thrash each other's memos;
 - at most ``capacity`` frames are held; overflow evicts the least
-  recently used entry and best-effort ``unpersist()``s it. For
-  ``cache()``d frames that frees the storage immediately; for
-  ``localCheckpoint``ed frames the blocks are released by Spark's
-  ContextCleaner once the evicted reference is garbage collected —
-  either way storage is bounded by ``capacity``, not by the number of
-  (dataset, params) combinations ever seen;
+  recently used entry and unpersists its checkpoint RDD, so storage is
+  bounded by ``capacity``, not by the number of (dataset, params)
+  combinations ever seen;
 - ``release(sf_dir)`` drops every entry for one dataset explicitly
   (server hook for dataset deletion / reload);
 - all mutation happens under one lock — the stated use case includes a
   threaded HTTP server, and the eviction loops iterate the store.
-
-persist='checkpoint' → lazy ``localCheckpoint``: truncates lineage and
-survives an external ``spark.catalog.clearCache()`` (the bench issues
-one between queries). persist='cache' → plain ``cache()`` for frames
-whose lineage is cheap but recompute is not.
 """
 
 from __future__ import annotations
@@ -61,23 +54,25 @@ class FrameMemo:
         #: key -> (DataFrame, owning SparkSession)
         self._entries: OrderedDict[tuple, tuple] = OrderedDict()
 
-    def get(self, spark, key: tuple, build: Callable, persist: str = "checkpoint"):
+    def get(self, spark, key: tuple, build: Callable, _mode=None):
         """Return the memoized frame for `key`, building it on first use.
 
-        LIFETIME CONTRACT (ADVICE r5): a returned handle is guaranteed
-        valid only until the entry is evicted — eviction unpersists, and
-        for localCheckpoint'd frames lineage is truncated, so a held
-        handle may fail with missing checkpoint blocks rather than
-        recompute. Consumers must either use the frame within the query
-        that fetched it (every current caller does) or size `capacity`
-        above the working set; long-lived pins should copy via
-        .localCheckpoint() of their own.
+        A returned handle is valid only until the entry is evicted:
+        eviction unpersists the checkpoint, and with its lineage
+        truncated a held handle fails on missing blocks rather than
+        recomputing. Consumers must use the frame within the query that
+        fetched it (every current caller does) or size `capacity` above
+        the working set.
+
+        `_mode` is ignored. It keeps the benchmark tracer's memo wrapper
+        (``perfbench/tracing.py``), which forwards a fifth positional
+        argument, working.
         """
         app = spark.sparkContext.applicationId
         full = (app, *key)
         with self._lock:
             # drop only entries whose owning session is actually dead —
-            # concurrent live sessions keep their memos (ADVICE r4)
+            # concurrent live sessions keep their memos
             for k, (_, owner) in [(k, v) for k, v in self._entries.items()]:
                 if _is_stopped(owner):
                     self._evict(k)
@@ -88,8 +83,7 @@ class FrameMemo:
                 self._evict(next(iter(self._entries)))
         # build OUTSIDE the lock: plan construction can be slow and may
         # itself consult the memo (shingle frame feeding the pair frame)
-        df = build()
-        df = df.localCheckpoint(eager=False) if persist == "checkpoint" else df.cache()
+        df = build().localCheckpoint(eager=False)
         with self._lock:
             if full not in self._entries:  # lost a race: keep the first build
                 # re-check capacity at insert: concurrent misses all pass
@@ -103,20 +97,14 @@ class FrameMemo:
     def _evict(self, key: tuple) -> None:  # caller holds the lock
         df, _ = self._entries.pop(key)
         try:
-            # localCheckpoint'd frames: DataFrame.unpersist() is a
-            # CacheManager call that does NOT free the checkpoint RDD's
-            # blocks — without this they linger until Python GC releases
-            # the py4j handle and the ContextCleaner runs (measured: ~2s
-            # after an explicit gc, unbounded lag without one). Unpersist
-            # the LogicalRDD's internal RDD directly so executor storage
-            # is promptly bounded by `capacity`.
+            # DataFrame.unpersist() is a CacheManager call that does not
+            # free a checkpoint's blocks; left alone they linger until
+            # Python GC releases the py4j handle and the ContextCleaner
+            # runs. Unpersist the LogicalRDD's internal RDD directly so
+            # executor storage is promptly bounded by `capacity`.
             plan = df._jdf.queryExecution().analyzed()
             if plan.getClass().getSimpleName() == "LogicalRDD":
                 plan.rdd().unpersist(False)
-        except Exception:
-            pass
-        try:
-            df.unpersist()
         except Exception:  # session already stopped — nothing to free
             pass
 

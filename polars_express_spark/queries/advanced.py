@@ -138,7 +138,7 @@ def q_tfidf(spark, sf_dir):
         )
 
     d = load_table(spark, sf_dir, "documents")
-    tf = FRAMES.get(spark, ("bm25_tf", sf_dir), build_tf, persist="checkpoint")
+    tf = FRAMES.get(spark, ("bm25_tf", sf_dir), build_tf)
     dfq = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     nd = d.agg(F.count(F.lit(1)).cast("double").alias("n"))
     scored = tf.join(dfq, "t").crossJoin(F.broadcast(nd)).withColumn(

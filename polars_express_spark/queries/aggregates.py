@@ -612,37 +612,27 @@ def q_outlier_mad(spark, sf_dir):
     MADs — the outlier rule that, unlike z-scores, is not itself
     dragged by the outliers.
 
-    r19 optimization-round shape (guide §6 scan-sharing + §2.5): the
-    2-column projection is round-robin-repartitioned and PERSISTED
-    once, and the three dependent passes (median → MAD → outlier count)
-    run over the cached rows — the r18 plan re-read the parquet scan
-    three times, and because sf0.1 lineitem is 3 input splits, each
-    pass built its percentile partial maps on 3 cores (the scaling
-    block pinned the query at ratio 1.3). The repartition is the q03
-    recipe (b3e44fb): percentile's partial aggregation is associative
-    and partition-order-free, so spreading the cached rows across
-    shuffle.partitions parallelizes the map-side insert work. Measured
-    interleaved at sf0.1: repartition+persist < persist-only on every
-    paired pass; 3.35 (r19 round-start bench) → ~2.4 idle probe.
+    The two-column projection is round-robin repartitioned across
+    ``spark.sql.shuffle.partitions`` and lazily checkpointed, so the
+    three dependent passes (median → MAD → outlier count) read one
+    materialization instead of re-reading the parquet scan; a small
+    lineitem is only a few input splits, and percentile's partial
+    aggregation is associative and order-free, so spreading the rows
+    parallelizes the map-side work. The checkpoint is the query's own
+    intermediate: Spark's ContextCleaner frees its blocks once the
+    returned frame is unreachable.
 
-    The exact buffering ``F.percentile`` stays, re-adjudicated AGAIN
-    this round with the passes running over cached data: the
-    bounded-memory ``exact_quantiles`` rewrite (med+MAD both bracketed)
-    measured 3.99s min vs 2.66s for this shape at sf0.1 — the GK
-    sketch + refine machinery costs more than the buffering map at
-    this scale, so the r7-r12 acceptance stands. At a SF where a
-    group's distinct prices outgrow one task, the swap remains the
-    same three lines (exact_quantiles on li, then on the broadcast-
-    joined deviation frame). Values are unchanged: identical
-    percentile calls, identical deviation expression, identical
-    ``3.0 * 1.4826 * mad`` threshold tree; the persist is a
-    per-invocation intermediate inside the timed region (bench.py
-    clears the cache per query)."""
+    The exact buffering ``F.percentile`` stays: at sf0.1 the
+    bounded-memory ``exact_quantiles`` rewrite (median and MAD both
+    bracketed) measured 3.99 s against 2.66 s for this shape. Where a
+    group's distinct prices outgrow one task, the swap is three lines
+    (``exact_quantiles`` on ``li``, then on the broadcast-joined
+    deviation frame)."""
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_returnflag", "l_extendedprice")
         .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     med = li.groupBy("l_returnflag").agg(
         F.percentile("l_extendedprice", F.lit(0.5)).alias("med")

@@ -1069,7 +1069,7 @@ def q_bm25_rank(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("tf")
         )
 
-    tf = FRAMES.get(spark, ("bm25_tf", sf_dir), build_tf, persist="checkpoint")
+    tf = FRAMES.get(spark, ("bm25_tf", sf_dir), build_tf)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
     dfreq = tf.groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     chosen = (
@@ -1181,7 +1181,7 @@ def q_dup_spans(spark, sf_dir):
             ).alias("e"),
         ).select("doc_id", F.col("e.pos").alias("pos"), F.col("e.sh").alias("sh"))
 
-    sh = FRAMES.get(spark, ("dup_spans_sh", sf_dir), build_sh, persist="checkpoint")
+    sh = FRAMES.get(spark, ("dup_spans_sh", sf_dir), build_sh)
     dup = (
         sh.groupBy("sh")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1278,7 +1278,7 @@ def q_perplexity(spark, sf_dir):
             ).alias("e"),
         ).select("doc_id", "e.w1", "e.w2")
 
-    bg = FRAMES.get(spark, ("bigrams_doc", sf_dir), build_bg, persist="checkpoint")
+    bg = FRAMES.get(spark, ("bigrams_doc", sf_dir), build_bg)
     pc = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     uc = pc.groupBy("w1").agg(F.sum("c").cast("bigint").alias("n"))
     d = load_table(spark, sf_dir, "documents")

@@ -257,12 +257,11 @@ def _shingle_arrays(d, n=3):
 def _shingle_arrays_shared(spark, sf_dir, n=3):
     """ONE materialized shingle-array frame per (session, dataset):
     candidate generation, the array-intersect verify, and minhash
-    signatures all read the same materialization (the round-3 code built
-    three). persist='checkpoint', NOT 'cache': the bench clears the
-    cache between queries, and a clearCache()d InMemoryRelation held by
-    a memo recomputes its child on EVERY reference without re-caching —
-    the minhash plan references this frame four times, so 'cache' turned
-    a 1.5s query into 16s. localCheckpoint blocks survive clearCache. At
+    signatures all read the same materialization. FrameMemo checkpoints
+    it rather than caching it: a clearCache()d InMemoryRelation held by
+    a memo recomputes its child on EVERY reference without re-caching,
+    and the minhash plan references this frame four times (1.5s → 16s
+    when it was cached). localCheckpoint blocks survive clearCache. At
     100 TB the same role is played by persisting the shingle table to
     storage between pipeline stages.
 
@@ -278,7 +277,7 @@ def _shingle_arrays_shared(spark, sf_dir, n=3):
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
         return _shingle_arrays(d.repartition(width, "doc_id"), n)
 
-    return FRAMES.get(spark, ("shingles", sf_dir, n), build, persist="checkpoint")
+    return FRAMES.get(spark, ("shingles", sf_dir, n), build)
 
 
 def _verify_jaccard(cand, sh_arr, threshold=0.2):
@@ -388,7 +387,6 @@ def _jaccard_pairs_shared(spark, sf_dir, t: float = 0.2):
             t,
             sh_arr=_shingle_arrays_shared(spark, sf_dir),
         ),
-        persist="checkpoint",
     )
 
 
@@ -396,10 +394,10 @@ def ngram_jaccard_pairs(d, t: float = 0.2, sh_arr=None):
     """Core of q_ngram_jaccard over any (doc_id, text) DataFrame —
     exposed separately so property tests can drive it with arbitrary
     fixtures (tests/test_property.py). Pass sh_arr to share an
-    already-persisted shingle frame; otherwise one is built and cached
-    locally (throwaway-fixture path)."""
+    already-materialized shingle frame; otherwise one is built and
+    lazily checkpointed here (throwaway-fixture path)."""
     if sh_arr is None:
-        sh_arr = _shingle_arrays(d).cache()
+        sh_arr = _shingle_arrays(d).localCheckpoint(eager=False)
     sh = sh_arr.select("doc_id", F.explode("sh").alias("s"))
     rare = sh.join(
         sh.groupBy("s").agg(F.count(F.lit(1)).alias("df")).where(
@@ -592,7 +590,7 @@ def q_simhash(spark, sf_dir, n_bits: int = 16):
             load_table(spark, sf_dir, "documents").repartition(width, "doc_id"), n_bits
         )
 
-    fps = FRAMES.get(spark, ("simhash_fps", sf_dir, n_bits), build_fps, persist="checkpoint")
+    fps = FRAMES.get(spark, ("simhash_fps", sf_dir, n_bits), build_fps)
     doc_stats = fps.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         ((F.min("simhash") >= 0) & (F.max("simhash") < 2**n_bits)).alias("range_ok"),

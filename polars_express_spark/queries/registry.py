@@ -362,30 +362,7 @@ _PRIORITY = [
 
 
 def all_queries() -> dict[str, QueryFn]:
-    """Name → ``(spark, sf_dir) -> DataFrame`` for every registered query.
-
-    CALLER CONTRACT: three persist sites cache a per-invocation
-    intermediate and return a DataFrame built on that cache WITHOUT
-    unpersisting, because the cache must outlive the returned plan's
-    execution:
-
-    - ``operators/bloom.py`` ``bloom_pruned_join`` persists its dim
-      side (q_bloom_prune);
-    - ``queries/aggregates.py`` ``q_outlier_mad`` persists its
-      two-column projection for the three dependent passes;
-    - ``queries/pipeline.py`` ``ngram_jaccard_pairs`` caches its
-      shingle arrays when the caller passes no shared frame.
-
-    A long-lived caller (server loop, notebook, repeated driver) must
-    therefore issue ``spark.catalog.clearCache()`` after consuming each
-    result, exactly as bench.py's per-query ``finally`` does; otherwise
-    MEMORY_AND_DISK entries accumulate across invocations. The bounded
-    FrameMemo (``_memo.FRAMES``) intermediates are exempt: they are
-    LRU-evicted localCheckpoints sized by ``FrameMemo.capacity`` and
-    survive clearCache by design. tests/test_memo.py pins that the
-    contract holds (repeated invocation + clearCache leaves the
-    persistent-RDD set bounded) and that the codec queries persist
-    nothing."""
+    """Name → ``(spark, sf_dir) -> DataFrame`` for every registered query."""
     # import for side effects: each module registers its queries
     from polars_express_spark.queries import (  # noqa: F401
         aggregates,

@@ -250,7 +250,7 @@ def q_embed_neardup(spark, sf_dir):
 def _memoized_cached(spark, key: tuple, build):
     from polars_express_spark.queries._memo import FRAMES
 
-    return FRAMES.get(spark, key, build, persist="checkpoint")
+    return FRAMES.get(spark, key, build)
 
 
 def train_ivf_centroids(emb, n_cells: int, n_iters: int = 3):

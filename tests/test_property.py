@@ -3291,6 +3291,53 @@ def test_lz4_block_envelope_is_the_4mib_frame_maximum():
         assert (got == data) if ok else (got is None)
 
 
+def test_lz4_offset_zero_match_is_rejected():
+    """The format calls a match with offset 0 invalid, and liblz4
+    decodes it from whatever its output buffer held. The sequence
+    walk rejects it in a bare block and in a frame, with or without a
+    content checksum (one computed over the zero-filled reading passes
+    liblz4). The same block with offset 4, and liblz4's own output with
+    long literal and match extensions, still decode."""
+    import random
+    import struct
+
+    import pyarrow as pa
+
+    from polars_express_spark.functions.lz4 import (
+        decompress_lz4_block,
+        parse_lz4_frame,
+        xxh32,
+    )
+
+    def block(offset):
+        return b"\x40abcd" + struct.pack("<H", offset) + b"\x50vwxyz"
+
+    def frame(blk, checksum_of=None):
+        desc = bytes([0x64 if checksum_of is not None else 0x60, 0x40])
+        out = struct.pack("<I", 0x184D2204) + desc + bytes([(xxh32(desc) >> 8) & 0xFF])
+        out += struct.pack("<I", len(blk)) + blk + struct.pack("<I", 0)
+        if checksum_of is not None:
+            out += struct.pack("<I", xxh32(checksum_of))
+        return out
+
+    good = b"abcdabcdvwxyz"
+    assert decompress_lz4_block(block(4)) == good
+    assert parse_lz4_frame(frame(block(4)))[0] == good
+    assert parse_lz4_frame(frame(block(4), good))[0] == good
+    assert decompress_lz4_block(block(0)) is None
+    assert parse_lz4_frame(frame(block(0))) is None
+    assert parse_lz4_frame(frame(block(0), b"abcd\0\0\0\0vwxyz")) is None
+    assert parse_lz4_frame(frame(block(0), good)) is None
+
+    rng = random.Random(7)
+    words = [bytes(rng.choices(b"abcdefgh", k=rng.randint(1, 9))) for _ in range(50)]
+    text = b" ".join(rng.choice(words) for _ in range(20000)) + b"z" * 700 + bytes(range(256))
+    raw = bytes(pa.Codec("lz4_raw").compress(text, asbytes=True))
+    assert decompress_lz4_block(raw) == text
+    framed = bytes(pa.Codec("lz4").compress(text, asbytes=True))
+    assert parse_lz4_frame(framed)[0] == text
+
+
 @given(
     magic=st.integers(0, 1),
     codec=st.sampled_from(["none", "gzip", "snappy", "lz4"]),
@@ -3825,6 +3872,29 @@ def test_avro_zero_width_array_items_decode_in_bulk():
     two = _w_long(half) + _w_long(half) + _w_long(0)
     assert _read_datum(two, 0, arr, [1 << 20]) is None
     assert len(_read_datum(two, 0, arr, [1 << 21])[0]) == 2 * half
+
+
+def test_avro_zero_width_records_decode_in_bulk():
+    """The container-level twin of the array case above: a block of a
+    zero-width record schema packs any count into an empty body. The
+    count is charged to the inflate budget and one decoded record is
+    repeated, so a 2^22 count patched into a one-record container costs
+    one list extension; decoding the records one by one took several
+    seconds of CPU."""
+    import time
+
+    from polars_express_spark.functions.avro import _w_long, encode_avro, parse_avro
+
+    schema = [("f0", ("fixed", 0)), ("f1", ("fixed", 0))]
+    enc = encode_avro([{"f0": b"", "f1": b""}], schema=schema)
+    body_at = enc.rindex(b"\x02\x00")  # count=1 (zigzag 2), size=0
+    n = 1 << 22
+    patched = enc[:body_at] + _w_long(n) + enc[body_at + 1:]
+    t0 = time.process_time()
+    got = parse_avro(patched)
+    assert time.process_time() - t0 < 0.5
+    assert got is not None and len(got[3]) == 1 and len(got[3][0]) == n
+    assert got[3][0][-1] == {"f0": b"", "f1": b""}
 
 
 @given(
