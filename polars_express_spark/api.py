@@ -137,8 +137,10 @@ def run_regression(lake: DataLake, data_id: str, x_col: str, y_col: str) -> Regr
     slope = (n * m["sxy"] - m["sx"] * m["sy"]) / denom
     intercept = (m["sy"] - slope * m["sx"]) / n
     ss_tot = n * m["syy"] - m["sy"] * m["sy"]
-    r2 = None if ss_tot == 0 else (n * m["sxy"] - m["sx"] * m["sy"]) ** 2 / (denom * ss_tot)
-    return RegressionResult(slope=slope, intercept=intercept, r_squared=r2, n=n)
+    r_squared = (
+        None if ss_tot == 0 else (n * m["sxy"] - m["sx"] * m["sy"]) ** 2 / (denom * ss_tot)
+    )
+    return RegressionResult(slope=slope, intercept=intercept, r_squared=r_squared, n=n)
 
 
 import re as _re
@@ -184,8 +186,8 @@ _SQL_SAFE_TVFS = frozenset(
 # leak server-local paths. Matched on the LAST name part so qualified
 # spellings (system.builtin.reflect) can't slip through, AFTER stripping
 # one "try_" prefix — Spark 4 ships try_-aliased variants with identical
-# semantics (try_reflect invokes the same arbitrary static method;
-# verified bypass, ADVICE r7), and stripping covers future try_* aliases
+# semantics (try_reflect invokes the same arbitrary static method; a
+# verified bypass), and stripping covers future try_* aliases
 # wholesale. Belt-and-braces: any name CONTAINING "reflect" or starting
 # with "input_file" is also denied, so a renamed alias in a future Spark
 # minor can't reopen the hole without tripping the substring net.
@@ -219,7 +221,7 @@ def _walk_parsed(node, plans: list, exprs: list) -> None:
     IN / LATERAL all hold a nested plan behind Expression.plan()) and
     into CTE definitions (Spark 4's UnresolvedWith keeps cteRelations
     OUT of children(), so a naive child walk never sees what a CTE body
-    reads — the r7 red-team case "WITH t AS (SELECT * FROM
+    reads — the red-team case "WITH t AS (SELECT * FROM
     text.`/etc/passwd`) SELECT * FROM t")."""
     plans.append(node)
     if node.getClass().getSimpleName() == "UnresolvedWith":
@@ -246,7 +248,7 @@ def _check_read_only(plan, allowed_views: set[str]) -> None:
     """Reject any parsed plan that could mutate state, read outside the
     registered temp views, or call out of the SQL sandbox.
 
-    Guard layers (review r6 — the treeString regex was bypassable by
+    Guard layers (a treeString regex was bypassable by
     direct-path relations and reflection functions, and false-positived
     on user identifiers):
     1. node CLASS names must not match the mutating-node vocabulary;

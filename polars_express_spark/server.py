@@ -37,8 +37,9 @@ whole tables) needs to detect the cap.
 Error mapping: BadRequest → 400 like the reference; unknown dataset →
 404 (the reference surfaces its load failure as a 500, src/main.rs:114 —
 404 is the deliberate, documented improvement since DataLake can check
-existence cheaply); malformed JSON or Content-Length → 400; a body over
-MAX_BODY_BYTES → 413, answered without reading the body.
+existence cheaply); malformed JSON or Content-Length → 400; a limit
+that is not a non-negative integer → 400, before any plan is built; a
+body over MAX_BODY_BYTES → 413, answered without reading the body.
 """
 
 from __future__ import annotations
@@ -63,6 +64,20 @@ class _HttpError(Exception):
     def __init__(self, code: int, message: str):
         super().__init__(message)
         self.code = code
+
+
+def _limit(value) -> int | None:
+    """A request's row limit: None when absent, else a non-negative
+    integer. Raises _HttpError 400 otherwise, before any plan is built."""
+    if value is None:
+        return None
+    try:
+        limit = int(value)
+    except (TypeError, ValueError):
+        raise _HttpError(400, "limit must be an integer") from None
+    if limit < 0:
+        raise _HttpError(400, "limit must not be negative")
+    return limit
 
 
 def _make_handler(lake: DataLake):
@@ -103,17 +118,16 @@ def _make_handler(lake: DataLake):
         def _dispatch(self, data_id: str, endpoint: str, params: dict, body: dict | None):
             """Returns (payload, extra-headers)."""
             if endpoint == "preview":
-                limit = int(params.get("limit", ["100"])[0])
+                limit = _limit(params.get("limit", ["100"])[0])
                 rows, truncated = api.get_data_preview_flagged(lake, data_id, limit=limit)
                 return rows, {"X-Truncated": "true" if truncated else "false"}
             if endpoint == "delays":
                 sorting = params.get("sorting", [""])[0]
-                limit = params.get("limit", [None])[0]
                 rows, truncated = api.get_sorted_delays_flagged(
                     lake,
                     data_id,
                     descending=sorting.lower() == "desc",
-                    limit=int(limit) if limit is not None else None,
+                    limit=_limit(params.get("limit", [None])[0]),
                 )
                 return rows, {"X-Truncated": "true" if truncated else "false"}
             # regression
@@ -134,12 +148,7 @@ def _make_handler(lake: DataLake):
                 body = self._json_body()
                 if not isinstance(body, dict) or "query" not in body:
                     return self._send(400, {"error": "query required"})
-                try:
-                    limit = (
-                        int(body["limit"]) if body.get("limit") is not None else None
-                    )
-                except (TypeError, ValueError):
-                    return self._send(400, {"error": "limit must be an integer"})
+                limit = _limit(body.get("limit"))
                 try:
                     rows = api.run_sql(lake, str(body["query"]), limit=limit)
                 except api.BadRequest as e:
@@ -166,7 +175,7 @@ def _make_handler(lake: DataLake):
         def _handle_safely(self, method: str):
             # last-resort guard: a handler that dies mid-request leaves
             # the client with a connection reset, not a status code —
-            # under concurrent writes (r7 threaded e2e) transient races
+            # under concurrent writes (a threaded e2e) transient races
             # surface here as a clean 500 instead
             try:
                 self._handle(method)
@@ -176,8 +185,8 @@ def _make_handler(lake: DataLake):
                 pass  # client went away; nothing to send
             except Exception:  # noqa: BLE001
                 # log server-side only: exception text can carry paths /
-                # Spark internals a client has no business seeing
-                # (ADVICE r7) — the body stays generic
+                # Spark internals a client has no business seeing —
+                # the body stays generic
                 import logging
                 import traceback
 

@@ -196,6 +196,30 @@ def test_oversized_body_413_without_reading_it(base_url, path):
     assert status == 413 and "error" in err
 
 
+def _get_any(url):
+    """_get that returns (code, body) for error responses too."""
+    try:
+        return _get(url)
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+@pytest.mark.parametrize(
+    "send",
+    [
+        lambda base: _get_any(base + "/data/trains/preview?limit=-5"),
+        lambda base: _get_any(base + "/data/trains/delays?limit=-1"),
+        lambda base: _post_any(base + "/sql", {"query": "SELECT 1 AS x", "limit": -3}),
+    ],
+    ids=["preview", "delays", "sql"],
+)
+def test_negative_limit_400(base_url, send):
+    """A negative limit is the client's error: 400 from the request
+    check, not a 500 from Spark's plan or a Spark message."""
+    status, err = send(base_url)
+    assert status == 400 and err == {"error": "limit must not be negative"}
+
+
 def test_sql_endpoint(base_url):
     """POST /sql: datasets are queryable views; joins/aggs work; limit
     caps rows; DDL/DML and multi-statements are rejected read-only."""
