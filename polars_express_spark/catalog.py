@@ -15,13 +15,15 @@ Here generalized Spark-first:
   inferred schema keyed by the path's stat signature (`file_version`)
   and hands it back through ``spark.read.schema`` while the files are
   unchanged.
-- Data is decoded once per file version too: `DataLake.load` keeps one
-  in-memory columnar copy (``persist(MEMORY_ONLY)``) of each flat
-  dataset — a single file or a directory without subdirectories — and
-  returns it while the files are unchanged, so repeated requests read
-  memory, and only the columns they use, instead of re-parsing CSV or
-  re-decoding Parquet. The first action that reads the copy builds it;
-  partitions that do not fit in memory are read from the files again.
+- Data is decoded once per file version too: from the second load of a
+  version on, `DataLake.load` keeps one in-memory columnar copy
+  (``persist(MEMORY_ONLY)``) of each flat dataset — a single file or a
+  directory without subdirectories — and returns it while the files are
+  unchanged, so repeated requests read memory, and only the columns
+  they use, instead of re-parsing CSV or re-decoding Parquet. A version
+  loaded once (a lake built for one query) is never copied. The first
+  action that reads the copy builds it; partitions that do not fit in
+  memory are read from the files again.
 - Any rewrite (overwrite, restore, compact, append, a file dropped in
   by hand) changes the signature, so neither cache serves data or a
   schema of an older version and no writer has to invalidate them for
@@ -36,6 +38,7 @@ import hashlib
 import os
 import stat
 import threading
+import uuid
 import weakref
 
 from pyspark import StorageLevel
@@ -77,12 +80,14 @@ _SCHEMA_CONFS = (
 # paths read, so no size limit or eviction
 _schemas: dict[str, tuple[tuple, T.StructType]] = {}
 _schemas_lock = threading.Lock()
-# Reader option that tags a cached scan with its file version. Spark's
-# CacheManager matches a read to a cached one by plan, and a scan's plan
-# names the path but not the files' version: an untagged cached scan
-# would also answer any later read of the path, a plain spark.read
-# included, after the files were replaced. No reader interprets the
-# option; it only makes the cached plan equal to reads of its version.
+# Reader option that tags a cached scan with its lake and file version.
+# Spark's CacheManager matches a read to a cached one by plan, and a
+# scan's plan names the path but not the files' version: an untagged
+# cached scan would also answer any later read of the path, a plain
+# spark.read included, after the files were replaced. The lake's part
+# keeps two lakes over one directory from sharing, and so from
+# unpersisting, each other's entry. No reader interprets the option; it
+# only makes the cached plan equal to the lake's reads of its version.
 _VERSION_OPTION = "lakeFileVersion"
 
 
@@ -149,7 +154,8 @@ def read_path(spark: SparkSession, fmt: str, path: str, schema=None, **options) 
     key = (
         version,
         fmt,
-        tuple(sorted(options.items())),
+        # the version tag names the reader, not the schema
+        tuple(sorted(kv for kv in options.items() if kv[0] != _VERSION_OPTION)),
         tuple(spark.conf.get(c) for c in _SCHEMA_CONFS),
     )
     with _schemas_lock:
@@ -184,11 +190,13 @@ class DataLake:
         # data_id → file_version its /sql temp view was built over
         # (api.run_sql rebuilds a view when its dataset's version moves)
         self.sql_views: dict[str, tuple] = {}
-        # data_id → (path, file_version, persisted frame): one per dataset.
-        # The frames live as long as the lake: a lake that is dropped
-        # unpersists them, so a short-lived lake leaves no cache behind.
+        # data_id → (path, file_version, tagged scan): one per dataset,
+        # persisted from the version's second load on. The frames live
+        # as long as the lake: a lake that is dropped unpersists them, so
+        # a short-lived lake leaves no cache behind.
         self._frames: dict[str, tuple[str, tuple, DataFrame]] = {}
         self._frames_lock = threading.Lock()
+        self._nonce = uuid.uuid4().hex
         weakref.finalize(self, _unpersist_all, self._frames).atexit = False
 
     def dataset_path(self, data_id: str) -> str | None:
@@ -249,18 +257,22 @@ class DataLake:
         declared schema skips inference for any format). The schema is
         inferred once per file version (`read_path`).
 
-        A single file or a directory without subdirectories is read once
-        per file version: the first load persists the scan
-        (``MEMORY_ONLY``, built by the first action that reads it) and
-        every later load of the same version returns that frame, so
-        repeated requests run no schema job and read columnar memory,
-        only the columns they use. When the files change, the next load
-        persists a scan of the new version and unpersists the old one;
-        `save`, `restore` and `compact` unpersist the rewritten dataset's
-        frame and no other. A load that finds the dataset gone forgets
-        its frame, and a lake that is dropped unpersists all of its
-        frames. Session confs that change inferred types apply to a
-        cached dataset from its next version.
+        A single file or a directory without subdirectories that is
+        loaded more than once is read once per file version: the first
+        load returns a scan tagged with the version and keeps it, and the
+        second load of the same version persists that frame
+        (``MEMORY_ONLY``, built by the first action that reads it), so
+        every later load runs no schema job and reads columnar memory,
+        only the columns it uses.
+        A version loaded once costs no cache. A kept frame that is no
+        longer cached (``spark.catalog.clearCache()``) is persisted again
+        on its next load. When the files change, the next load keeps a
+        scan of the new version and unpersists the old frame; `save`,
+        `restore` and `compact` unpersist the rewritten dataset's frame
+        and no other. A load that finds the dataset gone forgets its
+        frame, and a lake that is dropped unpersists all of its frames.
+        Session confs that change inferred types apply to a kept dataset
+        from its next version.
 
         Partitioned (nested) directories, a declared ``schema`` and
         ``merge_schema`` get a plain lazy scan, so partition filters
@@ -280,25 +292,38 @@ class DataLake:
         with self._frames_lock:
             hit = self._frames.get(data_id)
         if hit is not None and hit[:2] == (path, version):
-            return hit[2]
-        return self._cache(data_id, path, version)
+            return self._persisted(data_id, hit[2])
+        return self._keep(data_id, path, version)
 
-    def _cache(self, data_id: str, path: str, version: tuple | None) -> DataFrame:
-        """Scan of a dataset version that has no frame yet, persisted and
-        kept as the id's frame in place of the older version's. A nested
-        directory, or files that changed while Spark listed them, get a
-        plain scan; so does a missing path."""
+    def _persisted(self, data_id: str, df: DataFrame) -> DataFrame:
+        """A repeat load of a kept version: its frame, persisted if it is
+        not cached yet (the version's second load) or any more (a
+        clearCache). Persists under the lock, and only while the frame is
+        still the id's, so a frame a newer version replaced is never
+        cached again."""
+        if df.storageLevel == StorageLevel.NONE:
+            with self._frames_lock:
+                entry = self._frames.get(data_id)
+                if entry is not None and entry[2] is df and df.storageLevel == StorageLevel.NONE:
+                    df.persist(StorageLevel.MEMORY_ONLY)
+        return df
+
+    def _keep(self, data_id: str, path: str, version: tuple | None) -> DataFrame:
+        """First load of a dataset version: a scan tagged with the
+        version, kept as the id's frame in place of the older version's,
+        whose frame is unpersisted. A nested directory, or files that
+        changed while Spark listed them, get a plain scan; so does a
+        missing path."""
         if version is None or not _is_flat(path):
             return self._scan(path)
-        tag = hashlib.sha1(repr(version).encode()).hexdigest()
-        df = self._scan(path, **{_VERSION_OPTION: tag})
+        df = self._scan(path, **{_VERSION_OPTION: self._tag(version)})
         with self._frames_lock:
             if file_version(path) != version:
                 return df  # the listing may hold either version: not kept
             old = self._frames.get(data_id)
             if old is not None and old[:2] == (path, version):
                 return old[2]  # another thread kept this version first
-            self._frames[data_id] = (path, version, df.persist(StorageLevel.MEMORY_ONLY))
+            self._frames[data_id] = (path, version, df)
             gone = [
                 self._frames.pop(i)
                 for i, (p, _, _) in list(self._frames.items())
@@ -307,6 +332,10 @@ class DataLake:
         for _, _, frame in ([old] if old else []) + gone:
             frame.unpersist()
         return df
+
+    def _tag(self, version: tuple) -> str:
+        """The `_VERSION_OPTION` value of this lake's scans of a version."""
+        return hashlib.sha1(f"{self._nonce} {version!r}".encode()).hexdigest()
 
     def _drop(self, data_id: str) -> None:
         """Unpersist and forget a dataset's frame: after a rewrite, or

@@ -1,12 +1,13 @@
 """DataLake.load keeps one in-memory columnar copy per flat dataset and
-file version: a repeat load reads memory, any change to the files is
-seen by the next load and by a plain ``spark.read``, a rewrite evicts
-only the dataset it rewrote, and partitioned datasets keep their scan."""
+file version from the version's second load on: a repeat load reads
+memory, any change to the files is seen by the next load and by a plain
+``spark.read``, a rewrite evicts only the dataset it rewrote, one lake
+never evicts another's copy, and partitioned datasets keep their
+scan."""
 
 from __future__ import annotations
 
 import gc
-import hashlib
 import os
 import sys
 import threading
@@ -48,9 +49,9 @@ def _cached_tags(spark, path: str) -> list:
     return tags
 
 
-def _tag(path: str) -> str:
-    """The tag of the files at ``path`` as they are now."""
-    return hashlib.sha1(repr(file_version(path)).encode()).hexdigest()
+def _tag(lake: DataLake, path: str) -> str:
+    """``lake``'s tag of the files at ``path`` as they are now."""
+    return lake._tag(file_version(path))
 
 
 def _replace(path: str, table: pa.Table) -> None:
@@ -65,15 +66,20 @@ def _replace(path: str, table: pa.Table) -> None:
 
 def test_second_load_reads_memory(spark, tmp_path):
     lake = DataLake(spark, str(tmp_path))
-    lake.save(spark.range(20).toDF("v"), "t")
+    path = lake.save(spark.range(20).toDF("v"), "t")
     first = lake.load("t")
     assert first.count() == 20
+    # one load of a version costs no cache
+    assert not _cached(first)
+    assert _cached_tags(spark, path) == []
+    assert "InMemoryRelation" not in _plan(first.select("v"))
     second = lake.load("t")
     assert second is first
     assert _cached(second)
     assert "InMemoryRelation" in _plan(second.select("v"))
-    path = str(tmp_path / "t.parquet")
-    assert _cached_tags(spark, path) == [_tag(path)]
+    assert second.count() == 20
+    assert lake.load("t") is first
+    assert _cached_tags(spark, path) == [_tag(lake, path)]
 
 
 @pytest.mark.parametrize("name", ["t.parquet", "t.csv"])
@@ -82,6 +88,8 @@ def test_hand_replaced_file_is_seen_by_load_and_plain_read(spark, tmp_path, name
     _replace(path, pa.table({"v": list(range(5))}))
     lake = DataLake(spark, str(tmp_path))
     old = lake.load("t")
+    assert lake.load("t") is old
+    assert _cached(old)
     assert old.count() == 5
     _replace(path, pa.table({"v": list(range(7))}))
     plain = spark.read.option("header", True).csv(path) if name.endswith(".csv") else (
@@ -89,23 +97,26 @@ def test_hand_replaced_file_is_seen_by_load_and_plain_read(spark, tmp_path, name
     assert plain.count() == 7
     new = lake.load("t")
     assert new.count() == 7
-    assert sorted(int(r.v) for r in new.collect()) == list(range(7))
     assert not _cached(old)  # the old version's frame is unpersisted
+    assert lake.load("t") is new
     assert _cached(new)
-    assert _cached_tags(spark, path) == [_tag(path)]
+    assert sorted(int(r.v) for r in new.collect()) == list(range(7))
+    assert _cached_tags(spark, path) == [_tag(lake, path)]
 
 
 def test_overwrite_through_save_is_seen_and_frees_the_old_frame(spark, tmp_path):
     lake = DataLake(spark, str(tmp_path))
     path = lake.save(spark.range(5).toDF("v"), "t")
     old = lake.load("t")
-    assert old.count() == 5
+    assert lake.load("t") is old
+    assert old.count() == 5 and _cached(old)
     lake.save(spark.range(9).toDF("v"), "t")
     assert not _cached(old)
     assert spark.read.parquet(path).count() == 9
     new = lake.load("t")
+    assert lake.load("t") is new
     assert new.count() == 9
-    assert _cached_tags(spark, path) == [_tag(path)]
+    assert _cached_tags(spark, path) == [_tag(lake, path)]
 
 
 def test_save_of_one_dataset_keeps_the_others(spark, tmp_path):
@@ -113,10 +124,31 @@ def test_save_of_one_dataset_keeps_the_others(spark, tmp_path):
     lake.save(spark.range(3).toDF("v"), "a")
     lake.save(spark.range(4).toDF("v"), "b")
     a, b = lake.load("a"), lake.load("b")
+    assert lake.load("a") is a and lake.load("b") is b
     assert a.count() == 3 and b.count() == 4
+    assert _cached(a) and _cached(b)
     lake.save(spark.range(5).toDF("v"), "a")
     assert not _cached(a)
     assert _cached(b) and lake.load("b") is b
+
+
+def test_two_lakes_over_one_directory_keep_their_own_copies(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    _replace(path, pa.table({"v": list(range(5))}))
+    one, two = DataLake(spark, str(tmp_path)), DataLake(spark, str(tmp_path))
+    a, b = one.load("t"), two.load("t")
+    assert one.load("t") is a and two.load("t") is b
+    assert _cached(a) and _cached(b)
+    assert sorted(_cached_tags(spark, path)) == sorted([_tag(one, path), _tag(two, path)])
+    one._drop("t")  # as a save through `one` would
+    assert not _cached(a)
+    assert _cached(b) and two.load("t") is b
+    assert one.load("t") is not a  # a new frame: first load, not cached
+    del one, a
+    gc.collect()  # the dropped lake's finalizer leaves `two`'s copy
+    assert _cached(b)
+    assert _cached_tags(spark, path) == [_tag(two, path)]
+    assert b.count() == 5
 
 
 def test_clear_cache_between_loads_stays_correct(spark, tmp_path):
@@ -124,12 +156,19 @@ def test_clear_cache_between_loads_stays_correct(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     _replace(path, pa.table({"v": list(range(5))}))
     assert lake.load("t").count() == 5
+    assert lake.load("t").count() == 5 and _cached(lake.load("t"))
     spark.catalog.clearCache()
-    assert lake.load("t").count() == 5
+    # the kept frame is cached again by its next load
+    df = lake.load("t")
+    assert _cached(df)
+    assert df.count() == 5
+    assert _cached_tags(spark, path) == [_tag(lake, path)]
     _replace(path, pa.table({"v": list(range(8))}))
     spark.catalog.clearCache()
     assert lake.load("t").count() == 8
+    assert _cached(lake.load("t"))
     assert spark.read.parquet(path).count() == 8
+    assert _cached_tags(spark, path) == [_tag(lake, path)]
 
 
 def test_missing_dataset_forgets_its_frame(spark, tmp_path):
@@ -137,6 +176,7 @@ def test_missing_dataset_forgets_its_frame(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     _replace(path, pa.table({"v": list(range(5))}))
     df = lake.load("t")
+    assert lake.load("t") is df and _cached(df)
     assert df.count() == 5
     os.remove(path)
     with pytest.raises(FileNotFoundError):
@@ -147,8 +187,9 @@ def test_missing_dataset_forgets_its_frame(spark, tmp_path):
 def test_dropped_lake_leaves_no_cache_entry(spark, tmp_path):
     lake = DataLake(spark, str(tmp_path))
     path = lake.save(spark.range(5).toDF("v"), "t")
+    lake.load("t")
     assert lake.load("t").count() == 5
-    assert _cached_tags(spark, path) == [_tag(path)]
+    assert _cached_tags(spark, path) == [_tag(lake, path)]
     del lake
     gc.collect()
     assert _cached_tags(spark, path) == []
@@ -158,6 +199,7 @@ def test_partitioned_dataset_is_not_cached(spark, tmp_path):
     lake = DataLake(spark, str(tmp_path))
     df = spark.range(40).select((F.col("id") % 4).alias("k"), F.col("id").alias("v"))
     lake.save(df, "p", partition_by=["k"])
+    lake.load("p")
     loaded = lake.load("p")
     assert not _cached(loaded)
     filtered = lake.load("p").where(F.col("k") == 1)
@@ -172,8 +214,9 @@ def test_partitioned_dataset_is_not_cached(spark, tmp_path):
 def test_declared_schema_and_merge_schema_are_not_cached(spark, tmp_path):
     lake = DataLake(spark, str(tmp_path))
     lake.save(spark.range(5).toDF("v"), "t")
-    assert not _cached(lake.load("t", schema="v long"))
-    assert not _cached(lake.load("t", merge_schema=True))
+    for _ in range(2):
+        assert not _cached(lake.load("t", schema="v long"))
+        assert not _cached(lake.load("t", merge_schema=True))
 
 
 def test_threaded_reads_during_overwrites_see_whole_versions(spark, tmp_path):
@@ -233,4 +276,4 @@ def test_threaded_reads_during_overwrites_see_whole_versions(spark, tmp_path):
     assert all(reads_of(k) >= 3 for k in range(2, 7)), sorted(set(seen))
     final = lake.load("t").agg(F.count("*"), F.max("k")).collect()[0]
     assert tuple(final) == (60, 6)
-    assert _cached_tags(spark, path) == [_tag(path)]
+    assert _cached_tags(spark, path) == [_tag(lake, path)]

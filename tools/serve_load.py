@@ -1,23 +1,22 @@
 """Latency of the HTTP routes under concurrent clients.
 
-    python3 tools/serve_load.py [--rows N] [--requests R] [--clients 1,8,32]
+    python3 tools/serve_load.py
 
 Run from the root of a checkout. The script writes a lake of two
-datasets of N rows each into a temporary directory (``trains`` as
+datasets of ``ROWS`` rows each into a temporary directory (``trains`` as
 Parquet, ``trains_csv`` as CSV, both through ``DataLake.save``), serves
 it with ``server.make_server`` on an ephemeral localhost port, and plays
-one untimed warm-up round. Then, for each client count, that many
-threads each hold one ``http.client`` connection and send their share
-of R requests per route, closed loop (the next request after the
-previous reply). It prints the p50 and p99 latency of every route at
-every client count, and the number of failed requests. The driver heap
+one untimed warm-up round. Then, for each count in ``CLIENTS``, that
+many threads each hold one ``http.client`` connection and send their
+share of ``REQUESTS`` requests per route, closed loop (the next request
+after the previous reply). It prints the p50 and p99 latency of every
+route at every client count, and the number of failed requests. The driver heap
 is 2g unless ``SPARK_DRIVER_MEMORY`` says otherwise; cores come from
 ``SPARK_GRAFT_CPUS`` as for the server.
 """
 
 from __future__ import annotations
 
-import argparse
 import http.client
 import json
 import math
@@ -32,6 +31,9 @@ from collections import Counter
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+ROWS = 250_000  # per dataset
+REQUESTS = 32  # per route at each client count
+CLIENTS = (1, 8, 32)
 SQL = (
     "SELECT station_id, COUNT(*) AS n, SUM(arrival_delay) AS total"
     " FROM trains GROUP BY station_id ORDER BY station_id"
@@ -119,15 +121,7 @@ def run_level(port: int, clients: int, requests: int) -> tuple[dict, Counter]:
     return lat, failed
 
 
-def main(argv=None) -> int:
-    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    p.add_argument("--rows", type=int, default=250_000, help="rows per dataset")
-    p.add_argument("--requests", type=int, default=32,
-                   help="requests per route at each client count")
-    p.add_argument("--clients", default="1,8,32", help="comma-separated client counts")
-    args = p.parse_args(argv)
-    levels = [int(c) for c in args.clients.split(",")]
-
+def main() -> int:
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
     from polars_express_spark.server import make_server
     from polars_express_spark.session import get_spark
@@ -136,14 +130,14 @@ def main(argv=None) -> int:
     lake_dir = tempfile.mkdtemp(prefix="serve_load_")
     srv = None
     try:
-        lake = write_lake(spark, lake_dir, args.rows)
+        lake = write_lake(spark, lake_dir, ROWS)
         srv = make_server(lake, "127.0.0.1", 0)
         threading.Thread(target=srv.serve_forever, daemon=True).start()
         port = srv.server_address[1]
         run_level(port, 1, 1)  # warm-up, untimed
         print(f"{'clients':>7}  {'route':<22}{'n':>4}  {'p50_ms':>8}  {'p99_ms':>8}")
-        for clients in levels:
-            lat, failed = run_level(port, clients, args.requests)
+        for clients in CLIENTS:
+            lat, failed = run_level(port, clients, REQUESTS)
             for name, xs in lat.items():
                 print(f"{clients:>7}  {name:<22}{len(xs):>4}  "
                       f"{percentile(xs, 0.5):>8.1f}  {percentile(xs, 0.99):>8.1f}")
