@@ -116,8 +116,8 @@ def q_sql_surface(spark, sf_dir):
     (the endpoint's contract is JSON rows, so the DataFrame returned
     here is a local relation lifted from them). Building this query —
     including schema-only sweeps — therefore executes the statement and
-    re-registers temp views named after the lake's dataset ids
-    (orders, lineitem, ...) in the shared session. That is the accepted
+    re-registers a temp view named after each dataset it reads
+    (orders) in the shared session. That is the accepted
     cost of driving the real endpoint path rather than a lazy twin of
     it; the registry sweep (tests/test_registry_shapes.py) documents
     this one exception."""

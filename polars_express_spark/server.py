@@ -207,10 +207,17 @@ def _make_handler(lake: DataLake):
     return Handler
 
 
+class _Server(ThreadingHTTPServer):
+    # The listen backlog. Every request opens a connection (the handler
+    # answers HTTP/1.0), and socketserver's default of 5 resets some of
+    # them once a few dozen clients connect at once.
+    request_queue_size = 128
+
+
 def make_server(lake: DataLake, host: str = "0.0.0.0", port: int = 3000) -> ThreadingHTTPServer:
     """Build (but don't start) the HTTP server; port 0 picks an ephemeral
     port (used by the e2e tests)."""
-    return ThreadingHTTPServer((host, port), _make_handler(lake))
+    return _Server((host, port), _make_handler(lake))
 
 
 def serve(base_dir: str = "./data", host: str = "0.0.0.0", port: int = 3000) -> None:

@@ -22,6 +22,7 @@ Used by the api.py endpoints.
 from __future__ import annotations
 
 import json
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,19 +45,44 @@ def to_json_rows(
     the reference's whole-file-then-head (§4.3.1). So the driver never
     materializes more than max_rows rows regardless of caller input.
     """
-    return to_json_rows_flagged(df, limit=limit, max_rows=max_rows)[0]
+    return to_json_rows_flagged(json_plan(df, limit, max_rows))[0]
 
 
-def to_json_rows_flagged(
-    df: DataFrame, limit: int | None = None, max_rows: int = MAX_SINK_ROWS
-) -> tuple[list[dict], bool]:
-    """to_json_rows plus a truncation flag: True iff the cap (not the
-    caller's own limit) cut the result short — i.e. the plan had at least
-    one more row past max_rows that a reference client, which always gets
-    whole tables, would have received. Probed by fetching effective+1
-    rows, so the flag costs one extra row, never a count of the full
-    input. The HTTP layer surfaces it as an X-Truncated response header
-    so clients can tell a complete result from a clamped one.
+@dataclass(frozen=True)
+class JsonPlan:
+    """A response prepared once and collected any number of times: the
+    capped ``to_json(struct(*))`` DataFrame, the top-level columns of its
+    rows and the limits the truncation flag is computed from. Collecting
+    it again reuses its analysis and physical plan. One thread at a time:
+    the driver-side ``to_json`` projection of a sort + limit
+    (TakeOrderedAndProject) shares one JSON generator, and two threads
+    collecting one plan corrupt each other's rows."""
+
+    df: DataFrame
+    columns: tuple[str, ...]
+    effective: int
+    capped: bool
+
+
+def json_plan(df: DataFrame, limit: int | None = None, max_rows: int = MAX_SINK_ROWS) -> JsonPlan:
+    """The JsonPlan of ``df`` under ``limit`` and the ``max_rows`` cap
+    (see to_json_rows_flagged)."""
+    effective = max_rows if limit is None else min(limit, max_rows)
+    capped = limit is None or limit > max_rows
+    limited = df.limit(effective + 1 if capped else effective)
+    return JsonPlan(
+        limited.select(F.to_json(F.struct("*"))), tuple(limited.columns), effective, capped
+    )
+
+
+def to_json_rows_flagged(plan: JsonPlan) -> tuple[list[dict], bool]:
+    """The rows of a JsonPlan plus a truncation flag: True iff the cap
+    (not the caller's own limit) cut the result short — i.e. the plan had
+    at least one more row past max_rows that a reference client, which
+    always gets whole tables, would have received. Probed by fetching
+    effective+1 rows, so the flag costs one extra row, never a count of
+    the full input. The HTTP layer surfaces it as an X-Truncated response
+    header so clients can tell a complete result from a clamped one.
 
     Rows are serialized by `to_json(struct(*))` and collected from the
     DataFrame, so the limit keeps its collect-time plan (CollectLimitExec,
@@ -64,16 +90,12 @@ def to_json_rows_flagged(
     `toJSON()`'s RDD plans LocalLimit → single-partition shuffle →
     GlobalLimit.
     """
-    effective = max_rows if limit is None else min(limit, max_rows)
-    capped = limit is None or limit > max_rows
-    df = df.limit(effective + 1 if capped else effective)
-    cols = df.columns
     # Jackson omits null fields; the reference emits explicit nulls
     # (AnyValue::Null → JsonValue::Null, src/main.rs:224) — restore them
     # at the top level. Not via ignoreNullFields=false: that would also
     # turn the nulls inside structs, omitted today, into explicit nulls.
     rows = [
-        {c: row.get(c) for c in cols}
-        for row in (json.loads(r[0]) for r in df.select(F.to_json(F.struct("*"))).collect())
+        {c: row.get(c) for c in plan.columns}
+        for row in (json.loads(r[0]) for r in plan.df.collect())
     ]
-    return rows[:effective], capped and len(rows) > effective
+    return rows[: plan.effective], plan.capped and len(rows) > plan.effective

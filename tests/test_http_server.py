@@ -415,3 +415,36 @@ def test_concurrent_requests_during_overwrite(spark, tmp_path):
     status, body = _post_any(f"{base}/sql", {"query": "SELECT count(*) AS n FROM metrics"})
     assert status == 200 and body == [{"n": sizes[-1]}]
     srv.shutdown()
+
+
+def test_64_concurrent_connections_all_answered(spark, tmp_path):
+    """Every request opens a connection. 64 clients that connect before
+    the server accepts any all wait in its listen backlog and then all
+    get 200; with socketserver's default backlog of 5 the kernel drops
+    the connections past it, which clients see as timeouts and resets."""
+    (tmp_path / "trains.csv").write_text(TRAINS_CSV)
+    srv = make_server(DataLake(spark, str(tmp_path)), host="127.0.0.1", port=0)
+    conns = [
+        http.client.HTTPConnection("127.0.0.1", srv.server_address[1], timeout=5)
+        for _ in range(64)
+    ]
+    try:
+        for conn in conns:
+            conn.connect()  # queued by the kernel: nothing accepts yet
+    except OSError:
+        srv.server_close()
+        raise
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        for conn in conns:
+            conn.request("GET", "/datasets")
+        statuses = []
+        for conn in conns:
+            r = conn.getresponse()
+            statuses.append((r.status, json.loads(r.read())))
+        assert statuses == [(200, ["trains"])] * 64
+    finally:
+        for conn in conns:
+            conn.close()
+        srv.shutdown()
+        srv.server_close()

@@ -3,7 +3,10 @@ file version from the version's second load on: a repeat load reads
 memory, any change to the files is seen by the next load and by a plain
 ``spark.read``, a rewrite evicts only the dataset it rewrote, one lake
 never evicts another's copy, and partitioned datasets keep their
-scan."""
+scan. DataLake.prepared keeps the routes' plans per dataset version in
+one bounded pool: a rewrite drops the plans that read the dataset and
+no other, a clearCache leaves one copy per dataset, a dropped lake
+drops its plans, and no two threads run one plan at once."""
 
 from __future__ import annotations
 
@@ -12,6 +15,7 @@ import os
 import sys
 import threading
 import time
+import weakref
 
 import pyarrow as pa
 import pyarrow.csv as pacsv
@@ -20,6 +24,9 @@ import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from test_schema_cache import _jobs
+
+from polars_express_spark import api
 from polars_express_spark.catalog import _VERSION_OPTION, DataLake, file_version
 
 
@@ -277,3 +284,302 @@ def test_threaded_reads_during_overwrites_see_whole_versions(spark, tmp_path):
     final = lake.load("t").agg(F.count("*"), F.max("k")).collect()[0]
     assert tuple(final) == (60, 6)
     assert _cached_tags(spark, path) == [_tag(lake, path)]
+
+
+# -- prepared plans (DataLake.prepared) ----------------------------------
+
+ROWS = 6000
+SQL = (
+    "SELECT station_id, COUNT(*) AS n, SUM(arrival_delay) AS total"
+    " FROM trains GROUP BY station_id ORDER BY station_id"
+)
+
+
+def _trains(spark, rows: int, seed: int):
+    return spark.range(rows).select(
+        F.concat(F.lit("T"), F.col("id").cast("string")).alias("train_id"),
+        (F.rand(seed) * 30).alias("departure_delay"),
+        (F.rand(seed + 1) * 40).alias("arrival_delay"),
+        (F.rand(seed + 2) * 800).alias("distance_km"),
+        (F.col("id") % 7).alias("station_id"),
+    )
+
+
+def _answers(lake: DataLake, ds: str = "trains", limit: int = 20) -> dict:
+    """One answer of each route over ``ds``: preview, delays, regression
+    and a /sql group-by over ``trains``."""
+    reg = api.run_regression(lake, ds, "distance_km", "arrival_delay")
+    return {
+        "preview": api.get_data_preview_flagged(lake, ds, limit=limit),
+        "delays": api.get_sorted_delays_flagged(lake, ds, descending=True, limit=limit),
+        "regression": (reg.n, round(reg.slope, 9), round(reg.intercept, 9)),
+        "sql": api.run_sql(lake, SQL),
+    }
+
+
+def _pool(lake: DataLake) -> dict:
+    """The lake's idle plans: key → ids of the plan objects."""
+    with lake._frames_lock:
+        return {k: [id(p) for p in v] for k, v in lake._plans.items()}
+
+
+def _reads(lake: DataLake, data_id: str) -> list:
+    return [k for k in _pool(lake) if any(i == data_id for i, _ in k[1])]
+
+
+def _serve_lake(spark, base_dir) -> DataLake:
+    """A lake like the served one: ``trains`` (parquet, 3 files),
+    ``trains_csv`` (one CSV file) and ``ingest``, which no route reads."""
+    lake = DataLake(spark, str(base_dir))
+    lake.save(_trains(spark, ROWS, 1).repartition(3), "trains")
+    lake.save(_trains(spark, ROWS // 2, 2).coalesce(1), "trains_csv", fmt="csv")
+    lake.save(spark.range(50).toDF("v"), "ingest")
+    return lake
+
+
+@pytest.fixture()
+def serve_lake(spark, tmp_path):
+    return _serve_lake(spark, tmp_path)
+
+
+def test_rewrite_is_seen_by_the_next_request(spark, serve_lake):
+    lake = serve_lake
+    for _ in range(3):
+        before = _answers(lake)
+    assert before["regression"][0] == ROWS
+    assert _reads(lake, "trains")
+    lake.save(_trains(spark, ROWS + 300, 5).repartition(3), "trains")
+    assert _reads(lake, "trains") == []  # the rewrite dropped trains' plans
+    after = _answers(lake)
+    assert after["regression"][0] == ROWS + 300
+    assert sum(r["n"] for r in after["sql"]) == ROWS + 300
+    assert after["preview"] != before["preview"]
+    assert after["delays"] != before["delays"]
+    assert after == _answers(lake)  # and the new plans are reused
+    fresh = DataLake(spark, lake.base_dir)
+    assert _answers(fresh) == after
+
+
+def test_write_to_another_dataset_keeps_the_plans(spark, serve_lake):
+    lake = serve_lake
+    for _ in range(3):
+        want = _answers(lake)
+    pool = _pool(lake)
+    assert len(pool) == 4
+    lake.save(spark.range(70).toDF("v"), "ingest")
+    assert _pool(lake) == pool
+    _, jobs = _jobs(
+        spark, lambda: api.run_regression(lake, "trains", "distance_km", "arrival_delay"), "keep"
+    )
+    assert len(jobs) == 1  # a hit: the prepared aggregate's shuffle output is reused
+    assert _answers(lake) == want
+    # every route took its idle plan and put the same plan back
+    assert _pool(lake) == pool
+
+
+def test_clear_cache_keeps_one_copy_per_dataset(spark, serve_lake):
+    lake = serve_lake
+    for _ in range(3):
+        want = {ds: _answers(lake, ds) for ds in ("trains", "trains_csv")}
+    paths = {ds: lake.dataset_path(ds) for ds in want}
+    spark.catalog.clearCache()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    for _ in range(3):
+        assert {ds: _answers(lake, ds) for ds in want} == want
+    for path in paths.values():
+        assert _cached_tags(spark, path) == [_tag(lake, path)]
+    added = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
+    assert len(added) == len(want), added
+
+
+def test_dropped_lake_drops_its_plans(spark, tmp_path):
+    lake = _serve_lake(spark, tmp_path)
+    for _ in range(3):
+        _answers(lake)
+    plans = lake._plans
+    refs = [weakref.ref(p) for idle in plans.values() for p in idle]
+    assert len(refs) == 4
+    del lake
+    gc.collect()
+    assert not plans
+    assert all(r() is None for r in refs)
+
+
+def test_pool_never_exceeds_its_bound(spark, serve_lake):
+    lake = serve_lake
+    slots = DataLake.PLAN_SLOTS
+    for limit in range(1, slots + 9):
+        rows, _ = api.get_data_preview_flagged(lake, "trains", limit=limit)
+        assert len(rows) == limit
+        assert sum(len(v) for v in _pool(lake).values()) <= slots
+    limits = sorted(k[0][1] for k in _pool(lake))
+    assert limits == list(range(9, slots + 9))  # the least recently used went first
+
+
+# 30 select-list items ahead of the time call: more than Spark prints of
+# a list in a plan's string (spark.sql.debug.maxToStringFields, 25)
+_WIDE = ", ".join(f"{i} AS c{i}" for i in range(30))
+
+
+@pytest.mark.parametrize("expr", [
+    "rand()", "uuid()", "current_timestamp()",
+    pytest.param(f"{_WIDE}, current_timestamp()", id="30-columns-then-current_timestamp()"),
+    pytest.param("(SELECT MAX(now()) FROM ingest)", id="now()-in-a-subquery"),
+])
+def test_sql_that_fixes_a_seed_or_the_time_is_planned_per_request(serve_lake, expr):
+    lake = serve_lake
+    query = f"SELECT {expr} AS v, COUNT(*) AS n FROM trains"
+    values = set()
+    for _ in range(3):
+        (row,) = api.run_sql(lake, query)
+        assert row["n"] == ROWS
+        values.add(row["v"])
+        time.sleep(0.01)
+    assert len(values) == 3
+    assert [k for k in _pool(lake) if k[0][0] == "sql"] == []
+
+
+def test_star_over_a_wide_dataset_with_the_time_is_planned_per_request(spark, tmp_path):
+    lake = DataLake(spark, str(tmp_path))
+    lake.save(spark.range(3).select(*[F.col("id").alias(f"c{i}") for i in range(30)]), "wide")
+    values = set()
+    for _ in range(3):
+        rows = api.run_sql(lake, "SELECT *, now() AS t FROM wide")
+        assert len(rows) == 3 and len(rows[0]) == 31
+        values.add(rows[0]["t"])
+        time.sleep(0.01)
+    assert len(values) == 3
+    assert _pool(lake) == {}
+
+
+def test_sql_plans_with_large_shuffle_output_are_not_kept(serve_lake, monkeypatch):
+    """A kept plan holds the shuffle files its reruns reuse: a /sql plan
+    is kept only while its shuffle output is within the budget."""
+    lake = serve_lake
+    by_station = "SELECT station_id, COUNT(*) AS n FROM trains GROUP BY station_id"
+    scan = "SELECT train_id FROM trains WHERE station_id = 3 ORDER BY train_id"
+    for _ in range(2):
+        api.run_sql(lake, by_station)
+    ((plan,),) = [v for k, v in lake._plans.items() if k[0][1] == by_station]
+    assert 0 < api._shuffle_bytes(plan.df) <= api.SQL_KEEP_SHUFFLE_BYTES
+    lake._plans.clear()
+    monkeypatch.setattr(api, "SQL_KEEP_SHUFFLE_BYTES", 0)
+    want = {q: api.run_sql(lake, q) for q in (by_station, scan)}
+    for _ in range(2):
+        assert {q: api.run_sql(lake, q) for q in want} == want
+    assert sum(r["n"] for r in want[by_station]) == ROWS
+    assert [k[0][1] for k in _pool(lake)] == [scan]  # a plan with no shuffle is kept
+
+
+def test_sql_reads_the_lake_after_a_view_of_its_name_is_replaced(spark, serve_lake):
+    lake = serve_lake
+    query = "SELECT COUNT(*) AS n FROM trains WHERE station_id >= {}"
+    assert api.run_sql(lake, query.format(0)) == [{"n": ROWS}]
+    spark.range(5).toDF("station_id").createOrReplaceTempView("trains")
+    try:
+        (row,) = api.run_sql(lake, query.format(1))  # a new plan
+    finally:
+        spark.catalog.dropTempView("trains")
+    assert 0 < row["n"] < ROWS and row["n"] > 5
+
+
+def test_sql_plans_of_two_lakes_read_their_own_frames(spark, tmp_path):
+    """Two lakes serve a dataset of one name on one session while their
+    /sql plans are built in parallel: each answer is its own lake's."""
+    lakes = []
+    for k in range(2):
+        lake = DataLake(spark, str(tmp_path / f"lake{k}"))
+        lake.save(spark.range(10 + k).toDF("v"), "t")
+        lakes.append(lake)
+    bad: list[str] = []
+
+    def client(k: int):
+        for i in range(12):
+            query = f"SELECT COUNT(*) + {i} - {i} AS n FROM t WHERE v >= {i % 3}"
+            try:
+                (row,) = api.run_sql(lakes[k], query)
+            except Exception as e:  # noqa: BLE001
+                bad.append(f"{type(e).__name__}: {str(e)[:300]}")
+                continue
+            if row["n"] != 10 + k - i % 3:
+                bad.append(f"lake {k}, query {i}: {row['n']}")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    threads = [threading.Thread(target=client, args=(k % 2,), daemon=True) for k in range(6)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=240)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads), "hung thread"
+    assert not bad, bad
+
+
+def test_plans_follow_the_session_time_zone(spark, tmp_path):
+    lake = DataLake(spark, str(tmp_path))
+    lake.save(spark.sql("SELECT TIMESTAMP'2024-01-02 03:04:05' AS ts"), "t")
+    query = "SELECT ts, hour(ts) AS h FROM t"
+    for _ in range(3):
+        utc = (api.get_data_preview(lake, "t"), api.run_sql(lake, query))
+    assert utc == ([{"ts": "2024-01-02T03:04:05.000Z"}],
+                   [{"ts": "2024-01-02T03:04:05.000Z", "h": 3}])
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        local = (api.get_data_preview(lake, "t"), api.run_sql(lake, query))
+        assert local == ([{"ts": "2024-01-02T08:34:05.000+05:30"}],
+                         [{"ts": "2024-01-02T08:34:05.000+05:30", "h": 8}])
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert (api.get_data_preview(lake, "t"), api.run_sql(lake, query)) == utc
+
+
+def test_threads_never_share_a_plan(spark, serve_lake):
+    """Seven threads loop every route over two datasets while another
+    thread keeps overwriting a third: every answer equals the serial one
+    and nothing raises. Two threads collecting one prepared plan at once
+    corrupt its driver-side JSON projection; the 2000-row responses keep
+    the threads in it long enough to meet."""
+    lake = serve_lake
+    for _ in range(2):
+        want = {ds: _answers(lake, ds, 2000) for ds in ("trains", "trains_csv")}
+    bad: list[str] = []
+    lock = threading.Lock()
+    stop = threading.Event()
+
+    def reader(k: int):
+        for i in range(8):
+            ds = ("trains", "trains_csv")[(k + i) % 2]
+            try:
+                got = _answers(lake, ds, 2000)
+            except Exception as e:  # noqa: BLE001
+                got = f"{type(e).__name__}: {str(e)[:300]}"
+            if got != want[ds]:
+                with lock:
+                    bad.append(f"{ds}: {got if isinstance(got, str) else 'wrong answer'}")
+
+    def writer():
+        v = 0
+        while not stop.is_set():
+            v += 1
+            lake.save(spark.range(10 + v).toDF("v"), "ingest")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    readers = [threading.Thread(target=reader, args=(k,), daemon=True) for k in range(7)]
+    w = threading.Thread(target=writer, daemon=True)
+    try:
+        w.start()
+        for t in readers:
+            t.start()
+        for t in readers:
+            t.join(timeout=240)
+    finally:
+        stop.set()
+        w.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in readers + [w]), "hung thread"
+    assert not bad, bad
+    assert sum(len(v) for v in _pool(lake).values()) <= DataLake.PLAN_SLOTS

@@ -1,6 +1,8 @@
 """The JSON sink (sinks.to_json_rows_flagged): the exact row shape a
-client receives, and the Spark jobs one response costs on each route
-that uses it."""
+client receives, and the Spark jobs one response costs on each route,
+first and repeated. A repeat request reruns the route's prepared plan
+(DataLake.prepared), so the counts below are caps: a new driver
+barrier on a route fails here."""
 
 from __future__ import annotations
 
@@ -102,10 +104,69 @@ def test_delays_with_limit_runs_one_job_and_one_stage(spark, parts_lake):
     assert len(_stages(spark, jobs)) == 1  # top-k merged on the driver, no shuffle
 
 
+def _warm(spark, parts_lake, fn):
+    """Run ``fn`` until the lake holds its plan over the in-memory copy:
+    the first request of the module may be the one that persists it."""
+    for _ in range(2):
+        fn()
+    assert parts_lake.load("trains").storageLevel.useMemory
+
+
+ROUTES = {
+    "preview": lambda lake: api.get_data_preview_flagged(lake, "trains"),
+    "delays": lambda lake: api.get_sorted_delays_flagged(lake, "trains", limit=100),
+}
+
+
+@pytest.mark.parametrize("route", sorted(ROUTES))
+def test_repeat_preview_and_delays_run_one_job_and_one_stage(spark, parts_lake, route):
+    def run():
+        return ROUTES[route](parts_lake)
+
+    _warm(spark, parts_lake, run)
+    (rows, truncated), jobs = _jobs(spark, run, f"sink_repeat_{route}")
+    assert len(rows) == 100 and truncated is False
+    assert len(jobs) == 1
+    assert len(_stages(spark, jobs)) == 1
+
+
+def test_repeat_regression_runs_one_job(spark, parts_lake):
+    """A repeat regression on an unchanged, cached version reruns its
+    prepared aggregate: the partial aggregation's shuffle output is
+    reused (its stage is skipped), so only the final stage's job runs.
+    A new plan also runs the map stage as a job of its own."""
+
+    def run():
+        return api.run_regression(parts_lake, "trains", "train_id", "departure_delay")
+
+    _warm(spark, parts_lake, run)
+    result, jobs = _jobs(spark, run, "sink_regression_repeat")
+    assert result.n == 1000
+    assert len(jobs) == 1
+    assert len(_stages(spark, jobs)) == 2  # the reused map stage is listed, skipped
+
+
+def test_repeat_sql_group_by_runs_one_job(spark, parts_lake):
+    query = (
+        "SELECT departure_delay AS d, COUNT(*) AS n FROM trains"
+        " GROUP BY departure_delay ORDER BY d"
+    )
+
+    def run():
+        return api.run_sql(parts_lake, query)
+
+    _warm(spark, parts_lake, run)
+    rows, jobs = _jobs(spark, run, "sink_sql_repeat")
+    assert [r["d"] for r in rows] == list(range(13))
+    assert sum(r["n"] for r in rows) == 1000
+    assert len(jobs) == 1
+    assert len(_stages(spark, jobs)) == 2
+
+
 def test_truncation_probe_runs_one_job(spark):
     big = spark.range(0, 1000, 1, 4)
     (rows, truncated), jobs = _jobs(
-        spark, lambda: sinks.to_json_rows_flagged(big, limit=None, max_rows=100), "sink_probe"
+        spark, lambda: sinks.to_json_rows_flagged(sinks.json_plan(big, None, 100)), "sink_probe"
     )
     assert len(rows) == 100 and truncated is True
     assert len(jobs) == 1
