@@ -18,17 +18,20 @@ rebuilt over py4j, re-analysed or re-planned, and a repeat aggregate
 reuses its shuffle output. Validation that depends on the data (a
 missing column, no delay column) runs when a plan is built; a plan
 exists only for a request that passed it. /sql's parse and read-only
-check run on every request, before the pool is asked; a /sql plan is
-kept only when a rerun returns what a new plan would (no random seed or
-current time fixed at planning) and it holds little shuffle output.
+check run on every request, before the pool is asked, and a /sql plan
+is built from the very tree the check walked, with the lake's frames
+bound to their dataset names inside the plan: /sql registers no temp
+view and reads none. A /sql plan is kept only when a rerun returns what
+a new plan would (no random seed or current time fixed at planning) and
+it holds little shuffle output.
 """
 
 from __future__ import annotations
 
-import threading
-import weakref
+import functools
 from dataclasses import dataclass
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_express_spark.catalog import DataLake
@@ -170,15 +173,6 @@ def run_regression(lake: DataLake, data_id: str, x_col: str, y_col: str) -> Regr
 import re as _re
 
 _SQL_IDENT = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-# Temp views are session-global, and a /sql plan must read exactly the
-# frames (and file versions) it is keyed by, even while another request,
-# another lake on the session, or code outside the lake registers a view
-# of the same name. (session, view name) → (weak reference to the frame
-# the lake registered, identity of the JVM view object it made), guarded
-# by this lock: a plan build re-registers only the names whose view is
-# not that object, and analyses its query outside the lock (`_analysed`).
-_SQL_VIEWS_LOCK = threading.Lock()
-_sql_views: dict[tuple[str, str], tuple[weakref.ref, int]] = {}
 # Most shuffle output a kept /sql plan may hold. A prepared plan keeps
 # the shuffle files its runs reuse, so a pool of group-bys or joins over
 # large datasets would otherwise hold their map outputs on local disk.
@@ -202,7 +196,7 @@ _SQL_FORBIDDEN_NODE = _re.compile(
 _SQL_SAFE_LEAVES = frozenset(
     {
         "OneRowRelation",        # SELECT 1
-        "UnresolvedRelation",    # FROM t            (checked against views)
+        "UnresolvedRelation",    # FROM t            (checked against datasets)
         "UnresolvedTableValuedFunction",  # FROM range(...) (allowlisted)
         "UnresolvedInlineTable", # FROM VALUES ...   (some Spark versions)
         "LocalRelation",         # FROM VALUES ...   (Spark 4 parses direct)
@@ -248,36 +242,42 @@ def _jseq(s) -> list:
     return [s.apply(i) for i in range(s.size())]
 
 
-def _walk_parsed(node, plans: list, exprs: list) -> None:
+def _walk_parsed(node, plans: list, exprs: list, subquery) -> None:
     """Collect every plan node and expression in a PARSED (unresolved)
     logical plan, descending into subquery expressions (scalar / EXISTS /
-    IN / LATERAL all hold a nested plan behind Expression.plan()) and
-    into CTE definitions (Spark 4's UnresolvedWith keeps cteRelations
-    OUT of children(), so a naive child walk never sees what a CTE body
-    reads — the red-team case "WITH t AS (SELECT * FROM
-    text.`/etc/passwd`) SELECT * FROM t")."""
+    IN / LATERAL hold a nested plan: each is an instance of the
+    ``subquery`` class, PlanExpression) and into CTE definitions
+    (Spark 4's UnresolvedWith keeps cteRelations OUT of children(), so a
+    naive child walk never sees what a CTE body reads — the red-team
+    case "WITH t AS (SELECT * FROM text.`/etc/passwd`) SELECT * FROM
+    t")."""
     plans.append(node)
     if node.getClass().getSimpleName() == "UnresolvedWith":
         cr = node.cteRelations()
         for i in range(cr.size()):
-            _walk_parsed(cr.apply(i)._2(), plans, exprs)
+            _walk_parsed(cr.apply(i)._2(), plans, exprs, subquery)
     for e in _jseq(node.expressions()):
-        _walk_parsed_expr(e, plans, exprs)
+        _walk_parsed_expr(e, plans, exprs, subquery)
     for c in _jseq(node.children()):
-        _walk_parsed(c, plans, exprs)
+        _walk_parsed(c, plans, exprs, subquery)
 
 
-def _walk_parsed_expr(e, plans: list, exprs: list) -> None:
+def _walk_parsed_expr(e, plans: list, exprs: list, subquery) -> None:
     exprs.append(e)
-    try:
-        _walk_parsed(e.plan(), plans, exprs)
-    except Exception:
-        pass  # not a SubqueryExpression — no nested plan
+    if subquery.isInstance(e):
+        _walk_parsed(e.plan(), plans, exprs, subquery)
     for c in _jseq(e.children()):
-        _walk_parsed_expr(c, plans, exprs)
+        _walk_parsed_expr(c, plans, exprs, subquery)
 
 
-def _check_read_only(plan, allowed_views: set[str]) -> set[str]:
+@functools.lru_cache(maxsize=1)
+def _plan_expression(jvm):
+    """The class of Catalyst's expressions that hold a nested plan
+    (PlanExpression), looked up once per JVM."""
+    return jvm.org.apache.spark.sql.catalyst.expressions.PlanExpression._java_lang_class
+
+
+def _check_read_only(spark, plan, datasets: set[str]) -> set[str]:
     """Reject any parsed plan that could mutate state, read outside the
     lake's datasets, or call out of the SQL sandbox; return the
     relation names it reads, lower-cased (a CTE's name included).
@@ -297,8 +297,8 @@ def _check_read_only(plan, allowed_views: set[str]) -> set[str]:
     """
     plans: list = []
     exprs: list = []
-    _walk_parsed(plan, plans, exprs)
-    allowed = {v.lower() for v in allowed_views}
+    _walk_parsed(plan, plans, exprs, _plan_expression(spark._jvm))
+    allowed = {v.lower() for v in datasets}
     named: set[str] = set()
     for p in plans:  # CTE names defined anywhere in the query are legal
         if p.getClass().getSimpleName() == "UnresolvedWith":
@@ -367,48 +367,25 @@ def _shuffle_bytes(df) -> int:
     return total
 
 
-def _view_ids(spark, names: list) -> list[int]:
-    """Identity hash of the JVM temp view object each name holds (0 for
-    none): a registration, by anyone, makes a new object."""
-    catalog = spark._jsparkSession.sessionState().catalog()
-    system = spark._jvm.System
-    ids = []
-    for name in names:
-        view = catalog.getRawTempView(name)
-        ids.append(system.identityHashCode(view.get()) if view.isDefined() else 0)
-    return ids
-
-
-def _register(spark, views: list) -> list[int]:
-    """Make each ``(name, frame)`` of ``views`` the session's temp view
-    of its name, registering only the names whose view is not the one
-    made from that frame; the views' identities. The caller holds the
-    lock."""
-    session = spark._jsparkSession.sessionUUID()
-    ids = _view_ids(spark, [name for name, _ in views])
-    for k, (name, df) in enumerate(views):
-        ref, view_id = _sql_views.get((session, name), (None, 0))
-        if ref is None or ref() is not df or view_id != ids[k]:
-            df.createOrReplaceTempView(name)
-            (ids[k],) = _view_ids(spark, [name])
-            _sql_views[(session, name)] = (weakref.ref(df), ids[k])
-    return ids
-
-
-def _analysed(spark, q: str, views: list):
-    """``spark.sql(q)`` analysed while each ``(name, frame)`` of
-    ``views`` is the temp view of its name. The analysis runs outside
-    the lock, so plan builds do not queue behind each other; when a view
-    was replaced meanwhile, the query is analysed again under the
-    lock."""
-    with _SQL_VIEWS_LOCK:
-        ids = _register(spark, views)
-    df = spark.sql(q)
-    with _SQL_VIEWS_LOCK:
-        if _view_ids(spark, [name for name, _ in views]) == ids:
-            return df
-        _register(spark, views)
-        return spark.sql(q)
+def _over_frames(spark, parsed, views: list) -> DataFrame:
+    """The DataFrame of the parsed plan ``parsed`` with each ``(name,
+    frame)`` of ``views`` bound to its name by a CTE around the query:
+    the query's own CTEs still shadow a dataset of their name, and no
+    name is registered in the session."""
+    jvm = spark._jvm
+    catalyst = jvm.org.apache.spark.sql.catalyst
+    logical = catalyst.plans.logical
+    ctes = [
+        jvm.scala.Tuple3(
+            name,
+            logical.SubqueryAlias(catalyst.AliasIdentifier(name), df._jdf.logicalPlan()),
+            jvm.scala.Option.empty(),
+        )
+        for name, df in views
+    ]
+    plan = logical.UnresolvedWith(parsed, jvm.PythonUtils.toSeq(ctes), False)
+    dataset = jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(dataset.ofRows(spark._jsparkSession, plan), spark)
 
 
 def run_sql(lake: DataLake, query: str, limit: int | None = None) -> list[dict]:
@@ -422,18 +399,22 @@ def run_sql(lake: DataLake, query: str, limit: int | None = None) -> list[dict]:
     execution, on every request: a first-token SELECT/WITH +
     single-statement check (string literals blanked first), then a
     parse-only pass whose tree is walked node-by-node (_check_read_only)
-    — spark.sql() executes commands EAGERLY, so the parse must happen
-    without it. Relations are pinned to the lake's datasets, so
-    server-local file reads (``FROM text.`/etc/passwd```` and friends)
-    and JVM reflection calls are rejected with 400, not executed.
+    — Spark's SQL entry point executes commands EAGERLY, so the parse
+    must happen without it. Relations are pinned to the lake's
+    datasets, so server-local file reads (``FROM text.`/etc/passwd````
+    and friends) and JVM reflection calls are rejected with 400, not
+    executed.
 
     The query's plan is a prepared plan keyed by its text, the limit and
     the file version of each dataset it names, so a write to another
-    dataset leaves it alone. A plan build analyses the query over temp
-    views of the frames it is keyed by (`_analysed`). A query whose plan
-    fixes a random seed or the current time, or holds more than
-    SQL_KEEP_SHUFFLE_BYTES of shuffle output, is planned anew on every
-    request.
+    dataset leaves it alone. A plan build analyses the tree the check
+    walked, with each dataset it names bound to the lake's frame of that
+    version (`_over_frames`): the query is parsed once per request, and
+    no temp view is registered or read. Two dataset ids that differ
+    only in case name one table, so a query naming both is rejected. A
+    query whose plan fixes a random seed or the current time, or holds
+    more than SQL_KEEP_SHUFFLE_BYTES of shuffle output, is planned anew
+    on every request.
     Analysis errors (unknown table/column, bad syntax) and failures to
     load or read a dataset map to 400."""
     q = query.strip().rstrip(";").strip()
@@ -444,17 +425,20 @@ def run_sql(lake: DataLake, query: str, limit: int | None = None) -> list[dict]:
     spark = lake.spark
     datasets = [i for i in lake.list_datasets() if _SQL_IDENT.match(i)]
     try:
-        plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(q)
+        parsed = spark._jsparkSession.sessionState().sqlParser().parsePlan(q)
     except Exception as e:
         raise BadRequest(f"SQL error: {e}") from e
-    named = _check_read_only(plan, set(datasets))
+    named = _check_read_only(spark, parsed, set(datasets))
     data_ids = tuple(i for i in datasets if i.lower() in named)
+    clash = [i for i in data_ids if [j.lower() for j in data_ids].count(i.lower()) > 1]
+    if clash:
+        raise BadRequest(f"ambiguous table: datasets {' and '.join(clash)} differ only in case")
 
     def build(*frames):
-        return json_plan(_analysed(spark, q, list(zip(data_ids, frames))), limit)
+        return json_plan(_over_frames(spark, parsed, list(zip(data_ids, frames))), limit)
 
     try:
-        # a dataset removed or mid-rewrite since the listing, or a view
+        # a dataset removed or mid-rewrite since the listing, or one
         # whose files vanish under the collect, fails here: 400, not a
         # crashed handler
         with lake.prepared(("sql", q, limit), data_ids, build, keep=_repeatable) as prepared:

@@ -404,18 +404,16 @@ def q22c_grouping_sets(spark, sf_dir):
     in one pass; grouping_id disambiguates subtotal NULLs from data
     NULLs on both engines."""
     li = load_table(spark, sf_dir, "lineitem")
-    li.select("l_returnflag", "l_linestatus", "l_quantity").createOrReplaceTempView(
-        "__gs_lineitem"
-    )
     return spark.sql(
         """
         SELECT grouping_id(l_returnflag, l_linestatus) AS gid,
                l_returnflag, l_linestatus,
                CAST(count(*) AS BIGINT) AS cnt,
                CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) AS sum_qty
-        FROM __gs_lineitem
+        FROM {li}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
+        """,
+        li=li.select("l_returnflag", "l_linestatus", "l_quantity"),
     )
 
 

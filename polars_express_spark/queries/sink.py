@@ -102,25 +102,24 @@ _SQL_SURFACE_STMT = """
 @query("q_sql_surface", oracle=_SQL_SURFACE_STMT)
 def q_sql_surface(spark, sf_dir):
     """/sql endpoint surface (engine-native route beyond the reference's
-    three, server.py POST /sql): drive api.run_sql end-to-end — lake view
-    registration, the parsed-plan read-only sandbox walk
-    (api._check_read_only), Catalyst execution, and the capped JSON row
-    sink — over the sf_dir tables, then lift the sink's row dicts back
-    into a typed DataFrame. The statement is integer/string-only (counts
-    and key extrema per order status) so the JSON round-trip is exact.
-    Puts the whole endpoint path under the driver hash contract
-    (VERDICT r7 next-step #7); the oracle is the same ANSI statement run
-    by DuckDB directly.
+    three, server.py POST /sql): drive api.run_sql end-to-end — the
+    parsed-plan read-only sandbox walk (api._check_read_only), the
+    analysis of that tree with the lake's frames bound to their dataset
+    names, Catalyst execution, and the capped JSON row sink — over the
+    sf_dir tables, then lift the sink's row dicts back into a typed
+    DataFrame. The statement is integer/string-only (counts and key
+    extrema per order status) so the JSON round-trip is exact. Puts the
+    whole endpoint path under the driver hash contract; the oracle is
+    the same ANSI statement run by DuckDB directly.
 
     EAGER, deliberately: run_sql collects at query-CONSTRUCTION time
     (the endpoint's contract is JSON rows, so the DataFrame returned
     here is a local relation lifted from them). Building this query —
-    including schema-only sweeps — therefore executes the statement and
-    re-registers a temp view named after each dataset it reads
-    (orders) in the shared session. That is the accepted
-    cost of driving the real endpoint path rather than a lazy twin of
-    it; the registry sweep (tests/test_registry_shapes.py) documents
-    this one exception."""
+    including schema-only sweeps — therefore executes the statement.
+    That is the accepted cost of driving the real endpoint path rather
+    than a lazy twin of it; the registry sweep
+    (tests/test_registry_shapes.py) documents this one exception. It
+    registers no temp view: the session's views are as they were."""
     from polars_express_spark.api import run_sql
     from polars_express_spark.catalog import DataLake
 

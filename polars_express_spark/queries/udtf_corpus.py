@@ -50,10 +50,10 @@ def q_udtf_links(spark, sf_dir):
             F.lit("'>r</a>"),
         ).alias("h"),
     )
-    html.createOrReplaceTempView("pxs_nation_html")
     return spark.sql(
         """
         SELECT n_nationkey, l.link AS link
-        FROM pxs_nation_html, LATERAL extract_links(h) l
-        """
+        FROM {html}, LATERAL extract_links(h) l
+        """,
+        html=html,
     )

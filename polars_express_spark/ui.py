@@ -20,7 +20,7 @@ rather than transcribed:
   from a complete one — the reference returns whole tables and has no
   such state.
 - A fourth panel drives the engine-native POST /sql route: a
-  read-only SQL console over the lake's temp views, rendering rows
+  read-only SQL console over the lake's datasets, rendering rows
   through the same table renderer; guard rejections (api.py
   _check_read_only) surface as the server's 400 error text.
 

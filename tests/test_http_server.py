@@ -286,6 +286,9 @@ def test_sql_sandbox_escapes_rejected(base_url):
         "WITH t AS (WITH u AS (SELECT * FROM text.`/etc/passwd`) "
         "SELECT * FROM u) SELECT * FROM t",
         "SELECT a, (SELECT count(*) FROM text.`/etc/passwd`) AS n FROM plain",
+        "SELECT * FROM plain WHERE a IN (SELECT value FROM text.`/etc/passwd`)",
+        "SELECT * FROM plain, LATERAL (SELECT * FROM text.`/etc/passwd`)",
+        "SELECT * FROM explode((SELECT collect_list(value) FROM text.`/etc/passwd`))",
         # catalog / multipart escapes
         "SELECT * FROM spark_catalog.default.anything",
         # JVM reflection — arbitrary static method calls

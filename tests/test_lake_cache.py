@@ -472,15 +472,58 @@ def test_sql_plans_with_large_shuffle_output_are_not_kept(serve_lake, monkeypatc
 
 
 def test_sql_reads_the_lake_after_a_view_of_its_name_is_replaced(spark, serve_lake):
+    """/sql reads the lake's frames whatever views the session holds,
+    and leaves the session's views as they were."""
     lake = serve_lake
     query = "SELECT COUNT(*) AS n FROM trains WHERE station_id >= {}"
     assert api.run_sql(lake, query.format(0)) == [{"n": ROWS}]
     spark.range(5).toDF("station_id").createOrReplaceTempView("trains")
     try:
         (row,) = api.run_sql(lake, query.format(1))  # a new plan
+        assert spark.table("trains").count() == 5
     finally:
         spark.catalog.dropTempView("trains")
     assert 0 < row["n"] < ROWS and row["n"] > 5
+    lake.save(spark.range(4).toDF("v"), "sql_views_untouched")
+    tables = sorted(t.name for t in spark.catalog.listTables())
+    assert api.run_sql(lake, "SELECT COUNT(*) AS n FROM sql_views_untouched") == [{"n": 4}]
+    assert sorted(t.name for t in spark.catalog.listTables()) == tables
+
+
+@pytest.mark.parametrize("query", [
+    "SELECT COUNT(*) AS n FROM trains a JOIN trains b ON a.train_id = b.train_id",
+    "SELECT COUNT(*) AS n FROM (SELECT train_id FROM trains UNION ALL SELECT train_id FROM trains)",
+    "SELECT COUNT(*) AS n FROM trains WHERE train_id IN (SELECT train_id FROM trains)",
+    "WITH x AS (SELECT * FROM trains)"
+    " SELECT COUNT(*) AS n FROM x a JOIN x b ON a.train_id = b.train_id",
+], ids=["self-join", "union", "in-subquery", "cte-read-twice"])
+def test_sql_reads_an_in_memory_dataset_twice(serve_lake, query):
+    """A query that reads one in-memory dataset in two places answers
+    right: Spark's optimizer copies the CTE that binds the dataset into
+    each place, cached relation included."""
+    lake = serve_lake
+    for _ in range(2):
+        lake.load("trains")
+    assert _cached(lake.load("trains"))
+    rows = [api.run_sql(lake, query) for _ in range(2)]
+    n = 2 * ROWS if "UNION" in query else ROWS
+    assert rows == [[{"n": n}]] * 2
+
+
+def test_sql_rejects_dataset_ids_that_differ_only_in_case(spark, tmp_path):
+    """SQL names are case-insensitive: a query over a lake holding ``T``
+    and ``t`` cannot tell which it names, so it answers 400; a lake
+    holding only ``t`` answers either spelling."""
+    lake = DataLake(spark, str(tmp_path / "both"))
+    lake.save(spark.range(3).toDF("v"), "T")
+    lake.save(spark.range(7).toDF("v"), "t")
+    for name in ("t", "T"):
+        with pytest.raises(api.BadRequest, match="ambiguous table"):
+            api.run_sql(lake, f"SELECT COUNT(*) AS n FROM {name}")
+    lake = DataLake(spark, str(tmp_path / "one"))
+    lake.save(spark.range(7).toDF("v"), "t")
+    for name in ("t", "T"):
+        assert api.run_sql(lake, f"SELECT COUNT(*) AS n FROM {name}") == [{"n": 7}]
 
 
 def test_sql_plans_of_two_lakes_read_their_own_frames(spark, tmp_path):

@@ -43,8 +43,7 @@ def test_registry_output_shapes_are_driver_safe(spark):
     """Two assertions per registered query, from ONE plan build per
     query. The sweep is schema-only — no collect — for every query
     EXCEPT q_sql_surface, which is eager by design (it drives the real
-    /sql endpoint, which collects JSON rows and registers lake temp
-    views as a side effect; see its docstring):
+    /sql endpoint, which collects JSON rows; see its docstring):
 
     1. no top-level array/map/struct column — the driver's pandas
        canonicalizer cannot sort or hash container cells; queries with
@@ -145,3 +144,19 @@ def test_oracle_dtypes_match_spark_schema(spark, ddb):
             if want is not None and got != want:
                 bad.append((name, c, f"spark={want}", f"oracle={opdf[c].dtype}"))
     assert not bad, f"oracle/Spark dtype-family splits: {bad}"
+
+
+def test_registry_queries_register_no_temp_views(spark):
+    """Building a query leaves the session's temp views as they were:
+    frames reach SQL text through spark.sql's DataFrame arguments, and
+    /sql binds the lake's frames inside its plan. Run on a new session
+    (shared SparkContext, its own temp views), so views that other
+    tests registered cannot hide one."""
+    from polars_express_spark.queries.registry import all_queries
+
+    qs = all_queries()
+    session = spark.newSession()
+    before = sorted(t.name for t in session.catalog.listTables())
+    for name in ("q22c_grouping_sets", "q_udtf_links", "q_sql_surface"):
+        assert qs[name](session, SF_DIR).columns
+    assert sorted(t.name for t in session.catalog.listTables()) == before
