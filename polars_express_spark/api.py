@@ -8,22 +8,22 @@ Reference routes (src/main.rs:309-319):
 These are transport-agnostic functions (the HTTP layer is trivial and
 orthogonal); error semantics mirror the reference's 400 responses as
 typed exceptions. The reference redoes all of a request's work on every
-call (src/main.rs:106-203). Here each route's final DataFrame — the
-capped `to_json` projection for preview, delays and /sql, the moments
-aggregate for regression — is a prepared plan, checked out of the
-lake's pool (`DataLake.prepared`) by route, parameters and the file
-version of every dataset it reads. A repeat request collects it again:
-every request still runs a Spark job over the data, but no plan is
-rebuilt over py4j, re-analysed or re-planned, and a repeat aggregate
-reuses its shuffle output. Validation that depends on the data (a
-missing column, no delay column) runs when a plan is built; a plan
-exists only for a request that passed it. /sql's parse and read-only
-check run on every request, before the pool is asked, and a /sql plan
-is built from the very tree the check walked, with the lake's frames
-bound to their dataset names inside the plan: /sql registers no temp
-view and reads none. A /sql plan is kept only when a rerun returns what
-a new plan would (no random seed or current time fixed at planning) and
-it holds little shuffle output.
+call (src/main.rs:106-203). Here each route's answer — the capped
+`to_json` strings for preview, delays and /sql, the six moments for
+regression — is computed once per dataset version and kept in the
+lake's answer pool (`DataLake.answer`), keyed by route, parameters and
+the file version of every dataset it reads. A repeat request stats the
+files, loads the datasets and answers from the pool: it runs no Spark
+job, and no plan or shuffle output outlives the request that computed
+it. Validation that depends on the data (a missing column, no delay
+column) runs when an answer is computed; an answer exists only for a
+request that passed it. /sql's read-only check runs on the parse tree
+of the query text, kept per text, dataset ids and parser confs once the
+check passed (`_checked`); a /sql answer is computed from that very
+tree, with the lake's frames bound to their dataset names inside the
+plan: /sql registers no temp view and reads none. A /sql answer is kept
+only when a new plan would return it again (no random seed or current
+time fixed at planning).
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_express_spark.catalog import DataLake
-from polars_express_spark.sinks import json_plan, to_json_rows_flagged
+from polars_express_spark.sinks import json_answer, to_json_rows_flagged
 
 
 class BadRequest(ValueError):
@@ -46,12 +46,12 @@ class NotFound(KeyError):
     """Maps to the reference's 404 on unknown dataset ids."""
 
 
-def _prepared(lake: DataLake, route: tuple, data_id: str, build):
-    """The lake's prepared plan of ``route`` over one dataset; NotFound
-    for an unknown id."""
+def _answer(lake: DataLake, route: tuple, data_id: str, compute):
+    """The lake's answer of ``route`` over one dataset, ``compute(df)``
+    on a miss; NotFound for an unknown id."""
     if not lake.dataset_exists(data_id):
         raise NotFound(data_id)
-    return lake.prepared(route, (data_id,), build)
+    return lake.answer(route, (data_id,), lambda df: (compute(df), True))
 
 
 def get_data_preview(lake: DataLake, data_id: str, limit: int = 100) -> list[dict]:
@@ -72,8 +72,9 @@ def get_data_preview_flagged(
     """get_data_preview plus the sink's truncation flag (True iff the
     MAX_SINK_ROWS cap, not the caller's limit, clamped the result) —
     the HTTP layer's variant, surfaced as the X-Truncated header."""
-    with _prepared(lake, ("preview", limit), data_id, lambda df: json_plan(df, limit)) as plan:
-        return to_json_rows_flagged(plan)
+    return to_json_rows_flagged(
+        _answer(lake, ("preview", limit), data_id, lambda df: json_answer(df, limit))
+    )
 
 
 def get_sorted_delays(
@@ -105,16 +106,15 @@ def get_sorted_delays_flagged(
     """get_sorted_delays plus the sink's truncation flag (see
     get_data_preview_flagged)."""
 
-    def build(df):
+    def compute(df):
         delay_cols = [c for c in df.columns if "delay" in c]
         if not delay_cols:
             raise BadRequest(f"dataset {data_id!r} has no delay columns")
         order = [F.col(c).desc() if descending else F.col(c).asc() for c in delay_cols]
         # the sink pushes the limit (min(limit, MAX_SINK_ROWS)) into the plan
-        return json_plan(df.orderBy(*order), limit)
+        return json_answer(df.orderBy(*order), limit)
 
-    with _prepared(lake, ("delays", descending, limit), data_id, build) as plan:
-        return to_json_rows_flagged(plan)
+    return to_json_rows_flagged(_answer(lake, ("delays", descending, limit), data_id, compute))
 
 
 @dataclass
@@ -134,49 +134,37 @@ def run_regression(lake: DataLake, data_id: str, x_col: str, y_col: str) -> Regr
     One distributed aggregate replaces the reference's two scalar
     passes (anti-pattern §4.3.2): Catalyst computes all moments in a
     single partial+final aggregation. A repeat request on an unchanged
-    dataset reruns the prepared aggregate: its partial aggregation's
-    shuffle output is reused, so it runs only the final stage's job.
+    dataset reads the kept moments and runs no Spark job.
     """
 
-    def build(df):
+    def moments(df):
         for c in (x_col, y_col):
             if c not in df.columns:
                 raise BadRequest(f"column {c!r} not found")
         x = F.coalesce(F.col(x_col).cast("double"), F.lit(0.0))
         y = F.coalesce(F.col(y_col).cast("double"), F.lit(0.0))
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(x).alias("sx"),
-            F.sum(y).alias("sy"),
-            F.sum(x * y).alias("sxy"),
-            F.sum(x * x).alias("sxx"),
-            F.sum(y * y).alias("syy"),
+        return tuple(
+            df.agg(
+                F.count(F.lit(1)), F.sum(x), F.sum(y), F.sum(x * y), F.sum(x * x), F.sum(y * y)
+            ).collect()[0]
         )
 
-    with _prepared(lake, ("regression", x_col, y_col), data_id, build) as moments:
-        m = moments.collect()[0]
-    n = m["n"]
+    n, sx, sy, sxy, sxx, syy = _answer(lake, ("regression", x_col, y_col), data_id, moments)
     if n == 0:
         raise BadRequest("empty dataset")
-    denom = n * m["sxx"] - m["sx"] * m["sx"]
+    denom = n * sxx - sx * sx
     if denom == 0:
         raise BadRequest("zero variance in x")
-    slope = (n * m["sxy"] - m["sx"] * m["sy"]) / denom
-    intercept = (m["sy"] - slope * m["sx"]) / n
-    ss_tot = n * m["syy"] - m["sy"] * m["sy"]
-    r_squared = (
-        None if ss_tot == 0 else (n * m["sxy"] - m["sx"] * m["sy"]) ** 2 / (denom * ss_tot)
-    )
+    slope = (n * sxy - sx * sy) / denom
+    intercept = (sy - slope * sx) / n
+    ss_tot = n * syy - sy * sy
+    r_squared = None if ss_tot == 0 else (n * sxy - sx * sy) ** 2 / (denom * ss_tot)
     return RegressionResult(slope=slope, intercept=intercept, r_squared=r_squared, n=n)
 
 
 import re as _re
 
 _SQL_IDENT = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-# Most shuffle output a kept /sql plan may hold. A prepared plan keeps
-# the shuffle files its runs reuse, so a pool of group-bys or joins over
-# large datasets would otherwise hold their map outputs on local disk.
-SQL_KEEP_SHUFFLE_BYTES = 1 << 20
 # Mutating / side-effecting PLAN NODE CLASS names a parsed tree must not
 # contain. Spark's grammar allows CTE-prefixed DML ("WITH t AS (...)
 # INSERT ..."), so a first-token SELECT/WITH check alone is bypassable —
@@ -327,44 +315,50 @@ def _check_read_only(spark, plan, datasets: set[str]) -> set[str]:
     return named
 
 
-def _repeatable(plan) -> bool:
-    """True when a fresh /sql plan is kept for later requests: rerunning
-    it returns what a new plan of its query would, and it holds at most
-    SQL_KEEP_SHUFFLE_BYTES of shuffle output. A plan that fixed a random
-    seed or the current time at planning would repeat it. The time test
-    applies the rule with which Spark's optimizer fixes the current time
-    (ComputeCurrentTime) to the analysed plan: the rule changes the plan
-    exactly when the query, a subquery or a CTE calls a current-time
-    function, however wide its select lists."""
-    analyzed = plan.df._jdf.queryExecution().analyzed()
-    fix_time = plan.df.sparkSession._jvm.org.apache.spark.sql.catalyst.optimizer.ComputeCurrentTime
-    return (
-        analyzed.deterministic()
-        and fix_time.apply(analyzed).fastEquals(analyzed)
-        and _shuffle_bytes(plan.df) <= SQL_KEEP_SHUFFLE_BYTES
-    )
+def _repeatable(df) -> bool:
+    """True when a /sql answer computed from ``df`` is kept for later
+    requests: a new plan of its query would return it again. A plan that
+    fixed a random seed or the current time at planning would not. The
+    time test applies the rule with which Spark's optimizer fixes the
+    current time (ComputeCurrentTime) to the analysed plan: the rule
+    changes the plan exactly when the query, a subquery or a CTE calls a
+    current-time function, however wide its select lists."""
+    analyzed = df._jdf.queryExecution().analyzed()
+    fix_time = df.sparkSession._jvm.org.apache.spark.sql.catalyst.optimizer.ComputeCurrentTime
+    return analyzed.deterministic() and fix_time.apply(analyzed).fastEquals(analyzed)
 
 
-def _shuffle_bytes(df) -> int:
-    """Bytes of shuffle output that the executed adaptive plan of ``df``
-    holds, summed over its shuffle stages."""
-    arrays = df.sparkSession._jvm.java.util.Arrays
-    total = 0
-    nodes = [df._jdf.queryExecution().executedPlan()]
-    while nodes:
-        node = nodes.pop()
-        name = node.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            nodes.append(node.executedPlan())
-        elif name.endswith("QueryStageExec"):
-            stats = node.mapStats() if name == "ShuffleQueryStageExec" else None
-            if stats is not None and stats.isDefined():
-                total += arrays.stream(stats.get().bytesByPartitionId()).sum()
-            nodes.append(node.plan())
-        else:
-            nodes.extend(_jseq(node.children()))
-            nodes.extend(_jseq(node.subqueries()))
-    return total
+# Session confs that change the tree Spark's SQL parser builds: part of a
+# checked query's key (`_checked`)
+_PARSER_CONFS = (
+    "spark.sql.ansi.enabled",
+    "spark.sql.ansi.enforceReservedKeywords",
+    "spark.sql.ansi.doubleQuotedIdentifiers",
+    "spark.sql.parser.escapedStringLiterals",
+    "spark.sql.parser.quotedRegexColumnNames",
+    "spark.sql.legacy.setopsPrecedence.enabled",
+    "spark.sql.legacy.exponentLiteralAsDecimal.enabled",
+    "spark.sql.variable.substitute",
+)
+
+
+@functools.lru_cache(maxsize=DataLake.PLAN_SLOTS)
+def _checked(spark, q: str, datasets: tuple[str, ...], confs: tuple) -> tuple:
+    """The parse tree of ``q`` and the ids of the ``datasets`` it reads,
+    once `_check_read_only` passed the tree (``confs`` are the values of
+    ``_PARSER_CONFS``). Kept per argument tuple, so a repeat request
+    neither parses nor walks; a rejected query raises, which keeps
+    nothing, so it is checked again on every request."""
+    try:
+        parsed = spark._jsparkSession.sessionState().sqlParser().parsePlan(q)
+    except Exception as e:
+        raise BadRequest(f"SQL error: {e}") from e
+    named = _check_read_only(spark, parsed, set(datasets))
+    data_ids = tuple(i for i in datasets if i.lower() in named)
+    clash = [i for i in data_ids if [j.lower() for j in data_ids].count(i.lower()) > 1]
+    if clash:
+        raise BadRequest(f"ambiguous table: datasets {' and '.join(clash)} differ only in case")
+    return parsed, data_ids
 
 
 def _over_frames(spark, parsed, views: list) -> DataFrame:
@@ -405,16 +399,18 @@ def run_sql(lake: DataLake, query: str, limit: int | None = None) -> list[dict]:
     and friends) and JVM reflection calls are rejected with 400, not
     executed.
 
-    The query's plan is a prepared plan keyed by its text, the limit and
-    the file version of each dataset it names, so a write to another
-    dataset leaves it alone. A plan build analyses the tree the check
-    walked, with each dataset it names bound to the lake's frame of that
-    version (`_over_frames`): the query is parsed once per request, and
-    no temp view is registered or read. Two dataset ids that differ
-    only in case name one table, so a query naming both is rejected. A
-    query whose plan fixes a random seed or the current time, or holds
-    more than SQL_KEEP_SHUFFLE_BYTES of shuffle output, is planned anew
-    on every request.
+    A query that passed is not parsed or walked again while its text,
+    the lake's SQL-nameable dataset ids and the parser confs stay the
+    same (`_checked`); a rejected one is checked again on every request.
+    Its answer is kept in the lake's pool, keyed by the text, the limit
+    and the file version of each dataset it names, so a write to another
+    dataset leaves it alone. An answer is computed from the tree the
+    check walked, with each dataset it names bound to the lake's frame
+    of that version (`_over_frames`): no temp view is registered or
+    read. Two dataset ids that differ only in case name one table, so a
+    query naming both is rejected. A query whose plan fixes a random
+    seed or the current time, or that names a conf as ``${name}``, is
+    computed anew on every request.
     Analysis errors (unknown table/column, bad syntax) and failures to
     load or read a dataset map to 400."""
     q = query.strip().rstrip(";").strip()
@@ -423,26 +419,23 @@ def run_sql(lake: DataLake, query: str, limit: int | None = None) -> list[dict]:
     if not q or q.split(None, 1)[0].upper() not in ("SELECT", "WITH"):
         raise BadRequest("only SELECT/WITH queries are accepted")
     spark = lake.spark
-    datasets = [i for i in lake.list_datasets() if _SQL_IDENT.match(i)]
-    try:
-        parsed = spark._jsparkSession.sessionState().sqlParser().parsePlan(q)
-    except Exception as e:
-        raise BadRequest(f"SQL error: {e}") from e
-    named = _check_read_only(spark, parsed, set(datasets))
-    data_ids = tuple(i for i in datasets if i.lower() in named)
-    clash = [i for i in data_ids if [j.lower() for j in data_ids].count(i.lower()) > 1]
-    if clash:
-        raise BadRequest(f"ambiguous table: datasets {' and '.join(clash)} differ only in case")
+    datasets = tuple(i for i in lake.list_datasets() if _SQL_IDENT.match(i))
+    # ${...} is replaced by a session conf's value before the parse, so
+    # such a query is checked and computed on every request
+    volatile = "${" in q
+    check = _checked.__wrapped__ if volatile else _checked
+    confs = tuple(spark.conf.get(c) for c in _PARSER_CONFS)
+    parsed, data_ids = check(spark, q, datasets, confs)
 
-    def build(*frames):
-        return json_plan(_over_frames(spark, parsed, list(zip(data_ids, frames))), limit)
+    def compute(*frames):
+        df = _over_frames(spark, parsed, list(zip(data_ids, frames)))
+        return json_answer(df, limit), not volatile and _repeatable(df)
 
     try:
         # a dataset removed or mid-rewrite since the listing, or one
         # whose files vanish under the collect, fails here: 400, not a
         # crashed handler
-        with lake.prepared(("sql", q, limit), data_ids, build, keep=_repeatable) as prepared:
-            return to_json_rows_flagged(prepared)[0]
+        return to_json_rows_flagged(lake.answer(("sql", q, limit, confs), data_ids, compute))[0]
     except BadRequest:
         raise
     except Exception as e:  # parse / analysis / execution → 400

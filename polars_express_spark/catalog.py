@@ -28,17 +28,13 @@ Here generalized Spark-first:
   by hand) changes the signature, so neither cache serves data or a
   schema of an older version and no writer has to invalidate them for
   correctness; a lake rewrite still unpersists the copy at once.
-- Requests are planned once per dataset version too: `DataLake.prepared`
-  keeps a bounded pool of the serving routes' final DataFrames, keyed by
+- Requests are answered once per dataset version too: `DataLake.answer`
+  keeps a bounded pool of the serving routes' answers (the response
+  strings or the regression moments, never a DataFrame), keyed by
   route, parameters and the file version of every dataset they read. A
-  repeat request checks one out, collects it again and puts it back, so
-  it skips the py4j plan build, Catalyst analysis and physical planning,
-  and an aggregate reuses the shuffle output of its earlier runs (AQE
-  keeps the final plan, whose map stage Spark then skips). A kept plan
-  also keeps those shuffle files on local disk until it is dropped, so
-  `/sql` keeps only plans whose shuffle output is small (api.py). Each
-  plan is run by one thread at a time; a dropped, replaced or
-  re-persisted frame drops every plan that reads it.
+  repeat request still stats the files and loads each dataset, and then
+  runs no Spark job. A rewrite drops every answer that reads the
+  dataset; an answer computed across one is not kept.
 - At 100 TB an id maps to a partitioned parquet directory; the API is
   identical because spark.read.parquet takes files or directories.
 """
@@ -52,7 +48,6 @@ import threading
 import uuid
 import weakref
 from collections import OrderedDict
-from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -102,8 +97,8 @@ _schemas_lock = threading.Lock()
 # unpersisting, each other's entry. No reader interprets the option; it
 # only makes the cached plan equal to the lake's reads of its version.
 _VERSION_OPTION = "lakeFileVersion"
-# Session confs that change what a prepared plan returns: part of its
-# key, since a plan keeps the confs it was analysed and planned under.
+# Session confs that change what a route answers: part of an answer's
+# key (`DataLake.answer`).
 _PLAN_CONFS = ("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
 
 
@@ -141,10 +136,9 @@ def _is_flat(path: str) -> bool:
         return False
 
 
-def _release(frames: dict, plans: dict) -> None:
-    """Forget a dropped lake's prepared plans and unpersist its frames.
-    Runs as a finalizer, so it never raises."""
-    plans.clear()
+def _release(frames: dict) -> None:
+    """Unpersist a dropped lake's frames. Runs as a finalizer, so it
+    never raises."""
     for _, _, df in list(frames.values()):
         try:
             df.unpersist()
@@ -199,7 +193,8 @@ class DataLake:
 
     FORMATS = ("parquet", "csv", "json", "orc")
     SNAP_MARK = ".__snapshot__"
-    # Most idle prepared plans a lake keeps, over all keys (`prepared`)
+    # Most answers a lake keeps (`answer`), and parsed /sql queries
+    # api.py keeps
     PLAN_SLOTS = 32
 
     def __init__(self, spark: SparkSession, base_dir: str, keep_snapshots: int = 0):
@@ -211,16 +206,16 @@ class DataLake:
         # as long as the lake: a lake that is dropped unpersists them, so
         # a short-lived lake leaves no cache behind.
         self._frames: dict[str, tuple[str, tuple, DataFrame]] = {}
-        # (route, ((data_id, file_version), ...), confs) → idle prepared
-        # plans, least recently used key first; PLAN_SLOTS plans at most.
-        # Guarded by the frames lock, like the frames the plans read.
-        self._plans: OrderedDict[tuple, list] = OrderedDict()
-        # data_id → how often its plans were dropped: a plan checked out
-        # before a drop is not put back
-        self._plan_drops: dict[str, int] = {}
+        # (route, ((data_id, file_version), ...), confs) → answer, least
+        # recently used first; PLAN_SLOTS answers at most. Guarded by the
+        # frames lock, like the frames the answers are read from.
+        self._answers: OrderedDict[tuple, object] = OrderedDict()
+        # data_id → how often its answers were dropped: an answer whose
+        # computation a drop overlapped is not kept
+        self._answer_drops: dict[str, int] = {}
         self._frames_lock = threading.Lock()
         self._nonce = uuid.uuid4().hex
-        weakref.finalize(self, _release, self._frames, self._plans).atexit = False
+        weakref.finalize(self, _release, self._frames).atexit = False
 
     def dataset_path(self, data_id: str) -> str | None:
         """Resolve id to an existing file/dir, trying formats in order.
@@ -329,9 +324,6 @@ class DataLake:
                 entry = self._frames.get(data_id)
                 if entry is not None and entry[2] is df and df.storageLevel == StorageLevel.NONE:
                     df.persist(StorageLevel.MEMORY_ONLY)
-                    # plans built before would read the files, or rebuild
-                    # a copy of their own after a clearCache
-                    self._drop_plans(data_id)
         return df
 
     def _keep(self, data_id: str, path: str, version: tuple | None) -> DataFrame:
@@ -350,10 +342,10 @@ class DataLake:
             if old is not None and old[:2] == (path, version):
                 return old[2]  # another thread kept this version first
             self._frames[data_id] = (path, version, df)
-            self._drop_plans(data_id)
+            self._drop_answers(data_id)
             gone = [i for i, (p, _, _) in self._frames.items() if not os.path.exists(p)]
             for i in gone:
-                self._drop_plans(i)
+                self._drop_answers(i)
             frames = ([old] if old else []) + [self._frames.pop(i) for i in gone]
         for _, _, frame in frames:
             frame.unpersist()
@@ -368,69 +360,58 @@ class DataLake:
         when the dataset is gone."""
         with self._frames_lock:
             entry = self._frames.pop(data_id, None)
-            self._drop_plans(data_id)
+            self._drop_answers(data_id)
         if entry is not None:
             entry[2].unpersist()
 
-    def _drop_plans(self, data_id: str) -> None:
-        """Forget every prepared plan that reads ``data_id``, idle or
-        checked out. The caller holds the frames lock."""
-        self._plan_drops[data_id] = self._plan_drops.get(data_id, 0) + 1
-        for key in [k for k in self._plans if any(i == data_id for i, _ in k[1])]:
-            del self._plans[key]
+    def _drop_answers(self, data_id: str) -> None:
+        """Forget every answer that reads ``data_id``, and make an answer
+        being computed over it unkept. The caller holds the frames lock."""
+        self._answer_drops[data_id] = self._answer_drops.get(data_id, 0) + 1
+        for key in [k for k in self._answers if any(i == data_id for i, _ in k[1])]:
+            del self._answers[key]
 
-    @contextmanager
-    def prepared(self, route: tuple, data_ids: tuple[str, ...], build, keep=None):
-        """Check out a prepared plan of ``route`` (the route's name and
-        parameters) over the datasets ``data_ids``; put it back when the
-        block exits normally.
+    def answer(self, route: tuple, data_ids: tuple[str, ...], compute):
+        """The answer of ``route`` (the route's name and parameters) over
+        the datasets ``data_ids``, from the pool when it holds one.
 
-        Each dataset is loaded as `load` does (so the plan reads its
-        in-memory copy), and the plan is keyed by ``route``, the file
-        version of every dataset and the session confs in
-        ``_PLAN_CONFS``. A hit hands out an idle plan built earlier; a
-        miss, or a request that finds every copy in use, calls
-        ``build(*frames)`` and makes a new one. A plan is run by one
-        thread at a time. It is put back only while no frame it reads
-        was dropped, replaced or persisted again in the meantime, and
-        only when every dataset is one the lake keeps (a flat dataset
-        whose files held still while it was listed); a fresh plan also
-        only when ``keep(plan)`` holds. At most PLAN_SLOTS plans stay
-        idle; the least recently used key loses one first."""
+        Each dataset is loaded as `load` does (a request always stats the
+        files, so a rewrite or a file dropped in by hand is seen by the
+        next one), and the answer is keyed by ``route``, the file version
+        of every dataset and the session confs in ``_PLAN_CONFS``. A hit
+        returns the kept answer and runs no Spark job; a miss calls
+        ``compute(*frames)``, which returns the answer and whether it may
+        be kept. It is kept only while no dataset it reads was dropped or
+        replaced in the meantime, and only when every dataset is one the
+        lake keeps (a flat dataset whose files held still while it was
+        listed). Answers are shared between threads, so they must not be
+        changed. At most PLAN_SLOTS are kept; the least recently used
+        goes first."""
         frames, reads, drops = [], [], []
         for data_id in data_ids:
             df = self.load(data_id)
             with self._frames_lock:
                 entry = self._frames.get(data_id)
-                drops.append(self._plan_drops.get(data_id, 0))
+                drops.append(self._answer_drops.get(data_id, 0))
             frames.append(df)
             reads.append((data_id, entry[1] if entry is not None and entry[2] is df else None))
         key = None
         if all(v is not None for _, v in reads):
             key = (route, tuple(reads), tuple(self.spark.conf.get(c) for c in _PLAN_CONFS))
-        plan = None
+            with self._frames_lock:
+                if key in self._answers:
+                    self._answers.move_to_end(key)
+                    return self._answers[key]
+        answer, keep = compute(*frames)
+        if key is None or not keep:
+            return answer
         with self._frames_lock:
-            idle = self._plans.get(key) if key is not None else None
-            if idle:
-                plan = idle.pop()
-                if not idle:
-                    del self._plans[key]
-        fresh = plan is None
-        if fresh:
-            plan = build(*frames)
-        yield plan
-        if key is None or (fresh and keep is not None and not keep(plan)):
-            return
-        with self._frames_lock:
-            if [self._plan_drops.get(i, 0) for i in data_ids] != drops:
-                return
-            self._plans.setdefault(key, []).append(plan)
-            self._plans.move_to_end(key)
-            while sum(map(len, self._plans.values())) > self.PLAN_SLOTS:
-                oldest = next(iter(self._plans))
-                self._plans[oldest].pop(0)
-                if not self._plans[oldest]:
-                    del self._plans[oldest]
+            if [self._answer_drops.get(i, 0) for i in data_ids] == drops:
+                self._answers[key] = answer
+                self._answers.move_to_end(key)
+                while len(self._answers) > self.PLAN_SLOTS:
+                    self._answers.popitem(last=False)
+        return answer
 
     def _scan(self, path: str, schema=None, merge_schema: bool = False, **options) -> DataFrame:
         """Lazy scan of a live or snapshot path in the format its

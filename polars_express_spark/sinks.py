@@ -16,7 +16,8 @@ and three stages for a 100-row preview. Collected from the DataFrame, a
 plain limit runs as CollectLimitExec, which scans only as many
 partitions as it needs, and a sort + limit as TakeOrderedAndProject,
 which merges each partition's top-k on the driver: one job, no shuffle.
-Used by the api.py endpoints.
+Used by the api.py endpoints, which keep each collected answer per
+dataset version (`DataLake.answer`).
 """
 
 from __future__ import annotations
@@ -45,57 +46,52 @@ def to_json_rows(
     the reference's whole-file-then-head (§4.3.1). So the driver never
     materializes more than max_rows rows regardless of caller input.
     """
-    return to_json_rows_flagged(json_plan(df, limit, max_rows))[0]
+    return to_json_rows_flagged(json_answer(df, limit, max_rows))[0]
 
 
 @dataclass(frozen=True)
-class JsonPlan:
-    """A response prepared once and collected any number of times: the
-    capped ``to_json(struct(*))`` DataFrame, the top-level columns of its
-    rows and the limits the truncation flag is computed from. Collecting
-    it again reuses its analysis and physical plan. One thread at a time:
-    the driver-side ``to_json`` projection of a sort + limit
-    (TakeOrderedAndProject) shares one JSON generator, and two threads
-    collecting one plan corrupt each other's rows."""
+class JsonAnswer:
+    """A response collected once and read any number of times: the
+    ``to_json(struct(*))`` string of each row (at most ``effective`` + 1),
+    the rows' top-level columns and the limits the truncation flag is
+    computed from. It holds no DataFrame, only strings, so the lake's
+    answer pool (`DataLake.answer`) keeps it per dataset version at the
+    cost of those strings, and any number of threads read it at once:
+    each read parses the strings into new dicts."""
 
-    df: DataFrame
+    lines: tuple[str, ...]
     columns: tuple[str, ...]
     effective: int
     capped: bool
 
 
-def json_plan(df: DataFrame, limit: int | None = None, max_rows: int = MAX_SINK_ROWS) -> JsonPlan:
-    """The JsonPlan of ``df`` under ``limit`` and the ``max_rows`` cap
-    (see to_json_rows_flagged)."""
+def json_answer(
+    df: DataFrame, limit: int | None = None, max_rows: int = MAX_SINK_ROWS
+) -> JsonAnswer:
+    """The JsonAnswer of ``df`` under ``limit`` and the ``max_rows`` cap,
+    collected in one Spark job (module docstring), with one row past a
+    cap as the truncation probe (see to_json_rows_flagged)."""
     effective = max_rows if limit is None else min(limit, max_rows)
     capped = limit is None or limit > max_rows
     limited = df.limit(effective + 1 if capped else effective)
-    return JsonPlan(
-        limited.select(F.to_json(F.struct("*"))), tuple(limited.columns), effective, capped
-    )
+    lines = tuple(r[0] for r in limited.select(F.to_json(F.struct("*"))).collect())
+    return JsonAnswer(lines, tuple(limited.columns), effective, capped)
 
 
-def to_json_rows_flagged(plan: JsonPlan) -> tuple[list[dict], bool]:
-    """The rows of a JsonPlan plus a truncation flag: True iff the cap
-    (not the caller's own limit) cut the result short — i.e. the plan had
+def to_json_rows_flagged(answer: JsonAnswer) -> tuple[list[dict], bool]:
+    """The rows of a JsonAnswer plus a truncation flag: True iff the cap
+    (not the caller's own limit) cut the result short — i.e. the input had
     at least one more row past max_rows that a reference client, which
     always gets whole tables, would have received. Probed by fetching
     effective+1 rows, so the flag costs one extra row, never a count of
     the full input. The HTTP layer surfaces it as an X-Truncated response
     header so clients can tell a complete result from a clamped one.
-
-    Rows are serialized by `to_json(struct(*))` and collected from the
-    DataFrame, so the limit keeps its collect-time plan (CollectLimitExec,
-    or TakeOrderedAndProject after a sort): one job and no shuffle, where
-    `toJSON()`'s RDD plans LocalLimit → single-partition shuffle →
-    GlobalLimit.
+    Runs no Spark job: each call parses the answer's strings into new
+    dicts, so a caller that changes its rows changes no later response.
     """
     # Jackson omits null fields; the reference emits explicit nulls
     # (AnyValue::Null → JsonValue::Null, src/main.rs:224) — restore them
     # at the top level. Not via ignoreNullFields=false: that would also
     # turn the nulls inside structs, omitted today, into explicit nulls.
-    rows = [
-        {c: row.get(c) for c in plan.columns}
-        for row in (json.loads(r[0]) for r in plan.df.collect())
-    ]
-    return rows[: plan.effective], plan.capped and len(rows) > plan.effective
+    rows = [{c: row.get(c) for c in answer.columns} for row in map(json.loads, answer.lines)]
+    return rows[: answer.effective], answer.capped and len(rows) > answer.effective

@@ -91,13 +91,13 @@ def test_sink_truncation_flag(lake, spark):
 
     big = spark.range(25_000).withColumnRenamed("id", "some_delay")
     small = spark.range(40).withColumnRenamed("id", "some_delay")
-    assert sinks.to_json_rows_flagged(sinks.json_plan(big, None, 100))[1] is True
-    assert sinks.to_json_rows_flagged(sinks.json_plan(big, 500, 100))[1] is True
-    assert sinks.to_json_rows_flagged(sinks.json_plan(big, 50, 100))[1] is False
-    assert sinks.to_json_rows_flagged(sinks.json_plan(small, None, 100))[1] is False
+    assert sinks.to_json_rows_flagged(sinks.json_answer(big, None, 100))[1] is True
+    assert sinks.to_json_rows_flagged(sinks.json_answer(big, 500, 100))[1] is True
+    assert sinks.to_json_rows_flagged(sinks.json_answer(big, 50, 100))[1] is False
+    assert sinks.to_json_rows_flagged(sinks.json_answer(small, None, 100))[1] is False
     # exactly max_rows rows available: complete, not truncated
     exact = spark.range(100).withColumnRenamed("id", "some_delay")
-    assert sinks.to_json_rows_flagged(sinks.json_plan(exact, None, 100))[1] is False
+    assert sinks.to_json_rows_flagged(sinks.json_answer(exact, None, 100))[1] is False
 
 
 def test_delays_400_on_no_delay_column(lake):

@@ -345,6 +345,40 @@ def test_sql_guard_no_false_positives(base_url):
         assert rows == expect, (q, rows)
 
 
+def test_sql_sandbox_escapes_rejected_on_repeat(base_url, monkeypatch):
+    """/sql keeps the parse tree of a query that passed, never of one
+    that failed: each escape sent again is rejected again, after the
+    same checks ran again, and a query that passed still answers."""
+    from polars_express_spark import api
+
+    walks = []
+    check = api._check_read_only
+    monkeypatch.setattr(api, "_check_read_only", lambda *a: walks.append(1) or check(*a))
+    for bad in [
+        "SELECT * FROM text.`/etc/passwd`",
+        "WITH t AS (SELECT * FROM text.`/etc/passwd`) SELECT * FROM t",
+        "SELECT a, (SELECT count(*) FROM text.`/etc/passwd`) AS n FROM plain",
+        "SELECT * FROM spark_catalog.default.anything",
+        "SELECT reflect('java.lang.System', 'getProperty', 'user.dir') AS v",
+        "SELECT try_reflect('java.lang.System', 'getenv', 'HOME') AS v",
+        "SELECT input_file_name() AS f FROM trains",
+        "SELECT * FROM IDENTIFIER('text.`/etc/passwd`')",
+        "SELECT * FROM trains VERSION AS OF 1",
+        "SELECT * FROM read_files('/etc')",
+        "WITH t AS (SELECT 1 AS x) DELETE FROM trains",
+    ]:
+        answers = []
+        for _ in range(2):
+            before = len(walks)
+            answers.append(_post_any(f"{base_url}/sql", {"query": bad}))
+            assert len(walks) == before + 1, bad  # checked on every request
+        assert [status for status, _ in answers] == [400, 400], (bad, answers)
+        assert answers[0] == answers[1]
+    ok = "SELECT count(*) AS n FROM trains WHERE train_id <> 'DROP TABLE trains'"
+    for _ in range(3):
+        assert _post_any(f"{base_url}/sql", {"query": ok}) == (200, [{"n": 3}])
+
+
 def test_concurrent_requests_during_overwrite(spark, tmp_path):
     """r7 hardening (VERDICT r6 #4): fire parallel /sql + /data/*
     requests while a dataset is overwritten through the same lake.

@@ -3,13 +3,16 @@ file version from the version's second load on: a repeat load reads
 memory, any change to the files is seen by the next load and by a plain
 ``spark.read``, a rewrite evicts only the dataset it rewrote, one lake
 never evicts another's copy, and partitioned datasets keep their
-scan. DataLake.prepared keeps the routes' plans per dataset version in
-one bounded pool: a rewrite drops the plans that read the dataset and
-no other, a clearCache leaves one copy per dataset, a dropped lake
-drops its plans, and no two threads run one plan at once."""
+scan. DataLake.answer keeps the routes' answers per dataset version in
+one bounded pool of strings and numbers: a repeat request runs no Spark
+job, every kind of rewrite is answered from the new data, a write drops
+the answers that read its dataset and no other, an answer computed
+across a rewrite or fixing a seed or the time is not kept, and no
+shuffle output outlives the request that made it."""
 
 from __future__ import annotations
 
+import copy
 import gc
 import os
 import sys
@@ -28,6 +31,7 @@ from test_schema_cache import _jobs
 
 from polars_express_spark import api
 from polars_express_spark.catalog import _VERSION_OPTION, DataLake, file_version
+from polars_express_spark.sinks import JsonAnswer
 
 
 def _plan(df) -> str:
@@ -286,7 +290,7 @@ def test_threaded_reads_during_overwrites_see_whole_versions(spark, tmp_path):
     assert _cached_tags(spark, path) == [_tag(lake, path)]
 
 
-# -- prepared plans (DataLake.prepared) ----------------------------------
+# -- answers (DataLake.answer) -------------------------------------------
 
 ROWS = 6000
 SQL = (
@@ -318,9 +322,9 @@ def _answers(lake: DataLake, ds: str = "trains", limit: int = 20) -> dict:
 
 
 def _pool(lake: DataLake) -> dict:
-    """The lake's idle plans: key → ids of the plan objects."""
+    """The lake's answers: key → id of the answer object."""
     with lake._frames_lock:
-        return {k: [id(p) for p in v] for k, v in lake._plans.items()}
+        return {k: id(a) for k, a in lake._answers.items()}
 
 
 def _reads(lake: DataLake, data_id: str) -> list:
@@ -349,18 +353,19 @@ def test_rewrite_is_seen_by_the_next_request(spark, serve_lake):
     assert before["regression"][0] == ROWS
     assert _reads(lake, "trains")
     lake.save(_trains(spark, ROWS + 300, 5).repartition(3), "trains")
-    assert _reads(lake, "trains") == []  # the rewrite dropped trains' plans
+    assert _reads(lake, "trains") == []  # the rewrite dropped trains' answers
     after = _answers(lake)
     assert after["regression"][0] == ROWS + 300
     assert sum(r["n"] for r in after["sql"]) == ROWS + 300
     assert after["preview"] != before["preview"]
     assert after["delays"] != before["delays"]
-    assert after == _answers(lake)  # and the new plans are reused
+    assert after == _answers(lake)  # and the new answers are reused
     fresh = DataLake(spark, lake.base_dir)
     assert _answers(fresh) == after
 
 
 def test_write_to_another_dataset_keeps_the_plans(spark, serve_lake):
+    """A write to ``ingest`` keeps every answer over ``trains``."""
     lake = serve_lake
     for _ in range(3):
         want = _answers(lake)
@@ -368,12 +373,9 @@ def test_write_to_another_dataset_keeps_the_plans(spark, serve_lake):
     assert len(pool) == 4
     lake.save(spark.range(70).toDF("v"), "ingest")
     assert _pool(lake) == pool
-    _, jobs = _jobs(
-        spark, lambda: api.run_regression(lake, "trains", "distance_km", "arrival_delay"), "keep"
-    )
-    assert len(jobs) == 1  # a hit: the prepared aggregate's shuffle output is reused
-    assert _answers(lake) == want
-    # every route took its idle plan and put the same plan back
+    got, jobs = _jobs(spark, lambda: _answers(lake), "keep")
+    assert jobs == []  # every route is a hit
+    assert got == want
     assert _pool(lake) == pool
 
 
@@ -388,6 +390,8 @@ def test_clear_cache_keeps_one_copy_per_dataset(spark, serve_lake):
         assert {ds: _answers(lake, ds) for ds in want} == want
     for path in paths.values():
         assert _cached_tags(spark, path) == [_tag(lake, path)]
+    for ds in want:  # new limits: answers computed over the copies
+        _answers(lake, ds, limit=21)
     added = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
     assert len(added) == len(want), added
 
@@ -396,12 +400,11 @@ def test_dropped_lake_drops_its_plans(spark, tmp_path):
     lake = _serve_lake(spark, tmp_path)
     for _ in range(3):
         _answers(lake)
-    plans = lake._plans
-    refs = [weakref.ref(p) for idle in plans.values() for p in idle]
-    assert len(refs) == 4
+    # preview, delays and /sql; regression keeps a tuple
+    refs = [weakref.ref(a) for a in lake._answers.values() if isinstance(a, JsonAnswer)]
+    assert len(refs) == 3
     del lake
     gc.collect()
-    assert not plans
     assert all(r() is None for r in refs)
 
 
@@ -411,7 +414,7 @@ def test_pool_never_exceeds_its_bound(spark, serve_lake):
     for limit in range(1, slots + 9):
         rows, _ = api.get_data_preview_flagged(lake, "trains", limit=limit)
         assert len(rows) == limit
-        assert sum(len(v) for v in _pool(lake).values()) <= slots
+        assert len(_pool(lake)) <= slots
     limits = sorted(k[0][1] for k in _pool(lake))
     assert limits == list(range(9, slots + 9))  # the least recently used went first
 
@@ -452,23 +455,38 @@ def test_star_over_a_wide_dataset_with_the_time_is_planned_per_request(spark, tm
     assert _pool(lake) == {}
 
 
-def test_sql_plans_with_large_shuffle_output_are_not_kept(serve_lake, monkeypatch):
-    """A kept plan holds the shuffle files its reruns reuse: a /sql plan
-    is kept only while its shuffle output is within the budget."""
+def test_sql_plans_with_large_shuffle_output_are_not_kept(spark, serve_lake):
+    """No plan outlives its request, so neither does its shuffle output:
+    the pool keeps a group-by's answer strings, and once the request's
+    objects are collected Spark's ContextCleaner unregisters every
+    shuffle the request made."""
     lake = serve_lake
-    by_station = "SELECT station_id, COUNT(*) AS n FROM trains GROUP BY station_id"
-    scan = "SELECT train_id FROM trains WHERE station_id = 3 ORDER BY train_id"
-    for _ in range(2):
-        api.run_sql(lake, by_station)
-    ((plan,),) = [v for k, v in lake._plans.items() if k[0][1] == by_station]
-    assert 0 < api._shuffle_bytes(plan.df) <= api.SQL_KEEP_SHUFFLE_BYTES
-    lake._plans.clear()
-    monkeypatch.setattr(api, "SQL_KEEP_SHUFFLE_BYTES", 0)
-    want = {q: api.run_sql(lake, q) for q in (by_station, scan)}
-    for _ in range(2):
-        assert {q: api.run_sql(lake, q) for q in want} == want
-    assert sum(r["n"] for r in want[by_station]) == ROWS
-    assert [k[0][1] for k in _pool(lake)] == [scan]  # a plan with no shuffle is kept
+    by_train = "SELECT train_id, COUNT(*) AS n FROM trains GROUP BY train_id"
+    tracker = spark.sparkContext._jsc.sc().env().mapOutputTracker()
+
+    def shuffles() -> set:
+        ids = tracker.shuffleStatuses().keySet().iterator()
+        out = set()
+        while ids.hasNext():
+            out.add(ids.next())
+        return out
+
+    def new_shuffles() -> set:
+        return {i for i in shuffles() if i > before}
+
+    before = max(shuffles(), default=-1)
+    want = api.run_sql(lake, by_train)
+    assert len(want) == ROWS
+    assert new_shuffles()  # the group-by shuffled
+    assert api.run_sql(lake, by_train) == want
+    (answer,) = [a for k, a in lake._answers.items() if k[0][1] == by_train]
+    assert isinstance(answer, JsonAnswer) and len(answer.lines) == ROWS
+    deadline = time.monotonic() + 60
+    while new_shuffles() and time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.2)
+    assert new_shuffles() == set()
 
 
 def test_sql_reads_the_lake_after_a_view_of_its_name_is_replaced(spark, serve_lake):
@@ -582,9 +600,9 @@ def test_plans_follow_the_session_time_zone(spark, tmp_path):
 def test_threads_never_share_a_plan(spark, serve_lake):
     """Seven threads loop every route over two datasets while another
     thread keeps overwriting a third: every answer equals the serial one
-    and nothing raises. Two threads collecting one prepared plan at once
-    corrupt its driver-side JSON projection; the 2000-row responses keep
-    the threads in it long enough to meet."""
+    and nothing raises. The threads share the kept answers and no plan:
+    two threads collecting one plan at once would corrupt its
+    driver-side JSON projection."""
     lake = serve_lake
     for _ in range(2):
         want = {ds: _answers(lake, ds, 2000) for ds in ("trains", "trains_csv")}
@@ -625,4 +643,129 @@ def test_threads_never_share_a_plan(spark, serve_lake):
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in readers + [w]), "hung thread"
     assert not bad, bad
-    assert sum(len(v) for v in _pool(lake).values()) <= DataLake.PLAN_SLOTS
+    assert len(_pool(lake)) <= DataLake.PLAN_SLOTS
+
+
+def _by_hand(lake: DataLake, rows: int) -> None:
+    """Drop a part file of ``rows`` more trains into ``trains`` by hand."""
+    part = pa.table({
+        "train_id": [f"H{i}" for i in range(rows)],
+        "departure_delay": [100.0 + i for i in range(rows)],  # above every other delay
+        "arrival_delay": [100.0 + i for i in range(rows)],
+        "distance_km": [float(i % 800) for i in range(rows)],
+        "station_id": pa.array([i % 7 for i in range(rows)], pa.int64()),
+    })
+    pq.write_table(part, os.path.join(lake.dataset_path("trains"), "part-by-hand.parquet"))
+
+
+@pytest.mark.parametrize("rewrite", ["save", "restore", "compact", "by-hand"])
+def test_each_rewrite_is_answered_from_the_new_data(spark, tmp_path, rewrite):
+    lake = DataLake(spark, str(tmp_path), keep_snapshots=2)
+    lake.save(_trains(spark, ROWS, 1).repartition(3), "trains")
+    if rewrite == "restore":
+        lake.save(_trains(spark, ROWS + 300, 5).repartition(3), "trains")
+    for _ in range(2):
+        before = _answers(lake)
+    n = {"save": ROWS + 300, "restore": ROWS, "compact": ROWS, "by-hand": ROWS + 300}[rewrite]
+    if rewrite == "save":
+        lake.save(_trains(spark, ROWS + 300, 5).repartition(3), "trains")
+    elif rewrite == "restore":
+        lake.restore("trains", lake.list_snapshots("trains")[-1])
+    elif rewrite == "compact":
+        assert lake.compact("trains", target_rows_per_file=ROWS) == 1
+    else:
+        _by_hand(lake, 300)
+    after, jobs = _jobs(spark, lambda: _answers(lake), f"rewrite_{rewrite.replace('-', '_')}")
+    assert jobs  # every route computed its answer anew
+    assert after["regression"][0] == n
+    assert sum(r["n"] for r in after["sql"]) == n
+    if rewrite == "compact":  # the same rows in one file, summed in another order
+        assert after["regression"] == pytest.approx(before["regression"])
+        for r, w in zip(after["sql"], before["sql"], strict=True):
+            assert r == {**w, "total": pytest.approx(w["total"])}
+    else:
+        assert after["delays"] != before["delays"]
+    assert _answers(DataLake(spark, lake.base_dir)) == after
+    again, jobs = _jobs(spark, lambda: _answers(lake), f"rewrite_{rewrite.replace('-', '_')}_2")
+    assert again == after and jobs == []
+
+
+def test_rows_a_caller_changes_are_not_served_again(serve_lake):
+    lake = serve_lake
+    for _ in range(2):
+        got = _answers(lake)
+    want = copy.deepcopy(got)
+    for rows in (got["preview"][0], got["delays"][0], got["sql"]):
+        rows[0].clear()
+        rows.append({"station_id": -1})
+    assert _answers(lake) == want
+
+
+def test_pool_holds_no_dataframe(serve_lake):
+    """The pool keeps each response's strings and the regression
+    moments: no DataFrame, plan or other JVM object."""
+    lake = serve_lake
+    for _ in range(2):
+        _answers(lake)
+    answers = list(lake._answers.values())
+    assert len(answers) == 4
+    for a in answers:
+        if isinstance(a, JsonAnswer):
+            assert all(isinstance(line, str) for line in a.lines)
+            assert all(isinstance(c, str) for c in a.columns)
+        else:
+            assert isinstance(a, tuple) and all(isinstance(v, (int, float)) for v in a)
+
+
+def test_answer_computed_across_a_rewrite_is_not_kept(spark, serve_lake):
+    lake = serve_lake
+
+    def count_then_rewrite(df):
+        n = df.count()
+        lake.save(_trains(spark, 10, 9), "trains")
+        return n, True
+
+    assert lake.answer(("count",), ("trains",), count_then_rewrite) == ROWS
+    assert _pool(lake) == {}
+    assert lake.answer(("count",), ("trains",), lambda df: (df.count(), True)) == 10
+    assert list(_pool(lake)) != []
+
+
+def test_repeat_sql_is_neither_parsed_nor_walked(spark, serve_lake, monkeypatch):
+    """A /sql query that passed the read-only check keeps its parse tree
+    per text, dataset ids and parser confs; a rejected query is checked
+    on every request."""
+    lake = serve_lake
+    walks = []
+    check = api._check_read_only
+    monkeypatch.setattr(api, "_check_read_only", lambda *a: walks.append(1) or check(*a))
+    api._checked.cache_clear()
+    assert api._checked.cache_info().maxsize == DataLake.PLAN_SLOTS
+    query = 'SELECT "station_id" AS s FROM trains ORDER BY station_id LIMIT 1'
+    for _ in range(3):
+        assert api.run_sql(lake, query) == [{"s": "station_id"}]
+    assert len(walks) == 1
+    for _ in range(2):
+        with pytest.raises(api.BadRequest, match="unknown table"):
+            api.run_sql(lake, "SELECT * FROM text.`/etc/passwd`")
+    assert len(walks) == 3
+    # a conf the parser reads: double quotes now name a column
+    spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
+    try:
+        assert api.run_sql(lake, query) == [{"s": 0}]
+    finally:
+        spark.conf.unset("spark.sql.ansi.doubleQuotedIdentifiers")
+    assert len(walks) == 4
+    assert api.run_sql(lake, query) == [{"s": "station_id"}]
+    assert len(walks) == 4
+    # a new dataset id is a new key: the query is checked again
+    lake.save(spark.range(3).toDF("v"), "extra")
+    assert api.run_sql(lake, query) == [{"s": "station_id"}]
+    assert len(walks) == 5
+    # ${name} reads a session conf at the parse: checked and computed anew
+    conf = "spark.polars_express_spark.test.var"
+    for value in ("a", "b"):
+        spark.conf.set(conf, value)
+        assert api.run_sql(lake, f"SELECT '${{{conf}}}' AS v") == [{"v": value}]
+    spark.conf.unset(conf)
+    assert len(walks) == 7

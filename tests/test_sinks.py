@@ -1,8 +1,9 @@
 """The JSON sink (sinks.to_json_rows_flagged): the exact row shape a
 client receives, and the Spark jobs one response costs on each route,
-first and repeated. A repeat request reruns the route's prepared plan
-(DataLake.prepared), so the counts below are caps: a new driver
-barrier on a route fails here."""
+first and repeated. A first request computes the route's answer in the
+counts below, which are caps: a new driver barrier on a route fails
+here. A repeat request over an unchanged dataset is answered from the
+lake's answer pool (DataLake.answer) and runs no job at all."""
 
 from __future__ import annotations
 
@@ -105,8 +106,9 @@ def test_delays_with_limit_runs_one_job_and_one_stage(spark, parts_lake):
 
 
 def _warm(spark, parts_lake, fn):
-    """Run ``fn`` until the lake holds its plan over the in-memory copy:
-    the first request of the module may be the one that persists it."""
+    """Run ``fn`` until the lake holds its answer over the in-memory
+    copy: the first request of the module may be the one that persists
+    it."""
     for _ in range(2):
         fn()
     assert parts_lake.load("trains").storageLevel.useMemory
@@ -119,22 +121,19 @@ ROUTES = {
 
 
 @pytest.mark.parametrize("route", sorted(ROUTES))
-def test_repeat_preview_and_delays_run_one_job_and_one_stage(spark, parts_lake, route):
+def test_repeat_preview_and_delays_run_no_job(spark, parts_lake, route):
     def run():
         return ROUTES[route](parts_lake)
 
     _warm(spark, parts_lake, run)
     (rows, truncated), jobs = _jobs(spark, run, f"sink_repeat_{route}")
     assert len(rows) == 100 and truncated is False
-    assert len(jobs) == 1
-    assert len(_stages(spark, jobs)) == 1
+    assert jobs == []
 
 
-def test_repeat_regression_runs_one_job(spark, parts_lake):
-    """A repeat regression on an unchanged, cached version reruns its
-    prepared aggregate: the partial aggregation's shuffle output is
-    reused (its stage is skipped), so only the final stage's job runs.
-    A new plan also runs the map stage as a job of its own."""
+def test_repeat_regression_runs_no_job(spark, parts_lake):
+    """A repeat regression on an unchanged version reads the moments its
+    first request computed."""
 
     def run():
         return api.run_regression(parts_lake, "trains", "train_id", "departure_delay")
@@ -142,11 +141,10 @@ def test_repeat_regression_runs_one_job(spark, parts_lake):
     _warm(spark, parts_lake, run)
     result, jobs = _jobs(spark, run, "sink_regression_repeat")
     assert result.n == 1000
-    assert len(jobs) == 1
-    assert len(_stages(spark, jobs)) == 2  # the reused map stage is listed, skipped
+    assert jobs == []
 
 
-def test_repeat_sql_group_by_runs_one_job(spark, parts_lake):
+def test_repeat_sql_group_by_runs_no_job(spark, parts_lake):
     query = (
         "SELECT departure_delay AS d, COUNT(*) AS n FROM trains"
         " GROUP BY departure_delay ORDER BY d"
@@ -159,14 +157,13 @@ def test_repeat_sql_group_by_runs_one_job(spark, parts_lake):
     rows, jobs = _jobs(spark, run, "sink_sql_repeat")
     assert [r["d"] for r in rows] == list(range(13))
     assert sum(r["n"] for r in rows) == 1000
-    assert len(jobs) == 1
-    assert len(_stages(spark, jobs)) == 2
+    assert jobs == []
 
 
 def test_truncation_probe_runs_one_job(spark):
     big = spark.range(0, 1000, 1, 4)
     (rows, truncated), jobs = _jobs(
-        spark, lambda: sinks.to_json_rows_flagged(sinks.json_plan(big, None, 100)), "sink_probe"
+        spark, lambda: sinks.to_json_rows_flagged(sinks.json_answer(big, None, 100)), "sink_probe"
     )
     assert len(rows) == 100 and truncated is True
     assert len(jobs) == 1

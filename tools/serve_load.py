@@ -9,15 +9,20 @@ it with ``server.make_server`` on an ephemeral localhost port, and plays
 one untimed warm-up round. Then, for each count in ``CLIENTS``, that
 many threads each hold one ``http.client`` connection and send their
 share of ``REQUESTS`` requests per route, closed loop (the next request
-after the previous reply). It prints the p50 and p99 latency of every
-route at every client count, and the number of failed requests. The driver heap
-is 2g unless ``SPARK_DRIVER_MEMORY`` says otherwise; cores come from
+after the previous reply). Every route but ``sql miss`` repeats one
+request, so after the warm-up round the server answers it from its
+answer pool (``DataLake.answer``); ``sql miss`` asks for a limit no
+request asked for before, so each of its requests runs the query. It
+prints the p50 and p99 latency of every route at every client count,
+and the number of failed requests. The driver heap is 2g unless
+``SPARK_DRIVER_MEMORY`` says otherwise; cores come from
 ``SPARK_GRAFT_CPUS`` as for the server.
 """
 
 from __future__ import annotations
 
 import http.client
+import itertools
 import json
 import math
 import os
@@ -39,7 +44,7 @@ SQL = (
     " FROM trains GROUP BY station_id ORDER BY station_id"
 )
 REGRESSION = json.dumps({"x_col": "distance_km", "y_col": "arrival_delay"})
-# route name → (method, path, body)
+# route name → (method, path, body); a callable body is called per request
 ROUTES = {
     f"{kind} {ds}": req
     for ds in ("trains", "trains_csv")
@@ -50,6 +55,8 @@ ROUTES = {
     )
 }
 ROUTES["sql trains"] = ("POST", "/sql", json.dumps({"query": SQL}))
+_limits = itertools.count(1000)  # above the query's 200 rows
+ROUTES["sql miss"] = ("POST", "/sql", lambda: json.dumps({"query": SQL, "limit": next(_limits)}))
 
 
 def write_lake(spark, lake_dir: str, rows: int):
@@ -93,6 +100,7 @@ def run_level(port: int, clients: int, requests: int) -> tuple[dict, Counter]:
             for i in range(per_client):
                 for name in order[(seed + i) % len(order):] + order[:(seed + i) % len(order)]:
                     method, path, body = ROUTES[name]
+                    body = body() if callable(body) else body
                     headers = {"Content-Type": "application/json"} if body else {}
                     t0 = time.perf_counter()
                     try:
