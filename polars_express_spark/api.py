@@ -13,7 +13,7 @@ call (src/main.rs:106-203). Here each route's answer — the capped
 regression — is computed once per dataset version and kept in the
 lake's answer pool (`DataLake.answer`), keyed by route, parameters and
 the file version of every dataset it reads. A repeat request stats the
-files, loads the datasets and answers from the pool: it runs no Spark
+files and answers from the pool: it builds no scan and runs no Spark
 job, and no plan or shuffle output outlives the request that computed
 it. Validation that depends on the data (a missing column, no delay
 column) runs when an answer is computed; an answer exists only for a
@@ -405,8 +405,8 @@ def run_sql(lake: DataLake, query: str, limit: int | None = None) -> list[dict]:
     Its answer is kept in the lake's pool, keyed by the text, the limit
     and the file version of each dataset it names, so a write to another
     dataset leaves it alone. An answer is computed from the tree the
-    check walked, with each dataset it names bound to the lake's frame
-    of that version (`_over_frames`): no temp view is registered or
+    check walked, with each dataset it names bound to the lake's scan
+    of it (`_over_frames`): no temp view is registered or
     read. Two dataset ids that differ only in case name one table, so a
     query naming both is rejected. A query whose plan fixes a random
     seed or the current time, or that names a conf as ``${name}``, is

@@ -15,41 +15,33 @@ Here generalized Spark-first:
   inferred schema keyed by the path's stat signature (`file_version`)
   and hands it back through ``spark.read.schema`` while the files are
   unchanged.
-- Data is decoded once per file version too: from the second load of a
-  version on, `DataLake.load` keeps one in-memory columnar copy
-  (``persist(MEMORY_ONLY)``) of each flat dataset — a single file or a
-  directory without subdirectories — and returns it while the files are
-  unchanged, so repeated requests read memory, and only the columns
-  they use, instead of re-parsing CSV or re-decoding Parquet. A version
-  loaded once (a lake built for one query) is never copied. The first
-  action that reads the copy builds it; partitions that do not fit in
-  memory are read from the files again.
+- Data is read from the files on every computation: a load is a lazy
+  scan, and the lake keeps no copy of a dataset's rows. Requests are
+  answered once per dataset version instead: `DataLake.answer` keeps a
+  bounded pool of the serving routes' answers (the response strings or
+  the regression moments, never a DataFrame), keyed by route,
+  parameters and the file version of every dataset they read. A repeat
+  request stats the files and runs no Spark job; it builds no scan.
 - Any rewrite (overwrite, restore, compact, append, a file dropped in
-  by hand) changes the signature, so neither cache serves data or a
-  schema of an older version and no writer has to invalidate them for
-  correctness; a lake rewrite still unpersists the copy at once.
-- Requests are answered once per dataset version too: `DataLake.answer`
-  keeps a bounded pool of the serving routes' answers (the response
-  strings or the regression moments, never a DataFrame), keyed by
-  route, parameters and the file version of every dataset they read. A
-  repeat request still stats the files and loads each dataset, and then
-  runs no Spark job. A rewrite drops every answer that reads the
-  dataset; an answer computed across one is not kept.
+  by hand) changes the signature, so neither the schema cache nor the
+  answer pool serves a schema or an answer of an older version, and no
+  writer has to invalidate them for correctness; a lake rewrite still
+  drops the dataset's answers at once, and an answer computed across
+  one is not kept.
+- Only a dataset id `list_datasets` lists resolves to a path
+  (`DataLake._entry_id`): ``..``, ``.``, a path with a separator or a
+  retained snapshot's directory name is no id.
 - At 100 TB an id maps to a partitioned parquet directory; the API is
   identical because spark.read.parquet takes files or directories.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import stat
 import threading
-import uuid
-import weakref
 from collections import OrderedDict
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -88,15 +80,6 @@ _SCHEMA_CONFS = (
 # paths read, so no size limit or eviction
 _schemas: dict[str, tuple[tuple, T.StructType]] = {}
 _schemas_lock = threading.Lock()
-# Reader option that tags a cached scan with its lake and file version.
-# Spark's CacheManager matches a read to a cached one by plan, and a
-# scan's plan names the path but not the files' version: an untagged
-# cached scan would also answer any later read of the path, a plain
-# spark.read included, after the files were replaced. The lake's part
-# keeps two lakes over one directory from sharing, and so from
-# unpersisting, each other's entry. No reader interprets the option; it
-# only makes the cached plan equal to the lake's reads of its version.
-_VERSION_OPTION = "lakeFileVersion"
 # Session confs that change what a route answers: part of an answer's
 # key (`DataLake.answer`).
 _PLAN_CONFS = ("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
@@ -136,16 +119,6 @@ def _is_flat(path: str) -> bool:
         return False
 
 
-def _release(frames: dict) -> None:
-    """Unpersist a dropped lake's frames. Runs as a finalizer, so it
-    never raises."""
-    for _, _, df in list(frames.values()):
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — e.g. the session has stopped
-            pass
-
-
 def read_path(spark: SparkSession, fmt: str, path: str, schema=None, **options) -> DataFrame:
     """Lazy ``spark.read`` of ``path`` in ``fmt`` with reader ``options``,
     inferring the schema at most once per file version.
@@ -165,8 +138,7 @@ def read_path(spark: SparkSession, fmt: str, path: str, schema=None, **options) 
     key = (
         version,
         fmt,
-        # the version tag names the reader, not the schema
-        tuple(sorted(kv for kv in options.items() if kv[0] != _VERSION_OPTION)),
+        tuple(sorted(options.items())),
         tuple(spark.conf.get(c) for c in _SCHEMA_CONFS),
     )
     with _schemas_lock:
@@ -201,38 +173,46 @@ class DataLake:
         self.spark = spark
         self.base_dir = base_dir
         self.keep_snapshots = keep_snapshots
-        # data_id → (path, file_version, tagged scan): one per dataset,
-        # persisted from the version's second load on. The frames live
-        # as long as the lake: a lake that is dropped unpersists them, so
-        # a short-lived lake leaves no cache behind.
-        self._frames: dict[str, tuple[str, tuple, DataFrame]] = {}
         # (route, ((data_id, file_version), ...), confs) → answer, least
-        # recently used first; PLAN_SLOTS answers at most. Guarded by the
-        # frames lock, like the frames the answers are read from.
+        # recently used first; PLAN_SLOTS answers at most
         self._answers: OrderedDict[tuple, object] = OrderedDict()
         # data_id → how often its answers were dropped: an answer whose
         # computation a drop overlapped is not kept
         self._answer_drops: dict[str, int] = {}
-        self._frames_lock = threading.Lock()
-        self._nonce = uuid.uuid4().hex
-        weakref.finalize(self, _release, self._frames).atexit = False
+        self._answers_lock = threading.Lock()
+
+    def _entry_id(self, entry: str) -> str | None:
+        """The dataset id that the name ``entry`` directly under base_dir
+        stands for, or None when it is no dataset: a sidecar, a staging or
+        snapshot directory, a file without a format extension, ``.``,
+        ``..`` or a path with a separator. `list_datasets` lists these
+        ids and `dataset_path` resolves no other."""
+        if entry in ("", ".", "..") or os.path.basename(entry) != entry:
+            return None
+        if entry.endswith(".state.json"):
+            return None  # streaming-accumulator sidecar, not a dataset
+        if ".__writing__" in entry:
+            return None  # in-flight overwrite staging dir (save())
+        if self.SNAP_MARK in entry:
+            return None  # retained overwrite snapshot (load_snapshot)
+        stem, dot, ext = entry.rpartition(".")
+        if dot and ext in self.FORMATS and stem:
+            return stem
+        return entry if os.path.isdir(os.path.join(self.base_dir, entry)) else None
 
     def dataset_path(self, data_id: str) -> str | None:
         """Resolve id to an existing file/dir, trying formats in order.
 
         Mirrors reference dataset_path (src/main.rs:36-39) but
-        format-agnostic: <base>/<id>.parquet, <id> (dir), <id>.csv, <id>.json.
+        format-agnostic: <base>/<id>.parquet, <id> (dir), <id>.csv,
+        <id>.json, <id>.orc. None for an id `list_datasets` would not
+        list (`_entry_id`), so no id reads outside the lake's datasets.
         """
-        candidates = [
-            os.path.join(self.base_dir, f"{data_id}.parquet"),
-            os.path.join(self.base_dir, data_id),
-            os.path.join(self.base_dir, f"{data_id}.csv"),
-            os.path.join(self.base_dir, f"{data_id}.json"),
-            os.path.join(self.base_dir, f"{data_id}.orc"),
-        ]
-        for c in candidates:
-            if os.path.exists(c):
-                return c
+        for entry in (f"{data_id}.parquet", data_id, f"{data_id}.csv", f"{data_id}.json",
+                      f"{data_id}.orc"):
+            path = os.path.join(self.base_dir, entry)
+            if self._entry_id(entry) == data_id and os.path.exists(path):
+                return path
         return None
 
     def dataset_exists(self, data_id: str) -> bool:
@@ -247,165 +227,81 @@ class DataLake:
         improvement, not a parity gap."""
         if not os.path.isdir(self.base_dir):
             return []
-        ids = set()
-        for entry in os.listdir(self.base_dir):
-            if entry.endswith(".state.json"):
-                continue  # streaming-accumulator sidecar, not a dataset
-            if ".__writing__" in entry:
-                continue  # in-flight overwrite staging dir (save())
-            if self.SNAP_MARK in entry:
-                continue  # retained overwrite snapshot — without
-                # this filter the isdir fallback below would list every
-                # snapshot as a phantom dataset
-            stem, dot, ext = entry.rpartition(".")
-            if dot and ext in self.FORMATS and stem:
-                ids.add(stem)
-            elif os.path.isdir(os.path.join(self.base_dir, entry)):
-                ids.add(entry)
-        return sorted(ids)
+        return sorted({i for i in map(self._entry_id, os.listdir(self.base_dir)) if i is not None})
 
     def load(self, data_id: str, schema=None, merge_schema: bool = False) -> DataFrame:
         """Lazy scan of a dataset (reference load_dataset, src/main.rs:41-52,
-        minus the anti-pattern of eager whole-file parsing), served from
-        one in-memory columnar copy per file version when it can be.
+        minus the anti-pattern of eager whole-file parsing).
 
         CSVs use header inference like the reference
         (CsvReadOptions::with_has_header, src/main.rs:48-51) unless a
         schema is declared; parquet/json/orc carry their own schemas (a
         declared schema skips inference for any format). The schema is
-        inferred once per file version (`read_path`).
+        inferred once per file version (`read_path`), so a repeat load
+        of unchanged files runs no job; the data is read from the files
+        by every action on the frame. A load that finds the dataset gone
+        drops its answers.
 
-        A single file or a directory without subdirectories that is
-        loaded more than once is read once per file version: the first
-        load returns a scan tagged with the version and keeps it, and the
-        second load of the same version persists that frame
-        (``MEMORY_ONLY``, built by the first action that reads it), so
-        every later load runs no schema job and reads columnar memory,
-        only the columns it uses.
-        A version loaded once costs no cache. A kept frame that is no
-        longer cached (``spark.catalog.clearCache()``) is persisted again
-        on its next load. When the files change, the next load keeps a
-        scan of the new version and unpersists the old frame; `save`,
-        `restore` and `compact` unpersist the rewritten dataset's frame
-        and no other. A load that finds the dataset gone forgets its
-        frame, and a lake that is dropped unpersists all of its frames.
-        Session confs that change inferred types apply to a kept dataset
-        from its next version.
-
-        Partitioned (nested) directories, a declared ``schema`` and
-        ``merge_schema`` get a plain lazy scan, so partition filters
-        still prune directories. merge_schema=True unions the footers of
-        every part file (schema EVOLUTION: parts appended after a column
-        was added still read as one frame, old parts null-extended) —
-        off by default because it reads every footer up front, which
-        matters at 100 TB file counts; it always re-reads the footers.
+        Partitioned (nested) directories are read as Spark reads them, so
+        partition filters prune directories. merge_schema=True unions
+        the footers of every part file (schema EVOLUTION: parts appended
+        after a column was added still read as one frame, old parts
+        null-extended) — off by default because it reads every footer up
+        front, which matters at 100 TB file counts; it always re-reads
+        the footers.
         """
         path = self.dataset_path(data_id)
         if path is None:
             self._drop(data_id)
             raise FileNotFoundError(f"dataset not found: {data_id!r} under {self.base_dir}")
-        if schema is not None or merge_schema:
-            return self._scan(path, schema, merge_schema)
-        version = file_version(path)
-        with self._frames_lock:
-            hit = self._frames.get(data_id)
-        if hit is not None and hit[:2] == (path, version):
-            return self._persisted(data_id, hit[2])
-        return self._keep(data_id, path, version)
-
-    def _persisted(self, data_id: str, df: DataFrame) -> DataFrame:
-        """A repeat load of a kept version: its frame, persisted if it is
-        not cached yet (the version's second load) or any more (a
-        clearCache). Persists under the lock, and only while the frame is
-        still the id's, so a frame a newer version replaced is never
-        cached again."""
-        if df.storageLevel == StorageLevel.NONE:
-            with self._frames_lock:
-                entry = self._frames.get(data_id)
-                if entry is not None and entry[2] is df and df.storageLevel == StorageLevel.NONE:
-                    df.persist(StorageLevel.MEMORY_ONLY)
-        return df
-
-    def _keep(self, data_id: str, path: str, version: tuple | None) -> DataFrame:
-        """First load of a dataset version: a scan tagged with the
-        version, kept as the id's frame in place of the older version's,
-        whose frame is unpersisted. A nested directory, or files that
-        changed while Spark listed them, get a plain scan; so does a
-        missing path."""
-        if version is None or not _is_flat(path):
-            return self._scan(path)
-        df = self._scan(path, **{_VERSION_OPTION: self._tag(version)})
-        with self._frames_lock:
-            if file_version(path) != version:
-                return df  # the listing may hold either version: not kept
-            old = self._frames.get(data_id)
-            if old is not None and old[:2] == (path, version):
-                return old[2]  # another thread kept this version first
-            self._frames[data_id] = (path, version, df)
-            self._drop_answers(data_id)
-            gone = [i for i, (p, _, _) in self._frames.items() if not os.path.exists(p)]
-            for i in gone:
-                self._drop_answers(i)
-            frames = ([old] if old else []) + [self._frames.pop(i) for i in gone]
-        for _, _, frame in frames:
-            frame.unpersist()
-        return df
-
-    def _tag(self, version: tuple) -> str:
-        """The `_VERSION_OPTION` value of this lake's scans of a version."""
-        return hashlib.sha1(f"{self._nonce} {version!r}".encode()).hexdigest()
+        return self._scan(path, schema, merge_schema)
 
     def _drop(self, data_id: str) -> None:
-        """Unpersist and forget a dataset's frame: after a rewrite, or
-        when the dataset is gone."""
-        with self._frames_lock:
-            entry = self._frames.pop(data_id, None)
-            self._drop_answers(data_id)
-        if entry is not None:
-            entry[2].unpersist()
-
-    def _drop_answers(self, data_id: str) -> None:
         """Forget every answer that reads ``data_id``, and make an answer
-        being computed over it unkept. The caller holds the frames lock."""
-        self._answer_drops[data_id] = self._answer_drops.get(data_id, 0) + 1
-        for key in [k for k in self._answers if any(i == data_id for i, _ in k[1])]:
-            del self._answers[key]
+        being computed over it unkept: after a rewrite, or when the
+        dataset is gone."""
+        with self._answers_lock:
+            self._answer_drops[data_id] = self._answer_drops.get(data_id, 0) + 1
+            for key in [k for k in self._answers if any(i == data_id for i, _ in k[1])]:
+                del self._answers[key]
 
     def answer(self, route: tuple, data_ids: tuple[str, ...], compute):
         """The answer of ``route`` (the route's name and parameters) over
         the datasets ``data_ids``, from the pool when it holds one.
 
-        Each dataset is loaded as `load` does (a request always stats the
-        files, so a rewrite or a file dropped in by hand is seen by the
-        next one), and the answer is keyed by ``route``, the file version
-        of every dataset and the session confs in ``_PLAN_CONFS``. A hit
-        returns the kept answer and runs no Spark job; a miss calls
-        ``compute(*frames)``, which returns the answer and whether it may
-        be kept. It is kept only while no dataset it reads was dropped or
-        replaced in the meantime, and only when every dataset is one the
-        lake keeps (a flat dataset whose files held still while it was
-        listed). Answers are shared between threads, so they must not be
-        changed. At most PLAN_SLOTS are kept; the least recently used
-        goes first."""
-        frames, reads, drops = [], [], []
-        for data_id in data_ids:
-            df = self.load(data_id)
-            with self._frames_lock:
-                entry = self._frames.get(data_id)
-                drops.append(self._answer_drops.get(data_id, 0))
-            frames.append(df)
-            reads.append((data_id, entry[1] if entry is not None and entry[2] is df else None))
+        The answer is keyed by ``route``, the file version of every
+        dataset (a request always stats the files, so a rewrite or a file
+        dropped in by hand is seen by the next one) and the session confs
+        in ``_PLAN_CONFS``. A hit returns the kept answer: it loads no
+        dataset and runs no Spark job. A miss calls ``compute(*frames)``
+        with each dataset loaded (`load`), which returns the answer and
+        whether it may be kept. It is kept only when every dataset is
+        flat (a file or a directory without subdirectories, whose
+        `file_version` sees every change), each dataset's files are the
+        version they were before the computation, and no dataset it reads
+        was dropped in the meantime. Answers are shared between threads,
+        so they must not be changed. At most PLAN_SLOTS are kept; the
+        least recently used goes first."""
+        with self._answers_lock:
+            drops = [self._answer_drops.get(i, 0) for i in data_ids]
+        paths = [self.dataset_path(i) for i in data_ids]
+        reads = tuple(
+            (i, file_version(p) if p is not None and _is_flat(p) else None)
+            for i, p in zip(data_ids, paths)
+        )
         key = None
         if all(v is not None for _, v in reads):
-            key = (route, tuple(reads), tuple(self.spark.conf.get(c) for c in _PLAN_CONFS))
-            with self._frames_lock:
+            key = (route, reads, tuple(self.spark.conf.get(c) for c in _PLAN_CONFS))
+            with self._answers_lock:
                 if key in self._answers:
                     self._answers.move_to_end(key)
                     return self._answers[key]
-        answer, keep = compute(*frames)
+        answer, keep = compute(*(self.load(i) for i in data_ids))
         if key is None or not keep:
             return answer
-        with self._frames_lock:
+        if any(file_version(p) != v for p, (_, v) in zip(paths, reads)):
+            return answer  # the files changed under the computation
+        with self._answers_lock:
             if [self._answer_drops.get(i, 0) for i in data_ids] == drops:
                 self._answers[key] = answer
                 self._answers.move_to_end(key)
@@ -435,8 +331,6 @@ class DataLake:
         data scan), then one repartition-write; the write goes to a
         temp id and swaps in only after success, so a failed compaction
         never corrupts the dataset. Returns the new file count."""
-        import shutil
-
         path = self.dataset_path(data_id)
         if path is None or not (path.endswith(".parquet") or os.path.isdir(path)):
             raise FileNotFoundError(f"no parquet dataset {data_id!r} to compact")
@@ -445,8 +339,7 @@ class DataLake:
         n_files = max(1, -(-n_rows // target_rows_per_file))
         tmp_id = f"{data_id}.__compact_tmp"
         tmp_path = self.save(df.repartition(n_files), tmp_id, fmt="parquet")
-        shutil.rmtree(path)
-        os.replace(tmp_path, path)
+        self._swap_in(tmp_path, path, archive=False)
         self._drop(data_id)
         self._invalidate_memos()
         return n_files
@@ -515,14 +408,15 @@ class DataLake:
 
         Overwrites PUBLISH BY RENAME: the job writes to a sibling
         ``<path>.__writing__*`` directory (invisible to list_datasets),
-        then the old directory is removed and the new one renamed into
-        place. Concurrent readers therefore see the OLD complete data
-        for the whole duration of the write, never a half-written mix
-        of new part files — a concurrency e2e caught exactly that
-        partial-count window under an in-place overwrite. The residual
-        remove→rename gap is a clean dataset-missing error (mapped to
-        400 by the endpoints), not a wrong answer; a crash in the gap
-        leaves the finished tmp dir for vacuum. This is the local-FS
+        then the old directory is renamed away and the new one renamed
+        into place (`_swap_in`). Concurrent readers therefore see the
+        OLD complete data for the whole duration of the write, never a
+        half-written mix of new part files — a concurrency e2e caught
+        exactly that partial-count window under an in-place overwrite —
+        nor a half-removed old directory. The residual gap between the
+        two renames is a clean dataset-missing error (mapped to 400 by
+        the endpoints), not a wrong answer; a crash in the gap leaves
+        the finished tmp dir for vacuum. This is the local-FS
         analog of an object-store commit protocol — on a real deployment
         the same role is played by the committer/table format. Append
         mode keeps writing in place (it composes with existing files by
@@ -533,7 +427,6 @@ class DataLake:
         path = os.path.join(self.base_dir, f"{data_id}.{fmt}")
         target = path
         if mode == "overwrite":
-            import shutil
             import uuid
 
             target = f"{path}.__writing__{uuid.uuid4().hex[:8]}"
@@ -544,23 +437,40 @@ class DataLake:
             writer = writer.option("header", True)
         getattr(writer, fmt)(target)
         if target is not path:
-            if os.path.isfile(path):  # e.g. a single-file CSV dataset
-                os.remove(path)
-            elif os.path.isdir(path):
-                if self.keep_snapshots > 0:
-                    # archive, don't delete: one atomic rename, so the
-                    # publish gap is identical to the remove path but
-                    # the displaced version stays readable via
-                    # load_snapshot until pruned
-                    k = self._next_snapshot_version(path)
-                    os.rename(path, f"{path}{self.SNAP_MARK}{k:08d}")
-                    self._prune_snapshots(path)
-                else:
-                    shutil.rmtree(path, ignore_errors=True)
-            os.rename(target, path)
+            self._swap_in(target, path)
         self._drop(data_id)
         self._invalidate_memos()
         return path
+
+    def _swap_in(self, staged: str, path: str, archive: bool = True) -> None:
+        """Publish the finished directory ``staged`` as ``path``. A
+        replaced single file (e.g. a hand-dropped CSV) is removed. A
+        replaced directory leaves by one atomic rename: into a snapshot
+        when ``archive`` and snapshots are kept (readable through
+        `load_snapshot` until pruned), else aside under a staging name
+        and removed once the new one is in place. So a concurrent reader
+        lists either whole version, or finds the dataset missing in the
+        gap between the two renames; it never lists a directory that is
+        being removed, whose part files it could read only some of."""
+        import shutil
+        import uuid
+
+        old = None
+        if os.path.isfile(path):
+            os.remove(path)
+        elif os.path.isdir(path):
+            if archive and self.keep_snapshots > 0:
+                k = self._next_snapshot_version(path)
+                os.rename(path, f"{path}{self.SNAP_MARK}{k:08d}")
+                self._prune_snapshots(path)
+            else:
+                # invisible to list_datasets; vacuum removes it if the
+                # process dies before the rmtree below
+                old = f"{path}.__writing__{uuid.uuid4().hex[:8]}.old"
+                os.rename(path, old)
+        os.rename(staged, path)
+        if old is not None:
+            shutil.rmtree(old, ignore_errors=True)
 
     # -- overwrite snapshots (time travel / rollback) -----------------
 
@@ -658,17 +568,7 @@ class DataLake:
         path = snap_path.split(self.SNAP_MARK)[0]
         target = f"{path}.__writing__{uuid.uuid4().hex[:8]}"
         shutil.copytree(snap_path, target)
-        if os.path.isfile(path):  # hand-dropped single-file dataset —
-            os.remove(path)  # same branch save() takes (the final
-            # rename would otherwise fail with OSError)
-        elif os.path.isdir(path):
-            if self.keep_snapshots > 0:
-                k = self._next_snapshot_version(path)
-                os.rename(path, f"{path}{self.SNAP_MARK}{k:08d}")
-                self._prune_snapshots(path)
-            else:
-                shutil.rmtree(path, ignore_errors=True)
-        os.rename(target, path)
+        self._swap_in(target, path)
         self._drop(data_id)
         self._invalidate_memos()
         return path

@@ -35,20 +35,6 @@ from pyspark.sql import functions as F
 MAX_SINK_ROWS = 10_000
 
 
-def to_json_rows(
-    df: DataFrame, limit: int | None = None, max_rows: int = MAX_SINK_ROWS
-) -> list[dict]:
-    """DataFrame → list of JSON-safe dicts (the reference's response shape,
-    Vec<HashMap<String, JsonValue>> at src/main.rs:207).
-
-    The effective limit — min(limit, max_rows), or max_rows when no limit
-    is given — is pushed into the plan, not applied after collect, unlike
-    the reference's whole-file-then-head (§4.3.1). So the driver never
-    materializes more than max_rows rows regardless of caller input.
-    """
-    return to_json_rows_flagged(json_answer(df, limit, max_rows))[0]
-
-
 @dataclass(frozen=True)
 class JsonAnswer:
     """A response collected once and read any number of times: the
@@ -70,7 +56,11 @@ def json_answer(
 ) -> JsonAnswer:
     """The JsonAnswer of ``df`` under ``limit`` and the ``max_rows`` cap,
     collected in one Spark job (module docstring), with one row past a
-    cap as the truncation probe (see to_json_rows_flagged)."""
+    cap as the truncation probe (see to_json_rows_flagged). The
+    effective limit — min(limit, max_rows), or max_rows when no limit is
+    given — is pushed into the plan, not applied after the collect as
+    the reference's whole-file-then-head is (§4.3.1), so the driver
+    never holds more than max_rows + 1 rows whatever the caller asks."""
     effective = max_rows if limit is None else min(limit, max_rows)
     capped = limit is None or limit > max_rows
     limited = df.limit(effective + 1 if capped else effective)
@@ -79,7 +69,9 @@ def json_answer(
 
 
 def to_json_rows_flagged(answer: JsonAnswer) -> tuple[list[dict], bool]:
-    """The rows of a JsonAnswer plus a truncation flag: True iff the cap
+    """The rows of a JsonAnswer as JSON-safe dicts (the reference's
+    response shape, Vec<HashMap<String, JsonValue>> at src/main.rs:207)
+    plus a truncation flag: True iff the cap
     (not the caller's own limit) cut the result short — i.e. the input had
     at least one more row past max_rows that a reference client, which
     always gets whole tables, would have received. Probed by fetching

@@ -78,9 +78,9 @@ def test_sink_row_cap(lake, spark):
     from polars_express_spark import sinks
 
     big = spark.range(25_000).withColumnRenamed("id", "some_delay")
-    assert len(sinks.to_json_rows(big, limit=None, max_rows=100)) == 100
-    assert len(sinks.to_json_rows(big, limit=500, max_rows=100)) == 100
-    assert len(sinks.to_json_rows(big, limit=50, max_rows=100)) == 50
+    for limit, n in ((None, 100), (500, 100), (50, 50)):
+        rows, _ = sinks.to_json_rows_flagged(sinks.json_answer(big, limit, max_rows=100))
+        assert len(rows) == n
 
 
 def test_sink_truncation_flag(lake, spark):

@@ -11,6 +11,7 @@ import urllib.request
 from urllib.parse import urlparse
 
 import pytest
+from pyspark.sql import functions as F
 
 from polars_express_spark.catalog import DataLake
 from polars_express_spark.server import MAX_BODY_BYTES, make_server
@@ -122,6 +123,42 @@ def test_delays_400_no_delay_columns(base_url):
 
 def test_404_unknown_dataset(base_url):
     assert _code(_get, base_url + "/data/ghost/preview") == 404
+
+
+def test_only_listed_dataset_ids_are_served(spark, tmp_path):
+    """An id that `list_datasets` does not list answers 404 on every
+    route, sent as a raw path: ``..`` (the lake's parent, which holds a
+    parquet file), ``.`` (the lake directory), a retained snapshot's
+    directory and a dataset's file name."""
+    lake_dir = tmp_path / "lake"
+    lake_dir.mkdir()
+    spark.range(3).toDF("v").write.parquet(str(tmp_path / "outside.parquet"))
+    lake = DataLake(spark, str(lake_dir), keep_snapshots=1)
+    for n in (4, 5):
+        lake.save(spark.range(n).select(F.col("id").alias("some_delay")), "t")
+    assert lake.list_datasets() == ["t"] and lake.list_snapshots("t") == [1]
+    srv = make_server(lake, host="127.0.0.1", port=0)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    conn = http.client.HTTPConnection("127.0.0.1", srv.server_address[1], timeout=30)
+
+    def send(method, path, body=None):
+        conn.request(method, path, body=body and json.dumps(body))
+        r = conn.getresponse()
+        return r.status, json.loads(r.read())
+
+    try:
+        assert send("GET", "/data/t/preview")[0] == 200
+        for data_id in ("..", ".", "t.parquet.__snapshot__00000001", "t.parquet"):
+            for endpoint in ("preview", "delays"):
+                status, err = send("GET", f"/data/{data_id}/{endpoint}")
+                assert (status, err) == (404, {"error": f"dataset {data_id!r} not found"})
+            status, _ = send("POST", f"/data/{data_id}/regression",
+                             {"x_col": "some_delay", "y_col": "some_delay"})
+            assert status == 404, data_id
+            assert lake.dataset_path(data_id) is None
+    finally:
+        conn.close()
+        srv.shutdown()
 
 
 def test_regression(base_url):

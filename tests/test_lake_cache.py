@@ -1,14 +1,11 @@
-"""DataLake.load keeps one in-memory columnar copy per flat dataset and
-file version from the version's second load on: a repeat load reads
-memory, any change to the files is seen by the next load and by a plain
-``spark.read``, a rewrite evicts only the dataset it rewrote, one lake
-never evicts another's copy, and partitioned datasets keep their
-scan. DataLake.answer keeps the routes' answers per dataset version in
-one bounded pool of strings and numbers: a repeat request runs no Spark
-job, every kind of rewrite is answered from the new data, a write drops
-the answers that read its dataset and no other, an answer computed
-across a rewrite or fixing a seed or the time is not kept, and no
-shuffle output outlives the request that made it."""
+"""DataLake keeps the serving routes' answers per dataset version in one
+bounded pool of strings and numbers (DataLake.answer), and no copy of a
+dataset's rows: a repeat request runs no Spark job, every kind of
+rewrite — a file replaced by hand included — is answered from the new
+data, a write drops the answers that read its dataset and no other, an
+answer computed across a rewrite or fixing a seed or the time is not
+kept, serving leaves Spark's cache as it was, and no shuffle output
+outlives the request that made it."""
 
 from __future__ import annotations
 
@@ -24,45 +21,13 @@ import pyarrow as pa
 import pyarrow.csv as pacsv
 import pyarrow.parquet as pq
 import pytest
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from test_schema_cache import _jobs
 
 from polars_express_spark import api
-from polars_express_spark.catalog import _VERSION_OPTION, DataLake, file_version
+from polars_express_spark.catalog import DataLake
 from polars_express_spark.sinks import JsonAnswer
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
-def _cached(df) -> bool:
-    return df.storageLevel != StorageLevel.NONE
-
-
-def _cached_tags(spark, path: str) -> list:
-    """The version tag of each CacheManager entry whose scan reads
-    ``path`` (None for an entry without one)."""
-    seq = spark._jsparkSession.sharedState().cacheManager().cachedData()
-    tags = []
-    for i in range(seq.size()):
-        leaves = seq.apply(i).plan().collectLeaves()
-        for j in range(leaves.size()):
-            leaf = leaves.apply(j)
-            if leaf.getClass().getSimpleName() != "LogicalRelation":
-                continue
-            rel = leaf.relation()
-            if rel.location().rootPaths().head().toUri().getPath() == path:
-                tag = rel.options().get(_VERSION_OPTION)
-                tags.append(tag.get() if tag.isDefined() else None)
-    return tags
-
-
-def _tag(lake: DataLake, path: str) -> str:
-    """``lake``'s tag of the files at ``path`` as they are now."""
-    return lake._tag(file_version(path))
 
 
 def _replace(path: str, table: pa.Table) -> None:
@@ -75,172 +40,57 @@ def _replace(path: str, table: pa.Table) -> None:
     os.replace(tmp, path)
 
 
-def test_second_load_reads_memory(spark, tmp_path):
-    lake = DataLake(spark, str(tmp_path))
-    path = lake.save(spark.range(20).toDF("v"), "t")
-    first = lake.load("t")
-    assert first.count() == 20
-    # one load of a version costs no cache
-    assert not _cached(first)
-    assert _cached_tags(spark, path) == []
-    assert "InMemoryRelation" not in _plan(first.select("v"))
-    second = lake.load("t")
-    assert second is first
-    assert _cached(second)
-    assert "InMemoryRelation" in _plan(second.select("v"))
-    assert second.count() == 20
-    assert lake.load("t") is first
-    assert _cached_tags(spark, path) == [_tag(lake, path)]
+def _delay_table(rows: int) -> pa.Table:
+    return pa.table({
+        "v": list(range(rows)),
+        "departure_delay": [float(i) for i in range(rows)],
+        "arrival_delay": [2.0 * i + 1 for i in range(rows)],
+    })
 
 
 @pytest.mark.parametrize("name", ["t.parquet", "t.csv"])
 def test_hand_replaced_file_is_seen_by_load_and_plain_read(spark, tmp_path, name):
+    """A single file replaced by hand is read from its new rows by the
+    next load, by a plain ``spark.read`` and by every route's next
+    request."""
     path = str(tmp_path / name)
-    _replace(path, pa.table({"v": list(range(5))}))
+    _replace(path, _delay_table(5))
     lake = DataLake(spark, str(tmp_path))
-    old = lake.load("t")
-    assert lake.load("t") is old
-    assert _cached(old)
-    assert old.count() == 5
-    _replace(path, pa.table({"v": list(range(7))}))
+
+    def routes():
+        reg = api.run_regression(lake, "t", "departure_delay", "arrival_delay")
+        return (
+            api.get_data_preview(lake, "t"),
+            api.get_sorted_delays(lake, "t", descending=True),
+            (reg.n, round(reg.slope, 9), round(reg.intercept, 9)),
+            api.run_sql(lake, "SELECT COUNT(*) AS n, SUM(v) AS s FROM t"),
+        )
+
+    for _ in range(2):
+        old = routes()
+    assert old[2] == (5, 2.0, 1.0) and old[3] == [{"n": 5, "s": 10}]
+    _replace(path, _delay_table(7))
     plain = spark.read.option("header", True).csv(path) if name.endswith(".csv") else (
         spark.read.parquet(path))
     assert plain.count() == 7
-    new = lake.load("t")
-    assert new.count() == 7
-    assert not _cached(old)  # the old version's frame is unpersisted
-    assert lake.load("t") is new
-    assert _cached(new)
-    assert sorted(int(r.v) for r in new.collect()) == list(range(7))
-    assert _cached_tags(spark, path) == [_tag(lake, path)]
-
-
-def test_overwrite_through_save_is_seen_and_frees_the_old_frame(spark, tmp_path):
-    lake = DataLake(spark, str(tmp_path))
-    path = lake.save(spark.range(5).toDF("v"), "t")
-    old = lake.load("t")
-    assert lake.load("t") is old
-    assert old.count() == 5 and _cached(old)
-    lake.save(spark.range(9).toDF("v"), "t")
-    assert not _cached(old)
-    assert spark.read.parquet(path).count() == 9
-    new = lake.load("t")
-    assert lake.load("t") is new
-    assert new.count() == 9
-    assert _cached_tags(spark, path) == [_tag(lake, path)]
-
-
-def test_save_of_one_dataset_keeps_the_others(spark, tmp_path):
-    lake = DataLake(spark, str(tmp_path))
-    lake.save(spark.range(3).toDF("v"), "a")
-    lake.save(spark.range(4).toDF("v"), "b")
-    a, b = lake.load("a"), lake.load("b")
-    assert lake.load("a") is a and lake.load("b") is b
-    assert a.count() == 3 and b.count() == 4
-    assert _cached(a) and _cached(b)
-    lake.save(spark.range(5).toDF("v"), "a")
-    assert not _cached(a)
-    assert _cached(b) and lake.load("b") is b
-
-
-def test_two_lakes_over_one_directory_keep_their_own_copies(spark, tmp_path):
-    path = str(tmp_path / "t.parquet")
-    _replace(path, pa.table({"v": list(range(5))}))
-    one, two = DataLake(spark, str(tmp_path)), DataLake(spark, str(tmp_path))
-    a, b = one.load("t"), two.load("t")
-    assert one.load("t") is a and two.load("t") is b
-    assert _cached(a) and _cached(b)
-    assert sorted(_cached_tags(spark, path)) == sorted([_tag(one, path), _tag(two, path)])
-    one._drop("t")  # as a save through `one` would
-    assert not _cached(a)
-    assert _cached(b) and two.load("t") is b
-    assert one.load("t") is not a  # a new frame: first load, not cached
-    del one, a
-    gc.collect()  # the dropped lake's finalizer leaves `two`'s copy
-    assert _cached(b)
-    assert _cached_tags(spark, path) == [_tag(two, path)]
-    assert b.count() == 5
-
-
-def test_clear_cache_between_loads_stays_correct(spark, tmp_path):
-    lake = DataLake(spark, str(tmp_path))
-    path = str(tmp_path / "t.parquet")
-    _replace(path, pa.table({"v": list(range(5))}))
-    assert lake.load("t").count() == 5
-    assert lake.load("t").count() == 5 and _cached(lake.load("t"))
-    spark.catalog.clearCache()
-    # the kept frame is cached again by its next load
-    df = lake.load("t")
-    assert _cached(df)
-    assert df.count() == 5
-    assert _cached_tags(spark, path) == [_tag(lake, path)]
-    _replace(path, pa.table({"v": list(range(8))}))
-    spark.catalog.clearCache()
-    assert lake.load("t").count() == 8
-    assert _cached(lake.load("t"))
-    assert spark.read.parquet(path).count() == 8
-    assert _cached_tags(spark, path) == [_tag(lake, path)]
-
-
-def test_missing_dataset_forgets_its_frame(spark, tmp_path):
-    lake = DataLake(spark, str(tmp_path))
-    path = str(tmp_path / "t.parquet")
-    _replace(path, pa.table({"v": list(range(5))}))
-    df = lake.load("t")
-    assert lake.load("t") is df and _cached(df)
-    assert df.count() == 5
-    os.remove(path)
-    with pytest.raises(FileNotFoundError):
-        lake.load("t")
-    assert not _cached(df)
-
-
-def test_dropped_lake_leaves_no_cache_entry(spark, tmp_path):
-    lake = DataLake(spark, str(tmp_path))
-    path = lake.save(spark.range(5).toDF("v"), "t")
-    lake.load("t")
-    assert lake.load("t").count() == 5
-    assert _cached_tags(spark, path) == [_tag(lake, path)]
-    del lake
-    gc.collect()
-    assert _cached_tags(spark, path) == []
-
-
-def test_partitioned_dataset_is_not_cached(spark, tmp_path):
-    lake = DataLake(spark, str(tmp_path))
-    df = spark.range(40).select((F.col("id") % 4).alias("k"), F.col("id").alias("v"))
-    lake.save(df, "p", partition_by=["k"])
-    lake.load("p")
-    loaded = lake.load("p")
-    assert not _cached(loaded)
-    filtered = lake.load("p").where(F.col("k") == 1)
-    assert "InMemoryRelation" not in _plan(filtered)
-    plan = filtered._sc._jvm.PythonSQLUtils.explainString(
-        filtered._jdf.queryExecution(), "formatted"
-    )
-    assert "k" in plan.split("PartitionFilters:")[1].split("\n")[0]
-    assert filtered.count() == 10
-
-
-def test_declared_schema_and_merge_schema_are_not_cached(spark, tmp_path):
-    lake = DataLake(spark, str(tmp_path))
-    lake.save(spark.range(5).toDF("v"), "t")
-    for _ in range(2):
-        assert not _cached(lake.load("t", schema="v long"))
-        assert not _cached(lake.load("t", merge_schema=True))
+    assert sorted(int(r.v) for r in lake.load("t").collect()) == list(range(7))
+    new = routes()
+    assert [int(r["v"]) for r in new[0]] == list(range(7))
+    assert [int(r["v"]) for r in new[1]] == list(range(6, -1, -1))
+    assert new[2] == (7, 2.0, 1.0) and new[3] == [{"n": 7, "s": 21}]
+    assert routes() == new
 
 
 def test_threaded_reads_during_overwrites_see_whole_versions(spark, tmp_path):
     """Readers load and aggregate while the same dataset is overwritten:
     every read that succeeds sees exactly one version (its row count
-    and its constant column agree), every version is read, and the lake
-    leaves one cache entry for the dataset, of its current version."""
+    and its constant column agree), and every version is read."""
     lake = DataLake(spark, str(tmp_path))
 
     def version(k: int):
         return spark.range(10 * k).select(F.col("id").alias("v"), F.lit(k).alias("k"))
 
-    path = lake.save(version(1), "t")
+    lake.save(version(1), "t")
     bad: list[str] = []
     seen: list[int] = []
     lock = threading.Lock()
@@ -258,7 +108,8 @@ def test_threaded_reads_during_overwrites_see_whole_versions(spark, tmp_path):
                 continue
             with lock:
                 seen.append(r.lo)
-                if not (r.lo == r.hi and r.n == 10 * r.lo):
+                # no row (lo is None) is a read of a half-removed version
+                if not (r.lo is not None and r.lo == r.hi and r.n == 10 * r.lo):
                     bad.append(f"mixed read {r}")
 
     def reads_of(k: int) -> int:
@@ -287,7 +138,6 @@ def test_threaded_reads_during_overwrites_see_whole_versions(spark, tmp_path):
     assert all(reads_of(k) >= 3 for k in range(2, 7)), sorted(set(seen))
     final = lake.load("t").agg(F.count("*"), F.max("k")).collect()[0]
     assert tuple(final) == (60, 6)
-    assert _cached_tags(spark, path) == [_tag(lake, path)]
 
 
 # -- answers (DataLake.answer) -------------------------------------------
@@ -323,7 +173,7 @@ def _answers(lake: DataLake, ds: str = "trains", limit: int = 20) -> dict:
 
 def _pool(lake: DataLake) -> dict:
     """The lake's answers: key → id of the answer object."""
-    with lake._frames_lock:
+    with lake._answers_lock:
         return {k: id(a) for k, a in lake._answers.items()}
 
 
@@ -379,21 +229,24 @@ def test_write_to_another_dataset_keeps_the_plans(spark, serve_lake):
     assert _pool(lake) == pool
 
 
-def test_clear_cache_keeps_one_copy_per_dataset(spark, serve_lake):
+def test_serving_caches_nothing(spark, serve_lake):
+    """Every route over both served datasets, a rewrite and every route
+    again leave Spark's CacheManager and the session's persistent RDDs
+    as they were: the lake keeps answers, never data."""
+
+    def cache():
+        entries = spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+        return entries, set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
     lake = serve_lake
-    for _ in range(3):
-        want = {ds: _answers(lake, ds) for ds in ("trains", "trains_csv")}
-    paths = {ds: lake.dataset_path(ds) for ds in want}
-    spark.catalog.clearCache()
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    for _ in range(3):
-        assert {ds: _answers(lake, ds) for ds in want} == want
-    for path in paths.values():
-        assert _cached_tags(spark, path) == [_tag(lake, path)]
-    for ds in want:  # new limits: answers computed over the copies
-        _answers(lake, ds, limit=21)
-    added = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
-    assert len(added) == len(want), added
+    before = cache()
+    for _ in range(2):
+        for ds in ("trains", "trains_csv"):
+            _answers(lake, ds)
+    lake.save(_trains(spark, ROWS + 300, 5).repartition(3), "trains")
+    for ds, rows in (("trains", ROWS + 300), ("trains_csv", ROWS // 2)):
+        assert _answers(lake, ds)["regression"][0] == rows
+    assert cache() == before
 
 
 def test_dropped_lake_drops_its_plans(spark, tmp_path):
@@ -417,6 +270,29 @@ def test_pool_never_exceeds_its_bound(spark, serve_lake):
         assert len(_pool(lake)) <= slots
     limits = sorted(k[0][1] for k in _pool(lake))
     assert limits == list(range(9, slots + 9))  # the least recently used went first
+
+
+def test_partitioned_dataset_is_not_cached(spark, tmp_path):
+    """A partitioned dataset's answers are not kept, since its file
+    version misses a file added two or more levels down: every request
+    computes its answer from the files, so a file added under a
+    partition is read by the next request. Its scan still prunes
+    partitions."""
+    lake = DataLake(spark, str(tmp_path))
+    df = spark.range(40).select((F.col("id") % 4).alias("k"), F.col("id").alias("v"))
+    path = lake.save(df, "p", partition_by=["k"])
+    for i in range(2):
+        rows, jobs = _jobs(spark, lambda: api.get_data_preview(lake, "p"), f"partitioned_{i}")
+        assert len(rows) == 40 and jobs
+    assert _pool(lake) == {}
+    pq.write_table(pa.table({"v": [100, 101]}), os.path.join(path, "k=1", "part-by-hand.parquet"))
+    assert len(api.get_data_preview(lake, "p")) == 42
+    filtered = lake.load("p").where(F.col("k") == 1)
+    plan = filtered._sc._jvm.PythonSQLUtils.explainString(
+        filtered._jdf.queryExecution(), "formatted"
+    )
+    assert "k" in plan.split("PartitionFilters:")[1].split("\n")[0]
+    assert filtered.count() == 12
 
 
 # 30 select-list items ahead of the time call: more than Spark prints of
@@ -516,13 +392,11 @@ def test_sql_reads_the_lake_after_a_view_of_its_name_is_replaced(spark, serve_la
     " SELECT COUNT(*) AS n FROM x a JOIN x b ON a.train_id = b.train_id",
 ], ids=["self-join", "union", "in-subquery", "cte-read-twice"])
 def test_sql_reads_an_in_memory_dataset_twice(serve_lake, query):
-    """A query that reads one in-memory dataset in two places answers
-    right: Spark's optimizer copies the CTE that binds the dataset into
-    each place, cached relation included."""
+    """A query that reads one dataset in two places answers right:
+    Spark's optimizer copies the CTE that binds the dataset's scan into
+    each place. The lake holds no in-memory copy, so each place reads
+    the files."""
     lake = serve_lake
-    for _ in range(2):
-        lake.load("trains")
-    assert _cached(lake.load("trains"))
     rows = [api.run_sql(lake, query) for _ in range(2)]
     n = 2 * ROWS if "UNION" in query else ROWS
     assert rows == [[{"n": n}]] * 2
